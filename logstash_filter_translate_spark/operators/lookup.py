@@ -2,28 +2,41 @@
 substitution — the three modes of the reference
 (/root/reference/lib/logstash/filters/fetch_strategy/memory.rb:4-49).
 
-Spark-first design
+The probe contract
 ------------------
-Every strategy exposes the same *expression-plane* contract: a Column
-function producing ``struct<matched boolean, value V, key string,
-error string>`` for a scalar key, and an array variant for ``iterate_on``.
-The exact strategy additionally offers a *join-plane* broadcast hash join
-(BroadcastHashJoinExec, whole-stage codegen, no Python) — the default at
-scale; the map-literal expression is used for small dictionaries where a
-plan-embedded literal beats shipping a join.
+Every strategy answers a lookup with a :class:`Probe` of plain Columns
+``(matched, value, key, error)``; ``error`` is None where a plane cannot
+fail per row. The updaters in ``operators/translate.py`` consume only this
+contract, one body per updater shape:
 
-Regex / union semantics genuinely need per-row regex engines, so they are
-Arrow-vectorized pandas UDFs holding the (pattern, value) table compiled
-once per executor (the reference precompiles per reload —
-fetch_strategy/file.rb:34-40; our analogue is compile-on-first-batch in the
-UDF closure because compiled patterns don't pickle).
+* ``probe(x)`` — elementwise planes (the plan-embedded map literal and the
+  native union ``replace`` chain): a pure Column expression of one string
+  key, usable inside ``transform`` lambdas with no per-element struct.
+* ``probe_frame(df, key)`` — a scalar key, a column of ``df``: returns the
+  frame (with any stashed temp columns, or the broadcast join) and its
+  Probe.
+* ``probe_each(df, keys)`` — an array of keys: returns the frame and
+  ``each(x, i)``, the Probe of element ``i`` (value ``x``). Elementwise
+  planes probe ``x`` in place; the Arrow UDF plane reads the ``i``-th
+  struct of a result array aligned with ``keys``.
+
+The exact join plane has no per-element form: its scalar probe is a
+left-outer broadcast hash join against :meth:`ExactBroadcastJoin.build_side`
+(whole-stage codegen, no Python), and ``iterate_on`` reaches it through
+posexplode → join → position-sorted collect_list in the Translate operator.
+:func:`build_strategy` picks the exact plane by dictionary size.
+
+Regex / union semantics genuinely need per-row regex engines, so they share
+one Arrow-vectorized pandas-UDF wrapper holding the (pattern, value) table,
+compiled per batch inside the UDF closure because compiled patterns don't
+pickle (the reference precompiles per reload — fetch_strategy/file.rb:34-40).
 """
 
 from __future__ import annotations
 
 import json
 import re
-from typing import Any, Callable, List, Optional, Sequence, Tuple
+from typing import Any, Callable, List, NamedTuple, Optional, Sequence, Tuple
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame
@@ -36,12 +49,28 @@ Pairs = Sequence[Tuple[str, Any]]
 #: above this many entries the exact strategy switches from a plan-embedded
 #: map literal to a broadcast hash join (join plane)
 MAP_LITERAL_MAX_ENTRIES = 512
-# NOTE (code-review r7): build_strategy always selects the Arrow-UDF
-# regex planes; the codegen-only RegexFirstMatch.when_chain_expr plane is
-# reachable only by direct call (tests exercise it) and exists as the
-# zero-Python option for tiny pattern sets — there is deliberately NO
-# threshold constant wired into strategy selection (a stale one used to
-# sit here implying otherwise).
+
+#: temp columns a probe may add to the frame; the caller drops them
+VALUE_COL = "__lfts_val"
+RES_COL = "__lfts_res"
+DICT_KEY = "__lfts_k"
+DICT_VALUE = "__lfts_v"
+TEMP_COLS = (VALUE_COL, RES_COL, DICT_KEY, DICT_VALUE)
+
+
+class Probe(NamedTuple):
+    """One lookup's outcome. ``value`` and ``key`` are meaningful only
+    where ``matched``; ``error`` is None for planes that cannot fail."""
+
+    matched: Column
+    value: Column
+    key: Column
+    error: Optional[Column] = None
+
+
+def _struct_probe(s: Column) -> Probe:
+    """Probe view of a ``lookup_result_type`` struct (Arrow UDF planes)."""
+    return Probe(s["matched"], s["value"], s["key"], s["error"])
 
 
 def ruby_to_s(value: Any) -> str:
@@ -170,22 +199,84 @@ def lookup_result_type(value_type: T.DataType) -> T.StructType:
     )
 
 
+def _arrow_udfs(value_type: T.DataType, build: Callable[[], Any], lookup_one):
+    """The Arrow UDF plane shared by regex and union: a scalar UDF and an
+    array UDF (``iterate_on``) applying ``lookup_one(key, state)`` to each
+    non-null key, with ``state = build()`` made once per Arrow batch.
+    ``lookup_one`` returns ``(value, matched_key)`` or None for a miss; an
+    exception inside it is contained to its row as ``error``
+    (translate.rb:266-270). Both UDFs return ``lookup_result_type``."""
+    result_type = lookup_result_type(value_type)
+
+    def guarded(s, state):
+        miss = {"matched": False, "value": None, "key": None, "error": None}
+        if s is None:
+            return miss
+        try:
+            hit = lookup_one(s, state)
+        except Exception as exc:
+            return {**miss, "error": f"{type(exc).__name__}: {exc}"}
+        if hit is None:
+            return miss
+        return {"matched": True, "value": hit[0], "key": hit[1], "error": None}
+
+    @pandas_udf(result_type)
+    def scalar(col: pd.Series) -> pd.DataFrame:
+        state = build()
+        return pd.DataFrame([guarded(s, state) for s in col])
+
+    @pandas_udf(T.ArrayType(result_type))
+    def array(col: pd.Series) -> pd.Series:
+        state = build()
+        return pd.Series(
+            [
+                None
+                if arr is None
+                else [guarded(None if x is None else str(x), state) for x in arr]
+                for arr in col
+            ]
+        )
+
+    return scalar, array
+
+
 class LookupStrategy:
-    """Base contract. ``value_type``/``values_are_json`` describe the value
-    column; ``expr``/``expr_array`` are the expression plane."""
+    """Base of the probe contract (module docstring). ``value_type`` /
+    ``values_are_json`` describe the value column. The defaults suit an
+    elementwise plane, which only implements ``probe``."""
 
     value_type: T.DataType
     values_are_json: bool
     mode: str
 
-    def expr(self, key: Column) -> Column:
-        raise NotImplementedError
+    def probe(self, x: Column) -> Probe:
+        raise NotImplementedError(f"{type(self).__name__} has no elementwise probe")
 
-    def expr_array(self, arr: Column) -> Column:
-        raise NotImplementedError
+    def probe_frame(self, df: DataFrame, key: Column) -> Tuple[DataFrame, Probe]:
+        return df, self.probe(key)
 
-    #: strategies backed by a broadcast join instead of an expression
-    expression_capable: bool = True
+    def probe_each(
+        self, df: DataFrame, keys: Column
+    ) -> Tuple[DataFrame, Callable[[Column, Column], Probe]]:
+        return df, lambda x, i: self.probe(x)
+
+    def keyed(self) -> "LookupStrategy":
+        """The strategy to probe with when the caller records the matched
+        key (every plane but the native union chain can report it)."""
+        return self
+
+
+class _ArrowUdfPlane(LookupStrategy):
+    """Probes through the ``_scalar_udf`` / ``_array_udf`` pair built by
+    :func:`_arrow_udfs`; the result struct (array) lands in ``RES_COL``."""
+
+    def probe_frame(self, df: DataFrame, key: Column) -> Tuple[DataFrame, Probe]:
+        df = df.withColumn(RES_COL, self._scalar_udf(key))
+        return df, _struct_probe(F.col(RES_COL))
+
+    def probe_each(self, df: DataFrame, keys: Column):
+        df = df.withColumn(RES_COL, self._array_udf(keys))
+        return df, lambda x, i: _struct_probe(F.get(F.col(RES_COL), i))
 
 
 # ---------------------------------------------------------------------------
@@ -198,7 +289,6 @@ class ExactMapLiteral(LookupStrategy):
     (fetch_strategy/memory.rb:4-16)."""
 
     mode = "exact"
-    expression_capable = True
 
     def __init__(self, pairs: Pairs, nested: str = "json"):
         self.value_type, conv, self.values_are_json = infer_value_type(
@@ -218,31 +308,35 @@ class ExactMapLiteral(LookupStrategy):
                 entries.append(F.parse_json(F.lit(v)))
             else:
                 entries.append(F.lit(v).cast(self.value_type))
-        self._empty = not entries
         self._map = F.create_map(*entries) if entries else None
         #: when no value is NULL, `element_at IS NOT NULL` ⇔ matched — one
-        #: map probe instead of two (the scalar fast path uses this)
-        self.has_null_values = any(v is None for v in dedup.values())
+        #: map probe instead of two
+        self._has_null_values = any(v is None for v in dedup.values())
 
-    def _probe(self, key: Column) -> Tuple[Column, Column]:
-        if self._empty:
-            return F.lit(False), F.lit(None).cast(self.value_type)
-        matched = F.when(
-            key.isNotNull(), F.map_contains_key(self._map, key)
-        ).otherwise(F.lit(False))
-        return matched, F.element_at(self._map, F.coalesce(key, F.lit("")))
+    def _value(self, x: Column) -> Column:
+        return F.element_at(self._map, F.coalesce(x, F.lit("")))
 
-    def expr(self, key: Column) -> Column:
-        matched, value = self._probe(key)
-        return F.struct(
-            matched.alias("matched"),
-            F.when(matched, value).alias("value"),
-            F.when(matched, key).alias("key"),
-            F.lit(None).cast("string").alias("error"),
-        )
+    def _probe(self, x: Column, value: Column) -> Probe:
+        if self._has_null_values:
+            matched = F.when(
+                x.isNotNull(), F.map_contains_key(self._map, x)
+            ).otherwise(F.lit(False))
+        else:
+            matched = x.isNotNull() & value.isNotNull()
+        return Probe(matched, value, x)
 
-    def expr_array(self, arr: Column) -> Column:
-        return F.transform(arr, lambda x: self.expr(x.cast("string")))
+    def probe(self, x: Column) -> Probe:
+        if self._map is None:
+            return Probe(F.lit(False), F.lit(None).cast(self.value_type), x)
+        return self._probe(x, self._value(x))
+
+    def probe_frame(self, df: DataFrame, key: Column) -> Tuple[DataFrame, Probe]:
+        if self._map is None:
+            return df, self.probe(key)
+        # stash the value once; matched derives from it, so each row
+        # probes the map once
+        df = df.withColumn(VALUE_COL, self._value(key))
+        return df, self._probe(key, F.col(VALUE_COL))
 
 
 class ExactBroadcastJoin(LookupStrategy):
@@ -254,7 +348,6 @@ class ExactBroadcastJoin(LookupStrategy):
     """
 
     mode = "exact"
-    expression_capable = False
 
     def __init__(self, spark, pairs: Pairs, nested: str = "json"):
         self.value_type, conv, self.values_are_json = infer_value_type(
@@ -264,9 +357,9 @@ class ExactBroadcastJoin(LookupStrategy):
         is_variant = isinstance(self.value_type, T.VariantType)
         schema = T.StructType(
             [
-                T.StructField("__lfts_k", T.StringType(), False),
+                T.StructField(DICT_KEY, T.StringType(), False),
                 T.StructField(
-                    "__lfts_v",
+                    DICT_VALUE,
                     T.StringType() if is_variant else self.value_type,
                     True,
                 ),
@@ -279,28 +372,19 @@ class ExactBroadcastJoin(LookupStrategy):
             # ship JSON text, parse to VARIANT plan-side (VariantVal rows
             # aren't constructible from Python)
             self.dict_df = self.dict_df.select(
-                "__lfts_k", F.parse_json("__lfts_v").alias("__lfts_v")
+                DICT_KEY, F.parse_json(DICT_VALUE).alias(DICT_VALUE)
             )
 
-    def join(self, df: DataFrame, key: Column, result_col: str) -> DataFrame:
-        """Left-outer broadcast join; appends ``result_col`` with the uniform
-        lookup struct. Misses survive for the fallback path (O8)."""
-        probe = df.withColumn("__lfts_key", key)
-        joined = probe.join(
-            F.broadcast(self.dict_df),
-            probe["__lfts_key"].eqNullSafe(self.dict_df["__lfts_k"]),
-            "left",
-        )
-        matched = joined["__lfts_k"].isNotNull()
-        return joined.withColumn(
-            result_col,
-            F.struct(
-                matched.alias("matched"),
-                F.when(matched, joined["__lfts_v"]).alias("value"),
-                F.when(matched, joined["__lfts_key"]).alias("key"),
-                F.lit(None).cast("string").alias("error"),
-            ),
-        ).drop("__lfts_k", "__lfts_v", "__lfts_key")
+    def build_side(self) -> DataFrame:
+        """The (``DICT_KEY``, ``DICT_VALUE``) frame the probe joins."""
+        return F.broadcast(self.dict_df)
+
+    def probe_frame(self, df: DataFrame, key: Column) -> Tuple[DataFrame, Probe]:
+        """Left-outer join on the key: misses survive for the fallback
+        path (O8)."""
+        dim = self.build_side()
+        joined = df.join(dim, key.eqNullSafe(dim[DICT_KEY]), "left")
+        return joined, Probe(F.col(DICT_KEY).isNotNull(), F.col(DICT_VALUE), key)
 
 
 class ExactFrameJoin(ExactBroadcastJoin):
@@ -341,42 +425,27 @@ class ExactFrameJoin(ExactBroadcastJoin):
         self.broadcast = broadcast
         dedup = (
             dict_df.select(
-                F.col(key_col).cast("string").alias("__lfts_k"),
-                F.col(value_col).alias("__lfts_v"),
+                F.col(key_col).cast("string").alias(DICT_KEY),
+                F.col(value_col).alias(DICT_VALUE),
             )
-            .groupBy("__lfts_k")
-            .agg(F.min("__lfts_v").alias("__lfts_v"))
+            .groupBy(DICT_KEY)
+            .agg(F.min(DICT_VALUE).alias(DICT_VALUE))
         )
         if broadcast is False:
             dedup = dedup.hint("merge")
         self.dict_df = dedup
 
-    def join(self, df: DataFrame, key: Column, result_col: str) -> DataFrame:
+    def build_side(self) -> DataFrame:
         if self.broadcast is True:
-            return super().join(df, key, result_col)
-        probe = df.withColumn("__lfts_key", key)
-        joined = probe.join(
-            self.dict_df,
-            probe["__lfts_key"].eqNullSafe(self.dict_df["__lfts_k"]),
-            "left",
-        )
-        matched = joined["__lfts_k"].isNotNull()
-        return joined.withColumn(
-            result_col,
-            F.struct(
-                matched.alias("matched"),
-                F.when(matched, joined["__lfts_v"]).alias("value"),
-                F.when(matched, joined["__lfts_key"]).alias("key"),
-                F.lit(None).cast("string").alias("error"),
-            ),
-        ).drop("__lfts_k", "__lfts_v", "__lfts_key")
+            return F.broadcast(self.dict_df)
+        return self.dict_df
 
 
 # ---------------------------------------------------------------------------
 # O2 — ordered first-match regex
 # ---------------------------------------------------------------------------
 
-class RegexFirstMatch(LookupStrategy):
+class RegexFirstMatch(_ArrowUdfPlane):
     """Probe each dictionary key as a regex **in insertion order**, first
     unanchored match wins (fetch_strategy/memory.rb:18-33: ordered ``detect``
     + ``source.match``). Arrow-vectorized pandas UDF; patterns are shipped as
@@ -388,7 +457,6 @@ class RegexFirstMatch(LookupStrategy):
     def __init__(
         self,
         pairs: Pairs,
-        dialect: str = "python",
         fault_pattern: Optional[str] = None,
     ):
         #: ``fault_pattern``: deterministic fault injector for O10
@@ -398,66 +466,21 @@ class RegexFirstMatch(LookupStrategy):
         #: updater to raise; translate.rb:266-270 rescues and tags). The
         #: raise happens before any lookup so the row comes out
         #: unmatched + error → route='failed', pass-through unenriched.
-        self._fault_pattern = fault_pattern
         if fault_pattern is not None:
             re.compile(fault_pattern)  # fail fast at plan time
         self.value_type, conv, self.values_are_json = infer_value_type(pairs)
-        self._table: List[Tuple[str, Any]] = [(str(k), conv(v)) for k, v in pairs]
+        table: List[Tuple[str, Any]] = [(str(k), conv(v)) for k, v in pairs]
         # fail fast at plan time on invalid patterns (reference raises at
         # register when compiling — fetch_strategy/memory.rb:22)
-        compiled_probe = [re.compile(k) for k, _ in self._table]
+        compiled_probe = [re.compile(k) for k, _ in table]
         # the union prefilter concatenates patterns, which RENUMBERS
         # capturing groups — a pattern using a backreference (e.g. (a)\1)
         # would silently never match in the union and short-circuit to a
         # false miss. Decide safety once at plan time and ship the flag.
-        self._union_ok = len(self._table) > 4 and not any(
+        union_ok = len(table) > 4 and not any(
             c.groups > 0 or re.search(r"\\\d", k)
-            for c, (k, _) in zip(compiled_probe, self._table)
+            for c, (k, _) in zip(compiled_probe, table)
         )
-        self._result_type = lookup_result_type(self.value_type)
-        self._scalar_udf = self._build_udf(array=False)
-        self._array_udf = self._build_udf(array=True)
-
-    def _build_udf(self, array: bool):
-        table = self._table
-        union_ok = self._union_ok
-        fault_pattern = self._fault_pattern
-        result_type = self._result_type
-        ret = T.ArrayType(result_type) if array else result_type
-
-        def lookup_one(s, compiled, union_pat, fault=None):
-            if s is None:
-                return {"matched": False, "value": None, "key": None, "error": None}
-            try:
-                if fault is not None and fault.search(s):
-                    raise RuntimeError(
-                        f"injected lookup fault for {s!r} "
-                        "(translate_spec.rb:738-742 containment parity)"
-                    )
-                # miss prefilter: one union-regex probe short-circuits the
-                # O(keys) ordered scan for non-matching rows (the "could be
-                # expensive" caveat at translate.rb:143-144)
-                if union_pat is not None and not union_pat.search(s):
-                    return {
-                        "matched": False, "value": None, "key": None,
-                        "error": None,
-                    }
-                for pat, raw_key, val in compiled:
-                    if pat.search(s):
-                        return {
-                            "matched": True,
-                            "value": val,
-                            "key": raw_key,
-                            "error": None,
-                        }
-                return {"matched": False, "value": None, "key": None, "error": None}
-            except Exception as exc:  # error containment (translate.rb:266-270)
-                return {
-                    "matched": False,
-                    "value": None,
-                    "key": None,
-                    "error": f"{type(exc).__name__}: {exc}",
-                }
 
         def build():
             compiled = [(re.compile(k), k, v) for k, v in table]
@@ -472,76 +495,41 @@ class RegexFirstMatch(LookupStrategy):
             fault = re.compile(fault_pattern) if fault_pattern else None
             return compiled, union, fault
 
-        if array:
+        def first_match(s, state):
+            compiled, union, fault = state
+            if fault is not None and fault.search(s):
+                raise RuntimeError(
+                    f"injected lookup fault for {s!r} "
+                    "(translate_spec.rb:738-742 containment parity)"
+                )
+            # miss prefilter: one union-regex probe short-circuits the
+            # O(keys) ordered scan for non-matching rows (the "could be
+            # expensive" caveat at translate.rb:143-144)
+            if union is not None and not union.search(s):
+                return None
+            for pat, raw_key, val in compiled:
+                if pat.search(s):
+                    return val, raw_key
+            return None
 
-            @pandas_udf(ret)
-            def udf(col: pd.Series) -> pd.Series:
-                compiled, union, fault = build()
-                out = []
-                for arr in col:
-                    if arr is None:
-                        out.append(None)
-                    else:
-                        out.append(
-                            [
-                                lookup_one(
-                                    None if x is None else str(x), compiled,
-                                    union, fault,
-                                )
-                                for x in arr
-                            ]
-                        )
-                return pd.Series(out)
-
-        else:
-
-            @pandas_udf(ret)
-            def udf(col: pd.Series) -> pd.DataFrame:
-                compiled, union, fault = build()
-                rows = [lookup_one(s, compiled, union, fault) for s in col]
-                return pd.DataFrame(rows)
-
-        return udf
-
-    def expr(self, key: Column) -> Column:
-        return self._scalar_udf(key)
-
-    def expr_array(self, arr: Column) -> Column:
-        return self._array_udf(arr)
-
-    def when_chain_expr(self, key: Column) -> Column:
-        """Pure-Catalyst alternative for small dictionaries: an ordered
-        ``coalesce(when(rlike ...))`` chain — key order becomes ``when``
-        order. Java regex dialect; kept for plans that must stay
-        codegen-only."""
-        conv_type = self.value_type
-        miss = F.struct(
-            F.lit(False).alias("matched"),
-            F.lit(None).cast(conv_type).alias("value"),
-            F.lit(None).cast("string").alias("key"),
-            F.lit(None).cast("string").alias("error"),
+        self._scalar_udf, self._array_udf = _arrow_udfs(
+            self.value_type, build, first_match
         )
-        result = miss
-        for k, v in reversed(self._table):
-            hit = F.struct(
-                F.lit(True).alias("matched"),
-                F.lit(v).cast(conv_type).alias("value"),
-                F.lit(k).alias("key"),
-                F.lit(None).cast("string").alias("error"),
-            )
-            result = F.when(key.isNotNull() & key.rlike(k), hit).otherwise(result)
-        return result
 
 
 # ---------------------------------------------------------------------------
 # O3 — union-regex substitution
 # ---------------------------------------------------------------------------
 
-class UnionSubstitution(LookupStrategy):
+class UnionSubstitution(_ArrowUdfPlane):
     """``gsub(Regexp.union(keys), dict)``: single-pass replacement of every
     occurrence of every (literal-escaped) key, alternation in insertion
     order; miss ⇔ output == input (fetch_strategy/memory.rb:35-49).
-    Values are coerced to strings (substitution into a string)."""
+    Values are coerced to strings (substitution into a string).
+
+    ``native``: the plane is an elementwise JVM ``replace`` chain (proved
+    equivalent at plan time, see ``_native_safe``); otherwise the Arrow UDF
+    plane."""
 
     mode = "union"
 
@@ -551,10 +539,37 @@ class UnionSubstitution(LookupStrategy):
         self._table: List[Tuple[str, str]] = [
             (str(k), ruby_to_s(v)) for k, v in pairs
         ]
-        self._result_type = lookup_result_type(T.StringType())
         self.native = prefer_native and self._native_safe()
-        self._scalar_udf = None if self.native else self._build_udf(array=False)
-        self._array_udf = None if self.native else self._build_udf(array=True)
+        self._keyed: Optional[UnionSubstitution] = None
+        if self.native:
+            return
+        table = self._table
+
+        def build():
+            if not table:
+                return None, {}
+            pat = re.compile("|".join(re.escape(k) for k, _ in table))
+            return pat, dict(table)
+
+        def substitute(s, state):
+            pat, mapping = state
+            if pat is None:
+                return None
+            first_key = []
+
+            def repl(m):
+                if not first_key:
+                    first_key.append(m.group(0))
+                return mapping[m.group(0)]
+
+            out = pat.sub(repl, s)
+            if out == s:  # miss ⇔ unchanged (memory.rb:43-44)
+                return None
+            return out, first_key[0]
+
+        self._scalar_udf, self._array_udf = _arrow_udfs(
+            self.value_type, build, substitute
+        )
 
     #: above this many keys the pairwise equivalence proof (O(n²·keylen))
     #: is too expensive at plan time AND the nested replace-chain expression
@@ -617,129 +632,56 @@ class UnionSubstitution(LookupStrategy):
                         return False
         return True
 
-    def native_expr(self, key: Column) -> Column:
-        out = key
+    def _chain(self, x: Column) -> Column:
+        out = x
         for k, v in self._table:
             out = F.replace(out, F.lit(k), F.lit(v))
-        matched = key.isNotNull() & (out != key)
-        return F.struct(
-            matched.alias("matched"),
-            F.when(matched, out).alias("value"),
-            F.lit(None).cast("string").alias("key"),
-            F.lit(None).cast("string").alias("error"),
-        )
+        return out
 
-    def _build_udf(self, array: bool):
-        table = self._table
-        ret = T.ArrayType(self._result_type) if array else self._result_type
+    def probe(self, x: Column) -> Probe:
+        if not self.native:
+            return super().probe(x)
+        out = self._chain(x)
+        # the chain cannot report which key fired: see keyed()
+        return Probe(x.isNotNull() & (out != x), out, F.lit(None).cast("string"))
 
-        def build_pattern():
-            if not table:
-                return None, {}
-            mapping = dict(table)
-            pat = re.compile("|".join(re.escape(k) for k, _ in table))
-            return pat, mapping
+    def probe_frame(self, df: DataFrame, key: Column) -> Tuple[DataFrame, Probe]:
+        if not self.native:
+            return super().probe_frame(df, key)
+        return LookupStrategy.probe_frame(self, df, key)
 
-        def sub_one(s, pat, mapping):
-            if s is None:
-                return {"matched": False, "value": None, "key": None, "error": None}
-            try:
-                if pat is None:
-                    return {
-                        "matched": False,
-                        "value": None,
-                        "key": None,
-                        "error": None,
-                    }
-                first_key = [None]
+    def probe_each(self, df: DataFrame, keys: Column):
+        if not self.native:
+            return super().probe_each(df, keys)
+        return LookupStrategy.probe_each(self, df, keys)
 
-                def repl(m):
-                    if first_key[0] is None:
-                        first_key[0] = m.group(0)
-                    return mapping[m.group(0)]
-
-                out = pat.sub(repl, s)
-                if out == s:  # miss ⇔ unchanged (memory.rb:43-44)
-                    return {
-                        "matched": False,
-                        "value": None,
-                        "key": None,
-                        "error": None,
-                    }
-                return {
-                    "matched": True,
-                    "value": out,
-                    "key": first_key[0],
-                    "error": None,
-                }
-            except Exception as exc:
-                return {
-                    "matched": False,
-                    "value": None,
-                    "key": None,
-                    "error": f"{type(exc).__name__}: {exc}",
-                }
-
-        if array:
-
-            @pandas_udf(ret)
-            def udf(col: pd.Series) -> pd.Series:
-                pat, mapping = build_pattern()
-                out = []
-                for arr in col:
-                    if arr is None:
-                        out.append(None)
-                    else:
-                        out.append(
-                            [
-                                sub_one(
-                                    None if x is None else str(x), pat, mapping
-                                )
-                                for x in arr
-                            ]
-                        )
-                return pd.Series(out)
-
-        else:
-
-            @pandas_udf(ret)
-            def udf(col: pd.Series) -> pd.DataFrame:
-                pat, mapping = build_pattern()
-                rows = [sub_one(s, pat, mapping) for s in col]
-                return pd.DataFrame(rows)
-
-        return udf
-
-    def expr(self, key: Column) -> Column:
-        if self.native:
-            return self.native_expr(key)
-        return self._scalar_udf(key)
-
-    def expr_array(self, arr: Column) -> Column:
-        if self.native:
-            return F.transform(arr, lambda x: self.native_expr(x.cast("string")))
-        return self._array_udf(arr)
+    def keyed(self) -> LookupStrategy:
+        """Key tracking takes the UDF plane: a cached substitute, so this
+        strategy keeps its native plane for every other call."""
+        if not self.native:
+            return self
+        if self._keyed is None:
+            self._keyed = UnionSubstitution(self._table, prefer_native=False)
+        return self._keyed
 
 
 def build_strategy(
     mode: str,
     pairs: Pairs,
     spark=None,
-    exact_join_threshold: int = MAP_LITERAL_MAX_ENTRIES,
-    force_join: bool = False,
     nested: str = "json",
 ) -> LookupStrategy:
     """Pick the physical strategy for a logical mode.
 
-    exact: map literal below ``exact_join_threshold`` entries, broadcast
-    hash join above (or when ``force_join``). regex/union: vectorized UDFs.
+    exact: a map literal up to ``MAP_LITERAL_MAX_ENTRIES`` entries, the
+    broadcast hash join above that (given a session to build the dictionary
+    frame on). regex: the Arrow UDF plane. union: the native replace chain
+    when it is proved equivalent, else the Arrow UDF plane.
     ``nested``: value typing for nested dictionary values ("json" legacy
     strings | "typed" array/VARIANT columns) — exact mode only.
     """
     if mode == "exact":
-        if force_join or (len(pairs) > exact_join_threshold and spark is not None):
-            if spark is None:
-                raise ValueError("broadcast-join strategy needs a SparkSession")
+        if len(pairs) > MAP_LITERAL_MAX_ENTRIES and spark is not None:
             return ExactBroadcastJoin(spark, pairs, nested=nested)
         return ExactMapLiteral(pairs, nested=nested)
     if mode == "regex":

@@ -19,11 +19,16 @@ Route vocabulary (O9, the ``filter_matched`` signal generalized to fan-out
 sinks): ``matched`` | ``fallback`` | ``unmatched`` | ``failed`` | ``skipped``.
 The reference's boolean "matched" signal is ``route IN (matched, fallback)``
 (fallback sets matched=true — single_value_update.rb:42-45).
+
+Each updater has one body over the lookup strategy's probe contract
+(operators/lookup.py): ``probe_frame`` for a scalar key, ``probe_each`` for
+an array of keys. The one plane-specific path is the exact join plane's
+posexplode for ``iterate_on``.
 """
 
 from __future__ import annotations
 
-from typing import Optional
+from typing import Callable, Optional, Tuple
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -34,8 +39,13 @@ from ..functions.paths import parse_path, path_col, path_type, with_path
 from ..functions.templates import compile_sprintf
 from ..sources.dictionary import DictionaryFile
 from .lookup import (
+    DICT_KEY,
+    DICT_VALUE,
+    RES_COL,
+    TEMP_COLS,
     ExactBroadcastJoin,
     LookupStrategy,
+    Probe,
     build_strategy,
 )
 
@@ -45,9 +55,11 @@ ROUTE_UNMATCHED = "unmatched"
 ROUTE_FAILED = "failed"
 ROUTE_SKIPPED = "skipped"
 
-_RES = "__lfts_res"
 _ID = "__lfts_row_id"
 _SKIP = "__lfts_skip"
+_KEY = "__lfts_key"
+_KEYS = "__lfts_arr"
+_TEMPS = (*TEMP_COLS, _ID, _SKIP, _KEY, _KEYS)
 
 
 class Translate:
@@ -58,16 +70,14 @@ class Translate:
     Parameters
     ----------
     config : validated at construction (register-time errors).
-    spark : needed only for the broadcast-join plane.
-    physical : None (auto) | 'expr' | 'join' — force the exact-match physical
-        strategy; 'join' is the at-scale default for big dictionaries.
+    spark : needed only for the broadcast-join plane, which
+        ``build_strategy`` picks for big exact dictionaries.
     """
 
     def __init__(
         self,
         config: TranslateConfig,
         spark: Optional[SparkSession] = None,
-        physical: Optional[str] = None,
     ):
         self.config = config.validate()
         self.spark = spark
@@ -84,14 +94,7 @@ class Translate:
                 ),
                 yaml_load_strategy=config.yaml_load_strategy,
             )
-        self._physical = physical
         self.strategy: LookupStrategy = self._build_strategy()
-        # key-tracking variant of a native union strategy, built lazily on
-        # the first apply(matched_key_col=...) — a PER-CALL substitute,
-        # never written back to self.strategy (code-review r7: the old
-        # in-place flip silently degraded every SUBSEQUENT plain apply()
-        # to the Arrow-UDF plane until the next refresh)
-        self._union_keytrack: Optional[LookupStrategy] = None
 
     # -- dictionary ---------------------------------------------------------
     def _pairs(self):
@@ -101,21 +104,11 @@ class Translate:
         return list(d.items()) if hasattr(d, "items") else list(d)
 
     def _build_strategy(self) -> LookupStrategy:
-        pairs = self._pairs()
-        nested = self.config.nested_values
-        if self._physical == "expr" and self.config.mode == "exact":
-            return build_strategy(
-                "exact",
-                pairs,
-                exact_join_threshold=len(pairs) + 1,
-                nested=nested,
-            )
         return build_strategy(
             self.config.mode,
-            pairs,
+            self._pairs(),
             spark=self.spark,
-            force_join=self._physical == "join" and self.config.mode == "exact",
-            nested=nested,
+            nested=self.config.nested_values,
         )
 
     def refresh(self, force: bool = False) -> bool:
@@ -128,7 +121,6 @@ class Translate:
         changed = self._dict_file.reload(force=force)
         if changed:
             self.strategy = self._build_strategy()
-            self._union_keytrack = None  # rebuilt lazily from new pairs
         return changed
 
     # -- application --------------------------------------------------------
@@ -141,8 +133,8 @@ class Translate:
     ) -> DataFrame:
         """``iterate_key``: a column that uniquely identifies each row (a
         natural key — every real table has one). The big-dictionary explode
-        planes join the rebuilt arrays back on it, keeping the shuffle
-        deterministic and narrow; without it they fall back to
+        plane joins the rebuilt arrays back on it, keeping the shuffle
+        deterministic and narrow; without it the plane falls back to
         ``monotonically_increasing_id`` over a localCheckpoint'ed input
         (correct but materializes the frame — pass the key at scale)."""
         cfg = self.config
@@ -153,7 +145,7 @@ class Translate:
         return self._apply_array_of_maps(df, route_col, iterate_key)
 
     def _row_id(self, df: DataFrame, iterate_key: Optional[str]):
-        """(base_df, id_col) for the explode planes' join-back. A caller
+        """(base_df, id_col) for the explode plane's join-back. A caller
         key avoids both the synthetic-id determinism hazard (ids computed
         in two plan branches can diverge on non-deterministic scans / task
         retries) and the localCheckpoint materialization."""
@@ -237,6 +229,54 @@ class Translate:
             return T.StringType()
         return vt
 
+    def _existing(self, df: DataFrame, dtype: T.DataType) -> Column:
+        """The current target value as ``dtype`` (NULL when absent)."""
+        read = self._target_read(df)
+        return (read if read is not None else F.lit(None)).cast(dtype)
+
+    def _probe_each(
+        self, df: DataFrame, keys: Column, iterate_key: Optional[str]
+    ) -> Tuple[DataFrame, Callable[[Column, Column], Probe]]:
+        """(df, each) over an array of string keys; ``each(x, i)`` is the
+        Probe of element ``i`` (value ``x``). The join plane has no array
+        form of its own and goes through the explode."""
+        if isinstance(self.strategy, ExactBroadcastJoin):
+            return self._explode_probe(df, keys, iterate_key)
+        return self.strategy.probe_each(df, keys)
+
+    def _explode_probe(
+        self, df: DataFrame, keys: Column, iterate_key: Optional[str]
+    ) -> Tuple[DataFrame, Callable[[Column, Column], Probe]]:
+        """The join plane over an array of keys: posexplode → broadcast
+        hash join → collect_list(struct(pos, matched, value)) → array_sort,
+        joined back on the row identity (see _row_id). Ordinals are
+        restored by position, not by shuffle luck. The collected struct
+        stays this narrow: it is what the shuffle and the aggregation
+        buffers carry."""
+        base, id_col = self._row_id(df, iterate_key)
+        dim = self.strategy.build_side()
+        ex = base.select(id_col, F.posexplode(keys).alias("__lfts_pos", "__lfts_elem"))
+        probed = ex.join(dim, ex["__lfts_elem"].eqNullSafe(dim[DICT_KEY]), "left")
+        agg = probed.groupBy(id_col).agg(
+            F.array_sort(
+                F.collect_list(
+                    F.struct(
+                        F.col("__lfts_pos").alias("pos"),
+                        F.col(DICT_KEY).isNotNull().alias("matched"),
+                        F.col(DICT_VALUE).alias("value"),
+                    )
+                )
+            ).alias(RES_COL)
+        )
+
+        def each(x: Column, i: Column) -> Probe:
+            s = F.get(F.col(RES_COL), i)
+            return Probe(s["matched"], s["value"], x)
+
+        # rows with empty arrays find no aggregate row: their NULL result
+        # is never indexed
+        return base.join(agg, id_col, "left"), each
+
     # -- O4: single-value ----------------------------------------------------
     def _apply_single(
         self,
@@ -244,76 +284,32 @@ class Translate:
         route_col: str,
         matched_key_col: Optional[str],
     ) -> DataFrame:
-        cfg = self.config
-        key = self._coerce_single_key(df)
-        # the native union plane cannot report the first-matched key; use
-        # the UDF plane FOR THIS CALL when the caller asks for key
-        # tracking — a local substitute (cached, refresh-invalidated),
-        # never an in-place strategy mutation: writing self.strategy here
-        # silently degraded every subsequent plain apply() on the same
-        # instance to the Arrow-UDF plane (code-review r7)
-        from .lookup import UnionSubstitution
-
-        strategy = self.strategy
-        if (
-            matched_key_col is not None
-            and isinstance(strategy, UnionSubstitution)
-            and strategy.native
-        ):
-            if self._union_keytrack is None:
-                self._union_keytrack = UnionSubstitution(
-                    self._pairs(), prefer_native=False
-                )
-            strategy = self._union_keytrack
-        # materialize the gate BEFORE the target column is overwritten —
-        # later expressions must see the ORIGINAL target
-        df = df.withColumn(_SKIP, self._skip_gate(df))
+        strategy = self.strategy if matched_key_col is None else self.strategy.keyed()
+        # materialize the gate and the key BEFORE the target column is
+        # overwritten — later expressions must see the ORIGINAL values
+        df = df.withColumn(_SKIP, self._skip_gate(df)).withColumn(
+            _KEY, self._coerce_single_key(df)
+        )
         skip = F.col(_SKIP)
-
-        from .lookup import ExactMapLiteral
-
-        if isinstance(strategy, ExactMapLiteral):
-            # struct-free fast path: the uniform lookup struct costs one
-            # object per row; for the (hot) exact map-literal plane compute
-            # matched/value/key as plain expressions instead
-            return self._apply_single_map_literal(
-                df, key, skip, route_col, matched_key_col
-            )
-        if isinstance(strategy, ExactBroadcastJoin):
-            df = strategy.join(df, key, _RES)
-            res = F.col(_RES)
-        else:
-            res = strategy.expr(key)
-            df = df.withColumn(_RES, res)
-            res = F.col(_RES)
+        df, p = strategy.probe_frame(df, F.col(_KEY))
 
         out_type = self._out_type()
-        existing_read = self._target_read(df)
-        existing = (
-            existing_read.cast(out_type)
-            if existing_read is not None
-            else F.lit(None).cast(out_type)
-        )
+        existing = self._existing(df, out_type)
         fb = self._fallback_expr(df)
+        failed = None if p.error is None else p.error.isNotNull()
 
-        translated = F.when(skip, existing).when(
-            res["matched"], res["value"].cast(out_type)
-        )
+        translated = F.when(skip, existing).when(p.matched, p.value.cast(out_type))
         if fb is not None:
-            translated = translated.when(
-                ~res["matched"] & res["error"].isNull(), fb.cast(out_type)
-            )
+            miss = ~p.matched if failed is None else ~p.matched & ~failed
+            translated = translated.when(miss, fb.cast(out_type))
         translated = translated.otherwise(existing)
 
-        route = (
-            F.when(skip, F.lit(ROUTE_SKIPPED))
-            .when(res["error"].isNotNull(), F.lit(ROUTE_FAILED))
-            .when(res["matched"], F.lit(ROUTE_MATCHED))
+        route = F.when(skip, F.lit(ROUTE_SKIPPED))
+        if failed is not None:
+            route = route.when(failed, F.lit(ROUTE_FAILED))
+        route = route.when(p.matched, F.lit(ROUTE_MATCHED)).otherwise(
+            F.lit(ROUTE_FALLBACK if fb is not None else ROUTE_UNMATCHED)
         )
-        if fb is not None:
-            route = route.otherwise(F.lit(ROUTE_FALLBACK))
-        else:
-            route = route.otherwise(F.lit(ROUTE_UNMATCHED))
 
         out = self._write_target(df, translated).withColumn(route_col, route)
         if matched_key_col is not None:
@@ -321,62 +317,9 @@ class Translate:
             # on the O7 gate (single_value_update.rb:27-31) — a skipped
             # row semantically never looked anything up, so no key
             out = out.withColumn(
-                matched_key_col, F.when(~skip & res["matched"], res["key"])
+                matched_key_col, F.when(~skip & p.matched, p.key)
             )
-        return out.drop(_RES, _SKIP)
-
-    def _apply_single_map_literal(
-        self,
-        df: DataFrame,
-        key: Column,
-        skip: Column,
-        route_col: str,
-        matched_key_col: Optional[str],
-    ) -> DataFrame:
-        cfg = self.config
-        strat = self.strategy  # ExactMapLiteral
-        out_type = self._out_type()
-        fb = self._fallback_expr(df)
-
-        # stash key+value once; matched derives from them without a struct
-        df = df.withColumn("__lfts_key", key)
-        key = F.col("__lfts_key")
-        if strat._empty:
-            value = F.lit(None).cast(strat.value_type)
-            matched = F.lit(False)
-        else:
-            value = F.element_at(strat._map, F.coalesce(key, F.lit("")))
-            df = df.withColumn("__lfts_val", value)
-            value = F.col("__lfts_val")
-            if strat.has_null_values:
-                matched = F.when(
-                    key.isNotNull(), F.map_contains_key(strat._map, key)
-                ).otherwise(F.lit(False))
-            else:
-                matched = key.isNotNull() & value.isNotNull()
-
-        existing_read = self._target_read(df)
-        existing = (
-            existing_read.cast(out_type)
-            if existing_read is not None
-            else F.lit(None).cast(out_type)
-        )
-        translated = F.when(skip, existing).when(matched, value.cast(out_type))
-        if fb is not None:
-            translated = translated.when(~matched, fb.cast(out_type))
-        translated = translated.otherwise(existing)
-
-        route = (
-            F.when(skip, F.lit(ROUTE_SKIPPED))
-            .when(matched, F.lit(ROUTE_MATCHED))
-            .otherwise(F.lit(ROUTE_FALLBACK if fb is not None else ROUTE_UNMATCHED))
-        )
-        out = self._write_target(df, translated).withColumn(route_col, route)
-        if matched_key_col is not None:
-            # same skip guard as the struct plane: no lookup ran on a
-            # skipped row (reference single_value_update.rb:27-31)
-            out = out.withColumn(matched_key_col, F.when(~skip & matched, key))
-        return out.drop(_SKIP, "__lfts_key", "__lfts_val")
+        return out.drop(*_TEMPS)
 
     # -- O5: array-of-values --------------------------------------------------
     def _apply_array_of_values(
@@ -388,7 +331,6 @@ class Translate:
         """iterate_on == source: per-element lookup, ordinal-preserving,
         fallback prefilled at every miss position, target always written
         (array_of_values_update.rb:29-45)."""
-        cfg = self.config
         src, stype = self._source_col_and_type(df)
         if isinstance(stype, T.ArrayType):
             arr = F.coalesce(src, F.array().cast(stype.simpleString()))
@@ -397,187 +339,45 @@ class Translate:
             arr = F.when(src.isNull(), F.array().cast("array<string>")).otherwise(
                 F.array(src.cast("string"))
             )
-        arr_str = F.transform(arr, lambda x: x.cast("string"))
+        df = df.withColumn(_SKIP, self._skip_gate(df)).withColumn(
+            _KEYS, F.transform(arr, lambda x: x.cast("string"))
+        )
+        skip, keys = F.col(_SKIP), F.col(_KEYS)
+        df, each = self._probe_each(df, keys, iterate_key)
 
-        if isinstance(self.strategy, ExactBroadcastJoin):
-            return self._array_of_values_via_explode(
-                df, arr_str, route_col, iterate_key
-            )
-
-        df = df.withColumn(_SKIP, self._skip_gate(df))
-        skip = F.col(_SKIP)
         out_type = self._out_type()
         fb = self._fallback_expr(df)
-        fb_elem = fb.cast(out_type) if fb is not None else F.lit(None).cast(out_type)
+        fb_elem = (fb if fb is not None else F.lit(None)).cast(out_type)
 
-        from .lookup import ExactMapLiteral
+        def elem(x: Column, i: Column) -> Column:
+            p = each(x, i)
+            return F.when(p.matched, p.value.cast(out_type)).otherwise(fb_elem)
 
-        if isinstance(self.strategy, ExactMapLiteral):
-            # struct-free fast path: probe the plan-literal map directly per
-            # element instead of building a 4-field struct per element
-            strat = self.strategy
-            df = df.withColumn("__lfts_arr", arr_str)
-            arr_col = F.col("__lfts_arr")
-            if strat._empty:
-                target_arr = F.transform(arr_col, lambda x: fb_elem)
-                matched_any = F.lit(False)
-            else:
-                def elem_matched(x):
-                    if strat.has_null_values:
-                        return F.when(
-                            x.isNotNull(), F.map_contains_key(strat._map, x)
-                        ).otherwise(F.lit(False))
-                    return x.isNotNull() & F.element_at(
-                        strat._map, F.coalesce(x, F.lit(""))
-                    ).isNotNull()
-
-                target_arr = F.transform(
-                    arr_col,
-                    lambda x: F.when(
-                        elem_matched(x),
-                        F.element_at(strat._map, F.coalesce(x, F.lit(""))).cast(
-                            out_type
-                        ),
-                    ).otherwise(fb_elem),
-                )
-                matched_any = F.exists(arr_col, elem_matched)
-            any_error = F.lit(False)
-            res_arr = arr_col  # for size() in the route expression
-        else:
-            res_arr = self.strategy.expr_array(arr_str)
-            df = df.withColumn(_RES, res_arr)
-            res_arr = F.col(_RES)
-            target_arr = F.transform(
-                res_arr,
-                lambda s: F.when(s["matched"], s["value"].cast(out_type)).otherwise(
-                    fb_elem
-                ),
-            )
-            matched_any = F.exists(res_arr, lambda s: s["matched"])
-            any_error = F.exists(res_arr, lambda s: s["error"].isNotNull())
-
-        existing_read = self._target_read(df)
-        existing_t = (
-            existing_read
-            if existing_read is not None
-            else F.lit(None).cast(T.ArrayType(out_type))
-        )
         # target always written unless the O7 gate skipped the row
-        translated = F.when(skip, existing_t.cast(T.ArrayType(out_type))).otherwise(
-            target_arr
-        )
+        translated = F.when(
+            skip, self._existing(df, T.ArrayType(out_type))
+        ).otherwise(F.transform(keys, elem))
 
+        def rank(x: Column, i: Column) -> Column:
+            p = each(x, i)
+            return _route_rank(p, p.matched)
+
+        row_rank = F.array_max(F.transform(keys, rank))
         route = (
             F.when(skip, F.lit(ROUTE_SKIPPED))
-            .when(any_error, F.lit(ROUTE_FAILED))
-            .when(matched_any, F.lit(ROUTE_MATCHED))
-            .when(
-                F.lit(fb is not None) & (F.size(arr_str) > 0), F.lit(ROUTE_FALLBACK)
-            )
-            .otherwise(F.lit(ROUTE_UNMATCHED))
+            .when(row_rank == 2, F.lit(ROUTE_FAILED))
+            .when(row_rank == 1, F.lit(ROUTE_MATCHED))
         )
+        if fb is not None:
+            route = route.when(F.size(keys) > 0, F.lit(ROUTE_FALLBACK))
+        route = route.otherwise(F.lit(ROUTE_UNMATCHED))
         return (
             self._write_target(df, translated)
             .withColumn(route_col, route)
-            .drop(_RES, _SKIP, "__lfts_arr")
-        )
-
-    def _array_of_values_via_explode(
-        self,
-        df: DataFrame,
-        arr_str: Column,
-        route_col: str,
-        iterate_key: Optional[str] = None,
-    ) -> DataFrame:
-        """At-scale plane for O5 with a big dictionary: posexplode →
-        broadcast hash join → collect_list(struct(pos, val)) → array_sort —
-        ordinals restored by position, not by shuffle luck (the north-star's
-        explode+join+collect_list pipeline).
-
-        Row identity: ``iterate_key`` (a caller natural key) when given —
-        the aggregate then carries only (key, pos, matched, value) and the
-        join-back is on a real column; otherwise a pinned
-        monotonically_increasing_id (see _row_id).
-        """
-        cfg = self.config
-        assert isinstance(self.strategy, ExactBroadcastJoin)
-        dict_df = self.strategy.dict_df
-        out_type = self._out_type()
-        fb = self._fallback_expr(df)
-        fb_elem = fb.cast(out_type) if fb is not None else F.lit(None).cast(out_type)
-
-        base, id_col = self._row_id(
-            df.withColumn(_SKIP, self._skip_gate(df)), iterate_key
-        )
-        base = base.withColumn("__lfts_arr", arr_str)
-        skip = F.col(_SKIP)
-        ex = base.select(
-            id_col, F.posexplode("__lfts_arr").alias("__lfts_pos", "__lfts_elem")
-        )
-        probed = ex.join(
-            F.broadcast(dict_df),
-            ex["__lfts_elem"].eqNullSafe(dict_df["__lfts_k"]),
-            "left",
-        )
-        agg = probed.groupBy(id_col).agg(
-            F.array_sort(
-                F.collect_list(
-                    F.struct(
-                        F.col("__lfts_pos").alias("pos"),
-                        F.col("__lfts_k").isNotNull().alias("matched"),
-                        F.col("__lfts_v").alias("value"),
-                    )
-                )
-            ).alias("__lfts_sorted")
-        )
-        joined = base.join(agg, id_col, "left")
-        res_arr = F.coalesce(
-            F.col("__lfts_sorted"),
-            F.array().cast(
-                T.ArrayType(
-                    T.StructType(
-                        [
-                            T.StructField("pos", T.IntegerType()),
-                            T.StructField("matched", T.BooleanType()),
-                            T.StructField("value", self.strategy.value_type),
-                        ]
-                    )
-                )
-            ),
-        )
-        target_arr = F.transform(
-            res_arr,
-            lambda s: F.when(s["matched"], s["value"].cast(out_type)).otherwise(
-                fb_elem
-            ),
-        )
-        matched_any = F.exists(res_arr, lambda s: s["matched"])
-        existing_read = self._target_read(df)
-        existing_t = (
-            existing_read
-            if existing_read is not None
-            else F.lit(None).cast(T.ArrayType(out_type))
-        )
-        translated = F.when(skip, existing_t.cast(T.ArrayType(out_type))).otherwise(
-            target_arr
-        )
-        route = (
-            F.when(skip, F.lit(ROUTE_SKIPPED))
-            .when(matched_any, F.lit(ROUTE_MATCHED))
-            .when(
-                F.lit(fb is not None) & (F.size(F.col("__lfts_arr")) > 0),
-                F.lit(ROUTE_FALLBACK),
-            )
-            .otherwise(F.lit(ROUTE_UNMATCHED))
-        )
-        return (
-            self._write_target(joined, translated)
-            .withColumn(route_col, route)
-            .drop(_ID, _SKIP, "__lfts_arr", "__lfts_sorted")
+            .drop(*_TEMPS)
         )
 
     # -- O6: array-of-maps -----------------------------------------------------
-
     def _apply_array_of_maps(
         self,
         df: DataFrame,
@@ -587,216 +387,55 @@ class Translate:
         """iterate_on != source: for each struct element, look up
         ``elem[source]`` and write ``elem[target]``; nil elements/values are
         skipped; fallback writes count as matched; NO override gate
-        (array_of_maps_value_update.rb:14-38)."""
+        (array_of_maps_value_update.rb:14-38). A ``%{field}`` fallback is
+        evaluated against the row, as the reference sprintf's against the
+        full event (array_of_maps_value_update.rb:32-35)."""
         cfg = self.config
-        if isinstance(self.strategy, ExactBroadcastJoin):
-            return self._apply_array_of_maps_via_explode(
-                df, route_col, iterate_key
-            )
-        from .lookup import ExactMapLiteral
-
-        if isinstance(self.strategy, ExactMapLiteral):
-            return self._apply_array_of_maps_map_literal(df, route_col)
+        source, target = cfg.resolved_source, cfg.resolved_target
         arr = F.col(cfg.iterate_on)
-        keys = F.transform(arr, lambda m: m.getField(cfg.resolved_source).cast("string"))
-        res_arr = self.strategy.expr_array(keys)
-        df = df.withColumn(_RES, res_arr)
-        res_arr = F.col(_RES)
 
+        def key_of(m: Column) -> Column:
+            return m.getField(source).cast("string")
+
+        def present(m: Column) -> Column:
+            return m.getField(source).isNotNull()
+
+        df, each = self._probe_each(df, F.transform(arr, key_of), iterate_key)
         out_type = self._out_type()
         fb = self._fallback_expr(df)
 
-        def update_elem(m: Column, s: Column) -> Column:
-            inner = m.getField(cfg.resolved_source)
-            value = F.when(s["matched"], s["value"].cast(out_type))
+        def update(m: Column, i: Column) -> Column:
+            p = each(key_of(m), i)
+            value = F.when(p.matched, p.value.cast(out_type))
             if fb is not None:
-                value = value.when(s["error"].isNull(), fb.cast(out_type))
-            updated = m.withField(cfg.resolved_target, value)
-            return F.when(m.isNull() | inner.isNull(), m.withField(
-                cfg.resolved_target, F.lit(None).cast(out_type)
-            )).otherwise(updated)
+                ok = present(m) if p.error is None else present(m) & p.error.isNull()
+                value = value.when(ok, fb.cast(out_type))
+            return m.withField(target, value)
 
-        updated_arr = F.zip_with(F.col(cfg.iterate_on), res_arr, update_elem)
+        def rank(m: Column, i: Column) -> Column:
+            p = each(key_of(m), i)
+            hit = present(m) if fb is not None else present(m) & p.matched
+            return _route_rank(p, hit)
 
-        def elem_matched(m: Column, s: Column) -> Column:
-            inner = m.getField(cfg.resolved_source)
-            hit = s["matched"] | F.lit(fb is not None)
-            return F.when(m.isNull() | inner.isNull(), F.lit(False)).otherwise(hit)
-
-        matched_any = F.exists(
-            F.zip_with(F.col(cfg.iterate_on), res_arr, elem_matched), lambda b: b
-        )
-        any_error = F.exists(res_arr, lambda s: s["error"].isNotNull())
-
-        route = (
-            F.when(F.col(cfg.iterate_on).isNull(), F.lit(ROUTE_UNMATCHED))
-            .when(any_error, F.lit(ROUTE_FAILED))
-            .when(matched_any, F.lit(ROUTE_MATCHED))
-            .otherwise(F.lit(ROUTE_UNMATCHED))
-        )
-        return (
-            df.withColumn(cfg.iterate_on, updated_arr)
-            .withColumn(route_col, route)
-            .drop(_RES)
-        )
-
-
-    def _apply_array_of_maps_map_literal(
-        self, df: DataFrame, route_col: str
-    ) -> DataFrame:
-        """O6 struct-free fast path: probe the plan-literal map per element
-        inside one transform — no intermediate lookup-struct array."""
-        cfg = self.config
-        strat = self.strategy  # ExactMapLiteral
-        out_type = self._out_type()
-        fb = self._fallback_expr(df)
-
-        def inner_of(m: Column) -> Column:
-            return m.getField(cfg.resolved_source).cast("string")
-
-        def elem_matched(m: Column) -> Column:
-            inner = inner_of(m)
-            if strat._empty:
-                hit = F.lit(False)
-            elif strat.has_null_values:
-                hit = F.when(
-                    inner.isNotNull(), F.map_contains_key(strat._map, inner)
-                ).otherwise(F.lit(False))
-            else:
-                hit = inner.isNotNull() & F.element_at(
-                    strat._map, F.coalesce(inner, F.lit(""))
-                ).isNotNull()
-            return F.when(m.isNull(), F.lit(False)).otherwise(hit)
-
-        def update_elem(m: Column) -> Column:
-            inner = inner_of(m)
-            if strat._empty:
-                value = F.lit(None).cast(out_type)
-                if fb is not None:
-                    value = F.when(inner.isNotNull(), fb.cast(out_type))
-            else:
-                value = F.when(
-                    elem_matched(m),
-                    F.element_at(strat._map, F.coalesce(inner, F.lit(""))).cast(
-                        out_type
-                    ),
-                )
-                if fb is not None:
-                    value = value.when(inner.isNotNull(), fb.cast(out_type))
-            return m.withField(cfg.resolved_target, value)
-
-        arr = F.col(cfg.iterate_on)
-        updated_arr = F.transform(arr, update_elem)
-        matched_elem = lambda m: (
-            elem_matched(m)
-            | (F.lit(fb is not None) & m.isNotNull() & inner_of(m).isNotNull())
-        )
-        matched_any = F.exists(arr, matched_elem)
+        row_rank = F.array_max(F.transform(arr, rank))
         route = (
             F.when(arr.isNull(), F.lit(ROUTE_UNMATCHED))
-            .when(matched_any, F.lit(ROUTE_MATCHED))
+            .when(row_rank == 2, F.lit(ROUTE_FAILED))
+            .when(row_rank == 1, F.lit(ROUTE_MATCHED))
             .otherwise(F.lit(ROUTE_UNMATCHED))
         )
-        return df.withColumn(cfg.iterate_on, updated_arr).withColumn(
-            route_col, route
-        )
+        return df.withColumns(
+            {cfg.iterate_on: F.transform(arr, update), route_col: route}
+        ).drop(*_TEMPS)
 
-    def _apply_array_of_maps_via_explode(
-        self,
-        df: DataFrame,
-        route_col: str,
-        iterate_key: Optional[str] = None,
-    ) -> DataFrame:
-        """O6 at-scale plane (big dictionary): posexplode the struct array,
-        broadcast-join each element's source field, rebuild the array
-        ordinal-sorted with the target field written (same shape as the O5
-        explode plane). Fallback ``%{field}`` templates that reference row
-        columns work: exactly the referenced columns are carried through
-        the explode (the reference sprintf's against the full event —
-        array_of_maps_value_update.rb:32-35)."""
-        from ..functions.templates import sprintf_fields
 
-        cfg = self.config
-        assert isinstance(self.strategy, ExactBroadcastJoin)
-        dict_df = self.strategy.dict_df
-        out_type = self._out_type()
-        fb = self._fallback_expr(df)
-        # columns the fallback template references — carried through the
-        # explode so the post-explode sprintf sees them
-        fb_cols = (
-            [
-                c
-                for c in sprintf_fields(cfg.fallback, ts_col=cfg.ts_field)
-                if c in df.columns
-            ]
-            if cfg.fallback is not None
-            else []
-        )
-
-        base, id_col = self._row_id(df, iterate_key)
-        carry = [c for c in fb_cols if c != id_col]
-        ex = base.select(
-            id_col,
-            *carry,
-            F.posexplode(cfg.iterate_on).alias("__lfts_pos", "__lfts_m"),
-        )
-        key = F.col("__lfts_m").getField(cfg.resolved_source).cast("string")
-        probed = ex.join(
-            F.broadcast(dict_df), key.eqNullSafe(dict_df["__lfts_k"]), "left"
-        ).withColumn("__lfts_inner", key)
-        hit = F.col("__lfts_k").isNotNull()
-        value = F.when(
-            F.col("__lfts_inner").isNull(), F.lit(None).cast(out_type)
-        ).when(hit, F.col("__lfts_v").cast(out_type))
-        if fb is not None:
-            value = value.otherwise(fb.cast(out_type))
-        updated = F.when(
-            F.col("__lfts_m").isNull(), F.col("__lfts_m").withField(
-                cfg.resolved_target, F.lit(None).cast(out_type)
-            )
-        ).otherwise(
-            F.col("__lfts_m").withField(cfg.resolved_target, value)
-        )
-        elem_matched = F.when(
-            F.col("__lfts_m").isNull() | F.col("__lfts_inner").isNull(),
-            F.lit(False),
-        ).otherwise(hit | F.lit(fb is not None))
-        agg = probed.groupBy(id_col).agg(
-            F.array_sort(
-                F.collect_list(
-                    F.struct(
-                        F.col("__lfts_pos").alias("pos"),
-                        updated.alias("m"),
-                        elem_matched.alias("hit"),
-                    )
-                )
-            ).alias("__lfts_sorted")
-        )
-        joined = base.join(agg, id_col, "left")
-        rebuilt = F.transform(F.col("__lfts_sorted"), lambda s: s["m"])
-        matched_any = F.coalesce(
-            F.exists(F.col("__lfts_sorted"), lambda s: s["hit"]), F.lit(False)
-        )
-        route = (
-            F.when(F.col(cfg.iterate_on).isNull(), F.lit(ROUTE_UNMATCHED))
-            .when(matched_any, F.lit(ROUTE_MATCHED))
-            .otherwise(F.lit(ROUTE_UNMATCHED))
-        )
-        # empty arrays explode to no rows → rebuild them (with the widened
-        # struct type) from the original column so [] stays []
-        empty_shaped = F.transform(
-            F.col(cfg.iterate_on),
-            lambda m: m.withField(cfg.resolved_target, F.lit(None).cast(out_type)),
-        )
-        out_arr = F.when(
-            F.col(cfg.iterate_on).isNotNull(),
-            F.coalesce(rebuilt, empty_shaped),
-        )
-        return (
-            joined.withColumn(cfg.iterate_on, out_arr)
-            .withColumn(route_col, route)
-            .drop(_ID, "__lfts_sorted")
-        )
+def _route_rank(p: Probe, hit: Column) -> Column:
+    """An element's share of its row's route, maxed over the array:
+    2 failed (any failed element fails the row), 1 hit, 0 neither."""
+    rank = F.when(hit, F.lit(1)).otherwise(F.lit(0))
+    if p.error is not None:
+        rank = F.when(p.error.isNotNull(), F.lit(2)).otherwise(rank)
+    return rank
 
 
 def translate(
@@ -804,13 +443,12 @@ def translate(
     spark: Optional[SparkSession] = None,
     route_col: str = "route",
     matched_key_col: Optional[str] = None,
-    physical: Optional[str] = None,
     iterate_key: Optional[str] = None,
     **config_kwargs,
 ) -> DataFrame:
     """Functional convenience: ``translate(df, source=..., dictionary=...)``."""
     cfg = TranslateConfig(**config_kwargs)
-    op = Translate(cfg, spark=spark or df.sparkSession, physical=physical)
+    op = Translate(cfg, spark=spark or df.sparkSession)
     return op.apply(
         df,
         route_col=route_col,

@@ -1,6 +1,6 @@
 """The north-star pipeline: parse → enrich → route → aggregate over the
-pages table, with fan-out sinks, skew handling, metrics and resumability
-(BASELINE.json.north_star / north_rule).
+pages table, with fan-out sinks, skew handling, metrics and an optional
+staged enriched frame (BASELINE.json.north_star / north_rule).
 
 Stage map (all lazily composed into ONE Catalyst plan until the sinks):
   parse     — decode html, extract status/lang header/text (byte-identical),
@@ -22,8 +22,8 @@ Scale design notes:
   - the only shuffles in the whole job are the final aggregates (narrow
     rows) and the partitioned write's optional repartition;
   - observe() metrics ride the same pass — no second scan of the input;
-  - resumability: the enriched frame is staged to parquet (checkpoint) so
-    the aggregate/sink phase can restart without recomputing the parse.
+  - staging: with checkpoint=True the enriched frame is written to parquet
+    and the sinks read it back; every run rewrites the stage.
 """
 
 from __future__ import annotations
@@ -77,7 +77,6 @@ class PipelineConfig:
     status_fallback: str = "unknown-status"
     collab_fallback: str = "unknown"
     use_arrow_extract: bool = False
-    exact_physical: Optional[str] = None  # None=auto, 'expr'|'join'
     #: header-field regexes scan only this prefix of the decoded html
     head_window: int = 1024
     #: external-crawl mode: html bytes may carry malformed UTF-8, so the
@@ -144,7 +143,6 @@ def enrich_stage(
             fallback=cfg.status_fallback,
         ),
         spark=spark,
-        physical=cfg.exact_physical,
     )
     out = status_op.apply(parsed, route_col="route", matched_key_col="matched_key")
 
@@ -152,7 +150,6 @@ def enrich_stage(
     lang_op = Translate(
         TranslateConfig(source="lang", target="lang_name", dictionary=cfg.lang_dict),
         spark=spark,
-        physical=cfg.exact_physical,
     )
     out = lang_op.apply(out, route_col="lang_route")
 
@@ -329,9 +326,9 @@ def run_pipeline(
 ) -> Dict[str, int]:
     """End-to-end run; returns the observed metrics dict.
 
-    checkpoint=True stages the enriched frame first (resumable: rerun skips
-    parse/enrich if the stage exists and is complete — per-partition
-    lineage lives in the staged files' spark_partition_id).
+    checkpoint=True stages the enriched frame (with its spark_partition_id
+    as per-partition lineage) before the sinks read it back. The stage is
+    rewritten on every run: a rerun parses and enriches again.
 
     table_format: every sink/stage write and read-back goes through the S7
     TableIO seam — the identical pipeline runs with ``"iceberg"`` when the

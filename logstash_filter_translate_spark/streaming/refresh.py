@@ -34,14 +34,9 @@ class StreamingTranslate:
     """Wraps a Translate operator for Structured Streaming with periodic
     dictionary refresh (R1-R7)."""
 
-    def __init__(
-        self,
-        config: TranslateConfig,
-        spark: SparkSession,
-        physical: Optional[str] = None,
-    ):
+    def __init__(self, config: TranslateConfig, spark: SparkSession):
         self.spark = spark
-        self.op = Translate(config, spark=spark, physical=physical)
+        self.op = Translate(config, spark=spark)
         self._last_refresh = time.monotonic()
 
     def maybe_refresh(self) -> bool:

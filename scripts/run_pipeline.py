@@ -3,7 +3,7 @@
 Usage (multi-executor cluster):
   spark-submit --py-files lfts.zip scripts/run_pipeline.py \
       --input /data/pages --output /data/routed \
-      --status-dict /dicts/status.csv --checkpoint --refresh-interval 300
+      --status-dict /dicts/status.csv --checkpoint
 
   (build lfts.zip with: cd repo && zip -r lfts.zip logstash_filter_translate_spark)
 
@@ -29,11 +29,9 @@ def main() -> None:
     ap.add_argument("--output", required=True)
     ap.add_argument("--status-dict", help="CSV/JSON/YAML dictionary path for the "
                                           "status translate (default: built-in)")
-    ap.add_argument("--refresh-interval", type=int, default=300)
-    ap.add_argument("--refresh-behaviour", default="merge",
-                    choices=["merge", "replace"])
     ap.add_argument("--checkpoint", action="store_true",
-                    help="stage the enriched frame for resumability")
+                    help="stage the enriched frame before the sinks "
+                         "(rewritten on every run)")
     ap.add_argument("--arrow-extract", action="store_true",
                     help="use the pandas-UDF extraction plane")
     ap.add_argument("--table-format", default="parquet",

@@ -1,3 +1,4 @@
+import contextlib
 import os
 import sys
 
@@ -5,6 +6,7 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from logstash_filter_translate_spark.operators import lookup  # noqa: E402
 from logstash_filter_translate_spark.session import build_session  # noqa: E402
 
 TESTDATA = os.environ.get("SPARK_GRAFT_TESTDATA", "/root/testdata/sf0.001")
@@ -82,3 +84,14 @@ def fixtures_dir(tmp_path_factory):
 
 def rows_as_dicts(df):
     return [r.asDict(recursive=True) for r in df.collect()]
+
+
+@contextlib.contextmanager
+def exact_plane(plane):
+    """Force the plane ``build_strategy`` picks for an exact dictionary
+    built inside the block: ``"literal"`` (map literal) or ``"join"``
+    (broadcast hash join, for any non-empty dictionary)."""
+    limit = {"literal": sys.maxsize, "join": 0}[plane]
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(lookup, "MAP_LITERAL_MAX_ENTRIES", limit)
+        yield

@@ -43,9 +43,6 @@ class ExplodingStrategy(RegexFirstMatch):
 
         self._scalar_udf = udf
 
-    def expr(self, key):
-        return self._scalar_udf(key)
-
 
 def test_failed_rows_route_to_failed_and_pass_through(spark):
     df = spark.createDataFrame([("ok",), ("boom",), ("meh",)], "k string")
@@ -64,7 +61,8 @@ def test_failed_rows_route_to_failed_and_pass_through(spark):
 def test_real_regex_udf_error_column_is_null_on_success(spark):
     strat = RegexFirstMatch([("a+", "A")])
     df = spark.createDataFrame([("aaa",), ("zzz",)], "s string")
-    rows = df.select(strat.expr(F.col("s")).alias("r")).select("r.error").collect()
+    df, probe = strat.probe_frame(df, F.col("s"))
+    rows = df.select(probe.error.alias("error")).collect()
     assert all(r["error"] is None for r in rows)
 
 
@@ -110,3 +108,32 @@ def test_fault_injector_array_plane_routes_failed(spark):
     assert out[1] == (["C", "fb"], "matched")
     assert out[2][1] == "failed"
     assert out[3] == (["fb"], "fallback")
+
+
+def test_fault_injector_array_of_maps_routes_failed(spark):
+    """O10 through the array-of-maps (O6) UDF plane: a faulting element
+    fails its row, and its target stays NULL even with a fallback; the
+    row's other elements and clean rows translate or fall back."""
+    df = spark.createDataFrame(
+        [
+            (1, [{"k": "click"}, {"k": "boomer"}, {"k": "zzz"}]),
+            (2, [{"k": "click"}, {"k": "zzz"}]),
+            (3, [{"k": "zzz"}, {"k": None}]),
+        ],
+        "id int, items array<struct<k:string>>",
+    )
+    op = Translate(
+        TranslateConfig(
+            source="k", iterate_on="items", target="t",
+            dictionary=[("^c", "C")], exact=True, regex=True, fallback="fb",
+        ),
+        spark=spark,
+    )
+    op.strategy = RegexFirstMatch([("^c", "C")], fault_pattern="^boom")
+    out = {
+        r["id"]: ([m["t"] for m in r["items"]], r["route"])
+        for r in op.apply(df).collect()
+    }
+    assert out[1] == (["C", None, "fb"], "failed")
+    assert out[2] == (["C", "fb"], "matched")
+    assert out[3] == (["fb", None], "matched")

@@ -1,6 +1,7 @@
 """O6 at-scale explode plane equals the expression plane."""
 
 from logstash_filter_translate_spark import translate
+from tests.conftest import exact_plane
 
 
 def test_array_of_maps_explode_plane_matches_expr_plane(spark):
@@ -13,10 +14,12 @@ def test_array_of_maps_explode_plane_matches_expr_plane(spark):
     df = spark.createDataFrame(data, "id int, foo array<struct<bar:string>>")
     d = {str(k): f"v{k}" for k in range(8)}
 
-    a = translate(df, source="bar", iterate_on="foo", target="baz",
-                  dictionary=d, fallback="fb", physical="expr")
-    b = translate(df, source="bar", iterate_on="foo", target="baz",
-                  dictionary=d, fallback="fb", physical="join")
+    with exact_plane("literal"):
+        a = translate(df, source="bar", iterate_on="foo", target="baz",
+                      dictionary=d, fallback="fb")
+    with exact_plane("join"):
+        b = translate(df, source="bar", iterate_on="foo", target="baz",
+                      dictionary=d, fallback="fb")
     ra = {r["id"]: (str(r["foo"]), r["route"]) for r in a.collect()}
     rb = {r["id"]: (str(r["foo"]), r["route"]) for r in b.collect()}
     assert ra == rb
@@ -28,10 +31,12 @@ def test_array_of_maps_explode_plane_no_fallback(spark):
         "id int, foo array<struct<bar:string>>",
     )
     d = {"1": "one"}
-    a = translate(df, source="bar", iterate_on="foo", target="baz",
-                  dictionary=d, physical="expr")
-    b = translate(df, source="bar", iterate_on="foo", target="baz",
-                  dictionary=d, physical="join")
+    with exact_plane("literal"):
+        a = translate(df, source="bar", iterate_on="foo", target="baz",
+                      dictionary=d)
+    with exact_plane("join"):
+        b = translate(df, source="bar", iterate_on="foo", target="baz",
+                      dictionary=d)
     ra = {r["id"]: (str(r["foo"]), r["route"]) for r in a.collect()}
     rb = {r["id"]: (str(r["foo"]), r["route"]) for r in b.collect()}
     assert ra == rb

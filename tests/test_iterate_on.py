@@ -3,6 +3,7 @@
 array_of_maps_value_update.rb)."""
 
 from logstash_filter_translate_spark import ROUTE_MATCHED, ROUTE_UNMATCHED, translate
+from tests.conftest import exact_plane
 
 TAG_MAP = [
     ("eight", "val-8-1|val-8-2"),
@@ -120,10 +121,12 @@ def test_array_of_values_explode_plane_matches_transform_plane(spark):
     ] + [(100, None), (101, [])]
     df = spark.createDataFrame(data, "id int, foo array<string>")
     d = {str(i): f"v{i}" for i in range(20)}
-    a = translate(df, source="foo", iterate_on="foo", target="baz",
-                  dictionary=d, fallback="fb", physical="expr")
-    b = translate(df, source="foo", iterate_on="foo", target="baz",
-                  dictionary=d, fallback="fb", physical="join")
+    with exact_plane("literal"):
+        a = translate(df, source="foo", iterate_on="foo", target="baz",
+                      dictionary=d, fallback="fb")
+    with exact_plane("join"):
+        b = translate(df, source="foo", iterate_on="foo", target="baz",
+                      dictionary=d, fallback="fb")
     ra = {r["id"]: (r["baz"], r["route"]) for r in a.collect()}
     rb = {r["id"]: (r["baz"], r["route"]) for r in b.collect()}
     assert ra == rb

@@ -17,6 +17,7 @@ from logstash_filter_translate_spark.config import (
     TranslateConfigError,
 )
 from logstash_filter_translate_spark.operators.translate import Translate
+from tests.conftest import exact_plane
 
 
 # -- nested targets -------------------------------------------------------------
@@ -138,14 +139,14 @@ def test_typed_nested_values_variant_access(spark):
 
 def test_typed_nested_values_variant_broadcast_plane(spark):
     df = spark.createDataFrame([("d",), ("zzz",)], "k string")
-    op = Translate(
-        TranslateConfig(
-            source="k", target="translation",
-            dictionary=DICT_YML_PAIRS, nested_values="typed",
-        ),
-        spark=spark,
-        physical="join",
-    )
+    with exact_plane("join"):
+        op = Translate(
+            TranslateConfig(
+                source="k", target="translation",
+                dictionary=DICT_YML_PAIRS, nested_values="typed",
+            ),
+            spark=spark,
+        )
     from logstash_filter_translate_spark.operators.lookup import (
         ExactBroadcastJoin,
     )

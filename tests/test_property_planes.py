@@ -10,6 +10,7 @@ from hypothesis import strategies as st
 
 from logstash_filter_translate_spark import translate
 from logstash_filter_translate_spark.operators.lookup import UnionSubstitution
+from tests.conftest import exact_plane
 
 KEYS = st.text(string.ascii_lowercase + string.digits, min_size=1, max_size=6)
 VALS = st.text(string.ascii_letters + " ", min_size=0, max_size=8)
@@ -25,8 +26,10 @@ PROP_SETTINGS = settings(
 @PROP_SETTINGS
 def test_exact_map_literal_equals_broadcast_join(spark, d, probes):
     df = spark.createDataFrame([(p,) for p in probes], "k string")
-    a = translate(df, source="k", dictionary=d, fallback="fb", physical="expr")
-    b = translate(df, source="k", dictionary=d, fallback="fb", physical="join")
+    with exact_plane("literal"):
+        a = translate(df, source="k", dictionary=d, fallback="fb")
+    with exact_plane("join"):
+        b = translate(df, source="k", dictionary=d, fallback="fb")
     key = lambda r: str(r)
     assert sorted(map(tuple, a.collect()), key=key) == sorted(
         map(tuple, b.collect()), key=key
