@@ -9,9 +9,10 @@ Every strategy answers a lookup with a :class:`Probe` of plain Columns
 fail per row. The updaters in ``operators/translate.py`` consume only this
 contract, one body per updater shape:
 
-* ``probe(x)`` — elementwise planes (the plan-embedded map literal and the
-  native union ``replace`` chain): a pure Column expression of one string
-  key, usable inside ``transform`` lambdas with no per-element struct.
+* ``probe(x)`` — elementwise planes (the plan-embedded, hash-bucketed map
+  literal and the native union ``replace`` chain): a pure Column expression
+  of one string key, usable inside ``transform`` lambdas with no
+  per-element struct.
 * ``probe_frame(df, key)`` — a scalar key, a column of ``df``: returns the
   frame (with any stashed temp columns, or the broadcast join) and its
   Probe.
@@ -20,11 +21,13 @@ contract, one body per updater shape:
   planes probe ``x`` in place; the Arrow UDF plane reads the ``i``-th
   struct of a result array aligned with ``keys``.
 
-The exact join plane has no per-element form: its scalar probe is a
+:func:`build_strategy` picks the exact plane by dictionary size. Up to
+``MAP_LITERAL_MAX_ENTRIES`` entries it is the bucketed map literal, whose
+probe cost is one short bucket whatever the size. Only above that does the
+exact join plane run, which has no per-element form: its scalar probe is a
 left-outer broadcast hash join against :meth:`ExactBroadcastJoin.build_side`
 (whole-stage codegen, no Python), and ``iterate_on`` reaches it through
 posexplode → join → position-sorted collect_list in the Translate operator.
-:func:`build_strategy` picks the exact plane by dictionary size.
 
 Regex / union semantics genuinely need per-row regex engines, so they share
 one Arrow-vectorized pandas-UDF wrapper holding the (pattern, value) table,
@@ -36,6 +39,7 @@ from __future__ import annotations
 
 import json
 import re
+import zlib
 from typing import Any, Callable, List, NamedTuple, Optional, Sequence, Tuple
 
 import pandas as pd
@@ -46,9 +50,17 @@ from pyspark.sql.functions import pandas_udf
 
 Pairs = Sequence[Tuple[str, Any]]
 
-#: above this many entries the exact strategy switches from a plan-embedded
-#: map literal to a broadcast hash join (join plane)
-MAP_LITERAL_MAX_ENTRIES = 512
+#: above this many entries the exact strategy switches from the bucketed
+#: map literal to a broadcast hash join (join plane). Measured with
+#: tools/microbench_exact.py (local[4]): the literal wins at 20k entries,
+#: at 32k it still wins scalar probes and ties iterate_on, and at 50k it
+#: loses, since even at a fixed bucket size its cost grows with the
+#: dictionary.
+MAP_LITERAL_MAX_ENTRIES = 32768
+
+#: keys per bucket of the map literal; each probe scans one bucket. 8 was
+#: the fastest of 4/8/16/32 in the same measurement.
+BUCKET_KEYS = 8
 
 #: temp columns a probe may add to the frame; the caller drops them
 VALUE_COL = "__lfts_val"
@@ -284,9 +296,20 @@ class _ArrowUdfPlane(LookupStrategy):
 # ---------------------------------------------------------------------------
 
 class ExactMapLiteral(LookupStrategy):
-    """Exact hash probe as a plan-embedded ``map`` literal — Catalyst
-    evaluates ``element_at`` / ``map_contains_key`` in codegen; zero Python.
-    (fetch_strategy/memory.rb:4-16)."""
+    """Exact hash probe on a plan-embedded, hash-bucketed map literal —
+    Catalyst evaluates it in codegen; zero Python
+    (fetch_strategy/memory.rb:4-16).
+
+    The deduplicated keys are split into ``ceil(n / BUCKET_KEYS)`` buckets
+    by the CRC-32 of their UTF-8 bytes, and the bucket array is one
+    ``from_json`` of one JSON text, which Catalyst constant-folds into a
+    single ``array<map<string, T>>`` literal. A probe reads
+    ``element_at(get(buckets, crc32(x) % B), x)``: ``element_at`` scans a
+    map linearly, so bucketing bounds each probe to one short bucket.
+    Spark's ``crc32`` of a string is the CRC-32 of its UTF-8 bytes, the
+    same function as :func:`zlib.crc32`, so plan construction and the
+    executors place every key in the same bucket.
+    """
 
     mode = "exact"
 
@@ -294,49 +317,87 @@ class ExactMapLiteral(LookupStrategy):
         self.value_type, conv, self.values_are_json = infer_value_type(
             pairs, nested
         )
-        is_variant = isinstance(self.value_type, T.VariantType)
-        entries: List[Column] = []
+        if isinstance(self.value_type, T.VariantType):
+            # the converter yields JSON text; embed the value itself so
+            # from_json builds a real VARIANT (variant_get works on it)
+            conv = lambda v: v  # noqa: E731
         # last occurrence wins, like Hash#[]= on duplicate keys
         dedup = {str(k): conv(v) for k, v in pairs}
-        for k, v in dedup.items():
-            entries.append(F.lit(k))
-            if v is None:
-                entries.append(F.lit(None).cast(self.value_type))
-            elif is_variant:
-                # the converter yields JSON text; materialize a real
-                # VARIANT literal so nested access (variant_get) works
-                entries.append(F.parse_json(F.lit(v)))
-            else:
-                entries.append(F.lit(v).cast(self.value_type))
-        self._map = F.create_map(*entries) if entries else None
+        _check_int64(self.value_type, dedup.values())
         #: when no value is NULL, `element_at IS NOT NULL` ⇔ matched — one
         #: map probe instead of two
         self._has_null_values = any(v is None for v in dedup.values())
+        self._n_buckets = max(1, -(-len(dedup) // BUCKET_KEYS))
+        buckets: List[dict] = [{} for _ in range(self._n_buckets)]
+        for k, v in dedup.items():
+            buckets[bucket_of(k, self._n_buckets)][k] = v
+        schema = T.ArrayType(T.MapType(T.StringType(), self.value_type))
+        # FAILFAST: a value the schema cannot hold raises instead of
+        # nulling the whole array (every key would then miss silently)
+        self._buckets = (
+            F.from_json(
+                F.lit(json.dumps(buckets, ensure_ascii=False)),
+                schema,
+                {"mode": "FAILFAST"},
+            )
+            if dedup
+            else None
+        )
+
+    def _bucket(self, k: Column) -> Column:
+        if self._n_buckets == 1:
+            return F.get(self._buckets, 0)
+        return F.get(self._buckets, (F.crc32(k) % self._n_buckets).cast("int"))
 
     def _value(self, x: Column) -> Column:
-        return F.element_at(self._map, F.coalesce(x, F.lit("")))
+        k = F.coalesce(x, F.lit(""))
+        v = F.element_at(self._bucket(k), k)
+        if self._has_null_values and isinstance(self.value_type, T.VariantType):
+            # from_json reads a JSON null map value as a variant null; the
+            # dictionary's None is SQL NULL on every other plane
+            return F.when(~F.is_variant_null(v), v)
+        return v
 
     def _probe(self, x: Column, value: Column) -> Probe:
         if self._has_null_values:
             matched = F.when(
-                x.isNotNull(), F.map_contains_key(self._map, x)
+                x.isNotNull(), F.map_contains_key(self._bucket(x), x)
             ).otherwise(F.lit(False))
         else:
             matched = x.isNotNull() & value.isNotNull()
         return Probe(matched, value, x)
 
     def probe(self, x: Column) -> Probe:
-        if self._map is None:
+        if self._buckets is None:
             return Probe(F.lit(False), F.lit(None).cast(self.value_type), x)
         return self._probe(x, self._value(x))
 
     def probe_frame(self, df: DataFrame, key: Column) -> Tuple[DataFrame, Probe]:
-        if self._map is None:
+        if self._buckets is None:
             return df, self.probe(key)
         # stash the value once; matched derives from it, so each row
         # probes the map once
         df = df.withColumn(VALUE_COL, self._value(key))
         return df, self._probe(key, F.col(VALUE_COL))
+
+
+def bucket_of(key: str, n_buckets: int) -> int:
+    """The map-literal bucket of ``key``: CRC-32 of its UTF-8 bytes, the
+    value Spark's ``crc32`` computes for the same string."""
+    return zlib.crc32(key.encode("utf-8")) % n_buckets
+
+
+def _check_int64(value_type: T.DataType, values) -> None:
+    """Reject, at plan time, an integer a bigint column cannot hold."""
+    nested = isinstance(value_type, T.ArrayType)
+    if not isinstance(value_type.elementType if nested else value_type, T.LongType):
+        return
+    for v in values:
+        for e in (v or ()) if nested else (v,):
+            if e is not None and not -(2**63) <= e < 2**63:
+                raise ValueError(
+                    f"dictionary value {e} does not fit a bigint (int64)"
+                )
 
 
 class ExactBroadcastJoin(LookupStrategy):
@@ -673,9 +734,9 @@ def build_strategy(
 ) -> LookupStrategy:
     """Pick the physical strategy for a logical mode.
 
-    exact: a map literal up to ``MAP_LITERAL_MAX_ENTRIES`` entries, the
-    broadcast hash join above that (given a session to build the dictionary
-    frame on). regex: the Arrow UDF plane. union: the native replace chain
+    exact: the bucketed map literal up to ``MAP_LITERAL_MAX_ENTRIES``
+    entries, the broadcast hash join above that (given a session to build
+    the dictionary frame on). regex: the Arrow UDF plane. union: the native replace chain
     when it is proved equivalent, else the Arrow UDF plane.
     ``nested``: value typing for nested dictionary values ("json" legacy
     strings | "typed" array/VARIANT columns) — exact mode only.

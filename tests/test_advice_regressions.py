@@ -26,6 +26,7 @@ from logstash_filter_translate_spark.operators.lookup import (
     UnionSubstitution,
 )
 from logstash_filter_translate_spark.operators.translate import Translate
+from tests.conftest import exact_plane
 
 
 # -- 1. ANSI empty-array source ----------------------------------------------
@@ -139,7 +140,8 @@ def test_iterate_values_explode_plane_with_natural_key(spark):
         source="words", iterate_on="words", target="t",
         dictionary=_big_dict(), fallback="?",
     )
-    op = Translate(TranslateConfig(**cfg), spark=spark)
+    with exact_plane("join"):
+        op = Translate(TranslateConfig(**cfg), spark=spark)
     from logstash_filter_translate_spark.operators.lookup import (
         ExactBroadcastJoin,
     )
@@ -168,13 +170,14 @@ def test_iterate_maps_explode_plane_fallback_field_reference(spark):
         ],
         "id int, tag string, items array<struct<kind:string>>",
     )
-    op = Translate(
-        TranslateConfig(
-            source="kind", iterate_on="items", target="label",
-            dictionary=_big_dict(), fallback="fb-%{tag}",
-        ),
-        spark=spark,
-    )
+    with exact_plane("join"):
+        op = Translate(
+            TranslateConfig(
+                source="kind", iterate_on="items", target="label",
+                dictionary=_big_dict(), fallback="fb-%{tag}",
+            ),
+            spark=spark,
+        )
     out = op.apply(df, iterate_key="id")
     rows = {r["id"]: [m["label"] for m in r["items"]] for r in out.collect()}
     assert rows[1] == ["W1", "fb-alpha"]

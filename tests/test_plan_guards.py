@@ -8,6 +8,7 @@ from pyspark.sql import functions as F
 
 from logstash_filter_translate_spark.config import TranslateConfig
 from logstash_filter_translate_spark.operators.translate import Translate
+from tests.conftest import exact_plane
 
 
 def plan_of(df) -> str:
@@ -76,13 +77,14 @@ def test_bucket_cap_is_agg_anti_join_not_window_sort(spark):
 
 def test_explode_plane_with_natural_key_has_no_synthetic_id(spark):
     df = spark.createDataFrame([(1, ["w1"])], "id int, words array<string>")
-    op = Translate(
-        TranslateConfig(
-            source="words", iterate_on="words", target="t",
-            dictionary=[(f"w{i}", f"W{i}") for i in range(600)],
-        ),
-        spark=spark,
-    )
+    with exact_plane("join"):
+        op = Translate(
+            TranslateConfig(
+                source="words", iterate_on="words", target="t",
+                dictionary=[(f"w{i}", f"W{i}") for i in range(600)],
+            ),
+            spark=spark,
+        )
     p = plan_of(op.apply(df, iterate_key="id"))
     assert "monotonically_increasing_id" not in p
     assert "BroadcastHashJoin" in p  # the dictionary side stays broadcast
@@ -99,13 +101,14 @@ def test_exact_map_literal_plane_has_no_join(spark):
 
 def test_exact_broadcast_plane_probe_side_not_shuffled(spark, testdata_dir):
     df = spark.read.parquet(f"{testdata_dir}/events.parquet")
-    op = Translate(
-        TranslateConfig(
-            source="event_type", target="t",
-            dictionary=[(str(i), str(i)) for i in range(600)],
-        ),
-        spark=spark,
-    )
+    with exact_plane("join"):
+        op = Translate(
+            TranslateConfig(
+                source="event_type", target="t",
+                dictionary=[(str(i), str(i)) for i in range(600)],
+            ),
+            spark=spark,
+        )
     p = plan_of(op.apply(df))
     assert "BroadcastHashJoin" in p
     assert "SortMergeJoin" not in p
