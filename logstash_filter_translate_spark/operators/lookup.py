@@ -30,9 +30,12 @@ left-outer broadcast hash join against :meth:`ExactBroadcastJoin.build_side`
 posexplode → join → position-sorted collect_list in the Translate operator.
 
 Regex / union semantics genuinely need per-row regex engines, so they share
-one Arrow-vectorized pandas-UDF wrapper holding the (pattern, value) table,
-compiled per batch inside the UDF closure because compiled patterns don't
-pickle (the reference precompiles per reload — fetch_strategy/file.rb:34-40).
+one Arrow-vectorized pandas-UDF wrapper (:func:`_arrow_udfs`) that looks up
+each distinct value once per Arrow batch. The (pattern, value) table ships
+as strings and is compiled per batch inside the UDF closure, because
+compiled patterns don't pickle (the reference precompiles per reload —
+fetch_strategy/file.rb:34-40). Regex patterns carry a plan-time
+:func:`required_literal` that screens the ordered scan.
 """
 
 from __future__ import annotations
@@ -40,6 +43,7 @@ from __future__ import annotations
 import json
 import re
 import zlib
+from re import _constants, _parser
 from typing import Any, Callable, List, NamedTuple, Optional, Sequence, Tuple
 
 import pandas as pd
@@ -211,43 +215,66 @@ def lookup_result_type(value_type: T.DataType) -> T.StructType:
     )
 
 
+#: a miss, and the result of every null key: (matched, value, key, error)
+_MISS = (False, None, None, None)
+
+
 def _arrow_udfs(value_type: T.DataType, build: Callable[[], Any], lookup_one):
     """The Arrow UDF plane shared by regex and union: a scalar UDF and an
-    array UDF (``iterate_on``) applying ``lookup_one(key, state)`` to each
-    non-null key, with ``state = build()`` made once per Arrow batch.
-    ``lookup_one`` returns ``(value, matched_key)`` or None for a miss; an
-    exception inside it is contained to its row as ``error``
-    (translate.rb:266-270). Both UDFs return ``lookup_result_type``."""
+    array UDF (``iterate_on``) applying ``lookup_one(key, state)`` once to
+    each distinct non-null key of an Arrow batch (for ``iterate_on``, of the
+    batch's flattened elements), with ``state = build()`` made once per
+    batch. ``lookup_one`` is deterministic per key, so every row holding a
+    key gets that key's result. It returns ``(value, matched_key)`` or None
+    for a miss; an exception inside it is contained to the rows holding
+    that key as ``error`` (translate.rb:266-270). Both UDFs return
+    ``lookup_result_type``."""
     result_type = lookup_result_type(value_type)
+    fields = result_type.fieldNames()
 
     def guarded(s, state):
-        miss = {"matched": False, "value": None, "key": None, "error": None}
-        if s is None:
-            return miss
         try:
             hit = lookup_one(s, state)
         except Exception as exc:
-            return {**miss, "error": f"{type(exc).__name__}: {exc}"}
+            return (False, None, None, f"{type(exc).__name__}: {exc}")
         if hit is None:
-            return miss
-        return {"matched": True, "value": hit[0], "key": hit[1], "error": None}
+            return _MISS
+        return (True, hit[0], hit[1], None)
+
+    def lookup_distinct(keys: pd.Series):
+        """``(codes, results)``: the result of ``keys[i]`` is
+        ``results[codes[i]]``. Null keys get pandas' code -1, which picks
+        the miss appended last."""
+        codes, uniques = pd.factorize(keys)
+        state = build()
+        return codes, [guarded(u, state) for u in uniques] + [_MISS]
+
+    def take(values, codes):
+        return pd.Series(values, dtype=object).to_numpy()[codes]
 
     @pandas_udf(result_type)
     def scalar(col: pd.Series) -> pd.DataFrame:
-        state = build()
-        return pd.DataFrame([guarded(s, state) for s in col])
+        codes, results = lookup_distinct(col)
+        return pd.DataFrame({f: take(c, codes) for f, c in zip(fields, zip(*results))})
 
     @pandas_udf(T.ArrayType(result_type))
     def array(col: pd.Series) -> pd.Series:
-        state = build()
-        return pd.Series(
-            [
-                None
-                if arr is None
-                else [guarded(None if x is None else str(x), state) for x in arr]
-                for arr in col
-            ]
-        )
+        flat = [
+            None if x is None else str(x)
+            for arr in col
+            if arr is not None
+            for x in arr
+        ]
+        codes, results = lookup_distinct(pd.Series(flat, dtype=object))
+        structs = take([dict(zip(fields, r)) for r in results], codes)
+        out, pos = [], 0
+        for arr in col:
+            if arr is None:
+                out.append(None)
+            else:
+                out.append(list(structs[pos : pos + len(arr)]))
+                pos += len(arr)
+        return pd.Series(out)
 
     return scalar, array
 
@@ -506,11 +533,38 @@ class ExactFrameJoin(ExactBroadcastJoin):
 # O2 — ordered first-match regex
 # ---------------------------------------------------------------------------
 
+def required_literal(pattern: str) -> Optional[str]:
+    """The longest run of consecutive top-level literal characters of
+    ``pattern``. Every match of the pattern contains it, so a value without
+    it cannot match. None when there is no such run, when the pattern is
+    case-insensitive or locale-dependent as a whole (its literals then
+    match other spellings), or when it does not parse."""
+    try:
+        parsed = _parser.parse(pattern)
+    except Exception:
+        return None
+    if parsed.state.flags & (re.IGNORECASE | re.LOCALE):
+        return None
+    best, run = "", ""
+    for op, arg in parsed:
+        run = run + chr(arg) if op is _constants.LITERAL else ""
+        if len(run) > len(best):
+            best = run
+    return best or None
+
+
 class RegexFirstMatch(_ArrowUdfPlane):
     """Probe each dictionary key as a regex **in insertion order**, first
     unanchored match wins (fetch_strategy/memory.rb:18-33: ordered ``detect``
-    + ``source.match``). Arrow-vectorized pandas UDF; patterns are shipped as
-    strings and compiled once per executor on first batch.
+    + ``source.match``). Arrow-vectorized pandas UDF (:func:`_arrow_udfs`:
+    each distinct value once per batch); patterns are shipped as strings and
+    compiled per batch.
+
+    Each pattern carries its :func:`required_literal`, found at plan time;
+    the ordered scan only searches a pattern whose literal is in the value
+    (or that has none), which keeps dictionary order and the first match.
+    When some pattern has no literal, a union of all patterns first screens
+    out values that match none of them.
     """
 
     mode = "regex"
@@ -534,17 +588,25 @@ class RegexFirstMatch(_ArrowUdfPlane):
         # fail fast at plan time on invalid patterns (reference raises at
         # register when compiling — fetch_strategy/memory.rb:22)
         compiled_probe = [re.compile(k) for k, _ in table]
-        # the union prefilter concatenates patterns, which RENUMBERS
-        # capturing groups — a pattern using a backreference (e.g. (a)\1)
-        # would silently never match in the union and short-circuit to a
-        # false miss. Decide safety once at plan time and ship the flag.
-        union_ok = len(table) > 4 and not any(
-            c.groups > 0 or re.search(r"\\\d", k)
-            for c, (k, _) in zip(compiled_probe, table)
+        literals = [required_literal(k) for k, _ in table]
+        # the union prefilter only pays when some pattern has no literal to
+        # screen it. It concatenates patterns, which RENUMBERS capturing
+        # groups — a pattern using a backreference (e.g. (a)\1) would
+        # silently never match in the union and short-circuit to a false
+        # miss — so any group or backreference rules it out.
+        self.union_prefilter = union_ok = (
+            len(table) > 4
+            and None in literals
+            and not any(
+                c.groups > 0 or re.search(r"\\\d", k)
+                for c, (k, _) in zip(compiled_probe, table)
+            )
         )
 
         def build():
-            compiled = [(re.compile(k), k, v) for k, v in table]
+            compiled = [
+                (re.compile(k), k, v, lit) for (k, v), lit in zip(table, literals)
+            ]
             try:
                 union = (
                     re.compile("|".join(f"(?:{k})" for k, _ in table))
@@ -568,8 +630,8 @@ class RegexFirstMatch(_ArrowUdfPlane):
             # expensive" caveat at translate.rb:143-144)
             if union is not None and not union.search(s):
                 return None
-            for pat, raw_key, val in compiled:
-                if pat.search(s):
+            for pat, raw_key, val, lit in compiled:
+                if (lit is None or lit in s) and pat.search(s):
                     return val, raw_key
             return None
 

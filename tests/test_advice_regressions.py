@@ -7,9 +7,10 @@
    a replacement value can combine with adjacent original text to form a
    later key (boundary re-triggering) — and the UDF plane must then produce
    the reference's single-pass gsub answer;
-3. the union-regex miss prefilter in RegexFirstMatch must not be used when
-   any pattern has capturing groups / backreferences (concatenation
-   renumbers groups → false miss);
+3. RegexFirstMatch runs its union-regex miss prefilter only when some
+   pattern has no required literal, and never when any pattern has
+   capturing groups / backreferences (concatenation renumbers groups →
+   false miss);
 4. the native-safety proof must be capped so 100k-key union dictionaries
    don't hang plan time;
 5. the explode planes accept a natural row key (iterate_key) and agree

@@ -5,11 +5,17 @@ diverge from the reference-semantics plane."""
 import re
 import string
 
+import pandas as pd
+
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
 from logstash_filter_translate_spark import translate
-from logstash_filter_translate_spark.operators.lookup import UnionSubstitution
+from logstash_filter_translate_spark.operators.lookup import (
+    RegexFirstMatch,
+    UnionSubstitution,
+    required_literal,
+)
 from tests.conftest import exact_plane
 
 KEYS = st.text(string.ascii_lowercase + string.digits, min_size=1, max_size=6)
@@ -63,6 +69,84 @@ def test_native_safety_proof_is_sound_pure_python(pairs, probe):
     for k, v in pairs:
         chained = chained.replace(str(k), str(v))
     assert chained == single_pass, (pairs, probe)
+
+
+# a small regex grammar: literal runs (non-ASCII and escaped ones too),
+# classes, repeats, groups, nested and top-level alternation, scoped and
+# global flags, backreferences
+_ATOMS = st.sampled_from(
+    ["a", "b", "ab", "ba", "é", "ß", "K", r"\.", ".", "[ab]", "[^a]", r"\d", r"\b",
+     "^", "$"]
+)
+_PATTERNS = st.recursive(
+    _ATOMS,
+    lambda inner: st.one_of(
+        st.lists(inner, min_size=1, max_size=4).map("".join),
+        st.tuples(inner, st.sampled_from(["?", "*", "+", "{0,2}", "{2}", "{1,3}?"])).map(
+            lambda t: f"(?:{t[0]}){t[1]}"
+        ),
+        inner.map(lambda x: f"({x})"),
+        inner.map(lambda x: f"({x})\\1"),
+        inner.map(lambda x: f"(?i:{x})"),
+        st.tuples(inner, inner).map(lambda t: f"(?:{t[0]}|{t[1]})"),
+        st.tuples(inner, inner).map("|".join),
+    ),
+    max_leaves=6,
+).flatmap(lambda p: st.sampled_from([p, "(?i)" + p, "(?x)" + p]))
+_SUBJECTS = st.text("abABéÉßS.1 K", max_size=10)
+
+
+def _search(pattern, s):
+    try:
+        return re.search(pattern, s)
+    except re.error:
+        return None  # e.g. a backreference to a group that is still open
+
+
+@given(pattern=_PATTERNS, subjects=st.lists(_SUBJECTS, min_size=1, max_size=8))
+@settings(max_examples=1500, deadline=None)
+def test_required_literal_is_sound_pure_python(pattern, subjects):
+    """Every match of a pattern contains its required literal, so screening
+    the ordered scan by it can never lose a match."""
+    lit = required_literal(pattern)
+    for s in subjects:
+        m = _search(pattern, s)
+        if m is not None:
+            assert lit is None or lit in m.group(0), (pattern, lit, s)
+
+
+@given(patterns=st.lists(_PATTERNS, min_size=1, max_size=7),
+       subjects=st.lists(_SUBJECTS, min_size=1, max_size=8))
+@settings(max_examples=300, deadline=None)
+def test_regex_filtered_scan_picks_the_plain_first_match(patterns, subjects):
+    """The regex UDF body (literal filter, the union prefilter where it
+    runs, per-batch dedup) picks the plain ordered scan's (value, key)."""
+    pairs = [(p, f"v{i}") for i, p in enumerate(patterns)]
+    try:
+        udf = RegexFirstMatch(pairs)._scalar_udf.func
+    except re.error:
+        return
+    got = udf(pd.Series(subjects + subjects))
+    for i, s in enumerate(subjects + subjects):
+        want = next(((v, k) for k, v in pairs if re.search(k, s)), (None, None))
+        assert (got["value"][i], got["key"][i]) == want, (pairs, s)
+        assert bool(got["matched"][i]) == (want[1] is not None)
+
+
+def test_required_literal_cases():
+    assert required_literal("") is None
+    assert required_literal("a|b") is None
+    assert required_literal("(?i)abc") is None
+    assert required_literal("x(?i:abc)y") in ("x", "y")
+    assert required_literal(r"(a)\1") is None
+    assert required_literal("(") is None
+    assert required_literal(r"\b(?:code|err)-064\b") == "-064"
+    assert required_literal(r"ab*cdé\.") == "cdé."
+    assert required_literal("(?x) a b # comment") == "ab"
+    for pattern, s in [("x(?i:abc)y", "xABCy"), (r"(a)\1", "aa"), ("a|b", "b")]:
+        m = re.search(pattern, s)
+        lit = required_literal(pattern)
+        assert m and (lit is None or lit in m.group(0))
 
 
 @given(pairs=st.lists(st.tuples(KEYS, VALS), min_size=1, max_size=8,
