@@ -1,13 +1,12 @@
 """HTML/url parse stage (axis B): vectorized text extraction and grok-style
 field parsing.
 
-Two extraction planes, tested byte-identical:
-  - native: ``regexp_extract`` over the decoded html — whole-stage codegen,
-    zero Python; the default hot path.
-  - arrow:  a pandas UDF with a compiled ``re`` pattern — the
-    "vectorized Arrow/pandas UDF" plane the north star names; used when
-    extraction logic outgrows a single regex (real-world boilerplate
-    removal), and as the template for custom extractors.
+The parse stage extracts natively: ``regexp_extract`` over the decoded
+html — whole-stage codegen, zero Python. ``extract_text_arrow`` states the
+same text extraction as a pandas UDF with a compiled ``re`` pattern, the
+template for extractors that outgrow a single regex; the
+``parse_extract_arrow`` query runs it, and a test holds it byte-identical
+to the native path.
 
 Per-row invariant (BASELINE.json.input_hint): extract_text(html) == text
 byte-identically — guaranteed by the page template (plans/pages.py) and
@@ -90,23 +89,6 @@ def extract_text_arrow(html: pd.Series) -> pd.Series:
         if b is None:
             return None
         m = pat.search(bytes(b).decode("utf-8"))
-        return m.group(1) if m and m.group(1) else None
-
-    return html.map(one)
-
-
-@pandas_udf(T.StringType())
-def extract_text_arrow_untrusted(html: pd.Series) -> pd.Series:
-    """Arrow extraction plane for untrusted bytes: malformed UTF-8 decodes
-    with U+FFFD substitution (``errors='replace'``) — the Python twin of
-    :func:`html_str_untrusted`'s make_valid_utf8 — instead of raising
-    UnicodeDecodeError inside the worker."""
-    pat = re.compile(_TEXT_RE)
-
-    def one(b):
-        if b is None:
-            return None
-        m = pat.search(bytes(b).decode("utf-8", errors="replace"))
         return m.group(1) if m and m.group(1) else None
 
     return html.map(one)

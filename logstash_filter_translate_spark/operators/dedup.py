@@ -393,7 +393,6 @@ def embedding_cosine_pairs(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     max_bucket: Optional[int] = None,
-    dim: Optional[int] = None,
 ) -> DataFrame:
     """Near-duplicate (id_a, id_b) pairs by embedding cosine ≥ threshold,
     candidate generation via hyperplane-LSH buckets — NOT all-pairs.
@@ -413,20 +412,14 @@ def embedding_cosine_pairs(
     groupBy-count → broadcast left-anti shape as the MinHash/SimHash
     paths (``_cap_buckets``). Default None — recall complete and
     value-identical to the SQL oracle.
-
-    ``dim`` (the fixed embedding width) switches the norm and the pair
-    cosine to the unrolled codegen plane — bit-identical floats, same
-    oracle (see operators/similarity.py::dot).
     """
     from .similarity import dot, hyperplane_bucket, norm
 
     b = emb.select(
         F.col(id_col),
         F.col(vec_col),
-        hyperplane_bucket(F.col(vec_col), planes, vec_sql=vec_col).alias(
-            "__bucket"
-        ),
-        norm(F.col(vec_col), dim).alias("__norm"),
+        hyperplane_bucket(vec_col, planes).alias("__bucket"),
+        norm(F.col(vec_col)).alias("__norm"),
     )
     if max_bucket is not None:
         # checkpoint BEFORE the cap (mirrors simhash_pairs): the cap's
@@ -453,7 +446,7 @@ def embedding_cosine_pairs(
     # instead of an ANSI DIVIDE_BY_ZERO throw — DuckDB's x/0 is also NULL,
     # so the oracle agrees (code-review r7)
     cos = F.try_divide(
-        dot(F.col("__ea"), F.col("__eb"), dim),
+        dot(F.col("__ea"), F.col("__eb")),
         F.col("__na") * F.col("__nb"),
     )
     return pairs.filter(cos >= threshold).select("id_a", "id_b")

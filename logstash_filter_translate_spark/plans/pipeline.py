@@ -4,9 +4,9 @@ staged enriched frame (BASELINE.json.north_star / north_rule).
 
 Stage map (all lazily composed into ONE Catalyst plan until the sinks):
   parse     — decode html, extract status/lang header/text (byte-identical),
-              grok url into host/tld/path. Native regexp plane by default
-              (whole-stage codegen); Arrow plane available.
-  enrich    — translate status→status_text (exact broadcast), lang→lang_name,
+              grok url into host/tld/path, as native regexps (whole-stage
+              codegen, no Python).
+  enrich    — translate status→status_text (exact lookup), lang→lang_name,
               collaborator_ids iterate_on array translation, union
               substitution over text. All reference semantics (O1-O9).
   route     — matched/fallback/unmatched/failed per the status translate +
@@ -17,8 +17,9 @@ Stage map (all lazily composed into ONE Catalyst plan until the sinks):
               a directory subtree; or per-route filtered writes.
 
 Scale design notes:
-  - the dictionary side is always broadcast (no shuffle of the 100 TB probe
-    side; hot keys cost nothing in a broadcast hash join);
+  - the dictionary side never shuffles the 100 TB probe side: the small
+    dictionaries here are constant-folded map literals, a dictionary above
+    lookup.MAP_LITERAL_MAX_ENTRIES is broadcast;
   - the only shuffles in the whole job are the final aggregates (narrow
     rows) and the partitioned write's optional repartition;
   - observe() metrics ride the same pass — no second scan of the input;
@@ -37,10 +38,11 @@ from pyspark.sql import functions as F
 
 from ..config import TranslateConfig
 from ..functions.html import (
-    extract_lang_header,
-    extract_status,
-    extract_text_arrow,
-    extract_text_native,
+    extract_lang_from_str,
+    extract_status_from_str,
+    extract_text_from_str,
+    html_str,
+    html_str_untrusted,
     parse_url,
 )
 from ..operators.translate import Translate
@@ -76,7 +78,6 @@ class PipelineConfig:
     union_dict: List[Tuple[str, str]] = field(default_factory=lambda: UNION_TEXT_DICT)
     status_fallback: str = "unknown-status"
     collab_fallback: str = "unknown"
-    use_arrow_extract: bool = False
     #: header-field regexes scan only this prefix of the decoded html
     head_window: int = 1024
     #: external-crawl mode: html bytes may carry malformed UTF-8, so the
@@ -88,30 +89,8 @@ class PipelineConfig:
 
 
 def parse_stage(pages: DataFrame, cfg: PipelineConfig = PipelineConfig()) -> DataFrame:
-    from ..functions.html import (
-        extract_lang_from_str,
-        extract_status_from_str,
-        extract_text_from_str,
-        extract_text_arrow_untrusted,
-        html_str,
-        html_str_untrusted,
-    )
-
     decode = html_str_untrusted if cfg.untrusted_input else html_str
     host, tld, path = parse_url(F.col("url"))
-    if cfg.use_arrow_extract:
-        extract_cols = {
-            "extracted_text": (
-                extract_text_arrow_untrusted(F.col("html"))
-                if cfg.untrusted_input
-                else extract_text_arrow(F.col("html"))
-            ),
-            "status": extract_status_from_str(decode(F.col("html"))),
-            "lang_header": extract_lang_from_str(decode(F.col("html"))),
-        }
-        return pages.withColumns(
-            {**extract_cols, "host": host, "tld": tld, "url_path": path}
-        )
     # decode the binary ONCE into a temp column — three regexes then share
     # the same string instead of re-decoding (1/3 the allocation rate; GC is
     # the scaling bottleneck of this stage). Header-field regexes scan only

@@ -90,17 +90,6 @@ LANGID_PROFILES = [
 
 SIMHASH_BITS = 16
 MINHASH_NUM = 8
-#: fixed embedding width of the corpus (TESTDATA.md embeddings table;
-#: asserted in tests/test_bucketed_similarity.py). The unrolled dim=
-#: dot-product plane exists (operators/similarity.py::dot, bit-identical
-#: to the HOF fold) but is NOT passed by these queries: subprocess-paired
-#: A/B at sf0.1 and the 4M-pair microbench both measured it SLOWER than
-#: the fold (0.4-0.8x — the 64-term generated method exceeds HotSpot's
-#: JIT size limit and runs in the bytecode interpreter; round-7 negative
-#: result, BENCH/MICRO_DOT_r7.json + docs/ROUND7.md). The plane that DID
-#: win is posexplode->codegen->partial-agg (3.4x) — see
-#: brute_force_topk(plane="explode")
-EMB_DIM = 64
 LSH_PLANES = [
     [(((i * 37 + p * 17) % 13) - 6) / 6.0 for i in range(64)] for p in range(3)
 ]

@@ -32,8 +32,6 @@ def main() -> None:
     ap.add_argument("--checkpoint", action="store_true",
                     help="stage the enriched frame before the sinks "
                          "(rewritten on every run)")
-    ap.add_argument("--arrow-extract", action="store_true",
-                    help="use the pandas-UDF extraction plane")
     ap.add_argument("--table-format", default="parquet",
                     choices=["parquet", "iceberg"],
                     help="sink/stage table format (iceberg needs the "
@@ -60,7 +58,7 @@ def main() -> None:
     else:
         ap.error("one of --input / --generate is required")
 
-    cfg = P.PipelineConfig(use_arrow_extract=args.arrow_extract)
+    cfg = P.PipelineConfig()
     if args.status_dict:
         cfg.status_dict = load_dictionary_file(args.status_dict)
 

@@ -23,7 +23,7 @@ def test_bucket_partitioned_corpus_serves_lsh_queries(spark, tmp_path):
 
     # index pass: write partitioned by bucket (Iceberg identity partition)
     out = str(tmp_path / "index")
-    emb.withColumn("bucket", hyperplane_bucket(F.col("embedding"), PLANES)) \
+    emb.withColumn("bucket", hyperplane_bucket("embedding", PLANES)) \
         .write.partitionBy("bucket").parquet(out)
 
     indexed = spark.read.parquet(out)
@@ -36,7 +36,7 @@ def test_bucket_partitioned_corpus_serves_lsh_queries(spark, tmp_path):
     )
 
     # query served from the indexed layout (bucket column already present)
-    qb = queries.withColumn("bucket", hyperplane_bucket(F.col("embedding"), PLANES))
+    qb = queries.withColumn("bucket", hyperplane_bucket("embedding", PLANES))
     served = (
         indexed.join(F.broadcast(qb.select("query_id",
                                            F.col("embedding").alias("__qvec"),
@@ -342,63 +342,64 @@ def test_install_ivf_index_serves_own_build_under_live_contention(
         os.close(holder)
 
 
-def test_unrolled_dot_plane_bit_identical_to_hof(spark, testdata_dir):
-    """Round-6 judge item #3: the dim-unrolled codegen dot/norm/cosine
-    must be BIT-identical to the HOF fold (same left-associated
-    summation order) on the real embeddings table — this is what lets
-    every query pass dim=EMB_DIM without touching its oracle."""
-    from logstash_filter_translate_spark.operators.similarity import (
-        cosine, dot, norm,
+def test_lsh_planes_match_the_embedding_width(spark, testdata_dir):
+    """Every LSH plane must be exactly as wide as the embeddings: a plane
+    narrower or wider than the data makes zip_with pad NULLs, the dot goes
+    NULL, and every vector silently lands in bucket 0."""
+    from logstash_filter_translate_spark.plans.queries import (
+        LSH_BANDS,
+        LSH_PLANES,
     )
-    from logstash_filter_translate_spark.plans.queries import EMB_DIM
 
     emb = spark.read.parquet(f"{testdata_dir}/embeddings.parquet")
-    # the documented corpus constant really is the data's width
     widths = emb.select(F.size("embedding").alias("d")).distinct().collect()
-    assert [r["d"] for r in widths] == [EMB_DIM]
-
-    paired = (
-        emb.alias("a")
-        .join(emb.alias("b"), F.col("a.vec_id") == F.col("b.vec_id") + 1)
-        .select(
-            F.col("a.embedding").alias("ea"), F.col("b.embedding").alias("eb")
-        )
-    )
-    cmp = paired.select(
-        (dot(F.col("ea"), F.col("eb"))
-         == dot(F.col("ea"), F.col("eb"), EMB_DIM)).alias("d_eq"),
-        (norm(F.col("ea")) == norm(F.col("ea"), EMB_DIM)).alias("n_eq"),
-        (cosine(F.col("ea"), F.col("eb"))
-         == cosine(F.col("ea"), F.col("eb"), EMB_DIM)).alias("c_eq"),
-    )
-    bad = cmp.filter(~F.col("d_eq") | ~F.col("n_eq") | ~F.col("c_eq")).count()
-    assert bad == 0
+    assert len(widths) == 1
+    width = widths[0]["d"]
+    planes = LSH_PLANES + [p for band in LSH_BANDS for p in band]
+    assert [len(p) for p in planes] == [width] * len(planes)
 
 
 def test_hyperplane_bucket_stays_on_the_fold_plane(spark):
-    """Tripwire for the r7 headline regression: hyperplane_bucket computes
-    len(planes) dots in ONE projection, so the dim-unrolled plane emits
-    len(planes) x dim flat terms, blows HotSpot's JIT method limit
-    len(planes) times over, and ran 2.7-6.6x SLOWER on every bucketed
-    similarity query (docs/ROUND7.md) — while plan DIGESTS stayed
-    identical, because digests hash operator shapes, not expression
-    internals. This pins the expression itself: the bucket must be the
-    zip_with/aggregate fold, with zero unrolled get() terms."""
+    """hyperplane_bucket computes len(planes) dots in ONE projection; an
+    unrolled per-element expression there emits len(planes) x dim flat
+    terms, blows HotSpot's JIT method limit and ran 2.7-6.6x SLOWER on
+    every bucketed similarity query (docs/ROUND7.md) — while plan DIGESTS
+    stayed identical, because digests hash operator shapes, not
+    expression internals. This pins the expression itself: the bucket
+    must be the zip_with/aggregate fold, with zero unrolled get() terms."""
     df = spark.createDataFrame(
         [(1, [0.1] * 16)], "vec_id int, embedding array<float>"
     )
     expr = str(
-        df.select(hyperplane_bucket(F.col("embedding"), PLANES).alias("b"))
+        df.select(hyperplane_bucket("embedding", PLANES).alias("b"))
         ._jdf.queryExecution().analyzed()
     )
     assert "zip_with" in expr and "aggregate" in expr, expr
     assert "get(embedding" not in expr, expr
 
 
-def test_unrolled_dot_null_and_short_array_semantics(spark):
-    """dim plane edge semantics match the HOF plane: NULL array -> NULL,
-    array shorter than dim -> NULL (zip_with pads with nulls; F.get
-    returns null out of bounds — both poison the sum)."""
+def test_hyperplane_bucket_quotes_the_column_name(spark):
+    """The column name is quoted into the SQL, not interpolated raw: a name
+    holding a backtick, a space and a dot resolves, and buckets the same
+    data exactly as a plain name does."""
+    import random
+
+    rnd = random.Random(11)
+    rows = [(i, [rnd.uniform(-1, 1) for _ in range(16)]) for i in range(50)]
+    plain = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    odd = plain.withColumnRenamed("embedding", "emb`x y.z")
+    got = odd.select("vec_id", hyperplane_bucket("emb`x y.z", PLANES).alias("b"))
+    want = plain.select(
+        "vec_id", hyperplane_bucket("embedding", PLANES).alias("b")
+    )
+    got_rows = sorted(map(tuple, got.collect()))
+    assert got_rows == sorted(map(tuple, want.collect()))
+    assert len({b for _, b in got_rows}) > 1
+
+
+def test_dot_null_and_short_array_semantics(spark):
+    """The fold's edge semantics: NULL array -> NULL, array shorter than
+    the other -> NULL (zip_with pads with nulls, which poison the sum)."""
     from logstash_filter_translate_spark.operators.similarity import dot
 
     df = spark.createDataFrame(
@@ -407,11 +408,5 @@ def test_unrolled_dot_null_and_short_array_semantics(spark):
          (3, [1.0, 2.0], [1.0, 2.0, 3.0])],
         "id int, a array<float>, b array<float>",
     )
-    out = df.select(
-        "id",
-        dot(F.col("a"), F.col("b")).alias("hof"),
-        dot(F.col("a"), F.col("b"), 3).alias("unrolled"),
-    ).orderBy("id").collect()
-    assert out[0]["hof"] == out[0]["unrolled"] == 14.0
-    assert out[1]["hof"] is None and out[1]["unrolled"] is None
-    assert out[2]["hof"] is None and out[2]["unrolled"] is None
+    out = df.select("id", dot(F.col("a"), F.col("b")).alias("d"))
+    assert [r["d"] for r in out.orderBy("id").collect()] == [14.0, None, None]

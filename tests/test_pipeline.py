@@ -1,5 +1,5 @@
 """North-star pipeline tests: generator determinism, byte-identical
-extraction (both planes), routing + aggregate parity, skew helpers,
+extraction (native parse stage and the Arrow extractor), routing + aggregate parity, skew helpers,
 checkpoint resumability (BASELINE.json north_rule)."""
 
 import os
@@ -33,9 +33,13 @@ def test_generator_schema(spark):
 
 
 def test_extract_text_byte_identity_native_and_arrow(spark):
+    from logstash_filter_translate_spark.functions.html import (
+        extract_text_arrow,
+    )
+
     pages = generate_pages(spark, N, 4)
-    native = P.parse_stage(pages, P.PipelineConfig(use_arrow_extract=False))
-    arrow = P.parse_stage(pages, P.PipelineConfig(use_arrow_extract=True))
+    native = P.parse_stage(pages)
+    arrow = pages.withColumn("extracted_text", extract_text_arrow(F.col("html")))
     for df in (native, arrow):
         mismatches = df.filter(
             ~F.col("extracted_text").eqNullSafe(F.col("text"))
@@ -161,18 +165,6 @@ def test_pipeline_untrusted_input_survives_malformed_utf8(spark, tmp_path):
     )
     assert wrapped.filter(~F.is_valid_utf8("fast")).count() == n_bad
     assert wrapped.filter(~F.is_valid_utf8("safe")).count() == 0
-
-    # arrow plane parity under untrusted input: Python errors='replace'
-    # and JVM make_valid_utf8 both substitute per maximal subpart, so the
-    # two planes stay byte-identical even on malformed rows
-    native = P.parse_stage(
-        corrupted, P.PipelineConfig(untrusted_input=True)
-    ).select("url", "extracted_text", "status", "lang_header")
-    arrow = P.parse_stage(
-        corrupted, P.PipelineConfig(untrusted_input=True, use_arrow_extract=True)
-    ).select("url", "extracted_text", "status", "lang_header")
-    assert native.exceptAll(arrow).count() == 0
-    assert arrow.exceptAll(native).count() == 0
 
 
 def test_checkpoint_stage_resumes(spark, tmp_path):

@@ -1000,3 +1000,62 @@ def test_rolling_anomaly_reserved_key_col_raises(spark):
     )
     with pytest.raises(ValueError, match="collides"):
         rolling_anomaly(df, "ts", "cnt")
+
+
+def test_langid_pivot_and_join_planes_agree_across_the_bound(spark):
+    """langid_scores picks its plane by profile count: the pivoted
+    aggregate up to LANGID_PIVOT_MAX_LANGS languages, the broadcast marker
+    join above it. 16 and 17 profiles (the 17th never hits) must give the
+    same rows as a plain-Python argmax, on both sides of the bound. The
+    word "shared" is listed under two languages (each scores it), and
+    ties go to the smaller language name."""
+    from logstash_filter_translate_spark.functions.text import (
+        LANGID_PIVOT_MAX_LANGS,
+        langid_scores,
+    )
+
+    assert LANGID_PIVOT_MAX_LANGS == 16
+    extra = {"l00": ["alpha"], "l02": ["delta"], "l03": ["shared"],
+             "l05": ["beta"], "l07": ["shared"], "l09": ["gamma"]}
+    profiles = [
+        (f"l{i:02d}", [f"w{i:02d}"] + extra.get(f"l{i:02d}", []))
+        for i in range(16)
+    ]
+    wide = profiles + [("l16", ["absent"])]
+    texts = [
+        (0, "alpha shared"),  # l00, l03, l07 one hit each → l00
+        (1, "shared shared beta"),  # l03 = l07 = 2 → l03
+        (2, "gamma delta"),  # l09 = l02 = 1 → l02
+        (3, "nothing here"),
+        (4, "w15 w15  w12"),
+        (5, ""),
+        (6, None),
+    ]
+    docs = spark.createDataFrame(texts, "doc_id int, text string")
+
+    def expected(include_unknown):
+        out = set()
+        for doc_id, text in texts:
+            toks = (text or "").split()
+            hits, lang = min(
+                (-sum(t in words for t in toks), lang) for lang, words in profiles
+            )
+            if hits < 0:
+                out.add((doc_id, lang))
+            elif include_unknown:
+                out.add((doc_id, "und"))
+        return out
+
+    for include_unknown in (True, False):
+        want = expected(include_unknown)
+        assert {(0, "l00"), (1, "l03"), (2, "l02"), (4, "l15")} <= want
+        for profs in (profiles, wide):
+            got = langid_scores(docs, "text", "doc_id", profs, include_unknown)
+            assert sorted(map(tuple, got.collect())) == sorted(want), len(profs)
+
+    def plan(profs):
+        df = langid_scores(docs, "text", "doc_id", profs, include_unknown=False)
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    assert "BroadcastHashJoin" not in plan(profiles)
+    assert "BroadcastHashJoin" in plan(wide)

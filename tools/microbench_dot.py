@@ -5,21 +5,18 @@ codegenning them (CLAUDE.md quirks; operators/translate.py grew
 struct-free fast paths for the same reason), and ``dot()``/``cosine()``
 (operators/similarity.py) are ``aggregate(zip_with(...))`` — so every
 similarity / embedding-dedup query pays per-element interpreted eval in
-its hottest expression. This tool measures the three JVM-side planes on
-the same synthetic corpus x query-set cosine scoring job:
+its hottest expression. This tool measures the JVM-side planes on the
+same synthetic corpus x query-set cosine scoring job:
 
   hof       aggregate(zip_with(...)) fold — the shipped plane.
-  unrolled  fully unrolled codegen sum over the FIXED dimension:
-            a[0]*b[0] + a[1]*b[1] + ... via F.get — left-associated, so
-            the summation order (and therefore every float result) is
-            BIT-IDENTICAL to the hof fold; a drop-in swap that keeps the
-            DuckDB oracle green. Requires dim known at plan time (it is:
-            embeddings are a fixed-width feature, 64 here).
   explode   posexplode both sides -> codegen multiply -> partial-agg
             sum by (id, query). Codegen end-to-end but pays a per-element
             row expansion and a (id,query)-keyed aggregate; summation
             order is partition-dependent (NOT oracle-safe for float
             hashes — ID-only outputs would be needed).
+
+The full-query pass times brute_force_topk's fold and explode planes on
+the real embeddings table: the evidence for BRUTE_FORCE_AUTO_CROSSOVER.
 
 Usage: python tools/microbench_dot.py [corpus_rows] [n_queries] [cpus]
 Prints one JSON line; bench.py does NOT ingest this artifact (the
@@ -79,21 +76,6 @@ def plane_hof(corpus, queries):
     )
 
 
-def plane_unrolled(corpus, queries):
-    """The LIBRARY's dim-unrolled plane (operators/similarity.py::cosine
-    with dim=) — the tool measures the shipped expression, never a local
-    copy that could drift from what users run (code-review r7)."""
-    from pyspark.sql import functions as F
-
-    from logstash_filter_translate_spark.operators.similarity import cosine
-
-    return corpus.join(F.broadcast(queries)).select(
-        "vec_id",
-        "query_id",
-        cosine(F.col("emb"), F.col("qvec"), dim=DIM).alias("score"),
-    )
-
-
 def plane_explode(corpus, queries):
     from pyspark.sql import functions as F
 
@@ -114,9 +96,7 @@ def plane_explode(corpus, queries):
     # query norms are tiny (one per query): computed once, broadcast back
     from logstash_filter_translate_spark.operators.similarity import norm
 
-    qn = queries.select(
-        "query_id", norm(F.col("qvec"), dim=DIM).alias("nb")
-    )
+    qn = queries.select("query_id", norm(F.col("qvec")).alias("nb"))
     return scored.join(F.broadcast(qn), "query_id").select(
         "vec_id",
         "query_id",
@@ -136,7 +116,6 @@ def plane_baseline(corpus, queries):
 PLANES = {
     "baseline": plane_baseline,
     "hof": plane_hof,
-    "unrolled": plane_unrolled,
     "explode": plane_explode,
 }
 
@@ -208,8 +187,7 @@ def _child_topk(plane_name: str, sf_dir: str, cpus: int) -> None:
 
 
 def _equivalence_gate(corpus_rows: int, n_queries: int, cpus: int) -> None:
-    """hof and unrolled must be BIT-identical (same summation order);
-    explode only approx-equal (partition-order sums)."""
+    """explode must be approx-equal to hof (partition-order sums)."""
     from pyspark.sql import functions as F
 
     from logstash_filter_translate_spark.session import build_session
@@ -222,8 +200,6 @@ def _equivalence_gate(corpus_rows: int, n_queries: int, cpus: int) -> None:
     corpus = corpus.localCheckpoint()
     queries = queries.localCheckpoint()
     hof_s = plane_hof(corpus, queries)
-    unr_s = plane_unrolled(corpus, queries)
-    assert hof_s.exceptAll(unr_s).count() == 0, "unrolled != hof bitwise"
     exp_s = plane_explode(corpus, queries).withColumnRenamed("score", "s2")
     drift = (
         hof_s.join(exp_s, ["vec_id", "query_id"])
@@ -302,9 +278,6 @@ def main() -> None:
         "cpus": cpus,
         "planes": results,
         "topk_full_query": {"sf_dir": sf_dir, **topk} if topk else None,
-        "speedup_unrolled_over_hof": round(
-            results["hof"]["sec_median"] / results["unrolled"]["sec_median"], 3
-        ),
         "speedup_explode_over_hof": round(
             results["hof"]["sec_median"] / results["explode"]["sec_median"], 3
         ),
