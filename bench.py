@@ -1,34 +1,31 @@
-"""Benchmark runner (driver contract + scaling evidence).
+"""Benchmark runner: the headline queries, then the pipeline's scaling.
 
-Prints exactly ONE JSON line to stdout (< 1900 chars — the driver
-captures only the last ~2000 chars of stdout, so the 49-entry per-query
-map that kept BENCH_r{3..6}.json at "parsed": null now lives in the
-HEADLINE side artifact; round-6 judge item #1):
-  {"metric": "...", "value": <total_sec>, "unit": "sec",
-   "queries": {}, "queries_file": "BENCH/HEADLINE_r{N}.json",
-   "sf": <sf>, "extras": {...totals + criterion stats + paths...}}
+  python bench.py                  # full run
+  python bench.py QUERY [QUERY …]  # development run: only these queries
 
-Phases (criterion-first ordering, each budget-gated):
-  1. headline driver-contract queries at $SPARK_GRAFT_SF_DIR (default
-     /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] — one untimed warm
-     execution per query, then 3 timed reps, MEDIAN reported (round-4
-     judge item #3: rep0 ran 1.5-3x rep1 in the r4 driver window);
-  2. scaling evidence (BASELINE.md protocol): the identical
-     parse→enrich→route→aggregate pipeline over the deterministic synthetic
-     pages corpus at local[N] and local[4N] (default 4→16) — ALL file
-     pairs first (the criterion), then gen pairs, then the skew and scan
-     side evidence; efficiency = median of paired (T_4N/T_N)/4, written to
-     BENCH/BASELINE.md + BENCH/SWEEP_r{N}.json. Disable with
-     SPARK_GRAFT_SCALING=0.
+Prints exactly ONE JSON line to stdout, compact and under
+STDOUT_LINE_LIMIT chars (the driver parses only the last ~2000 chars of
+stdout):
+  {"metric":"headline_queries_total","value":<sum of medians>,"unit":"sec",
+   "queries":{name: median},"queries_file":"BENCH/HEADLINE_<tag>.json",
+   "sf":<sf>,"extras":{...}}
 
-Robustness contract (round-4 judge item #1 — the r4 driver run died
-rc=124 with a PASSING criterion it never recorded):
-  - a wall-clock budget ($SPARK_GRAFT_BENCH_BUDGET, default 3000 s) gates
-    every phase; work that won't fit is skipped, never started;
-  - the sweep writes its artifact incrementally after every pair;
-  - SIGTERM/SIGINT emit the final stdout JSON line from everything
-    completed so far and exit 0 — a kill at ANY instant still yields a
-    parseable artifact.
+Phases:
+  1. headline: the HEADLINE queries (or the named ones) at
+     $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
+     local[$SPARK_GRAFT_CPUS] (default: the CPUs this process may use).
+     Per query one untimed warm run, then 3 timed reps, MEDIAN reported.
+     Each rep is split into build (the query-function call, including any
+     eager checkpoint or connected-components jobs) and exec (the noop
+     write), each with its Spark job count; build + exec is the rep. The
+     per-rep record lives in the HEADLINE side file.
+  2. plan fingerprints (full runs only): tools/planfingerprint.py.
+  3. scaling (full runs only): one traced perfbench `pages_e2e` run;
+     extras.scaling carries its `pipeline.scaling_eff`.
+
+Kill safety: a wall-clock budget ($SPARK_GRAFT_BENCH_BUDGET) gates phases
+2 and 3; the HEADLINE side file is rewritten after every query; SIGTERM or
+SIGINT emits the line from everything completed so far and exits 0.
 
 All diagnostics go to stderr; stdout carries only the JSON line.
 """
@@ -37,7 +34,6 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 import signal
 import statistics
 import subprocess
@@ -47,14 +43,11 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 REPO = os.path.dirname(os.path.abspath(__file__))
 
+from tools.scalebench import HostMeter  # noqa: E402
+
 BENCH_T0 = time.time()
-#: hard wall-clock budget for the whole bench run. Reconstructing the r4
-#: driver kill from its artifact tail puts the driver window at >=~3500 s,
-#: and the r5 driver run completed ~2700 s of work with rc=0 — so 3300
-#: (r6, up from 3000) still leaves ~200 s of margin to the narrowest
-#: observed window while fitting the full evidence set (5 file pairs +
-#: 2 gen pairs + skew + scan); the SIGTERM handler backstops a shorter
-#: window with a valid partial artifact either way.
+#: wall-clock budget for the whole run: the phases after the headline
+#: start only if they fit what is left of it
 BUDGET_S = float(os.environ.get("SPARK_GRAFT_BENCH_BUDGET", "3300"))
 
 
@@ -166,31 +159,6 @@ HEADLINE = [
     "anomaly_hours",
 ]
 
-#: 24M rows (protocol v2c; was 32M in v2/v2b, 40M before — round-5 judge
-#: item #1c: "shorter runs = more pairs = better median under bursty
-#: steal"). The criterion is a WITHIN-pair throughput ratio, so the row
-#: count cancels; what the rows buy is per-run noise damping, and that
-#: job is carried by the paired statistic + per-pair steal telemetry +
-#: the discarded phase primers (the old 60 s floor guarded r3's 12-20 s
-#: runs at ±44%; at 24M the local[4] anchor still times ~115 s, well
-#: above it, with local[16] ~40 s). The v2b run at 32M proved the budget
-#: shape: 6 file + 2 gen pairs consumed the whole sweep window and 3 of
-#: 4 queued replacement pairs were skipped on budget — under bursty
-#: steal the replacements ARE the evidence, so pair cost was cut ~25%
-#: (~50 s/pair + cheaper corpus gen) to fund the full replacement cap
-#: and the bonus phase in the same 3300 s driver window.
-PAGES_ROWS = int(os.environ.get("SPARK_GRAFT_BENCH_PAGES", "24000000"))
-PAGES_PARTS = 128
-
-
-def _pages_cache_path() -> str:
-    """Cache path carries the corpus FORMAT tag so codec/row-group changes
-    to write_pages_corpus invalidate stale caches instead of silently
-    benchmarking the old layout."""
-    from logstash_filter_translate_spark.plans.pages import CORPUS_FORMAT_TAG
-
-    return f"/tmp/lfts_pages_{PAGES_ROWS}_{CORPUS_FORMAT_TAG}"
-
 
 def log(*args):
     print(*args, file=sys.stderr, flush=True)
@@ -200,106 +168,91 @@ def force(df):
     df.write.format("noop").mode("overwrite").save()
 
 
-def _host_steal_jiffies():
-    """(steal, total) jiffies from /proc/stat — headline reps record the
-    steal fraction they ran under, so cross-round per-query comparisons
-    carry the co-tenant-theft context that explained two rounds of
-    'headline deltas were weather' (and the r5b sweep's 0.754)."""
-    try:
-        with open("/proc/stat") as fh:
-            f = [int(x) for x in fh.readline().split()[1:9]]
-        return f[7], sum(f)
-    except Exception:
-        return 0, 0
+def _jobs(spark, group: str) -> int:
+    """Spark jobs run under ``group``. Counting by group, not by the
+    tracker's whole-run total: the status store keeps only the newest
+    spark.ui.retainedJobs jobs, so a run-wide count stops moving."""
+    return len(spark.sparkContext.statusTracker().getJobIdsForGroup(group))
 
 
-def run_headline(sf_dir: str, cpus: int) -> dict:
-    from logstash_filter_translate_spark.plans import queries as Q
-    from logstash_filter_translate_spark.session import build_session
-
-    spark = build_session(
-        app_name="lfts-bench", master=f"local[{cpus}]",
-        shuffle_partitions=max(cpus, 8),
-    )
-    # steady-state protocol: pay one-time process costs (JVM heap growth,
-    # codegen compiler, Python/Arrow worker pool spin-up) BEFORE the first
-    # timed query — they are per-process, not per-query, and a real
-    # long-running cluster amortizes them to zero. Each query is still
-    # measured cold-plan (no result caching).
+def run_headline(spark, sf_dir: str, names) -> dict:
+    """Time ``names`` on ``spark``; returns {name: median seconds}. The
+    per-rep record is in the HEADLINE side file and STATE after every
+    query, so a kill keeps the results so far."""
     from pyspark.sql.functions import PandasUDFType, pandas_udf
 
+    from logstash_filter_translate_spark.plans import queries as Q
+
+    # pay the per-process costs (JVM heap growth, codegen compiler,
+    # Python/Arrow worker start) before the first timed query; a
+    # long-running cluster amortizes them to zero. Each query is still
+    # measured cold-plan (no result caching).
     spark.range(2_000_000).selectExpr("sum(id)").collect()
     # (no type hints: `from __future__ import annotations` stringifies
     # them and breaks pandas_udf's signature inference)
     _warm = pandas_udf(lambda s: s, "long", PandasUDFType.SCALAR)
-    spark.range(1000).select(_warm("id")).write.format("noop").mode(
-        "overwrite"
-    ).save()
+    force(spark.range(1000).select(_warm("id")))
 
-    timings = {}
-    all_reps = {}
-    for name in HEADLINE:
-        fn = Q.ALL_QUERIES[name]
-        # r5 protocol (round-4 judge item #3 — rep0 ran 1.5-3x rep1 in the
-        # r4 driver artifact, so cross-round per-query deltas tracked
-        # weather, not plans): one UNTIMED warm execution absorbs the
-        # query-specific first-run costs (plan-specific codegen, per-query
-        # Python/Arrow worker shapes), then 3 timed reps; the reported
-        # number is the MEDIAN (each timed run is still cold-plan — no
-        # result caching — and every rep incl. the warm one is recorded in
-        # BENCH/HEADLINE_r{N}.json for transparency).
-        reps = []
-        t0 = time.time()
-        force(fn(spark, sf_dir))
-        warm = time.time() - t0
-        st0, tot0 = _host_steal_jiffies()
-        for _ in range(3):
+    sc = spark.sparkContext
+    timings, all_reps = {}, {}
+    STATE["extras"]["partial"] = True
+    try:
+        for name in names:
+            fn = Q.ALL_QUERIES[name]
+            # the untimed warm run absorbs the query's own first-run costs
+            # (plan-specific codegen, Python worker shapes): without it
+            # rep0 ran 1.5-3x rep1 and per-query deltas tracked noise
+            sc.setJobGroup(f"bench:{name}:warm", f"bench:{name}:warm")
             t0 = time.time()
             force(fn(spark, sf_dir))
-            reps.append(time.time() - t0)
-        st1, tot1 = _host_steal_jiffies()
-        steal = round(100 * (st1 - st0) / max(tot1 - tot0, 1), 2)
-        all_reps[name] = {"warm": round(warm, 3),
-                          "timed": [round(x, 3) for x in reps],
-                          "steal_pct": steal}
-        timings[name] = round(statistics.median(reps), 3)
-        # kill-safety (same doctrine as the sweep's per-pair writes): the
-        # per-query evidence lands in STATE and the HEADLINE side file
-        # after EVERY query, so a SIGTERM mid-headline still emits the
-        # completed medians and a valid partial artifact instead of
-        # value=0.0 / queries_file=null losing 40 minutes of measurements
-        STATE["timings"] = timings
-        STATE["total"] = round(sum(timings.values()), 3)
-        _write_headline_artifact(timings, all_reps, partial=True)
-        log(f"  {name}: {timings[name]}s (warm {round(warm, 3)}s, "
-            f"steal {steal}%)")
-    spark.stop()
-    return timings, all_reps
+            warm = time.time() - t0
+            rec = {"warm": round(warm, 3), "timed": [], "build_s": [],
+                   "exec_s": [], "jobs_build": [], "jobs_exec": []}
+            with HostMeter(spark, sc.defaultParallelism) as host:
+                for i in range(3):
+                    build_group = f"bench:{name}:{i}:build"
+                    sc.setJobGroup(build_group, build_group)
+                    t0 = time.time()
+                    df = fn(spark, sf_dir)
+                    build = time.time() - t0
+                    exec_group = f"bench:{name}:{i}:exec"
+                    sc.setJobGroup(exec_group, exec_group)
+                    t0 = time.time()
+                    force(df)
+                    exe = time.time() - t0
+                    rec["timed"].append(round(build + exe, 3))
+                    rec["build_s"].append(round(build, 3))
+                    rec["exec_s"].append(round(exe, 3))
+                    rec["jobs_build"].append(_jobs(spark, build_group))
+                    rec["jobs_exec"].append(_jobs(spark, exec_group))
+            rec["steal_pct"] = host.metrics["steal_pct"]
+            all_reps[name] = rec
+            timings[name] = round(statistics.median(rec["timed"]), 3)
+            _write_headline_artifact(timings, all_reps,
+                                     partial=len(timings) < len(names))
+            log(f"  {name}: {timings[name]}s (warm {rec['warm']}s, build "
+                f"{rec['build_s']} jobs {rec['jobs_build']}, exec "
+                f"{rec['exec_s']} jobs {rec['jobs_exec']}, steal "
+                f"{rec['steal_pct']}%)")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return timings
 
-
-#: N→4N pair for the scaling evidence. Default 4→16: this sandbox's
-#: syscall/futex layer breaks down at 32 threads (kernel time > user time —
-#: documented in BENCH/BASELINE.md), so 8→32 measures the host, not the
-#: engine; 4→16 is the pair where the OS can actually schedule the threads.
-SCALE_N = int(os.environ.get("SPARK_GRAFT_SCALE_N", "4"))
-SCALE_4N = 4 * SCALE_N
 
 #: artifacts written by this bench run are tagged with the current round
 ROUND_TAG = os.environ.get("SPARK_GRAFT_ROUND_TAG", "r8")
 
 #: every artifact kind this run may write — the collision suffix is
-#: resolved ONCE across all of them (round-6 advice: per-kind resolution
-#: could emit SWEEP_r6c next to HEADLINE_r6b after an uneven prior run,
-#: breaking same-run correlation by filename)
-_ARTIFACT_KINDS = ("SWEEP", "HEADLINE", "PLANS")
+#: resolved ONCE across all of them, so one run's files share a suffix
+_ARTIFACT_KINDS = ("HEADLINE", "PLANS")
 
 
 def _run_suffix() -> str:
     """One shared tag suffix for this run's artifacts: the first suffix
     ('', 'b', 'c', …) at which NO artifact kind collides with an existing
-    file — so a second bench run in one round writes SWEEP_r7b +
-    HEADLINE_r7b + PLANS_r7b, never a mixed set (round-5 judge item #3:
-    same-tag runs must not clobber; round-6 advice: suffixes must agree)."""
+    file — a second bench run in one round writes HEADLINE_r7b +
+    PLANS_r7b, never overwriting the first run and never a mixed set."""
     for s in [""] + list("bcdefghijklmnopqrstuvwxyz"):
         if not any(
             os.path.exists(rp(f"BENCH/{k}_{ROUND_TAG}{s}.json"))
@@ -315,8 +268,7 @@ def _run_suffix() -> str:
     return f"z{i}"
 
 
-#: this run's artifact paths, resolved ONCE (so the sweep's incremental
-#: writer, the extras builder, and the history scans all agree)
+#: this run's artifact paths, resolved ONCE
 _RESOLVED: dict = {}
 
 
@@ -328,601 +280,71 @@ def _run_artifact(kind: str) -> str:
     return _RESOLVED[kind]
 
 
-def _sweep_out_path() -> str:
-    return _run_artifact("SWEEP")
-
-
-#: hand-written stories for specific past sweep windows (BASELINE.md
-#: history tables); any other tag falls through _history_label.
-_HISTORY_LABELS = {
-    "r6": "r6 12:40 builder window (protocol v2, 32M rows): file "
-    "0.793 / low-steal 0.881 / gen 0.751 — three of six pairs "
-    ">1% steal and gen16 window-contended at flat gen4; priced "
-    "the pair cost → protocol v2b (1/16 warmups, 24M gen pairs, "
-    "budget-based bonus phase)",
-    "r6a": "r6 builder protocol-validation run (40M rows, "
-    "pre-reorder): primer fixed rep0 (0.791 vs r5's 0.501) and "
-    "low-steal median hit 0.855, but file-pair cost starved the "
-    "gen pairs — led to protocol v2 (32M rows, gen before "
-    "replacements)",
-    "r5": "r5 driver window — all-pairs median 0.777 with per-pair "
-    "steal telemetry attributing the sub-0.7 pairs to 1.8-3.3% "
-    "hypervisor steal (low-steal subset 0.828); the complete "
-    "builder-window r5 sweep (git 3c35b19) recorded 0.853 MET",
-    "r5b": "r5 confirmation run — steal-degraded window: "
-    "hypervisor steal 0.3→5.0% ramped across every local[16] "
-    "measurement (see its host map); recorded for transparency, "
-    "telemetry attributes the sub-0.8 median to host theft",
-    "r4": "round 4", "r3": "round 3",
-    "r2": "round 2", "r1": "round 1",
-}
-
-
-def _history_label(tag: str, current_label_used: bool) -> str:
-    """Label a sweep tag for the BASELINE.md history tables. Only the
-    NEWEST unstoried same-round sweep is "current round"; older suffixed
-    siblings keep their tag — auto-suffixed collisions (r6, r6b, …) must
-    not produce duplicate "current round" section headers."""
-    label = _HISTORY_LABELS.get(tag)
-    if label is not None:
-        return label
-    if tag.startswith(ROUND_TAG):
-        if current_label_used:
-            return f"{tag} — earlier window this round"
-        return "current round"
-    return tag
-
-
-def _tag_sort_key(path: str):
-    """Newest-evidence-first ordering for BENCH/<KIND>_r<N><suffix>.json:
-    (mtime, round number, suffix) descending. The round checkout resets
-    every committed file's mtime to one timestamp, so mtime alone gives
-    arbitrary directory order — the tag tiebreak keeps r6c ahead of r6a
-    and r10 ahead of r9 (lexicographic tags would not)."""
-    import re
-
-    m = re.search(r"_r(\d+)([a-z0-9]*)\.json$", os.path.basename(path))
-    rnd, suffix = (int(m.group(1)), m.group(2)) if m else (-1, "")
-    return (os.path.getmtime(path), rnd, suffix)
-
-
-def _sweep_history_paths() -> list:
-    """Existing sweep artifacts, newest-evidence-first: this run's (if
-    written), then same-round suffixed siblings, then every prior round's
-    sweep (round-6 advice: the old hard-coded prior-tag tuple ended at
-    r5, silently dropping r6* history whenever ROUND_TAG bumped; globbing
-    needs no per-round maintenance)."""
-    import glob as _glob
-
-    ordered = [_sweep_out_path()]
-    ordered += sorted(
-        _glob.glob(rp(f"BENCH/SWEEP_{ROUND_TAG}*.json")),
-        key=_tag_sort_key, reverse=True,
-    )
-    ordered += sorted(
-        _glob.glob(rp("BENCH/SWEEP_*.json")),
-        key=_tag_sort_key, reverse=True,
-    )
-    seen, out = set(), []
-    for p in ordered:
-        if p not in seen and os.path.exists(p):
-            seen.add(p)
-            out.append(p)
-    return out
-
-
-def run_scaling() -> dict:
-    """N→4N evidence, round-5 protocol: the criterion sweep (file pairs
-    first, then gen) runs with an explicit wall-clock budget and writes
-    BENCH/SWEEP_r{N}.json incrementally after every pair; skew and scan
-    side evidence only run with budget left over. The criterion statistic
-    is the MEDIAN OF PAIRED PER-REP EFFICIENCIES of the file-input variant
-    (rep i's local[N] divided only into rep i's local[4N], adjacent in
-    time); the generated-input variant is the engine-isolated secondary —
-    never max()'d together (round-2 advice)."""
-    from logstash_filter_translate_spark.plans.pages import write_pages_corpus
-    from logstash_filter_translate_spark.session import build_session
-
-    pages_path = os.environ.get("SPARK_GRAFT_PAGES_CACHE", _pages_cache_path())
-    if not os.path.exists(os.path.join(pages_path, "_SUCCESS")):
-        log(f"generating pages corpus: {PAGES_ROWS} rows -> {pages_path}")
-        shutil.rmtree(pages_path, ignore_errors=True)
-        spark = build_session(app_name="lfts-gen", master="local[32]")
-        write_pages_corpus(spark, pages_path, PAGES_ROWS, PAGES_PARTS)
-        spark.stop()
-        # flush the multi-GB write's dirty pages BEFORE the first timed
-        # measurement — background writeback competing for memory
-        # bandwidth is a candidate cause of the recurring "first 4N run
-        # of a phase lands ~2x low" artifact (untimed, ~seconds)
-        os.sync()
-
-    reps = int(os.environ.get("SPARK_GRAFT_SCALING_REPS", "5"))
-    import subprocess
-
-    os.makedirs(rp("BENCH"), exist_ok=True)
-    # leave headroom for skew/scan side phases + final writes; the sweep
-    # itself also stops pairs that won't fit its own budget, and orders
-    # its phases base-file -> gen -> replacements -> bonus so the gen
-    # pairs are reserved by construction (r6). Measured side-phase costs
-    # WITH the r6 doubled scan pass (round-6 advice asked for the
-    # re-measure; r6c driver window): skew primers ~3.5 s x 2 (one per
-    # VARIANT since r8b — the plain-only primer left the first salted
-    # rep cold, 21.6 s vs 5.5 s) + 2 reps at
-    # plain 12.5-12.8 s / salted 5.2-6.3 s plus per-measurement JVM
-    # spin-up ≈ 170 s total; scan primer 4.8 s + 2 paired reps timing
-    # 16-17 s at local[4] / 5-6 s at local[16] plus page-cache warm +
-    # JVM spin-up per measurement ≈ 250 s total. 450 s funds both (the
-    # r6c driver window ran BOTH to completion inside it); under heavy
-    # steal the replacements win and the side phases carry forward with
-    # a source label.
-    sweep_budget = max(300.0, remaining_budget() - 450.0)
-    cmd = [
-        sys.executable, os.path.join(REPO, "tools", "scalebench.py"),
-        "sweep", str(PAGES_ROWS), str(reps), str(SCALE_N), str(SCALE_4N),
-    ]
-    env = dict(
-        os.environ,
-        SPARK_GRAFT_PAGES_CACHE=pages_path,
-        SPARK_GRAFT_SWEEP_OUT=_sweep_out_path(),
-        SPARK_GRAFT_SWEEP_BUDGET=str(sweep_budget),
-    )
-    # stderr inherits (live per-rep progress); the authoritative result is
-    # the incrementally-written SWEEP file — valid even if the child dies
-    log(f"sweep budget: {sweep_budget:.0f}s")
-    proc = subprocess.Popen(cmd, stdout=subprocess.DEVNULL, env=env)
-    CHILDREN.append(proc)
+def run_scaling() -> None:
+    """One traced perfbench `pages_e2e` run; its `pipeline.scaling_eff`
+    becomes extras.scaling. The child gets SIGINT from the signal handler
+    (see main): perfbench/run.py then reaps its worker's process group."""
+    with open(rp("BENCHMARK.json")) as fh:
+        seconds = json.load(fh)["run_seconds"]
+    cmd = [sys.executable, rp("perfbench/run.py"), "--workload", "pages_e2e",
+           "--seed", "42", "--seconds", str(seconds), "--trace", "1"]
+    log("scaling: " + " ".join(cmd[1:]))
+    # own session: a terminal's Ctrl-C or a kill of bench.py's process
+    # group reaches the child only through the handler's one SIGINT, and
+    # a SIGKILLed bench.py leaves run.py to finish and reap its worker
+    proc = subprocess.Popen(cmd, cwd=REPO, stdout=subprocess.PIPE, text=True,
+                            start_new_session=True)
+    STATE["child"] = proc
     try:
-        proc.wait(timeout=sweep_budget + 600)
+        out, _ = proc.communicate(timeout=600)
     except subprocess.TimeoutExpired:
-        log("sweep exceeded its budget+slack; terminating")
-        proc.terminate()
-        try:
-            proc.wait(timeout=120)
-        except subprocess.TimeoutExpired:
-            proc.kill()
-    if not os.path.exists(_sweep_out_path()):
-        raise RuntimeError(
-            f"sweep produced no artifact (rc={proc.returncode})"
-        )
-    with open(_sweep_out_path()) as fh:
-        sw = json.load(fh)
-    if sw.get("file_efficiency") is None:
-        raise RuntimeError("sweep artifact has zero completed file pairs")
-
-    def _extra_phase(key, args, min_budget, timeout):
-        """Side evidence (skew, scan decomposition) — budget-gated, never
-        sinks the sweep, and the SWEEP artifact is rewritten after each so
-        a later kill can't lose it."""
-        if remaining_budget() < min_budget:
-            sw[key] = {
-                "skipped": f"budget ({remaining_budget():.0f}s left)"
-            }
-        else:
-            try:
-                out2 = subprocess.run(
-                    [sys.executable,
-                     os.path.join(REPO, "tools", "scalebench.py"), *args],
-                    stdout=subprocess.PIPE, text=True, timeout=timeout,
-                    env=env,
-                )
-                sw[key] = (
-                    json.loads(out2.stdout.strip().splitlines()[-1])
-                    if out2.returncode == 0
-                    else {"error": f"rc={out2.returncode}"}
-                )
-            except Exception as exc:
-                sw[key] = {"error": str(exc)[:200]}
-        with open(_sweep_out_path(), "w") as fh:
-            json.dump(sw, fh)
-
-    # skewed-input variant: salted vs plain shuffle join under a 90%-hot
-    # key — 'skew handled explicitly', measured (r4 recorded 2.34x median
-    # at 5 reps; this keeps the number fresh each round, budget permitting)
-    # 32M rows: at 16M the hot key's single-reducer tail is too short to
-    # dominate the run and the salted/plain separation drowns in fixed
-    # costs (r5 builder run: 1.09x median at 16M vs 2.34x at 32M in r4)
-    # r6: 2 reps (was 3) and realistic min_budgets from the measured r5
-    # costs (skew 2 reps ≈ 170 s, scan 2 reps + primer ≈ 210 s) so the
-    # driver window actually refreshes both (round-5 judge item #5 — r5
-    # skipped them at min_budget=420 with 318 s left)
-    skew_rows = os.environ.get("SPARK_GRAFT_SKEW_ROWS", "32000000")
-    skew_reps = os.environ.get("SPARK_GRAFT_SKEW_REPS", "2")
-    _extra_phase(
-        "skew", ["skew", skew_rows, str(SCALE_4N), skew_reps],
-        min_budget=240, timeout=max(60, remaining_budget()),
-    )
-    # scan-only decomposition: the file-variant criterion = scan ⊕ compute;
-    # this records the scan term so a sub-0.8 blend is attributable.
-    # min_budget 300 (was 270): the r6 self-union doubled the timed scan
-    # work and the r6c-measured phase cost is ~250 s (round-6 advice)
-    _extra_phase(
-        "scan",
-        ["scan", str(PAGES_ROWS), "2", str(SCALE_N), str(SCALE_4N)],
-        min_budget=300, timeout=max(60, remaining_budget()),
-    )
-
-    return _scaling_view(sw, reps)
+        proc.send_signal(signal.SIGINT)
+        proc.communicate(timeout=60)
+        raise RuntimeError("perfbench run timed out")
+    finally:
+        STATE["child"] = None
+    record_scaling(proc.returncode, out)
 
 
-def _scaling_view(sw: dict, reps_target: int) -> dict:
-    """Normalized view over a (possibly partial) sweep artifact."""
-    return {
-        "n": sw.get("n", SCALE_N),
-        "n4": sw.get("n4", SCALE_4N),
-        "median_n": sw.get(f"file_median_{sw.get('n', SCALE_N)}"),
-        "median_4n": sw.get(f"file_median_{sw.get('n4', SCALE_4N)}"),
-        "efficiency": sw.get("file_efficiency"),
-        "gen_median_n": sw.get(f"gen_median_{sw.get('n', SCALE_N)}"),
-        "gen_median_4n": sw.get(f"gen_median_{sw.get('n4', SCALE_4N)}"),
-        "gen_efficiency": sw.get("gen_efficiency"),
-        "pair_efficiencies": sw.get("file_pair_efficiencies", []),
-        "gen_pair_efficiencies": sw.get("gen_pair_efficiencies", []),
-        "pair_steal_pct": sw.get("file_pair_steal_pct", []),
-        "efficiency_low_steal": sw.get("file_efficiency_low_steal"),
-        "low_steal_pairs": sw.get("file_low_steal_pairs"),
-        "reps": sw.get("reps", reps_target),
-        "partial": sw.get("partial", False),
-        "stop_reason": sw.get("stop_reason"),
-        "skew": sw.get("skew", {}),
-        "scan": sw.get("scan", {}),
-        "sweep": sw,
+def record_scaling(returncode: int, stdout: str) -> None:
+    """extras.scaling from a perfbench run's exit code and stdout (its
+    last line is the result JSON), or extras.scaling_error saying why
+    there is none."""
+    extras = STATE["extras"]
+    try:
+        if returncode != 0:
+            raise ValueError(f"perfbench exited {returncode}")
+        line = json.loads(stdout.strip().splitlines()[-1])
+        eff = line["metrics"]["pipeline.scaling_eff"]["value"]
+        if not line["correct"] or not eff:
+            raise ValueError(f"no scaling number (correct={line['correct']}, "
+                             f"pipeline.scaling_eff={eff})")
+    except (ValueError, LookupError, TypeError) as exc:
+        extras["scaling_error"] = str(exc)[:200]
+        return
+    extras["scaling"] = {
+        "n": 1,
+        # perfbench's worker runs local[os.cpu_count()]
+        "n4": os.cpu_count(),
+        "efficiency": eff,
+        "criterion_met": eff >= 0.8,
+        "protocol": "perfbench pages_e2e seed 42 --trace 1",
     }
-
-
-def _sweep_criterion_line() -> str:
-    """Criterion-status line from the newest recorded interleaved sweep.
-    Pass/fail is reported PER VARIANT — the primary (file-input) variant
-    gates the criterion; the generated-input variant is the
-    engine-isolated secondary, never max()'d in (round-2 advice). From r4
-    the per-variant statistic is the median of same-window PAIRED per-rep
-    efficiencies (round-3 judge fix (b))."""
-    for p in _sweep_history_paths():
-        tag = os.path.basename(p)[len("SWEEP_"):-len(".json")]
-        with open(p) as fh:
-            sw = json.load(fh)
-        if sw.get("file_efficiency") is None:
-            continue
-        file_met = sw["file_efficiency"] >= 0.8
-        gen_eff = sw.get("gen_efficiency")
-        gen_part = (
-            f"generated input (engine-isolated secondary, no sandbox-FS "
-            f"reads) {gen_eff} — {'MET' if gen_eff >= 0.8 else 'NOT met'}"
-            if gen_eff is not None
-            else "generated input: no completed pairs this run (see prior "
-            "rounds' tables below)"
-        )
-        stat = (
-            "median of paired per-rep efficiencies"
-            if "file_pair_efficiencies" in sw
-            else "ratio of cross-rep medians (pre-r4 statistic)"
-        )
-        return (
-            f"**Recorded {sw.get('reps', 3)}-rep sweep ({tag}, "
-            f"local[{sw.get('n', 8)}]→local[{sw.get('n4', 32)}], "
-            f"statistic = {stat}):** "
-            f"file input (PRIMARY criterion statistic) "
-            f"{sw['file_efficiency']} — "
-            f"{'MET' if file_met else 'NOT met'}; "
-            + gen_part
-            + " (full tables below).\n\n"
-        )
-    return ""
-
-
-def _fmt_num(x, nd=1):
-    return "—" if x is None else round(x, nd)
-
-
-def _with_fallback(current, required_key, sweep_key):
-    """Side-evidence carry-forward: when THIS run's budget skipped a side
-    phase (skew / scan), fall back to the newest recorded sweep that has
-    it — a budget-tight driver window must not silently erase evidence
-    from BENCH/BASELINE.md that an earlier complete run recorded. The
-    section is labeled with its source round."""
-    current = current or {}
-    if required_key in current:
-        return current
-    for p in _sweep_history_paths():
-        tag = os.path.basename(p)[len("SWEEP_"):-len(".json")]
-        try:
-            with open(p) as fh:
-                sub = json.load(fh).get(sweep_key) or {}
-        except Exception:
-            continue
-        if required_key in sub:
-            sub = dict(sub)
-            sub["_from"] = (
-                f"carried from the {tag} sweep — skipped this run: "
-                f"{current.get('skipped') or current.get('error') or 'n/a'}"
-            )
-            return sub
-    return current
-
-
-def write_baseline_md(scaling: dict) -> None:
-    os.makedirs(rp("BENCH"), exist_ok=True)
-    n, n4 = scaling["n"], scaling["n4"]
-    with open(rp("BENCH/BASELINE.md"), "w") as fh:
-        fh.write(
-            "# BENCH/BASELINE — scaling evidence (sandbox protocol)\n\n"
-            "Identical parse→enrich→route→aggregate job (metrics-only sinks)\n"
-            f"over the deterministic synthetic pages corpus ({PAGES_ROWS:,} rows,\n"
-            "seed-42 generator in `logstash_filter_translate_spark/plans/pages.py`),\n"
-            "run at two parallelism levels per the driver protocol (no real\n"
-            "multi-node cluster available).\n\n"
-            "**Round-6 protocol** (r4 statistics + r5 artifact hardening\n"
-            "+ r6 budget re-plan): each measurement is a separate JVM\n"
-            "warmed with a reduced-size pass (heap pre-touched at start,\n"
-            "so the short warmup still leaves a steady-state JVM), then\n"
-            f"ONE timed run ({PAGES_ROWS:,} rows — ~160 s at local[4],\n"
-            "~45-50 s at local[16]; trimmed from 40M per round-5 judge\n"
-            "item #1c, the burst protection the old 60 s floor provided\n"
-            "now carried by the paired statistic + steal telemetry + the\n"
-            "discarded phase primers); the file variant's page cache is\n"
-            "explicitly re-warmed before every measurement; each rep runs\n"
-            "local[4N] then local[N] back-to-back (adjacent in time,\n"
-            "shared noise window — the short 4N run first, halving the\n"
-            "intra-pair gap) and contributes one PAIRED efficiency; the\n"
-            "criterion statistic is the MEDIAN OF PAIRS — never a ratio\n"
-            "of cross-rep medians, which mixed a quiet-window numerator\n"
-            "with a noisy-window denominator (the r3 miss). Phase order\n"
-            "is BASE file pairs (criterion) → gen pairs (engine-isolated\n"
-            "secondary, reserved by construction) → replacement file\n"
-            "pairs for steal-flagged ones; the sweep artifact is\n"
-            "rewritten after every completed pair and the whole bench\n"
-            "runs under an explicit wall-clock budget with SIGTERM-safe\n"
-            "finalization — a kill at any instant leaves a valid\n"
-            "artifact (the r4 driver run died rc=124 holding a passing\n"
-            f"median it never wrote). {scaling.get('reps')} file\n"
-            f"pairs (primary), "
-            f"{len(scaling.get('gen_pair_efficiencies', []))} gen pairs "
-            "(engine-isolated secondary)"
-            + (
-                f" — PARTIAL run: {scaling.get('stop_reason')}"
-                if scaling.get("partial")
-                else ""
-            )
-            + ". Every measurement also records\n"
-            "host telemetry (hypervisor STEAL%, host busy%, and the JVM's\n"
-            "achieved utilization of its thread allocation) in the sweep\n"
-            "artifact's `host` map — a low pair with high steal / low\n"
-            "jvm_util is quantified host theft, not a plan property.\n"
-            "A recurring host artifact: the FIRST local[4N] measurement\n"
-            "of a phase often lands ~2x low with clean telemetry (r5:\n"
-            "file rep0 pair 0.501, scan rep0 0.368, vs 0.78-1.18 for\n"
-            "every later rep) — the paired-median statistic absorbs it;\n"
-            "per-rep raws below keep it visible.\n\n"
-            "| cluster size | file input (PRIMARY) median pages/sec | "
-            "generated input median pages/sec |\n"
-            "|---|---|---|\n"
-            f"| N = local[{n}] | {_fmt_num(scaling['median_n'])} | "
-            f"{_fmt_num(scaling.get('gen_median_n'))} |\n"
-            f"| 4N = local[{n4}] | {_fmt_num(scaling['median_4n'])} | "
-            f"{_fmt_num(scaling.get('gen_median_4n'))} |\n\n"
-            f"**Scaling efficiency (N→4N, file input — the criterion "
-            f"statistic: median of paired per-rep efficiencies)** "
-            f"= **{scaling['efficiency']}** (target ≥ 0.8); generated "
-            f"input (engine-isolated) = {scaling.get('gen_efficiency')}. "
-            f"Per-rep same-window file-variant pairs: "
-            f"{scaling['pair_efficiencies']}; gen pairs: "
-            f"{scaling.get('gen_pair_efficiencies', [])}. "
-            f"Per-pair measured hypervisor steal (%): "
-            f"{scaling.get('pair_steal_pct', [])}; low-steal subset "
-            f"(≤1%, informational — the gate is the all-pairs median): "
-            f"{scaling.get('low_steal_pairs')} pairs, median "
-            f"{scaling.get('efficiency_low_steal')}. A pair whose steal "
-            "exceeds the limit still counts, but queues one replacement "
-            "pair (≤4 extra, budget permitting) that runs AFTER the gen "
-            "pairs — so co-tenant theft can't starve the sample of "
-            "clean windows OR starve the gen evidence (it did both in "
-            "the r5 driver window and the r6a builder run). Each phase "
-            "opens with one DISCARDED 4N primer (pre-registered, "
-            "unconditional, recorded in the artifact): the first wide "
-            "run of a phase recurrently lands ~2x low with clean "
-            "telemetry (r5: file rep0 0.501, scan rep0 0.368; r6a: skew "
-            "rep0 1.15x vs 2.66x) and the primer absorbs that host ramp "
-            "instead of spending a criterion pair on it.\n"
-            + (
-                "NOTE: a value above 1.0 is NOT real superlinear scaling — "
-                "it means the\nN-sized runs landed in a noisy host window "
-                "(compare the N throughput\nagainst the sweep tables "
-                "below); treat the multi-rep sweep medians as the\n"
-                "authoritative statistic.\n\n"
-                if scaling["efficiency"] > 1.0
-                else "\n"
-            )
-            + "**Why N=%d:** this sandbox's syscall layer degrades above ~16\n"
-            "threads (kernel `system` time exceeds `user`; documented in\n"
-            "round-1 notes) — at local[32] the job measures the host's futex\n"
-            "ceiling, not the engine. The 4→16 pair is the largest pair the\n"
-            "OS schedules cleanly; the 8→32 numbers are reported below for\n"
-            "transparency.\n\n" % n
-            + _sweep_criterion_line()
-            + "Byte-identity invariant (extract_text(html) == text) asserted on\n"
-            "every row of every run via the pipeline's observe() metrics.\n\n"
-            "Caveats recorded for the judge: this sandbox VM shows high\n"
-            "run-to-run variance (co-tenant noise). `python tools/scalebench.py\n"
-            "sweep` runs the interleaved multi-rep version; the compute-only\n"
-            "variant (`gen` mode, input generated in-plan, no\n"
-            "sandboxed-filesystem reads) isolates the engine's own scaling\n"
-            "from host I/O virtualization.\n"
-        )
-        curve_path = rp("BENCH/CURVE_r2.jsonl")
-        if os.path.exists(curve_path):
-            rows = [
-                json.loads(line)
-                for line in open(curve_path)
-                if line.strip()
-            ]
-            tp = {r["cpus"]: r["pages_per_sec"] for r in rows}
-            fh.write(
-                "\n## Full scaling curve (gen mode, 6M rows, one window, "
-                "one JVM per point)\n\n"
-                "| threads | pages/sec |\n|---|---|\n"
-                + "".join(f"| {r['cpus']} | {r['pages_per_sec']} |\n" for r in rows)
-                + "\nN→4N efficiencies along the curve: "
-                + ", ".join(
-                    f"{n}→{4*n}: **{round(tp[4*n] / tp[n] / 4, 3)}**"
-                    for n in (2, 4, 8)
-                    if n in tp and 4 * n in tp
-                )
-                + "\n\nThe engine scales near-perfectly to 16 threads; the "
-                "drop appears only\nwhen crossing ~16 runnable threads — the "
-                "sandbox's syscall/futex layer,\nnot a plan property (the "
-                "job is one shuffle-free codegen stage; there is\nno "
-                "contention point in the plan to saturate).\n"
-            )
-        scan = _with_fallback(
-            scaling.get("scan"), "median_efficiency", "scan"
-        )
-        if scan and "median_efficiency" in scan:
-            fh.write(
-                "\n## Decomposition: where the file variant's gap lives "
-                "(measured"
-                + (f"; {scan['_from']}" if "_from" in scan else "")
-                + ")\n\n"
-                "The blended file-variant job = parquet scan ⊕ "
-                "parse/enrich compute. Measured separately in the same "
-                "protocol (paired, page-cache-warmed, one JVM each):\n\n"
-                "| term | N→4N paired efficiency |\n|---|---|\n"
-                f"| scan only (html/text decode, `run_scan`) | "
-                f"{scan['pair_efficiencies']} → median "
-                f"**{scan['median_efficiency']}** |\n"
-                f"| compute (gen variant: identical parse/enrich, no scan)"
-                f" | {scaling.get('gen_pair_efficiencies', [])} → median "
-                f"**{scaling.get('gen_efficiency')}** |\n\n"
-                "The scan term is memory-bandwidth-bound on a single box "
-                "(telemetry shows jvm_util ≈ 1.0 and steal ≈ 0 while 16 "
-                "threads deliver ~3× of 4 threads): 16 decode streams "
-                "share one socket's memory channels. The compute term — "
-                "the engine's own plan — scales at ~1.0. On a real "
-                "4N-executor cluster the scan's bandwidth multiplies with "
-                "the nodes (4N memory systems, plus HDFS/S3/Iceberg "
-                "spreads the read I/O), so the single-box scan ceiling "
-                "does not transfer; the in-artifact gen median is the "
-                "engine-attributable scaling number.\n"
-            )
-        skew = _with_fallback(scaling.get("skew"), "median_speedup", "skew")
-        if skew and "median_speedup" in skew:
-            fh.write(
-                "\n## Skewed-input rep — explicit skew handling, measured"
-                + (
-                    f" ({skew['_from']})"
-                    if "_from" in skew
-                    else ""
-                )
-                + "\n\n"
-                f"Zipfian probe side ({skew['rows']:,} rows, "
-                f"{skew['hot_pct']}% on ONE hot key) shuffle-joined to a "
-                "1001-key dictionary with broadcast AND AQE skew-join "
-                f"disabled, at local[{skew['cpus']}] — isolating the "
-                "explicit salting mechanism "
-                "(`plans/pipeline.py::salted_broadcast_free_join`, build "
-                "side replicated ×16 salts so the hot key spreads over 16 "
-                "reducers instead of one):\n\n"
-                "| variant | per-rep sec |\n|---|---|\n"
-                f"| plain shuffle join (hot key → one reducer) | "
-                f"{skew['plain_sec']} |\n"
-                f"| salted join | {skew['salted_sec']} |\n\n"
-                f"Per-rep paired speedups {skew['pair_speedups']}, median "
-                f"**{skew['median_speedup']}×**. (With AQE left on — the "
-                "session default everywhere else — the planner splits the "
-                "skewed partitions itself; this rep proves the explicit, "
-                "planner-independent mechanism the north_rule asks for.)\n"
-            )
-        current_label_used = False
-        for sweep_path in _sweep_history_paths():
-            tag = os.path.basename(sweep_path)[len("SWEEP_"):-len(".json")]
-            label = _history_label(tag, current_label_used)
-            with open(sweep_path) as sweep_fh:
-                sweep = json.load(sweep_fh)
-            if sweep.get("file_efficiency") is None:
-                continue
-            if label == "current round":
-                current_label_used = True
-            sn, sn4 = sweep.get("n", 8), sweep.get("n4", 32)
-            gen_row = (
-                f"| generated input (no FS reads) | "
-                f"{sweep.get(f'gen_median_{sn}')} |"
-                f" {sweep.get(f'gen_median_{sn4}')} |"
-                f" {sweep['gen_efficiency']} |"
-                f" {sweep['gen_best_efficiency']} |\n"
-                if sweep.get("gen_efficiency") is not None
-                else "| generated input (no FS reads) | — | — | — | — |\n"
-            )
-            fh.write(
-                f"\n## Interleaved {sweep['reps']}-rep sweep — {label} "
-                f"({sweep['rows']:,} rows, local[{sn}]→local[{sn4}], one JVM "
-                "per run)\n\n"
-                f"| variant | median local[{sn}] | median local[{sn4}] |"
-                " median eff | best-pair eff |\n|---|---|---|---|---|\n"
-                f"| file input | {sweep[f'file_median_{sn}']} |"
-                f" {sweep[f'file_median_{sn4}']} |"
-                f" {sweep['file_efficiency']} | {sweep['file_best_efficiency']} |\n"
-                + gen_row
-                + f"\nRaw per-rep throughputs: {json.dumps(sweep['throughput'])}\n"
-            )
-            if tag == "r2" and os.path.exists(rp("BENCH/SWEEP_r2a.json")):
-                fh.write(
-                    "\nAn earlier r2 sweep (before the 8MB scan-split fix) "
-                    "is archived as\nBENCH/SWEEP_r2a.json: file 0.788, gen "
-                    "0.817 — every recorded r2 variant\nclears 0.8 within "
-                    "noise; round-1's file 0.32 was the one-wave split "
-                    "layout\n+ G1 + the 8→32 syscall cliff combined.\n"
-                )
-        import glob as _glob
-
-        micro_paths = sorted(
-            _glob.glob(rp("BENCH/MICRO_r*.json")),
-            key=_tag_sort_key, reverse=True,
-        )
-        for micro_path in micro_paths:
-            with open(micro_path) as micro_fh:
-                micro = json.load(micro_fh)
-            m1 = micro["local1"]["rows_per_sec"]
-            fh.write(
-                "\n## Single-node throughput vs the reference harness\n\n"
-                "`tools/microbench_exact.py` mirrors the reference's "
-                "microbenchmark\n(`spec/filters/benchmark_rspec.rb`: "
-                "100,000-entry dict, exact match,\noverride=true). The "
-                "reference records no absolute number (single JRuby\n"
-                "thread, per-event hash probe); our engine on the same "
-                "machine:\n\n| config | rows/sec |\n|---|---|\n"
-                f"| local[1] (the reference's single-thread model) | "
-                f"{m1:,.0f} |\n"
-                f"| local[32] | {micro['local32']['rows_per_sec']:,.0f} |\n\n"
-                f"A single core pushes ~{m1/1e6:.1f}M events/s through the "
-                "100k-entry exact\ntranslate (broadcast hash join, "
-                "whole-stage codegen) — roughly an\norder of magnitude above "
-                "a per-event interpreted filter loop.\n"
-            )
-            break
 
 
 #: progressively-built result state: the signal handler emits THIS, so a
 #: kill at any instant still produces the one parseable stdout JSON line
 STATE = {"timings": {}, "total": 0.0, "extras": {}, "sf": 0.1,
-         "emitted": False}
-#: live child processes (the sweep); the signal handler TERMs them so a
-#: killed bench doesn't leave an orphan burning the host through the
-#: judge's next steps — their own handlers finalize their artifacts
-CHILDREN = []
+         "emitted": False, "child": None}
 
-
-#: the driver captures only the LAST ~2000 chars of stdout and tries to
-#: parse them as JSON — every BENCH_r{3..6}.json had "parsed": null
-#: because the 49-entry per-query map pushed the line past the capture
-#: window and the tail started mid-map (round-6 judge item #1). The line
-#: therefore carries ONLY totals + criterion stats + artifact paths; the
-#: per-query medians and reps live in BENCH/HEADLINE_r{N}.json.
+#: the driver captures only the LAST ~2000 chars of stdout and parses them
+#: as JSON; a longer line loses its head and does not parse
 STDOUT_LINE_LIMIT = 1900
 
-#: extras keys dropped (in order) if the line still exceeds the limit —
-#: defensive only; the normal payload is ~1.3k chars (test-asserted)
-_TRIM_ORDER = (
-    "scan_decomposition", "skew", "pair_steal_pct",
-    "gen_pair_efficiencies", "pair_efficiencies", "headline", "sweep",
-)
+#: extras keys dropped, in order, while the line is over the limit; the
+#: `partial` and `interrupted` flags are never dropped
+_TRIM_ORDER = ("plan_fingerprints", "plan_fingerprints_error",
+               "scaling_error", "scaling")
 
 
 def build_stdout_payload() -> dict:
@@ -930,52 +352,37 @@ def build_stdout_payload() -> dict:
         "metric": "headline_queries_total",
         "value": STATE["total"],
         "unit": "sec",
-        # per-query timings intentionally NOT inlined (see
-        # STDOUT_LINE_LIMIT note); the map is in the HEADLINE artifact
-        "queries": {},
+        "queries": {k: round(v, 2) for k, v in STATE["timings"].items()},
         "queries_file": STATE.get("queries_file"),
         "sf": STATE["sf"],
         "extras": STATE["extras"],
     }
 
 
+def _dumps(payload: dict) -> str:
+    return json.dumps(payload, separators=(",", ":"))
+
+
 def render_stdout_line(payload: dict) -> str:
-    line = json.dumps(payload)
+    line = _dumps(payload)
     if len(line) <= STDOUT_LINE_LIMIT:
         return line
-    payload = dict(payload, extras=dict(payload["extras"]))
-    scaling = payload["extras"].get("scaling")
-    if isinstance(scaling, dict):
-        scaling = dict(scaling)
-        payload["extras"]["scaling"] = scaling
-    trimmed = []
+    extras = dict(payload["extras"])
+    payload = dict(payload, extras=extras)
     for key in _TRIM_ORDER:
-        # pop from EVERY container holding the key (a key present in
-        # both scaling and extras used to survive in one of them), and
-        # skip the re-dump entirely when nothing was removed this
-        # iteration (code-review r8)
-        found = False
-        for container in (scaling or {}, payload["extras"]):
-            if key in container:
-                container.pop(key)
-                found = True
-        if not found:
+        if extras.pop(key, None) is None:
             continue
-        trimmed.append(key)
-        payload["extras"]["trimmed_for_size"] = trimmed
-        line = json.dumps(payload)
+        extras["trimmed_for_size"] = extras.get("trimmed_for_size", []) + [key]
+        line = _dumps(payload)
         if len(line) <= STDOUT_LINE_LIMIT:
             return line
-    # every trim exhausted and still over-limit: flag it so a driver-side
-    # parse failure is attributable, and say so on stderr
-    payload["extras"]["stdout_line_overflow"] = len(line)
-    line = json.dumps(payload)
-    print(
-        f"WARNING: stdout JSON line {len(line)} chars exceeds "
-        f"STDOUT_LINE_LIMIT={STDOUT_LINE_LIMIT} after all trims",
-        file=sys.stderr,
-        flush=True,
-    )
+    # the per-query map goes last; it is in queries_file either way
+    payload["queries"] = {}
+    extras["queries_trimmed_for_size"] = True
+    line = _dumps(payload)
+    if len(line) > STDOUT_LINE_LIMIT:
+        log(f"WARNING: stdout JSON line {len(line)} chars exceeds "
+            f"STDOUT_LINE_LIMIT={STDOUT_LINE_LIMIT} after all trims")
     return line
 
 
@@ -989,45 +396,39 @@ def emit_final() -> None:
 def _write_headline_artifact(
     timings: dict, all_reps: dict, partial: bool
 ) -> None:
-    """Per-query evidence, (re)written after EVERY completed query and
-    once more (partial=False) after the loop. Kill-safety doctrine: the
-    sweep has written incrementally per pair since r5, but the headline
-    lost that property in r7 when the per-query map moved OFF the stdout
-    line into this side file written only at loop end — a SIGTERM 52
-    queries into a 53-query headline would have emitted value=0.0 /
-    queries_file=null and dropped every completed median. Now the
-    handler's emit path always finds totals-so-far in STATE and a valid
-    (partial-flagged) artifact on disk. Atomic rename so a kill
-    mid-write can't leave a truncated JSON."""
-    if not all_reps:
-        return
-    extras = STATE["extras"]
-    extras["headline"] = {
-        "protocol": "1 warm + 3 timed reps/query, median; "
-        "full protocol in the reps file",
-        "total_median_of_3": round(sum(timings.values()), 3),
-        "total_best_of_3": round(
-            sum(min(r["timed"]) for r in all_reps.values()), 3
-        ),
-        "warm_over_rep_median_ratio": round(
-            statistics.median(
-                r["warm"] / max(statistics.median(r["timed"]), 1e-9)
-                for r in all_reps.values()
-            ),
-            2,
-        ),
-        "per_query_reps_file": os.path.relpath(
-            _run_artifact("HEADLINE"), REPO
-        ),
-    }
+    """Per-query record, rewritten after EVERY completed query: the side
+    file is the only home of the per-rep evidence, so a kill mid-headline
+    must leave a valid (partial-flagged) file and totals-so-far in STATE
+    for the signal handler's line. Atomic rename so a kill mid-write
+    can't leave a truncated JSON."""
+    STATE["timings"] = timings
+    STATE["total"] = round(sum(timings.values()), 3)
     if partial:
-        extras["headline"]["partial"] = True
-    STATE["queries_file"] = extras["headline"]["per_query_reps_file"]
+        STATE["extras"]["partial"] = True
+    else:
+        STATE["extras"].pop("partial", None)
+    STATE["queries_file"] = os.path.relpath(_run_artifact("HEADLINE"), REPO)
+
+    def total(key):
+        return round(sum(
+            statistics.median(r[key]) for r in all_reps.values()), 3)
+
     payload = {
-        "protocol": "per-query: 1 untimed warm run + 3 timed "
-        "reps, MEDIAN reported, steady-state session, cold "
-        "plan per run",
+        "protocol": "per-query: 1 untimed warm run + 3 timed reps, MEDIAN "
+        "reported, steady-state session, cold plan per run; a rep is "
+        "build_s (query-function call incl. eager jobs) + exec_s (noop "
+        "write), jobs_* are the Spark jobs of each part",
         "medians": timings,
+        "totals": {
+            "median_of_3": STATE["total"],
+            "best_of_3": round(
+                sum(min(r["timed"]) for r in all_reps.values()), 3),
+            "build_s": total("build_s"),
+            "exec_s": total("exec_s"),
+            "warm_over_rep_median_ratio": round(statistics.median(
+                r["warm"] / max(statistics.median(r["timed"]), 1e-9)
+                for r in all_reps.values()), 2),
+        },
         "reps": all_reps,
     }
     if partial:
@@ -1038,130 +439,54 @@ def _write_headline_artifact(
     os.replace(tmp, _run_artifact("HEADLINE"))
 
 
-def _scaling_extras_from_sweep() -> None:
-    """(Re)build extras.scaling from the incrementally-written SWEEP
-    artifact — called both on the happy path and from the signal handler,
-    so whatever pairs completed are always in the stdout line."""
-    p = _sweep_out_path()
-    if not os.path.exists(p):
-        return
-    # Never ingest evidence this run didn't produce (r5 advice): the
-    # auto-suffix resolution already guarantees a fresh path, and the
-    # mtime check backstops any override — a sweep artifact older than
-    # this process is carried-forward history, not this run's result.
-    if os.path.getmtime(p) < BENCH_T0:
-        STATE["extras"]["scaling_error"] = (
-            (STATE["extras"].get("scaling_error") or "scaling did not run")
-            + f"; pre-existing sweep artifact {os.path.basename(p)} "
-            "predates this run — NOT ingested as extras.scaling (history "
-            "lives in BENCH/BASELINE.md)"
-        )
-        return
-    try:
-        with open(p) as fh:
-            sw = json.load(fh)
-    except Exception:
-        return
-    if sw.get("file_efficiency") is None:
-        STATE["extras"]["scaling_error"] = "sweep: no completed file pairs"
-        return
-    scaling = _scaling_view(sw, sw.get("reps", 0))
-    gen_eff = scaling["gen_efficiency"]
-    STATE["extras"]["scaling"] = {
-        # full protocol prose lives in BENCH/BASELINE.md + the sweep
-        # artifact; the stdout line carries only a version pointer so it
-        # stays under STDOUT_LINE_LIMIT (round-6 judge item #1)
-        "protocol": (
-            f"v2c paired interleaved sweep, {scaling['reps']} file + "
-            f"{len(scaling['gen_pair_efficiencies'])} gen pairs; "
-            "see BENCH/BASELINE.md"
-        ),
-        "pages_rows": PAGES_ROWS,
-        "n": scaling["n"],
-        "n4": scaling["n4"],
-        f"local{scaling['n']}_median_pages_per_sec": scaling["median_n"],
-        f"local{scaling['n4']}_median_pages_per_sec": scaling["median_4n"],
-        "efficiency_n_to_4n_paired_median": scaling["efficiency"],
-        "gen_efficiency_n_to_4n_paired_median": gen_eff,
-        "criterion_met_file": scaling["efficiency"] >= 0.8,
-        "criterion_met_gen": (gen_eff >= 0.8) if gen_eff is not None else None,
-        "pair_efficiencies": scaling["pair_efficiencies"],
-        "gen_pair_efficiencies": scaling["gen_pair_efficiencies"],
-        # covariate context: per-pair measured hypervisor steal + the
-        # low-steal subset median (informational; the gate stays on the
-        # all-pairs median — see SWEEP artifact / BENCH/BASELINE.md)
-        "pair_steal_pct": scaling.get("pair_steal_pct", []),
-        "efficiency_low_steal": scaling.get("efficiency_low_steal"),
-        "low_steal_pairs": scaling.get("low_steal_pairs"),
-        "partial": scaling["partial"],
-        "stop_reason": scaling["stop_reason"],
-        "skew": {
-            k: scaling["skew"].get(k)
-            for k in (
-                "median_speedup", "pair_speedups",
-                "plain_sec", "salted_sec", "error", "skipped",
-            )
-            if k in scaling["skew"]
-        },
-        "scan_decomposition": {
-            k: scaling["scan"].get(k)
-            for k in (
-                "median_efficiency", "pair_efficiencies", "error", "skipped",
-            )
-            if k in scaling["scan"]
-        },
-    }
-
-
 def main() -> None:
+    from logstash_filter_translate_spark.plans import queries as Q
+    from logstash_filter_translate_spark.session import build_session
+
+    names = sys.argv[1:]
+    full_run = not names
+    unknown = [n for n in names if n not in Q.ALL_QUERIES]
+    if unknown:
+        raise SystemExit(f"unknown queries: {' '.join(unknown)}")
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS",
+                              str(len(os.sched_getaffinity(0)))))
     STATE["sf"] = float(
         os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or 0.1
     )
 
     def _on_signal(signum, frame):
-        # the driver's timeout kill must still yield a parseable artifact
-        # (round-4 judge item #1): refresh scaling extras from whatever the
-        # sweep wrote so far, emit the JSON line, exit cleanly
+        # a kill must still yield the parseable line
         log(f"bench: signal {signum} — emitting partial result")
         STATE["extras"]["interrupted"] = f"signal {signum}"
-        for proc in CHILDREN:
-            if proc.poll() is None:
-                proc.terminate()  # its handler finalizes its artifact
-        if any(p.poll() is None for p in CHILDREN):
-            time.sleep(3)  # give the sweep's handler time to write
-        _scaling_extras_from_sweep()
+        child = STATE["child"]
+        if child is not None and child.poll() is None:
+            # SIGINT, not SIGTERM: perfbench/run.py's finally then reaps
+            # its worker's process group (the worker JVM included)
+            child.send_signal(signal.SIGINT)
+            for _ in range(300):
+                if child.poll() is not None:
+                    break
+                time.sleep(0.1)
         emit_final()
-        for proc in CHILDREN:  # don't leave an orphan JVM behind
-            if proc.poll() is None:
-                proc.kill()
         os._exit(0)
 
     signal.signal(signal.SIGTERM, _on_signal)
     signal.signal(signal.SIGINT, _on_signal)
 
-    if os.environ.get("SPARK_GRAFT_HEADLINE", "1") != "0":
-        log(f"headline queries at {sf_dir} on local[{cpus}]")
-        timings, all_reps = run_headline(sf_dir, cpus)
-        # sum of per-query medians (wall time would count the warm +
-        # repeat runs)
-        total = round(sum(timings.values()), 3)
-        STATE["timings"], STATE["total"] = timings, total
-    else:
-        timings, total, all_reps = {}, 0.0, {}
+    log(f"headline queries at {sf_dir} on local[{cpus}]")
+    spark = build_session(
+        app_name="lfts-bench", master=f"local[{cpus}]",
+        shuffle_partitions=max(cpus, 8),
+    )
+    run_headline(spark, sf_dir, names or HEADLINE)
+    spark.stop()
 
     extras = STATE["extras"]
-    # final (non-partial) rewrite of the per-query side file; the stdout
-    # JSON line stays under STDOUT_LINE_LIMIT so the driver's log-tail
-    # capture parses it (round-6 judge item #1)
-    _write_headline_artifact(timings, all_reps, partial=False)
-    # plan-fingerprint artifact (round-4 judge item #6): a normalized
-    # physical-plan digest per contract query — regression tracking that
-    # host timing noise can't fake. Cheap (~1 min at sf0.001), own JVM.
-    if os.environ.get("SPARK_GRAFT_PLANFP", "1") != "0" and (
-        remaining_budget() > 360
-    ):
+    # plan fingerprints: a normalized physical-plan digest per contract
+    # query, a regression record that host timing noise can't fake.
+    # About a minute at sf0.001, own JVM.
+    if full_run and remaining_budget() > 360:
         try:
             subprocess.run(
                 [sys.executable, rp("tools/planfingerprint.py"),
@@ -1175,40 +500,18 @@ def main() -> None:
             )
         except Exception as exc:
             extras["plan_fingerprints_error"] = str(exc)[:200]
-    if os.environ.get("SPARK_GRAFT_SCALING", "1") != "0":
-        if remaining_budget() < 420:
+    if full_run:
+        # a traced pages_e2e run takes about 110 s
+        if remaining_budget() < 240:
             extras["scaling_error"] = (
-                f"skipped: {remaining_budget():.0f}s budget left after "
-                "headline"
+                f"skipped: {remaining_budget():.0f}s budget left"
             )
         else:
             try:
-                scaling = run_scaling()
-                write_baseline_md(scaling)
-            except Exception as exc:  # never lose the headline JSON line
+                run_scaling()
+            except Exception as exc:  # never lose the headline line
                 log(f"scaling phase failed: {exc}")
-                extras["scaling_error"] = str(exc)[:300]
-            _scaling_extras_from_sweep()
-    # robust reference numbers from the newest complete interleaved sweep
-    for sweep_path in _sweep_history_paths():
-        with open(sweep_path) as sweep_fh:
-            sw = json.load(sweep_fh)
-        if sw.get("file_efficiency") is None:
-            continue
-        extras["sweep"] = {
-            k: sw[k]
-            for k in (
-                "n", "n4", "rows",
-                "file_efficiency", "file_best_efficiency",
-                "gen_efficiency", "gen_best_efficiency",
-            )
-            if k in sw
-        }
-        extras["sweep"]["tag"] = (
-            os.path.basename(sweep_path)[len("SWEEP_"):-len(".json")]
-        )
-        extras["sweep"]["artifact"] = os.path.relpath(sweep_path, REPO)
-        break
+                extras["scaling_error"] = str(exc)[:200]
 
     emit_final()
 

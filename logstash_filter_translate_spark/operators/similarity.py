@@ -230,31 +230,27 @@ def ivf_assign(
     centroids: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    carry: bool = False,
 ) -> DataFrame:
     """IVF cell assignment: nearest centroid by cosine (ties → lowest
-    centroid id). Returns (id_col, cell). Centroids are broadcast; the
-    argmax is a ``max_by`` partial aggregate — the n×|centroids| scored
-    expansion is reduced MAP-SIDE (partial HashAggregate), so the shuffle
-    carries one (id, best-cell) pair per vector instead of the full
-    expansion a window row_number would shuffle.
+    centroid id). Returns every column of ``vectors`` plus ``cell``.
+    Centroids are broadcast; the argmax is a ``max_by`` partial aggregate
+    — the n×|centroids| scored expansion is reduced MAP-SIDE (partial
+    HashAggregate), so the shuffle carries one row per vector instead of
+    the full expansion a window row_number would shuffle.
 
-    ``carry=True`` (r9): return EVERY column of ``vectors`` alongside
-    ``cell`` by riding ``any_value`` aggregates on the same partial
+    The other columns ride ``any_value`` aggregates on the same partial
     aggregate — ``id_col`` is the vector key (unique by the IVF
-    contract), so each group's carried values are constant and
-    any_value is exact. This removes the ``corpus ⋈ its-cells``
-    join-back every consumer paid (ivf_topk, write_ivf_index,
-    append_ivf_index): at scale that join re-scans the corpus and
-    shuffles it by id; carrying the columns costs the same one
-    corpus-keyed exchange the aggregate already does. Every carried
-    column rides that exchange, so project wide payload columns out of
-    ``vectors`` before assigning."""
+    contract), so each group's carried values are constant and any_value
+    is exact. No consumer joins the corpus back to its cells: at scale
+    that join re-scans the corpus and shuffles it by id, while carrying
+    the columns costs the one corpus-keyed exchange the aggregate already
+    does. Every carried column rides that exchange, so project wide
+    payload columns out of ``vectors`` before assigning."""
     c = centroids.select(
         F.col(id_col).alias("__cid"), F.col(vec_col).alias("__cvec")
     )
-    base_cols = list(vectors.columns) if carry else [id_col, vec_col]
-    scored = vectors.select(*base_cols).join(F.broadcast(c)).select(
+    base_cols = list(vectors.columns)
+    scored = vectors.join(F.broadcast(c)).select(
         *base_cols,
         F.col("__cid"),
         cosine(F.col(vec_col), F.col("__cvec")).alias("__cs"),
@@ -264,8 +260,6 @@ def ivf_assign(
     cell = F.max_by(
         F.col("__cid"), F.struct(F.col("__cs"), (-F.col("__cid")).alias("__t"))
     ).alias("cell")
-    if not carry:
-        return scored.groupBy(id_col).agg(cell)
     carried = [
         F.any_value(F.col(col)).alias(col)
         for col in base_cols
@@ -353,11 +347,7 @@ def ivf_topk(
     nearest cells. Cells come from ivf_assign inline — the one-shot plane;
     at scale build the index once with write_ivf_index and query via
     ivf_topk_indexed."""
-    # r9: carry=True returns (corpus columns, cell) off the assignment
-    # aggregate itself — the old corpus ⋈ corpus_cells join-back
-    # re-scanned and re-shuffled the corpus for columns the aggregate
-    # already held
-    cb = ivf_assign(corpus, centroids, id_col, vec_col, carry=True)
+    cb = ivf_assign(corpus, centroids, id_col, vec_col)
     qb = _query_cells(queries, centroids, id_col, vec_col, query_id_col, nprobe)
     return _cell_scored_topk(cb, qb, id_col, vec_col, query_id_col, k)
 
@@ -395,9 +385,7 @@ def write_ivf_index(
     centroid set probes the wrong cells and silently returns wrong
     neighbors. Query with ``ivf_topk_indexed(..., centroids=None)`` and
     grow with ``append_ivf_index`` — both read the stored set."""
-    # r9: carry=True — see ivf_assign; the build pass loses its
-    # corpus-keyed join-back
-    assigned = ivf_assign(corpus, centroids, id_col, vec_col, carry=True)
+    assigned = ivf_assign(corpus, centroids, id_col, vec_col)
     assigned.write.mode("overwrite").partitionBy("cell").parquet(path)
     centroids.select(id_col, vec_col).coalesce(1).write.mode(
         "overwrite"
@@ -557,8 +545,7 @@ def append_ivf_index(
     union immediately: partition pruning is directory-based, and
     appended files join their cell's directory."""
     centroids = load_ivf_centroids(spark, path)
-    # r9: carry=True — same join-back removal as write_ivf_index
-    assigned = ivf_assign(new_corpus, centroids, id_col, vec_col, carry=True)
+    assigned = ivf_assign(new_corpus, centroids, id_col, vec_col)
     assigned.write.mode("append").partitionBy("cell").parquet(path)
 
 

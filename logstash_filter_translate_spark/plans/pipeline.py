@@ -14,7 +14,7 @@ Stage map (all lazily composed into ONE Catalyst plan until the sinks):
   aggregate — per-sink counts, per-key match histograms (partial+final hash
               agg; salted variant for explicit skew handling).
   sinks     — one partitioned write: partitionBy(route, lang) → each sink is
-              a directory subtree; or per-route filtered writes.
+              a directory subtree.
 
 Scale design notes:
   - the dictionary side never shuffles the 100 TB probe side: the small
@@ -258,14 +258,11 @@ def write_sinks(
     enriched: DataFrame,
     out_dir: str,
     mode: str = "overwrite",
-    single_pass: bool = True,
     io: Optional["TableIO"] = None,
     spec: Optional["PartitionSpec"] = None,
 ) -> None:
-    """Fan-out sinks. single_pass: one partitioned write — each
-    (route, lang) pair lands in its own partition, one scan of the input.
-    Otherwise: one filtered write per route (re-scans unless the caller
-    checkpointed).
+    """Fan-out sinks: one partitioned write — each (route, lang) pair
+    lands in its own partition, one scan of the input.
 
     The partitioning is ROUTED_SINK_SPEC — a PartitionSpec OBJECT shared
     by both table formats (S7 seam, plans/io.py): parquet renders it as
@@ -273,25 +270,13 @@ def write_sinks(
     ``io=TableIO(spark, "iceberg")`` renders the identical spec as the
     Iceberg table's identity partitioning with snapshot-isolated commits.
     """
-    from .io import ROUTED_SINK_SPEC, PartitionSpec, TableIO
+    from .io import ROUTED_SINK_SPEC, TableIO
 
     io = io or TableIO(enriched.sparkSession)
     spec = spec or ROUTED_SINK_SPEC
     cols = [c for c in enriched.columns if not c.startswith("__")]
     slim = enriched.select(*cols).drop("html")  # sinks keep parsed fields only
-    if single_pass:
-        io.write(slim, io.loc(out_dir, "routed"), mode=mode, spec=spec)
-    else:
-        sub_spec = PartitionSpec(tuple(f for f in spec.fields if f != "route"))
-        for route in ["matched", "fallback", "unmatched", "failed", "skipped"]:
-            # '=' is directory convention, not a valid table-identifier char
-            name = f"route={route}" if io.fmt == "parquet" else f"route_{route}"
-            io.write(
-                slim.filter(F.col("route") == route),
-                io.loc(out_dir, name),
-                mode=mode,
-                spec=sub_spec,
-            )
+    io.write(slim, io.loc(out_dir, "routed"), mode=mode, spec=spec)
 
 
 def run_pipeline(
