@@ -125,10 +125,9 @@ HEADLINE = [
     # cost is the honest number; a production pipeline amortizes it by
     # checkpointing labels once and joining twice (docs/PLANS.md).
     "canonical_docs",
-    # r8: the big-graph components plane (broadcast_members=False — the
-    # plane the size gate picks at web-crawl dup rates, judge item #1);
-    # benched so the shuffle anti-join's cost is tracked next to the
-    # broadcast plane's.
+    # the big-graph components plane (broadcast_member_limit=0 — the
+    # plane the size gate picks at web-crawl dup rates); benched so the
+    # shuffle anti-join's cost is tracked next to the broadcast plane's.
     "dedup_components_shuffle",
     # r8: incremental dedup of a corpus increment (cross-LSH broadcast
     # probe + intra-batch self-LSH + shared verify)
@@ -241,7 +240,7 @@ def run_headline(spark, sf_dir: str, names) -> dict:
 
 
 #: artifacts written by this bench run are tagged with the current round
-ROUND_TAG = os.environ.get("SPARK_GRAFT_ROUND_TAG", "r8")
+ROUND_TAG = os.environ.get("SPARK_GRAFT_ROUND_TAG", "r10")
 
 #: every artifact kind this run may write — the collision suffix is
 #: resolved ONCE across all of them, so one run's files share a suffix

@@ -12,11 +12,14 @@ Scale notes (the 100 TB story):
     int, cheap to band by prefix.
   - All primitives use the md5-based portable hash so the DuckDB oracle
     verifies values exactly (functions/text.py).
+  - The Jaccard verify and connected components run one plane each; their
+    physical choices (singleton-anti-join broadcast, pointer jumping) are
+    measured rules inside the function, not caller flags.
 """
 
 from __future__ import annotations
 
-from typing import List, Optional, Union
+from typing import List, Optional
 
 from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
@@ -456,6 +459,33 @@ def embedding_cosine_pairs(
 # n-gram Jaccard
 # ---------------------------------------------------------------------------
 
+def _candidate_shingles(
+    df: DataFrame,
+    text_col: str,
+    id_col: str,
+    pairs: DataFrame,
+    shingle_n: int,
+    prefilter: bool,
+) -> DataFrame:
+    """(id, s): the distinct word n-grams of every document, semi-joined
+    first down to the documents that appear in a candidate pair unless
+    ``prefilter`` is off."""
+    base = df
+    if prefilter:
+        cand_ids = (
+            pairs.select(F.col("id_a").alias(id_col))
+            .unionByName(pairs.select(F.col("id_b").alias(id_col)))
+            .distinct()
+        )
+        base = df.join(cand_ids, id_col, "left_semi")
+    return base.select(
+        F.col(id_col),
+        F.explode(
+            F.array_distinct(word_shingles(tokens(F.col(text_col)), shingle_n))
+        ).alias("s"),
+    )
+
+
 def ngram_jaccard_pairs(
     df: DataFrame,
     text_col: str,
@@ -463,26 +493,26 @@ def ngram_jaccard_pairs(
     pairs: DataFrame,
     shingle_n: int = 3,
     prefilter: bool = True,
-    materialize: bool = True,
 ) -> DataFrame:
     """Exact Jaccard (distinct word n-grams) for given candidate (id_a, id_b)
     pairs; returns (id_a, id_b, n_intersect, n_union) — integers so the
     oracle compares exactly; ratio = n_intersect / n_union.
 
     Implementation: semi-join the corpus down to documents that appear in a
-    candidate pair FIRST, explode their distinct shingles, join to the pair
-    list, count shared shingles; set sizes come from a per-doc aggregate.
-    The verify stage's shuffle is therefore proportional to CANDIDATE
-    documents, not the corpus — at 100 TB with a tiny candidate fraction
-    the full-corpus shingle explode never materializes (round-2 judge
-    finding #2; guarded by tests/test_plan_guards.py).
+    candidate pair FIRST, explode their distinct shingles
+    (:func:`_candidate_shingles`), join to the pair list, count shared
+    shingles; set sizes come from a per-doc aggregate. The verify stage's
+    shuffle is therefore proportional to CANDIDATE documents, not the
+    corpus — at 100 TB with a tiny candidate fraction the full-corpus
+    shingle explode never materializes (guarded by
+    tests/test_plan_guards.py).
 
     ``prefilter=False`` skips the semi-join for callers that KNOW the
     candidate set already covers (nearly) every document — there the
     reduction is pure overhead (the all-adjacent-pairs audit query is
     the example); the default stays on for the real LSH-candidate shape.
 
-    CONTRACT (code-review r7): every pair endpoint must have ≥1 shingle
+    CONTRACT: every pair endpoint must have ≥1 shingle
     (≥ ``shingle_n`` tokens) and exist in ``df`` — true by construction
     for LSH candidates, whose members banded a non-NULL signature. A
     pair with a shingle-less or absent endpoint is DROPPED by the final
@@ -493,48 +523,26 @@ def ngram_jaccard_pairs(
     lockstep. Externally-supplied pairs with tiny documents must be
     pre-filtered by the caller.
 
-    ``materialize`` (default True, r9): the exploded candidate-shingle
-    frame ``sh`` is referenced THREE times (per-doc sizes + both sides of
-    the intersect join) and ``sizes`` twice — without materialization the
-    scan→semi-join→tokenize→shingle→explode subtree re-executes once per
-    reference (4 scans + 4 shingle builds in the physical plan, measured
-    r9). Both are localCheckpoint(eager=False)'d: ``sh`` is proportional
-    to CANDIDATE documents (the semi-join runs before it), ``sizes`` to
-    candidate doc count, so the cached state stays candidate-bounded at
-    any corpus scale. ``materialize=False`` keeps the single-plan form —
-    the plan-guard test uses it to assert the semi-join shape that the
-    checkpoint otherwise hides behind a Scan ExistingRDD.
+    The candidate-shingle frame is referenced three times (per-doc sizes
+    and both sides of the intersect join) and the sizes twice; each is
+    localCheckpoint(eager=False)'d so the scan→semi-join→tokenize→explode
+    subtree runs once instead of once per reference. Both stay
+    candidate-bounded (the semi-join runs first), so the cached state is
+    small at any corpus scale.
     """
     # pairs is referenced 2-3 times (candidate-id set, intersect join,
     # final left join) — materialize once instead of recomputing the LSH
     # subtree per reference; localCheckpoint (not persist) so the blocks
     # are GC-released with the frame
     pairs = pairs.localCheckpoint(eager=False)
-    base = df
-    if prefilter:
-        cand_ids = (
-            pairs.select(F.col("id_a").alias(id_col))
-            .unionByName(pairs.select(F.col("id_b").alias(id_col)))
-            .distinct()
-        )
-        base = df.join(cand_ids, id_col, "left_semi")
-    sh = (
-        base
-        .select(
-            F.col(id_col),
-            F.explode(
-                F.array_distinct(word_shingles(tokens(F.col(text_col)), shingle_n))
-            ).alias("s"),
-        )
+    sh = _candidate_shingles(
+        df, text_col, id_col, pairs, shingle_n, prefilter
+    ).localCheckpoint(eager=False)
+    sizes = (
+        sh.groupBy(id_col)
+        .agg(F.count("*").alias("n_sh"))
+        .localCheckpoint(eager=False)
     )
-    if materialize:
-        # computed once, scanned by the sizes aggregate and both sides of
-        # the intersect join; candidate-bounded (see docstring)
-        sh = sh.localCheckpoint(eager=False)
-    sizes = sh.groupBy(id_col).agg(F.count("*").alias("n_sh"))
-    if materialize:
-        # referenced by both size-joins; one row per candidate document
-        sizes = sizes.localCheckpoint(eager=False)
 
     a = sh.withColumnRenamed(id_col, "id_a")
     b = sh.withColumnRenamed(id_col, "id_b").withColumnRenamed("s", "s_b")
@@ -659,16 +667,15 @@ BROADCAST_MEMBER_LIMIT = 10_000_000
 
 #: diagnostic: iterations the last connected_components call took to
 #: reach its fixpoint (driver-side scalar; set on success). Lets tests
-#: and tools/stress_components.py report convergence rounds without
-#: changing the function's return type.
+#: report convergence rounds without changing the function's return type.
 LAST_CC_ITERATIONS = 0
 
-#: round at which ``pointer_jump="auto"`` escalates: dedup-shaped
-#: near-dup graphs fixpoint in 3-5 rounds, so a graph still moving at
-#: round 8 is deep (a chain/path pathology, not a dup cluster) and the
-#: O(log diameter) shortcutting plane takes over. Until then auto is
-#: byte-identical to the plain plane — shallow graphs never pay the
-#: extra label self-join.
+#: rounds after which connected_components adds pointer jumping:
+#: dedup-shaped near-dup graphs fixpoint in 3-5 rounds, so a graph still
+#: moving after round 8 is deep (a chain/path pathology, not a dup
+#: cluster) and the O(log diameter) shortcutting takes over. Until then
+#: the plan is plain propagation — shallow graphs never pay the extra
+#: label self-join.
 POINTER_JUMP_ESCALATION_ROUND = 8
 
 
@@ -677,9 +684,7 @@ def connected_components(
     edges: DataFrame,
     id_col: str = "id",
     max_iterations: int = 50,
-    broadcast_members: Optional[bool] = None,
     broadcast_member_limit: int = BROADCAST_MEMBER_LIMIT,
-    pointer_jump: Union[bool, str] = "auto",
 ) -> DataFrame:
     """(id, component) for every node, where component = the MIN node id
     reachable through the undirected ``edges`` (id_a, id_b). The proper
@@ -699,55 +704,43 @@ def connected_components(
         each iteration shuffles |pair nodes| longs — never corpus-wide.
         Singletons re-enter at the end via a left-anti join against the
         member set with their own id as component — zero iterations
-        paid for them. Whether that anti-join broadcasts is SIZE-GATED
-        (r7 judge item #1): web-crawl near-dup rates run 30-45% of
-        documents, so the member set is NOT reliably a small corpus
-        fraction — at 10^10 docs it is billions of longs, and an
-        unconditional broadcast OOMs every executor (the same
-        untrustworthy-size-claim failure ExactFrameJoin(broadcast=False)
-        exists to prevent, lookup.py). ``broadcast_members=None``
-        (default) broadcasts only when the MEASURED member count (a
-        free scan of the already-checkpointed label state) is ≤
-        ``broadcast_member_limit``; True/False force a plane. The
-        un-hinted plane is a plain shuffle left-anti join — correct at
-        any member-set size.
+        paid for them. Whether that anti-join broadcasts is SIZE-GATED:
+        web-crawl near-dup rates run 30-45% of documents, so the member
+        set is NOT reliably a small corpus fraction — at 10^10 docs it
+        is billions of longs, and an unconditional broadcast OOMs every
+        executor (the same untrustworthy-size-claim failure
+        ExactFrameJoin(broadcast=False) exists to prevent, lookup.py).
+        It broadcasts only when the MEASURED member count (observed on
+        the label-init job, no extra scan) is ≤
+        ``broadcast_member_limit``; otherwise it is a merge-hinted
+        shuffle left-anti join — correct at any member-set size.
       - one iteration = edge-join (shuffle on node id) + map-side
         partial-min aggregate; labels are localCheckpoint'ed each
         iteration, so lineage stays flat AND the final plan shape is
         iteration-count-independent (digest-stable across scales).
       - propagation reaches a fixpoint in <= diameter iterations;
         near-dup clusters are shallow (a dup of a dup of X is usually a
-        dup of X), so 3-5 iterations is typical. For adversarial
-        long-chain graphs ``pointer_jump=True`` adds a shortcutting
-        step per round (L(v) <- L_prev(L(v)), Shiloach-Vishkin style,
-        jumping through the previous round's CHECKPOINTED map so the
-        fresh aggregate is never joined against itself): the remaining
-        distance to the component min still follows the 2d+1 doubling
-        recurrence, so convergence is O(log diameter) instead of
-        O(diameter) — a 200-node chain converges in 9 rounds / 7.4 s
-        where plain propagation needs 200 rounds / 32.8 s (measured,
-        tools/stress_components.py → BENCH/STRESS_CC_r8c.json). The
-        extra label join (one more shuffle of (node, label) longs
-        per round) is wasted on dedup-shaped shallow graphs, so the
-        default is ``"auto"``: plain until
+        dup of X), so 3-5 iterations is typical. Once
         ``POINTER_JUMP_ESCALATION_ROUND`` rounds have passed without a
-        fixpoint — which shallow dup graphs never reach, keeping them
-        byte-identical to plain — then shortcutting takes over, so a
-        deep pathological graph self-remedies instead of burning the
-        iteration budget and raising (the same caller-shouldn't-have-
-        to-know doctrine as the size-gated broadcast above and
-        similarity's plane="auto"). ``False`` forces plain (the
-        RuntimeError bound then measures true diameter); ``True``
-        shortcuts from round 1. The final returned plan is identical
-        on every setting (it reads the last label checkpoint), so
-        digests don't move.
+        fixpoint — which shallow dup graphs never reach, so they run
+        plain propagation only — each round adds a shortcutting step
+        (L(v) <- L_prev(L(v)), Shiloach-Vishkin style, jumping through
+        the previous round's CHECKPOINTED map so the fresh aggregate is
+        never joined against itself): the remaining distance to the
+        component min follows the 2d+1 doubling recurrence, so a deep
+        pathological graph converges in O(log diameter) rounds instead
+        of burning the iteration budget and raising. Shortcutting from
+        round 1, a 200-node chain converged in 9 rounds / 7.4 s where
+        plain propagation needed 200 rounds / 32.8 s
+        (BENCH/STRESS_CC_r8c.json). The final returned plan reads the
+        last label checkpoint, so it is the same however many rounds
+        ran.
       - convergence costs NO extra job: the union tags self rows, so
         the min-aggregate recovers each node's previous label in the
         same pass, and the changed-count (labels that still dropped)
         rides the checkpoint's materialization as an observed metric
-        (``Observation``). One shuffle + one job per iteration, total
-        — the r7 shape re-joined new-vs-old checkpoints (two extra
-        shuffles and a second job every iteration). Only the scalar
+        (``Observation``). One shuffle + one job per iteration, total;
+        never a separate new-vs-old join/count job. Only the scalar
         reaches the driver.
 
     Raises after ``max_iterations`` without a fixpoint rather than
@@ -755,7 +748,7 @@ def connected_components(
     """
     global LAST_CC_ITERATIONS
     # reset at entry so a raise below can't leave a PREVIOUS call's
-    # convergence count attributed to this one (code-review r8)
+    # convergence count attributed to this one
     LAST_CC_ITERATIONS = 0
     sym = (
         edges.select(F.col("id_a").alias("__src"), F.col("id_b").alias("__dst"))
@@ -765,23 +758,21 @@ def connected_components(
             )
         )
         .distinct()
-        # computed once, scanned every iteration. eager=False (r9): the
-        # init aggregation below materializes it inside ITS job — a
-        # separate eager job boundary bought nothing (the cached RDD is
-        # the same object either way, so the loop still scans the cache)
+        # computed once, scanned every iteration. eager=False: the init
+        # aggregation below materializes it inside ITS job — a separate
+        # eager job boundary buys nothing (the cached RDD is the same
+        # object either way, so the loop still scans the cache)
         .localCheckpoint(eager=False)
     )
     members = sym.select(F.col("__src").alias("__node")).distinct()
-    # r9: iteration 1 folded into the label INIT. At round 1 every
+    # iteration 1 is folded into the label INIT. At round 1 every
     # neighbor's label is its own id, so min-label propagation over the
     # initial state is exactly groupBy(__src) → least(__src, min(__dst))
-    # — one aggregation over the checkpointed edges instead of the old
-    # init-distinct checkpoint + count job + a full join-union-agg
-    # round (3 jobs → 1, measured r9; the pointer jump is skipped here
-    # because jumping through the identity label map is a no-op). The
-    # changed-count AND the member count for the broadcast size gate
-    # both ride this checkpoint's materialization as observed metrics —
-    # the separate labels.count() job is gone.
+    # — one aggregation over the checkpointed edges, one job (the
+    # pointer jump is skipped here because jumping through the identity
+    # label map is a no-op). The changed-count AND the member count for
+    # the broadcast size gate both ride this checkpoint's
+    # materialization as observed metrics, so neither costs a job.
     obs = Observation()
     labels = (
         sym.groupBy("__src")
@@ -802,10 +793,9 @@ def connected_components(
         .localCheckpoint()
     )
     changed = obs.get["changed"] or 0  # sum over 0 rows is NULL
-    if broadcast_members is None:
-        # size-gate the singleton-re-entry broadcast on the MEASURED
-        # member count (observed on the init job above — free)
-        broadcast_members = (obs.get["members"] or 0) <= broadcast_member_limit
+    # size-gate the singleton-re-entry broadcast on the MEASURED member
+    # count (observed on the init job above — free)
+    members_fit = (obs.get["members"] or 0) <= broadcast_member_limit
     if changed == 0:
         LAST_CC_ITERATIONS = 1
     for iteration in range(2, max_iterations + 1):
@@ -829,23 +819,19 @@ def connected_components(
                 # every node appears exactly once as its own self row,
                 # so the same pass recovers the PREVIOUS label — the
                 # convergence check needs no join back to the old state
-                # (r8: the old new-vs-old join shuffled both checkpointed
-                # sides and ran a second job every iteration)
+                # (no second shuffle of the checkpointed sides, no second
+                # job per iteration)
                 F.min(
                     F.when(F.col("__self"), F.col("__comp"))
                 ).alias("__old"),
             )
         )
-        jump_now = pointer_jump is True or (
-            pointer_jump == "auto"
-            and iteration > POINTER_JUMP_ESCALATION_ROUND
-        )
-        if jump_now:
+        if iteration > POINTER_JUMP_ESCALATION_ROUND:
             # shortcutting: L(v) <- L_prev(L(v)). The parent map is the
             # PREVIOUS round's checkpointed labels, not this round's
             # aggregate — joining the un-materialized aggregate against
             # itself would re-execute the reduce-side aggregation for
-            # both join inputs (code-review r8). The doubling recurrence
+            # both join inputs. The doubling recurrence
             # is unchanged: the hop covers d+1, the jump through the
             # previous map another d, so distance-to-min goes to 2d+1
             # per round. Every label value is a member node and labels
@@ -886,12 +872,12 @@ def connected_components(
             "iterations (component diameter exceeds the bound)"
         )
     # singleton re-entry: anti-join the corpus against the member set.
-    # Broadcast-hinted only when the gate above (or the caller) said the
-    # measured member count fits (checkpointed RDD stats are unknown to
+    # Broadcast-hinted only when the gate above said the measured member
+    # count fits (checkpointed RDD stats are unknown to
     # AQE, so when hinted it must be explicit); past the gate the plain
     # shuffle left-anti is the correct plane at any size.
     member_dim = members.withColumnRenamed("__node", id_col)
-    if broadcast_members:
+    if members_fit:
         member_dim = F.broadcast(member_dim)
     else:
         # merge-hinted like the engine's other beyond-broadcast plane

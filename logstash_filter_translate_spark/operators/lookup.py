@@ -10,7 +10,7 @@ fail per row. The updaters in ``operators/translate.py`` consume only this
 contract, one body per updater shape:
 
 * ``probe(x)`` — elementwise planes (the plan-embedded, hash-bucketed map
-  literal and the native union ``replace`` chain): a pure Column expression
+  literal and the union ``replace`` chain): a pure Column expression
   of one string key, usable inside ``transform`` lambdas with no
   per-element struct.
 * ``probe_frame(df, key)`` — a scalar key, a column of ``df``: returns the
@@ -301,7 +301,7 @@ class LookupStrategy:
 
     def keyed(self) -> "LookupStrategy":
         """The strategy to probe with when the caller records the matched
-        key (every plane but the native union chain can report it)."""
+        key (every plane but :class:`UnionReplaceChain` can report it)."""
         return self
 
 
@@ -482,12 +482,9 @@ class ExactFrameJoin(ExactBroadcastJoin):
     dictionary is itself a table (a parquet/Iceberg dimension, a derived
     frame), possibly too large to hold on the driver at all.
 
-    ``broadcast`` is three-state:
-      * ``True`` (default) — force the broadcast-hash-join plane (the
+    ``broadcast``:
+      * ``True`` (default) — the broadcast-hash-join plane (the
         dictionary fits executor memory: up to ~hundreds of MB).
-      * ``None`` — defer the join strategy to Catalyst+AQE: a small
-        dimension still broadcasts at runtime; a huge one shuffle-plans
-        on AQE's measured sizes.
       * ``False`` — the dictionary is DECLARED beyond broadcast (fits no
         single machine): the dict side carries a merge join hint, so the
         pinned plan is a genuine shuffle (sort-merge) join at any data
@@ -505,7 +502,7 @@ class ExactFrameJoin(ExactBroadcastJoin):
         dict_df: DataFrame,
         key_col: str,
         value_col: str,
-        broadcast: Optional[bool] = True,
+        broadcast: bool = True,
     ):
         value_field = dict_df.schema[value_col]
         self.value_type = value_field.dataType
@@ -519,12 +516,10 @@ class ExactFrameJoin(ExactBroadcastJoin):
             .groupBy(DICT_KEY)
             .agg(F.min(DICT_VALUE).alias(DICT_VALUE))
         )
-        if broadcast is False:
-            dedup = dedup.hint("merge")
-        self.dict_df = dedup
+        self.dict_df = dedup if broadcast else dedup.hint("merge")
 
     def build_side(self) -> DataFrame:
-        if self.broadcast is True:
+        if self.broadcast:
             return F.broadcast(self.dict_df)
         return self.dict_df
 
@@ -644,29 +639,27 @@ class RegexFirstMatch(_ArrowUdfPlane):
 # O3 — union-regex substitution
 # ---------------------------------------------------------------------------
 
+def _union_table(pairs: Pairs) -> List[Tuple[str, str]]:
+    """Keys and values as strings: values are substituted into a string."""
+    return [(str(k), ruby_to_s(v)) for k, v in pairs]
+
+
 class UnionSubstitution(_ArrowUdfPlane):
     """``gsub(Regexp.union(keys), dict)``: single-pass replacement of every
     occurrence of every (literal-escaped) key, alternation in insertion
     order; miss ⇔ output == input (fetch_strategy/memory.rb:35-49).
     Values are coerced to strings (substitution into a string).
 
-    ``native``: the plane is an elementwise JVM ``replace`` chain (proved
-    equivalent at plan time, see ``_native_safe``); otherwise the Arrow UDF
-    plane."""
+    The Arrow UDF plane, for any dictionary. :func:`build_strategy` picks
+    :class:`UnionReplaceChain` instead when :func:`union_chain_safe`
+    proves the chain equivalent."""
 
     mode = "union"
 
-    def __init__(self, pairs: Pairs, prefer_native: bool = True):
+    def __init__(self, pairs: Pairs):
         self.value_type = T.StringType()
         self.values_are_json = False
-        self._table: List[Tuple[str, str]] = [
-            (str(k), ruby_to_s(v)) for k, v in pairs
-        ]
-        self.native = prefer_native and self._native_safe()
-        self._keyed: Optional[UnionSubstitution] = None
-        if self.native:
-            return
-        table = self._table
+        table = _union_table(pairs)
 
         def build():
             if not table:
@@ -694,98 +687,92 @@ class UnionSubstitution(_ArrowUdfPlane):
             self.value_type, build, substitute
         )
 
-    #: above this many keys the pairwise equivalence proof (O(n²·keylen))
-    #: is too expensive at plan time AND the nested replace-chain expression
-    #: tree would be unreasonable — always use the Arrow UDF plane
-    NATIVE_MAX_KEYS = 64
 
-    def _native_safe(self) -> bool:
-        """True when a sequential JVM ``replace`` chain is provably
-        equivalent to the single-pass union sub.
+#: above this many keys the pairwise equivalence proof (O(n²·keylen)) is
+#: too expensive at plan time AND the nested replace-chain expression tree
+#: would be unreasonable — always use the Arrow UDF plane
+NATIVE_MAX_KEYS = 64
 
-        Conditions (all rejections, conservative):
-          - keys must not overlap each other in any text (no substring
-            relations, no suffix-of-one == prefix-of-another) — otherwise
-            pass order vs alternation order diverge;
-          - no replacement VALUE may overlap any key in any way (key inside
-            value, value inside key, value-suffix == key-prefix, key-suffix
-            == value-prefix) — otherwise an inserted value can combine with
-            adjacent original text to form a later key that the sequential
-            chain replaces but the single-pass gsub (which never rescans
-            replaced output) does not. Example: dict [("ab","c"),("cd","z")]
-            on "abd" — chain gives "z", single-pass gives "cd".
 
-        Then each source position is consumed by at most one key, replaced
-        output can never re-trigger, and pass order cannot matter. The JVM
-        plane keeps this hot path inside whole-stage codegen — the Arrow UDF
-        plane is the fallback for interacting dictionaries (and for big
-        dictionaries, where the pairwise proof itself would hang plan time).
-        """
-        keys = [k for k, _ in self._table]
-        vals = [v for _, v in self._table]
-        if len(keys) > self.NATIVE_MAX_KEYS:
-            return False
-        if any(k == "" for k in keys):
-            return False
-        for i, a in enumerate(keys):
-            for j, b in enumerate(keys):
-                if i == j:
-                    continue
-                if a in b:
-                    return False
-                for cut in range(1, min(len(a), len(b))):
-                    if a[-cut:] == b[:cut]:
-                        return False
-        # an empty value DELETES the key, merging the adjacent original
-        # texts — a later key can match across that junction without ever
-        # overlapping the (empty) inserted value, so the boundary checks
-        # below are blind to it; only a single-key dictionary is safe
-        if any(v == "" for v in vals) and len(keys) > 1:
-            return False
-        for v in vals:
-            if not v:
+def union_chain_safe(pairs: Pairs) -> bool:
+    """True when a sequential JVM ``replace`` chain is provably
+    equivalent to the single-pass union sub.
+
+    Conditions (all rejections, conservative):
+      - keys must not overlap each other in any text (no substring
+        relations, no suffix-of-one == prefix-of-another) — otherwise
+        pass order vs alternation order diverge;
+      - no replacement VALUE may overlap any key in any way (key inside
+        value, value inside key, value-suffix == key-prefix, key-suffix
+        == value-prefix) — otherwise an inserted value can combine with
+        adjacent original text to form a later key that the sequential
+        chain replaces but the single-pass gsub (which never rescans
+        replaced output) does not. Example: dict [("ab","c"),("cd","z")]
+        on "abd" — chain gives "z", single-pass gives "cd".
+
+    Then each source position is consumed by at most one key, replaced
+    output can never re-trigger, and pass order cannot matter. The JVM
+    plane keeps this hot path inside whole-stage codegen — the Arrow UDF
+    plane is the fallback for interacting dictionaries (and for big
+    dictionaries, where the pairwise proof itself would hang plan time).
+    """
+    table = _union_table(pairs)
+    keys = [k for k, _ in table]
+    vals = [v for _, v in table]
+    if len(keys) > NATIVE_MAX_KEYS:
+        return False
+    if any(k == "" for k in keys):
+        return False
+    for i, a in enumerate(keys):
+        for j, b in enumerate(keys):
+            if i == j:
                 continue
-            for k in keys:
-                if k in v or v in k:
+            if a in b:
+                return False
+            for cut in range(1, min(len(a), len(b))):
+                if a[-cut:] == b[:cut]:
                     return False
-                for cut in range(1, min(len(k), len(v))):
-                    if v[-cut:] == k[:cut]:  # value tail + original = key
-                        return False
-                    if k[-cut:] == v[:cut]:  # original + value head = key
-                        return False
-        return True
+    # an empty value DELETES the key, merging the adjacent original
+    # texts — a later key can match across that junction without ever
+    # overlapping the (empty) inserted value, so the boundary checks
+    # below are blind to it; only a single-key dictionary is safe
+    if any(v == "" for v in vals) and len(keys) > 1:
+        return False
+    for v in vals:
+        if not v:
+            continue
+        for k in keys:
+            if k in v or v in k:
+                return False
+            for cut in range(1, min(len(k), len(v))):
+                if v[-cut:] == k[:cut]:  # value tail + original = key
+                    return False
+                if k[-cut:] == v[:cut]:  # original + value head = key
+                    return False
+    return True
 
-    def _chain(self, x: Column) -> Column:
+
+class UnionReplaceChain(LookupStrategy):
+    """The union substitution as an elementwise JVM ``replace`` chain, for
+    dictionaries :func:`union_chain_safe` accepts: whole-stage codegen, no
+    Python. The chain cannot report which key fired, so :meth:`keyed`
+    hands key tracking to the Arrow UDF plane."""
+
+    mode = "union"
+
+    def __init__(self, pairs: Pairs):
+        self.value_type = T.StringType()
+        self.values_are_json = False
+        self._table = _union_table(pairs)
+
+    def probe(self, x: Column) -> Probe:
         out = x
         for k, v in self._table:
             out = F.replace(out, F.lit(k), F.lit(v))
-        return out
-
-    def probe(self, x: Column) -> Probe:
-        if not self.native:
-            return super().probe(x)
-        out = self._chain(x)
-        # the chain cannot report which key fired: see keyed()
         return Probe(x.isNotNull() & (out != x), out, F.lit(None).cast("string"))
 
-    def probe_frame(self, df: DataFrame, key: Column) -> Tuple[DataFrame, Probe]:
-        if not self.native:
-            return super().probe_frame(df, key)
-        return LookupStrategy.probe_frame(self, df, key)
-
-    def probe_each(self, df: DataFrame, keys: Column):
-        if not self.native:
-            return super().probe_each(df, keys)
-        return LookupStrategy.probe_each(self, df, keys)
-
     def keyed(self) -> LookupStrategy:
-        """Key tracking takes the UDF plane: a cached substitute, so this
-        strategy keeps its native plane for every other call."""
-        if not self.native:
-            return self
-        if self._keyed is None:
-            self._keyed = UnionSubstitution(self._table, prefer_native=False)
-        return self._keyed
+        return UnionSubstitution(self._table)
 
 
 def build_strategy(
@@ -798,8 +785,9 @@ def build_strategy(
 
     exact: the bucketed map literal up to ``MAP_LITERAL_MAX_ENTRIES``
     entries, the broadcast hash join above that (given a session to build
-    the dictionary frame on). regex: the Arrow UDF plane. union: the native replace chain
-    when it is proved equivalent, else the Arrow UDF plane.
+    the dictionary frame on). regex: the Arrow UDF plane. union: the JVM
+    replace chain when :func:`union_chain_safe` proves it equivalent, else
+    the Arrow UDF plane.
     ``nested``: value typing for nested dictionary values ("json" legacy
     strings | "typed" array/VARIANT columns) — exact mode only.
     """
@@ -810,5 +798,7 @@ def build_strategy(
     if mode == "regex":
         return RegexFirstMatch(pairs)
     if mode == "union":
+        if union_chain_safe(pairs):
+            return UnionReplaceChain(pairs)
         return UnionSubstitution(pairs)
     raise ValueError(f"unknown lookup mode {mode!r}")

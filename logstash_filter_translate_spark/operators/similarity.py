@@ -11,9 +11,7 @@ fold (``zip_with`` + ``aggregate``): the lambdas are interpreted per
 element, but the interpreter's per-node loops JIT. Do not unroll the fold
 into per-element terms: a 64-term generated method exceeds HotSpot's JIT
 size limit and runs slower than the fold (BENCH/MICRO_DOT_r7.json).
-``brute_force_topk`` alone has a second scoring plane, ``plane="explode"``
-(posexplode both sides → codegen multiply → map-side partial-agg sums),
-which ``plane="auto"`` picks by corpus size.
+:func:`cosine` is the module's one scoring path.
 An IVF variant replaces the hyperplane bucketer with k-means centroids;
 the plumbing (bucket column → co-partitioned join) is identical.
 """
@@ -57,24 +55,6 @@ def cosine(a: Column, b: Column) -> Column:
     return F.try_divide(dot(a, b), norm(a) * norm(b))
 
 
-#: corpus-row crossover for plane="auto": below it the fold's lower
-#: fixed (planning + per-stage) overhead wins; above it the explode
-#: plane's codegen scoring wins (3.9x at 4M pairs, MICRO_DOT_r7; at a
-#: 2k-row corpus execution is a wash and the explode tree costs 1.27x
-#: in planning when rebuilt per run — MICRO_DOT_r8 + MICRO_TOPK_HL_r8)
-BRUTE_FORCE_AUTO_CROSSOVER = 100_000
-
-
-def _resolve_plane(plane: str, corpus_rows: int) -> str:
-    """plane='auto' → 'fold' below BRUTE_FORCE_AUTO_CROSSOVER corpus
-    rows, 'explode' at/above it. Pure so the choice is unit-testable."""
-    if plane != "auto":
-        return plane
-    return (
-        "explode" if corpus_rows >= BRUTE_FORCE_AUTO_CROSSOVER else "fold"
-    )
-
-
 def brute_force_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -82,117 +62,30 @@ def brute_force_topk(
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
     k: int = 5,
-    plane: str = "fold",
-    corpus_rows: Optional[int] = None,
 ) -> DataFrame:
     """Exact cosine top-k: broadcast the query set, score every (query,
-    corpus) pair locally, keep k per query via window row_number.
+    corpus) pair locally with :func:`cosine`, keep k per query via window
+    row_number.
 
     Returns (query_id, rank, vec_id) — IDs only, so verification is robust
     to last-ulp float differences across engines.
 
-    ``plane="explode"`` scores via posexplode → codegen multiply →
-    map-side partial-agg sums instead of the per-pair fold: measured 3.9x
-    at 4M pairs (BENCH/MICRO_DOT_r7.json) — the scale plane. It adds one
-    exchange of the scored rows (same magnitude the top-k window shuffles
-    anyway) and its summation order is partition-dependent (last-ulp
-    drift). The fold stays default: below ~10^5 corpus rows its lower
-    fixed overhead wins. Measured three ways at a 2k-row corpus (r8,
-    judge item #2, all subprocess-paired): execution-only the planes
-    are a WASH (0.96x, MICRO_DOT_r8 topk_full_query); rebuilt fresh
-    per rep like a headline run, the explode plane's larger operator
-    tree costs 1.27x in planning/analysis (MICRO_TOPK_HL_r8); scoring
-    at 4M pairs it is 3.9x FASTER (MICRO_DOT_r7). ``plane="auto"``
-    picks the crossover from ``corpus_rows`` when given, else from one
-    ``corpus.count()`` (cheap vs the scoring it sizes; pass the hint
-    at 100 TB to skip the extra scan).
-
-    Explode-plane semantics vs the fold (code-review r7):
-      - a NULL ELEMENT inside an embedding poisons the score to NULL on
-        both planes (the fold via NULL propagation; the explode plane
-        via an explicit any-null vote in the aggregate — F.sum alone
-        would silently skip the term and emit a finite, competitive
-        score the SQL oracle disagrees with);
-      - a LENGTH-MISMATCHED pair scores NULL on both planes (the fold
-        via zip_with's NULL padding; the explode plane via an explicit
-        width-equality gate — its inner position join would otherwise
-        silently truncate to the shared prefix and emit a finite, wrong
-        score);
-      - a NULL or EMPTY embedding produces no exploded rows, so it never
-        ranks on the explode plane; the fold carries it at score=NULL,
-        which ranks (NULLS LAST) only when a query has fewer than k
-        scoreable candidates — a degenerate corpus, documented rather
-        than papered over;
-      - the ID-only output is robust to the drift for ranking purposes:
-        a rank flip needs two DISTINCT vectors whose cosines agree to
-        ~k·ulp (bit-identical vectors sum bit-identically under any
-        order and tie-break on id), which random embeddings do not
-        produce; pair-equality to the fold is asserted at sf0.01+sf0.1.
+    Degenerate rows score NULL and rank NULLS LAST, exactly as the SQL
+    oracle does: a NULL vector, an empty vector, a width mismatch with the
+    query (``zip_with`` pads with NULL), a NULL element, or a zero norm.
+    They appear in the output only when a query has fewer than k
+    scoreable candidates.
     """
-    if plane == "auto":
-        plane = _resolve_plane(
-            plane,
-            corpus_rows if corpus_rows is not None else corpus.count(),
-        )
     q = queries.select(
         F.col(query_id_col), F.col(vec_col).alias("__qvec")
     )
-    if plane == "explode":
-        qe = q.select(
-            query_id_col, F.posexplode("__qvec").alias("__pos", "__qv")
-        ).withColumn("__qv", F.col("__qv").cast("double"))
-        ce = corpus.select(
-            id_col,
-            F.size(vec_col).alias("__csz"),
-            F.posexplode(vec_col).alias("__pos", "__cv"),
-        ).withColumn("__cv", F.col("__cv").cast("double"))
-        sums = (
-            ce.join(F.broadcast(qe), "__pos")
-            .groupBy(id_col, query_id_col)
-            .agg(
-                F.sum(F.col("__cv") * F.col("__qv")).alias("__d"),
-                F.sum(F.col("__cv") * F.col("__cv")).alias("__na"),
-                # NULL-element parity with the fold: F.sum SKIPS null
-                # products, so without this vote a partially-null vector
-                # would score finite and competitive (docstring)
-                F.max(
-                    F.col("__cv").isNull() | F.col("__qv").isNull()
-                ).alias("__anynull"),
-                F.max("__csz").alias("__csz"),
-            )
-        )
-        qn = q.select(
-            query_id_col,
-            norm(F.col("__qvec")).alias("__nb"),
-            F.size("__qvec").alias("__qsz"),
-        )
-        scored = (
-            sums.join(F.broadcast(qn), query_id_col)
-            .filter(F.col(id_col) != F.col(query_id_col))
-            .select(
-                query_id_col,
-                id_col,
-                F.when(
-                    # length-mismatch parity with the fold: the inner
-                    # __pos join silently truncates to the shared prefix
-                    # (a finite, WRONG score); zip_with pads with NULL →
-                    # NULL — require equal widths like the fold does
-                    ~F.col("__anynull") & (F.col("__csz") == F.col("__qsz")),
-                    # try_divide: zero-norm → NULL, same as cosine()
-                    F.try_divide(
-                        F.col("__d"), F.sqrt("__na") * F.col("__nb")
-                    ),
-                ).alias("score"),
-            )
-        )
-    else:
-        scored = corpus.join(
-            F.broadcast(q), F.col(id_col) != F.col(query_id_col)
-        ).select(
-            query_id_col,
-            id_col,
-            cosine(F.col(vec_col), F.col("__qvec")).alias("score"),
-        )
+    scored = corpus.join(
+        F.broadcast(q), F.col(id_col) != F.col(query_id_col)
+    ).select(
+        query_id_col,
+        id_col,
+        cosine(F.col(vec_col), F.col("__qvec")).alias("score"),
+    )
     w = Window.partitionBy(query_id_col).orderBy(F.desc("score"), F.asc(id_col))
     return (
         scored.withColumn("rank", F.row_number().over(w))

@@ -44,6 +44,7 @@ from .lookup import (
     RES_COL,
     TEMP_COLS,
     ExactBroadcastJoin,
+    ExactFrameJoin,
     LookupStrategy,
     Probe,
     build_strategy,
@@ -466,7 +467,7 @@ def translate_with_table(
     target: Optional[str] = None,
     fallback: Optional[str] = None,
     override: Optional[bool] = None,
-    broadcast: Optional[bool] = True,
+    broadcast: bool = True,
     route_col: str = "route",
     matched_key_col: Optional[str] = None,
 ) -> DataFrame:
@@ -479,17 +480,14 @@ def translate_with_table(
     a 100 TB deployment needs: the dictionary is itself a table (an
     Iceberg/parquet dimension or a derived frame), refreshed by rewriting
     the table. ``broadcast=True`` forces the broadcast-hash-join plane
-    (dictionary known to fit executor memory); ``broadcast=None`` defers
-    the strategy to Catalyst+AQE (a small dimension still broadcasts at
-    runtime); ``broadcast=False`` declares the dictionary beyond
-    broadcast — it fits no single machine, the case no driver-side Ruby
-    hash can represent at all — and pins the genuine shuffle (sort-merge)
-    join plane via a merge hint on the dict side (see
-    ``ExactFrameJoin``). Duplicate keys resolve deterministically
-    (lowest value) to preserve the one-value-per-key contract.
+    (dictionary known to fit executor memory); ``broadcast=False``
+    declares the dictionary beyond broadcast — it fits no single machine,
+    the case no driver-side Ruby hash can represent at all — and pins the
+    genuine shuffle (sort-merge) join plane via a merge hint on the dict
+    side (see ``ExactFrameJoin``). Duplicate keys resolve
+    deterministically (lowest value) to preserve the one-value-per-key
+    contract.
     """
-    from .lookup import ExactFrameJoin
-
     cfg = TranslateConfig(
         source=source,
         target=target,

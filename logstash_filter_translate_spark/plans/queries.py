@@ -835,20 +835,19 @@ def q_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_dedup_components_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The BIG-GRAPH plane of dedup_components (r7 judge item #1):
-    ``broadcast_members=False`` forces the singleton-re-entry anti-join
-    onto the un-hinted SHUFFLE left-anti path — the plane the size gate
-    selects automatically once the measured member count exceeds
-    ``BROADCAST_MEMBER_LIMIT``. At web-crawl near-dup rates (30-45% of
-    documents) the member set is corpus-scale, so at 100 TB this IS the
-    default plane; pinning its digest here keeps the beyond-broadcast
-    shape honest at test scale. Same oracle as dedup_components — the
+    """The BIG-GRAPH plane of dedup_components: ``broadcast_member_limit=0``
+    puts the singleton-re-entry anti-join on the merge-hinted SHUFFLE
+    left-anti path — the plane the size gate selects once the measured
+    member count exceeds ``BROADCAST_MEMBER_LIMIT``. At web-crawl
+    near-dup rates (30-45% of documents) the member set is corpus-scale,
+    so at 100 TB this IS the default plane; pinning its digest here keeps
+    the beyond-broadcast shape honest at test scale. Same oracle as dedup_components — the
     plane is a physical choice, not a semantic one (the candidate/verify
     pipeline is literally shared: _dedup_dup_pairs)."""
     docs = _load(spark, sf_dir, "documents")
     return connected_components(
         docs.select("doc_id"), _dedup_dup_pairs(docs), id_col="doc_id",
-        broadcast_members=False,
+        broadcast_member_limit=0,
     )
 
 
@@ -1440,50 +1439,16 @@ FROM documents
 # training-data ops: similarity search
 # ---------------------------------------------------------------------------
 
-#: sf_dirs whose embeddings table has been checked free of NULL/empty
-#: vectors (the one input shape where the explode plane's ranking
-#: diverges from the fold/SQL-oracle — see brute_force_topk docstring)
-_TOPK_GUARDED_DIRS: set = set()
-
-
 def q_similarity_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact brute-force cosine top-k — posexplode→codegen→partial-agg
-    scoring plane (round-6 judge item #3: 3.9x over the HOF fold at 4M
-    pairs, BENCH/MICRO_DOT_r7.json). At sf0.1's 2000-row corpus the
-    planes are an execution-time WASH but the explode tree costs 1.27x
-    in per-build planning (both subprocess-paired, r8 judge item #2:
-    MICRO_DOT_r8 topk_full_query + MICRO_TOPK_HL_r8 — r7's recorded
-    claim cited no paired evidence and its headline windows read ~2x
-    from planning cost plus host weather). The contract query keeps the
-    pinned explode plane: it is the 100 TB shape and the digest is
-    stable. plane='auto' (operators/similarity.py) picks the crossover
-    for callers. Output is ID-only, so the plane's partition-order float
-    sums cannot perturb the oracle — verified pair-equal to the fold
-    plane at sf0.01 and sf0.1."""
+    """Exact brute-force cosine top-k on the fold plane (broadcast query
+    set, nested-loop scoring, one window). Output is ID-only; NULL, empty
+    or width-mismatched vectors score NULL and rank NULLS LAST, as in the
+    oracle."""
     emb = _load(spark, sf_dir, "embeddings")
-    # oracle-divergence guard (code-review r7): a NULL/empty embedding
-    # never ranks on the explode plane but ranks NULLS-LAST in the SQL
-    # oracle when a query has <k scoreable candidates. Assert the loaded
-    # corpus has none, ONCE per sf_dir per process, so a future corpus
-    # with degenerate rows breaks loudly at selfcheck instead of
-    # silently hash-mismatching at a new scale factor.
-    if sf_dir not in _TOPK_GUARDED_DIRS:
-        degenerate = emb.filter(
-            F.col("embedding").isNull() | (F.size("embedding") <= 0)
-        ).limit(1)
-        if not degenerate.isEmpty():
-            raise ValueError(
-                "similarity_topk explode plane: embeddings table at "
-                f"{sf_dir} contains NULL/empty vectors, whose ranking "
-                "diverges from the SQL oracle (fold ranks them "
-                "NULLS-LAST under k-starvation; explode never ranks "
-                "them) — use plane='fold' or clean the corpus"
-            )
-        _TOPK_GUARDED_DIRS.add(sf_dir)
     queries = emb.filter(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    return brute_force_topk(emb, queries, k=5, plane="explode")
+    return brute_force_topk(emb, queries, k=5)
 
 
 SQL_SIMILARITY_TOPK = """
@@ -3036,7 +3001,7 @@ SELECT route, lang, COUNT(*) AS cnt FROM t GROUP BY route, lang
 #       boilerplate_shingles  — doc-frequency inventory of hot shingles
 #                               (how a deployment picks max_bucket), r7.
 #       dedup_components_shuffle — the big-graph components plane
-#                               (broadcast_members=False: shuffle
+#                               (broadcast_member_limit=0: shuffle
 #                               left-anti singleton re-entry), r8.
 #       incremental_keep      — dedup of a corpus increment against the
 #                               standing kept corpus (cross-LSH +

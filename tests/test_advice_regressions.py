@@ -3,7 +3,7 @@
 1. single-value mode on an EMPTY array source must not throw under Spark
    4.1 ANSI mode (element_at → try_element_at) and must coerce like the
    reference's ``[].first.to_s`` == "" (single_value_update.rb:5-13);
-2. UnionSubstitution's native replace-chain must reject dictionaries where
+2. the union replace-chain proof (``union_chain_safe``) must reject dictionaries where
    a replacement value can combine with adjacent original text to form a
    later key (boundary re-triggering) — and the UDF plane must then produce
    the reference's single-pass gsub answer;
@@ -25,6 +25,8 @@ from logstash_filter_translate_spark.config import TranslateConfig
 from logstash_filter_translate_spark.operators.lookup import (
     RegexFirstMatch,
     UnionSubstitution,
+    build_strategy,
+    union_chain_safe,
 )
 from logstash_filter_translate_spark.operators.translate import Translate
 from tests.conftest import exact_plane
@@ -59,7 +61,7 @@ def test_single_value_empty_array_source_no_ansi_throw(spark):
 def test_union_native_rejects_value_key_boundary_retrigger():
     # value "c" + adjacent original "d" forms key "cd": chain gives "z",
     # reference single-pass gsub gives "cd" — must NOT take the native plane
-    assert not UnionSubstitution([("ab", "c"), ("cd", "z")]).native
+    assert not union_chain_safe([("ab", "c"), ("cd", "z")])
 
 
 def test_union_boundary_retrigger_matches_reference_semantics(spark):
@@ -78,7 +80,7 @@ def test_union_boundary_retrigger_matches_reference_semantics(spark):
 
 def test_union_native_rejects_empty_value_deletion_merge(spark):
     # deleting "b" merges "a"+"c" into later key "ac" — chain-only artifact
-    assert not UnionSubstitution([("b", ""), ("ac", "z")]).native
+    assert not union_chain_safe([("b", ""), ("ac", "z")])
     df = spark.createDataFrame([("abc",)], "s string")
     op = Translate(
         TranslateConfig(
@@ -91,7 +93,7 @@ def test_union_native_rejects_empty_value_deletion_merge(spark):
 
 
 def test_union_native_single_key_empty_value_still_native():
-    assert UnionSubstitution([("b", "")]).native
+    assert union_chain_safe([("b", "")])
 
 
 # -- 3. regex prefilter with groups/backreferences ------------------------------
@@ -121,9 +123,10 @@ def test_regex_backreference_pattern_not_false_missed(spark):
 def test_union_native_proof_capped_for_big_dictionaries():
     pairs = [(f"key{i:06d}", f"val{i}") for i in range(100_000)]
     t0 = time.time()
-    strat = UnionSubstitution(pairs)
+    strat = build_strategy("union", pairs)
     assert time.time() - t0 < 5.0  # was O(n²·keylen) — effectively a hang
-    assert not strat.native  # big dicts take the vectorized UDF plane
+    # big dicts take the vectorized UDF plane
+    assert isinstance(strat, UnionSubstitution)
 
 
 # -- 5. iterate_key natural-key explode plane ------------------------------------

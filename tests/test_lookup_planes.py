@@ -7,8 +7,10 @@ from logstash_filter_translate_spark.operators import lookup
 from logstash_filter_translate_spark.operators.lookup import (
     ExactBroadcastJoin,
     ExactMapLiteral,
+    UnionReplaceChain,
     UnionSubstitution,
     build_strategy,
+    union_chain_safe,
 )
 from logstash_filter_translate_spark.operators.translate import Translate
 from tests.conftest import exact_plane
@@ -26,19 +28,19 @@ def test_exact_selector_threshold(spark):
 
 
 def test_union_native_selector_threshold():
-    n = UnionSubstitution.NATIVE_MAX_KEYS
+    n = lookup.NATIVE_MAX_KEYS
     # fixed-width keys from a digit alphabet, values from a letter one: no
     # key overlaps another, no value touches a key
     pairs = [(f"<{i:03d}>", f"V{chr(65 + i % 26)}") for i in range(n + 1)]
-    assert UnionSubstitution(pairs[:n]).native
-    assert not UnionSubstitution(pairs).native
+    assert isinstance(build_strategy("union", pairs[:n]), UnionReplaceChain)
+    assert isinstance(build_strategy("union", pairs), UnionSubstitution)
 
 
 def test_union_native_detector():
-    assert UnionSubstitution([("200", "OK"), ("500", "SE")]).native
-    assert not UnionSubstitution([("ab", "X"), ("bc", "Y")]).native  # overlap
-    assert not UnionSubstitution([("a", "X"), ("ab", "Y")]).native  # substring
-    assert not UnionSubstitution([("200", "x500y"), ("500", "z")]).native
+    assert union_chain_safe([("200", "OK"), ("500", "SE")])
+    assert not union_chain_safe([("ab", "X"), ("bc", "Y")])  # overlap
+    assert not union_chain_safe([("a", "X"), ("ab", "Y")])  # substring
+    assert not union_chain_safe([("200", "x500y"), ("500", "z")])
 
 
 def test_union_native_equals_udf_plane(spark):
@@ -51,12 +53,12 @@ def test_union_native_equals_udf_plane(spark):
         TranslateConfig(source="s", target="t", dictionary=pairs, exact=False),
         spark=spark,
     )
-    assert nat.strategy.native
+    assert isinstance(nat.strategy, UnionReplaceChain)
     udf = Translate(
         TranslateConfig(source="s", target="t", dictionary=pairs, exact=False),
         spark=spark,
     )
-    udf.strategy = UnionSubstitution(pairs, prefer_native=False)
+    udf.strategy = UnionSubstitution(pairs)
     key = lambda r: str(r)
     assert sorted(map(tuple, nat.apply(df).collect()), key=key) == sorted(
         map(tuple, udf.apply(df).collect()), key=key
@@ -77,7 +79,8 @@ def test_union_interacting_dict_uses_udf_single_pass(spark):
         ),
         spark=spark,
     )
-    assert not op.strategy.native  # detector must refuse the native plane
+    # detector must refuse the native plane
+    assert isinstance(op.strategy, UnionSubstitution)
     assert op.apply(df).collect()[0]["t"] == "Xc"
 
 
@@ -147,8 +150,7 @@ def test_table_dictionary_override_gate(spark):
 
 
 def test_table_dictionary_shuffle_plane_matches_broadcast_plane(spark):
-    """broadcast=False (round-6 judge item #4): the dictionary is declared
-    beyond broadcast — the plan must be a genuine shuffle join with NO
+    """broadcast=False: the dictionary is declared beyond broadcast — the plan must be a genuine shuffle join with NO
     BroadcastExchange anywhere (surviving AQE re-planning), and the
     results must equal the broadcast plane's exactly."""
     from logstash_filter_translate_spark import translate_with_table
@@ -170,23 +172,6 @@ def test_table_dictionary_shuffle_plane_matches_broadcast_plane(spark):
         broadcast=True,
     )
     assert rows == sorted(map(tuple, broadcasted.collect()))
-
-
-def test_table_dictionary_deferred_plane_broadcasts_small_dim(spark):
-    """broadcast=None defers to Catalyst+AQE: a small dimension still
-    broadcasts at runtime (no pinned strategy either way)."""
-    from logstash_filter_translate_spark import translate_with_table
-
-    df = spark.range(1000).selectExpr("CAST(id AS STRING) AS k")
-    dict_df = spark.createDataFrame(
-        [(str(i), f"v{i}") for i in range(100)], "key string, val string"
-    )
-    out = translate_with_table(
-        df, "k", dict_df, "key", "val", target="t", broadcast=None
-    )
-    out.collect()
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan
 
 
 def test_table_dictionary_probe_side_not_shuffled(spark):

@@ -129,19 +129,17 @@ def test_pipeline_parse_enrich_is_single_stage_no_python(spark):
 
 
 def test_jaccard_verify_prefilters_shingle_explode(spark, testdata_dir):
-    # round-2 judge finding #2: the Jaccard verify stage must explode
-    # shingles only for documents that appear in a candidate pair — the
-    # corpus is semi-joined against the pair-id set BEFORE the explode,
-    # so the verify shuffle is proportional to candidates, not the corpus.
-    # (jaccard_adjacent opts out: its candidate set IS the corpus, making
-    # the reduction pure overhead — the operator default stays on.)
-    # Since r9 the candidate-shingle frame is localCheckpoint'ed (it is
-    # referenced three times; the checkpoint hides the semi-join behind a
-    # Scan ExistingRDD in the final plan), so the guard asserts on the
-    # UNMATERIALIZED operator build (materialize=False) — the same
-    # logical shape whose checkpointed form the digests pin.
+    # the Jaccard verify stage must explode shingles only for documents
+    # that appear in a candidate pair — the corpus is semi-joined against
+    # the pair-id set BEFORE the explode, so the verify shuffle is
+    # proportional to candidates, not the corpus. (jaccard_adjacent opts
+    # out: its candidate set IS the corpus, making the reduction pure
+    # overhead — the operator default stays on.) ngram_jaccard_pairs
+    # checkpoints the candidate-shingle frame, which hides the semi-join
+    # behind a Scan ExistingRDD in its final plan, so the guard plans the
+    # helper that builds that frame.
     from logstash_filter_translate_spark.operators.dedup import (
-        ngram_jaccard_pairs,
+        _candidate_shingles,
     )
 
     docs = spark.read.parquet(f"{testdata_dir}/documents.parquet")
@@ -150,11 +148,9 @@ def test_jaccard_verify_prefilters_shingle_explode(spark, testdata_dir):
         (F.col("doc_id") + 1).alias("id_b"),
     ).limit(10)
     p = plan_of(
-        ngram_jaccard_pairs(
-            docs, "text", "doc_id", pairs, materialize=False
-        )
+        _candidate_shingles(docs, "text", "doc_id", pairs, 3, prefilter=True)
     )
-    assert "LeftSemi" in p
+    assert "LeftSemi" in p and "Generate" in p
 
 
 def test_all_contract_queries_have_no_scale_killers(spark, testdata_dir):

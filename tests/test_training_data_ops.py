@@ -163,30 +163,6 @@ def test_brute_force_topk_finds_self_similar_vectors(spark):
     top = brute_force_topk(emb, queries, k=3).collect()
     assert top[0]["rank"] == 1 and top[0]["vec_id"] == 1
 
-    # plane="auto" (r7 judge item #2): fold below the crossover, explode
-    # at/above — unit-resolved, and the physical plan agrees (the explode
-    # plane scores via posexplode → Generate; the fold has none)
-    from logstash_filter_translate_spark.operators.similarity import (
-        BRUTE_FORCE_AUTO_CROSSOVER,
-        _resolve_plane,
-    )
-
-    assert _resolve_plane("auto", BRUTE_FORCE_AUTO_CROSSOVER - 1) == "fold"
-    assert _resolve_plane("auto", BRUTE_FORCE_AUTO_CROSSOVER) == "explode"
-    assert _resolve_plane("fold", 10**9) == "fold"  # explicit wins
-    auto_small = brute_force_topk(emb, queries, k=3, plane="auto")
-    assert "Generate" not in auto_small._jdf.queryExecution().executedPlan().toString()
-    auto_big = brute_force_topk(
-        emb, queries, k=3, plane="auto", corpus_rows=10**9
-    )
-    assert "Generate" in auto_big._jdf.queryExecution().executedPlan().toString()
-    # both auto planes agree with the default fold's answer
-    fold_rows = [(r["query_id"], r["rank"], r["vec_id"]) for r in top]
-    for df in (auto_small, auto_big):
-        assert [
-            (r["query_id"], r["rank"], r["vec_id"]) for r in df.collect()
-        ] == fold_rows
-
     planes = [[(((i * 37 + p * 17) % 13) - 6) / 6.0 for i in range(16)] for p in range(2)]
     approx = lsh_topk(emb, queries, planes, k=3).collect()
     # the near-identical vector lands in the same bucket → still rank 1
@@ -342,9 +318,8 @@ def test_connected_components_no_edges_all_singletons(spark):
 
 
 def test_connected_components_broadcast_gate(spark):
-    """r7 judge item #1: the singleton-re-entry anti-join broadcast hint
-    is SIZE-GATED on the measured member count — past the gate (or when
-    the caller forces broadcast_members=False) the plan must be a
+    """The singleton-re-entry anti-join broadcast hint is SIZE-GATED on
+    the measured member count — past the gate the plan must be a
     merge-hinted shuffle left-anti with NO BroadcastExchange anywhere,
     surviving AQE re-planning, and both planes must label identically."""
     from logstash_filter_translate_spark.operators.dedup import (
@@ -362,19 +337,14 @@ def test_connected_components_broadcast_gate(spark):
     plan_h = hinted._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastExchange" in plan_h  # under the gate: hinted
 
-    for kwargs in (
-        {"broadcast_member_limit": 0},   # measured count exceeds the gate
-        {"broadcast_members": False},    # caller forces the 100 TB plane
-    ):
-        unhinted = connected_components(
-            nodes, edges, id_col="id", **kwargs
-        )
-        assert {
-            r["id"]: r["component"] for r in unhinted.collect()
-        } == expect
-        plan_u = unhinted._jdf.queryExecution().executedPlan().toString()
-        assert "BroadcastExchange" not in plan_u, kwargs
-        assert "SortMergeJoin" in plan_u and "LeftAnti" in plan_u, kwargs
+    # the measured member count exceeds the gate
+    unhinted = connected_components(
+        nodes, edges, id_col="id", broadcast_member_limit=0
+    )
+    assert {r["id"]: r["component"] for r in unhinted.collect()} == expect
+    plan_u = unhinted._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastExchange" not in plan_u
+    assert "SortMergeJoin" in plan_u and "LeftAnti" in plan_u
 
 
 def test_incremental_near_dup_keep_cross_and_intra(spark):
@@ -433,17 +403,17 @@ def test_incremental_near_dup_keep_cross_and_intra(spark):
     assert kept2 == kept
 
 
-def test_connected_components_adversarial_chain_pointer_jump(spark):
-    """r7 judge item #5: a 200-node chain (diameter 199) is the
-    adversarial shape for min-label propagation — the min moves ONE hop
-    per round, so the plain plane cannot fixpoint inside a small bound
-    (RuntimeError path asserted), while pointer_jump=True shortcuts
-    L(v) <- L(L(v)) each round and converges in O(log diameter): 8
-    rounds measured, vs 200 for plain, a 5.09x wall-clock win at this
-    diameter (tools/stress_components.py, BENCH/STRESS_CC_r8.json,
-    one-subprocess-per-plane protocol; recorded in docs/ROUND8.md)."""
-    import pytest
-
+def test_connected_components_adversarial_chain_escalates_to_jumping(
+    spark, monkeypatch
+):
+    """A 200-node chain (diameter 199) is the adversarial shape for
+    min-label propagation — the min moves ONE hop per round, so plain
+    propagation cannot fixpoint inside a small bound (RuntimeError path
+    asserted), while pointer jumping shortcuts L(v) <- L(L(v)) each round
+    and converges in O(log diameter): 8 rounds measured, vs 200 for
+    plain, a 5.09x wall-clock win at this diameter
+    (BENCH/STRESS_CC_r8.json). The default escalation round lets the
+    deep chain self-remedy inside the default budget."""
     from logstash_filter_translate_spark.operators import dedup
     from logstash_filter_translate_spark.operators.dedup import (
         connected_components,
@@ -454,25 +424,28 @@ def test_connected_components_adversarial_chain_pointer_jump(spark):
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(n - 1)], "id_a long, id_b long"
     )
-    # plain propagation (pointer_jump=False forces it): diameter 199 >>
-    # 10 rounds -> must raise, never return a silently-unmerged labeling
-    with pytest.raises(RuntimeError, match="no fixpoint"):
-        connected_components(
-            nodes, edges, id_col="doc_id", max_iterations=10,
-            pointer_jump=False,
+    with monkeypatch.context() as mp:
+        # escalation never reached: plain propagation, diameter 199 >>
+        # 10 rounds -> must raise, never return a silently-unmerged
+        # labeling
+        mp.setattr(dedup, "POINTER_JUMP_ESCALATION_ROUND", 10)
+        with pytest.raises(RuntimeError, match="no fixpoint"):
+            connected_components(
+                nodes, edges, id_col="doc_id", max_iterations=10,
+            )
+    with monkeypatch.context() as mp:
+        # jumping from round 2: converges within ~log2(199)+1 rounds and
+        # labels the whole chain with the min id
+        mp.setattr(dedup, "POINTER_JUMP_ESCALATION_ROUND", 1)
+        out = connected_components(
+            nodes, edges, id_col="doc_id", max_iterations=15,
         )
-    # pointer_jump=True: converges within ~log2(199)+1 rounds and labels
-    # the whole chain with the min id
-    out = connected_components(
-        nodes, edges, id_col="doc_id", pointer_jump=True,
-        max_iterations=15,
-    )
-    assert out.filter("component = 0").count() == n
-    assert dedup.LAST_CC_ITERATIONS <= 10
-    # the DEFAULT ("auto") self-remedies: plain through the escalation
-    # round (shallow graphs never pay the jump join), then shortcutting
-    # — the deep chain converges inside the default budget with no
-    # caller knowledge of the graph's diameter
+        assert out.filter("component = 0").count() == n
+        assert dedup.LAST_CC_ITERATIONS <= 10
+    # the default: plain through the escalation round (shallow graphs
+    # never pay the jump join), then shortcutting — the deep chain
+    # converges inside the default budget with no caller knowledge of
+    # the graph's diameter
     out_auto = connected_components(nodes, edges, id_col="doc_id")
     assert out_auto.filter("component = 0").count() == n
     assert (
@@ -628,11 +601,10 @@ def test_lsh_cross_overlapping_sides_never_self_pair(spark, docs):
     assert not any(a == b for a, b in got)
 
 
-def test_brute_force_topk_explode_null_element_parity_with_fold(spark):
-    """code-review r7: F.sum skips NULL products, so the explode plane
-    scored a partially-NULL vector finite and competitive while the fold
-    (and the SQL oracle) poison it to NULL. With the any-null vote both
-    planes exclude it from the ranking."""
+def test_brute_force_topk_null_element_never_ranks(spark):
+    """A NULL element poisons the fold's dot to NULL, so the vector
+    scores NULL and ranks NULLS LAST, as in the SQL oracle — never
+    finite and competitive."""
     rows = [
         (0, [1.0, 0.0, 0.0, 0.0]),
         (1, [0.99, 0.1, 0.0, 0.0]),
@@ -643,22 +615,17 @@ def test_brute_force_topk_explode_null_element_parity_with_fold(spark):
     queries = emb.filter("vec_id = 0").select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    fold = [
+    got = [
         (r["rank"], r["vec_id"])
-        for r in brute_force_topk(emb, queries, k=2, plane="fold").collect()
+        for r in brute_force_topk(emb, queries, k=2).collect()
     ]
-    expl = [
-        (r["rank"], r["vec_id"])
-        for r in brute_force_topk(emb, queries, k=2, plane="explode").collect()
-    ]
-    assert fold == expl == [(1, 1), (2, 3)]
+    assert got == [(1, 1), (2, 3)]
 
 
 def test_zero_norm_vector_scores_null_not_divide_by_zero(spark):
-    """code-review r7, verified on this ANSI session: one all-zero
-    embedding (empty-doc vector, padding row) made every cosine path
-    throw DIVIDE_BY_ZERO and kill the query. try_divide degrades it to
-    an unranked NULL score on both planes - which is also DuckDB's x/0
+    """One all-zero embedding (empty-doc vector, padding row) must not
+    throw DIVIDE_BY_ZERO under ANSI mode and kill the query. try_divide
+    degrades it to an unranked NULL score - which is also DuckDB's x/0
     semantics, so the oracle agrees on degenerate data."""
     from logstash_filter_translate_spark.operators.dedup import (
         embedding_cosine_pairs,
@@ -670,12 +637,11 @@ def test_zero_norm_vector_scores_null_not_divide_by_zero(spark):
     queries = emb.filter("vec_id = 0").select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    for plane in ("fold", "explode"):
-        got = [
-            (r["rank"], r["vec_id"])
-            for r in brute_force_topk(emb, queries, k=2, plane=plane).collect()
-        ]
-        assert got == [(1, 1), (2, 3)], (plane, got)  # zero-norm never ranks
+    got = [
+        (r["rank"], r["vec_id"])
+        for r in brute_force_topk(emb, queries, k=2).collect()
+    ]
+    assert got == [(1, 1), (2, 3)]  # zero-norm never ranks
 
     planes = [[1.0, 0.0], [0.0, 1.0]]
     pairs = {
@@ -685,27 +651,33 @@ def test_zero_norm_vector_scores_null_not_divide_by_zero(spark):
     assert not any(2 in p for p in pairs)  # NULL cos -> filtered, no throw
 
 
-def test_brute_force_topk_explode_length_mismatch_parity(spark):
-    """code-review r7: the explode plane's inner position join silently
-    truncated a length-mismatched vector to the shared prefix - a
-    finite, wrong, competitive score where the fold (zip_with NULL
-    padding) yields NULL. Both planes must exclude it."""
+def test_brute_force_topk_width_mismatch_never_ranks(spark):
+    """A vector wider than the query, an empty vector and a NULL vector
+    score NULL (zip_with pads the shorter side with NULL), never the
+    finite, perfect score a shared prefix would give; they rank NULLS
+    LAST, by id, only when fewer than k candidates score."""
     rows = [
         (0, [1.0, 0.0]),
         (1, [0.9, 0.1]),
         (2, [1.0, 0.0, 0.0]),   # longer: prefix would score a perfect 1.0
         (3, [-1.0, 0.0]),
+        (4, []),
+        (5, None),
     ]
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     queries = emb.filter("vec_id = 0").select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    for plane in ("fold", "explode"):
-        got = [
-            (r["rank"], r["vec_id"])
-            for r in brute_force_topk(emb, queries, k=2, plane=plane).collect()
-        ]
-        assert got == [(1, 1), (2, 3)], (plane, got)
+    got = [
+        (r["rank"], r["vec_id"])
+        for r in brute_force_topk(emb, queries, k=2).collect()
+    ]
+    assert got == [(1, 1), (2, 3)]
+    got = [
+        (r["rank"], r["vec_id"])
+        for r in brute_force_topk(emb, queries, k=5).collect()
+    ]
+    assert got == [(1, 1), (2, 3), (3, 2), (4, 4), (5, 5)]
 
 
 def test_remove_frequent_segments_word_windows(spark):

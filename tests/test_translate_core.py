@@ -453,13 +453,13 @@ def test_matched_key_is_null_on_skipped_rows(spark):
 
 
 def test_key_tracking_does_not_degrade_later_applies(spark):
-    """code-review r7: apply(matched_key_col=...) on a native union
-    strategy must not mutate self.strategy - a later plain apply() on
-    the same instance keeps the codegen-native plane (and both calls
-    return reference-correct values)."""
+    """apply(matched_key_col=...) on a native union strategy must not
+    mutate self.strategy - a later plain apply() on the same instance
+    keeps the codegen-native plane (and both calls return
+    reference-correct values)."""
     from logstash_filter_translate_spark.config import TranslateConfig
     from logstash_filter_translate_spark.operators.lookup import (
-        UnionSubstitution,
+        UnionReplaceChain,
     )
     from logstash_filter_translate_spark.operators.translate import Translate
 
@@ -468,11 +468,11 @@ def test_key_tracking_does_not_degrade_later_applies(spark):
         dictionary={"foo": "X", "bar": "Y"},
     )
     op = Translate(cfg)
-    assert isinstance(op.strategy, UnionSubstitution) and op.strategy.native
+    assert isinstance(op.strategy, UnionReplaceChain)
     df = spark.createDataFrame([("a foo b",), ("none here",)], "msg string")
 
     tracked = op.apply(df, matched_key_col="mk").collect()
-    assert isinstance(op.strategy, UnionSubstitution) and op.strategy.native
+    assert isinstance(op.strategy, UnionReplaceChain)
     plain = op.apply(df).collect()
     assert {r["msg"] for r in plain} == {"a X b", "none here"}
     assert {(r["msg"], r["mk"]) for r in tracked} == {

@@ -13,6 +13,7 @@ from logstash_filter_translate_spark.operators.lookup import (
     RES_COL,
     RegexFirstMatch,
     UnionSubstitution,
+    build_strategy,
 )
 from logstash_filter_translate_spark.operators.translate import Translate
 
@@ -106,8 +107,8 @@ def test_iterate_on_regex_dedup_equals_per_row_lookup(spark):
 def test_union_udf_plane_dedup_equals_per_row_lookup(spark):
     # "bc" and "ab" overlap, so the union takes the UDF plane
     pairs = [("bc", "Y"), ("ab", "X"), ("zz", "W")]
-    strat = UnionSubstitution(pairs)
-    assert not strat.native
+    strat = build_strategy("union", pairs)
+    assert isinstance(strat, UnionSubstitution)
     pat = re.compile("|".join(re.escape(k) for k, _ in pairs))
     mapping = dict(pairs)
 
