@@ -34,11 +34,11 @@ def html_str(html_bin: Column) -> Column:
     ``F.decode(..., 'UTF-8')``: decode round-trips through a java.lang
     String (bytes → UTF-16 String → UTF8String = 3 copies + 2x inflation),
     which at corpus scale is pure memory-bandwidth burn — measured ~15%
-    slower on the 40M-row parse path at every parallelism level (r5 A/B).
+    slower on the 40M-row parse path at every parallelism level (A/B).
     Spark's internal string type IS UTF-8 bytes, so for UTF-8 input the
     two are value-identical (asserted over the corpus generator).
 
-    PRECONDITION (r5 advice): the input must be VALID UTF-8. ``cast``
+    PRECONDITION: the input must be VALID UTF-8. ``cast``
     wraps raw bytes while ``decode`` substitutes U+FFFD for malformed
     sequences, so on non-UTF-8 input the two silently diverge. The
     generated corpus guarantees validity by construction (html is
@@ -96,11 +96,6 @@ def extract_text_arrow(html: pd.Series) -> pd.Series:
 
 def extract_status(html_bin: Column) -> Column:
     x = F.regexp_extract(html_str(html_bin), _STATUS_RE, 1)
-    return F.when(x != "", x)
-
-
-def extract_lang_header(html_bin: Column) -> Column:
-    x = F.regexp_extract(html_str(html_bin), _LANG_RE, 1)
     return F.when(x != "", x)
 
 

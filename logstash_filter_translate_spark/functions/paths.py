@@ -29,15 +29,10 @@ def parse_path(name: str) -> List[str]:
     return [name]
 
 
-def is_nested(name: str) -> bool:
-    return len(parse_path(name)) > 1
-
-
 def _quote_top(seg: str) -> str:
     """Backtick-quote a top-level name containing dots (or backticks):
     a bracketed ``[a.b]`` segment is ONE literal field in Logstash, but a
-    bare ``F.col("a.b")`` would parse the dot as struct nesting
-    (code-review r7)."""
+    bare ``F.col("a.b")`` would parse the dot as struct nesting."""
     if "." in seg or "`" in seg:
         return "`" + seg.replace("`", "``") + "`"
     return seg

@@ -161,28 +161,11 @@ def _time_ref_column(pattern: str, ts_col: str, literal: str) -> Column:
 
 def _field_to_column(name: str) -> Column:
     """Field reference → read column, via the canonical path machinery
-    (functions/paths.py) instead of a local dotted-string rewrite: the
-    old ``F.col("a.b")`` form broke array-index refs (``[tags][0]``
-    became field '0' of an array), dotted bracketed segments (``[a.b]``
-    is ONE literal field in Logstash), and dotted bare names
-    (code-review r7)."""
+    (functions/paths.py), never a dotted string: ``F.col("a.b")`` breaks
+    array-index refs (``[tags][0]`` would become field '0' of an array),
+    dotted bracketed segments (``[a.b]`` is ONE literal field in
+    Logstash), and dotted bare names."""
     return path_col(parse_path(name))
-
-
-def sprintf_fields(
-    template: str, ts_col: str = DEFAULT_TS_COL
-) -> List[str]:
-    """Top-level column names a ``%{field}`` template references (nested
-    ``[a][b]`` refs report the top-level ``a``; ``%{+FORMAT}`` time refs
-    report the designated timestamp column). Used to carry exactly the
-    referenced columns through explode planes."""
-    out: List[str] = []
-    for m in _FIELD_REF.finditer(template):
-        name = m.group(1)
-        top = ts_col if name.startswith("+") else parse_path(name)[0]
-        if top and top not in out:
-            out.append(top)
-    return out
 
 
 def compile_sprintf(
@@ -198,8 +181,8 @@ def compile_sprintf(
     missing fields un-spliced) instead of an analysis error. ``schema`` —
     when given, the FULL nested path is checked (``%{[a][missing]}`` with
     column ``a`` present degrades to the literal instead of an
-    AnalysisException; the old top-level-only check could not see inside
-    structs — code-review r7). ``%{+FORMAT}`` time references format
+    AnalysisException; a top-level-only check cannot see inside
+    structs). ``%{+FORMAT}`` time references format
     ``ts_col`` (the frame's event-time column); they too degrade to the
     literal when that column is absent.
     """

@@ -55,8 +55,8 @@ def tokens(text: Column) -> Column:
     """Whitespace tokens; empty string → empty array (matches DuckDB
     ``string_split(text,' ')`` filtered of empties).
 
-    ``array_remove(split, '')`` — NOT ``filter(split, t -> t != '')``
-    (r9): the two are element-for-element identical here (split emits no
+    ``array_remove(split, '')`` — NOT ``filter(split, t -> t != '')``:
+    the two are element-for-element identical here (split emits no
     NULLs, and both drop exactly the '' elements, preserving order), but
     ``filter``'s lambda is an interpreted Catalyst HOF evaluated per row
     while ArrayRemove code-generates — and this array feeds every
@@ -68,7 +68,7 @@ def tokens(text: Column) -> Column:
 def token_count(text: Column) -> Column:
     """Whitespace-token count — fully codegen via :func:`tokens`.
 
-    NOT ``regexp_count(text, '[^ ]+')`` (r9 negative result): that
+    NOT ``regexp_count(text, '[^ ]+')`` (a measured negative result): that
     rewrites to ``size(regexp_extract_all(...))``, which MATERIALIZES
     every token match as a string array per evaluation — measured 1.3×
     the split+array_remove form in the filter-pushdown context where a
@@ -98,65 +98,15 @@ def word_shingles(toks: Column, n: int = 3) -> Column:
     )
 
 
-def minhash_signature(shingles: Column, num_hashes: int = 8) -> List[Column]:
-    """MinHash signature columns over a shingle array; empty array → NULLs."""
-    h = F.transform(shingles, lambda s: hash32(s))
-    sigs = []
-    for i in range(num_hashes):
-        a, b = MINHASH_COEF[i % len(MINHASH_COEF)]
-        sigs.append(
-            F.array_min(
-                F.transform(h, lambda x: (F.lit(a) * x + F.lit(b)) % MINHASH_P)
-            ).alias(f"m{i}")
-        )
-    return sigs
-
-
 # ---------------------------------------------------------------------------
 # quality scoring
 # ---------------------------------------------------------------------------
-
-#: a real word tuple (code-review r7: a trailing comma had made this a
-#: 1-tuple holding one 40-char space-joined "word" — any consumer
-#: iterating it as a stopword list silently matched nothing)
-DEFAULT_STOPWORDS = tuple(
-    "the a an and or of to in is are was for on with as by at it this that"
-    .split()
-)
-
-
-def quality_metrics(text: Column) -> List[Column]:
-    """Length / punctuation / token statistics used for quality filtering.
-    All expressible in ANSI SQL (length + regexp_replace deltas).
-
-    r9: token count and summed token length are pure codegen — the count
-    is one regex pass (``token_count``) and the length sum uses the
-    identity Σ|token| = |text| − #spaces (tokens are the non-space runs,
-    so ``length(translate(text, ' ', ''))`` IS the sum the old
-    interpreted ``aggregate`` lambda folded token by token). Same
-    integers, no HOF evaluation, no token array built.
-    """
-    n_chars = F.length(text).alias("n_chars_q")
-    n_tok = token_count(text)
-    n_tokens = n_tok.alias("n_tokens")
-    punct = (
-        F.length(text) - F.length(F.regexp_replace(text, r"[.,;:!?]", ""))
-    ).alias("n_punct")
-    digits = (
-        F.length(text) - F.length(F.regexp_replace(text, r"[0-9]", ""))
-    ).alias("n_digits")
-    tok_len_sum = F.length(F.translate(text, " ", "")).cast("long")
-    mean_tok_len = F.when(
-        n_tok > 0, tok_len_sum / n_tok
-    ).alias("mean_token_len")
-    return [n_chars, n_tokens, punct, digits, mean_tok_len]
-
 
 def quality_score(text: Column) -> Column:
     """0..3 heuristic score: long enough, not digit-heavy, sane token length.
     Deterministic integer so oracles compare exactly.
 
-    DELIBERATELY interpreted-HOF (r9 negative result, measured): this
+    DELIBERATELY interpreted-HOF (a measured negative result): this
     score's heavy consumer (corpus_filter) FILTERS on it, and predicate
     pushdown re-states the whole expression in the scan-side FilterExec
     — where codegen evaluates each of the token-array references anew
@@ -167,7 +117,7 @@ def quality_score(text: Column) -> Column:
     codegen array_remove 2.3 s vs regexp_count 3.4 s (regexp_count
     rewrites to size(regexp_extract_all(...)) — it MATERIALIZES every
     token, three times, in the filter). The codegen forms win only in
-    pure-projection contexts, where quality_metrics uses them."""
+    pure-projection contexts (``token_count``)."""
     toks = F.filter(F.split(text, " "), lambda t: t != "")
     n_tok = F.size(toks)
     digits = F.length(text) - F.length(F.regexp_replace(text, r"[0-9]", ""))
@@ -242,7 +192,7 @@ def fingerprint(text: Column) -> Column:
 #: profile count above which langid_scores falls back from the pivoted
 #: single-aggregate plane (one conditional sum column per language) to
 #: the broadcast-join plane — a wide unrolled projection over many
-#: languages is the r7 JIT-method-limit negative result's territory,
+#: languages hits the JIT's method-size limit (a measured negative result),
 #: while marker-profile lists are small by construction.
 LANGID_PIVOT_MAX_LANGS = 16
 
@@ -260,7 +210,7 @@ def langid_scores(
     re-entry join that produces them — the shape for composite consumers
     like corpus_filter whose downstream filter discards 'und' anyway).
 
-    Plane (r9, ≤ ``LANGID_PIVOT_MAX_LANGS`` languages): explode tokens →
+    Plane (≤ ``LANGID_PIVOT_MAX_LANGS`` languages): explode tokens →
     codegen ``isin`` prefilter on the union marker set → ONE partial
     aggregate keyed on the doc id with a conditional hit sum per
     language → pure-expression argmax (``array_min`` over
@@ -275,7 +225,7 @@ def langid_scores(
     sums are independent — the join plane's fan-out semantics, which a
     first-match CASE lookup would break). Beyond the pivot bound the
     broadcast-join + min_by plane remains (wide unrolled projections
-    are the r7 JIT negative result).
+    exceed the JIT's method-size limit).
     """
     tok = df.select(id_col, F.explode(tokens(F.col(text_col))).alias("w"))
     if len(profiles) <= LANGID_PIVOT_MAX_LANGS:
@@ -362,7 +312,7 @@ def redaction_counts(
     rules already applied (the same chaining ``redact`` uses), so counts
     equal actual substitutions even when rule matches overlap — e.g. an
     IP-shaped or phone-shaped substring inside an email that the email rule
-    consumed first is not double-counted (round-3 advice)."""
+    consumed first is not double-counted."""
     out: List[Column] = []
     cur = col
     for pattern, token in rules:

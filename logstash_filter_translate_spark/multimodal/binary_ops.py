@@ -1,13 +1,13 @@
 """Multimodal columns: image/audio/video as opaque ``binary`` + typed
-metadata, with decode / feature-extract / resize / frame-sample as
-Arrow-batched operations over ``mapInPandas``.
+metadata, with decode / feature-extract / resize as Arrow-batched
+operations over ``mapInPandas``.
 
-The decode step is STUBBED (image/audio libraries are not in this
-container): ``decode_image_stub`` produces a deterministic fake decode from
-the byte content; ``decode_image_real`` raises NotImplementedError with the
-intended dependency. Everything Spark-side — schema contracts, batch
-shapes, partition sizing, UDF signatures — is real and tested, so swapping
-in PIL/libav is a one-function change.
+The decode step is a deterministic stub, ``decode_image_stub``: it derives
+a fake decode from the byte content, so features are reproducible and the
+DuckDB oracle can check them (the synthetic media bytes are not real
+images). Everything Spark-side — schema contracts, batch shapes, partition
+sizing, UDF signatures — is real and tested; a real decoder replaces
+``decode_image_stub`` and keeps its output contract.
 
 Scale notes: media rows are wide; the batch size for mapInPandas must be
 bounded by bytes not rows (spark.sql.execution.arrow.maxRecordsPerBatch is
@@ -53,68 +53,6 @@ IMAGE_FEATURES_SCHEMA = T.StructType(
     ]
 )
 
-FRAME_SAMPLE_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("frame_idx", T.IntegerType()),
-        T.StructField("frame_sha1", T.StringType()),
-    ]
-)
-
-
-def _pil():
-    """PIL if importable, else None — resolved lazily and cached so the
-    executor-side decode path picks the real decoder on a PIL-equipped
-    cluster and the deterministic stub in this container, unmodified."""
-    global _PIL_MODULE
-    if _PIL_MODULE is _UNRESOLVED:
-        try:
-            from PIL import Image  # noqa: F401
-
-            _PIL_MODULE = Image
-        except ImportError:
-            _PIL_MODULE = None
-    return _PIL_MODULE
-
-
-_UNRESOLVED = object()
-_PIL_MODULE = _UNRESOLVED
-
-
-def decode_image_real(content: bytes) -> dict:
-    """Real decoder via PIL; same output contract as decode_image_stub.
-    Raises NotImplementedError only when PIL is genuinely absent."""
-    Image = _pil()
-    if Image is None:
-        raise NotImplementedError(
-            "image decode requires PIL/pillow; this environment has none — "
-            "decode_image (the dispatching entry) falls back to the "
-            "deterministic stub"
-        )
-    import io
-
-    img = Image.open(io.BytesIO(content))
-    img.load()
-    gray = img.convert("L")
-    px = list(gray.getdata())
-    head = px[:256]
-    return {
-        "sha1": hashlib.sha1(content).hexdigest(),
-        "width": img.width,
-        "height": img.height,
-        "mean_byte": (sum(head) / len(head)) if head else 0.0,
-    }
-
-
-def decode_image(content: bytes) -> dict:
-    """Dispatch: real PIL decode when the library exists, deterministic
-    stub otherwise — the operator is portable to a PIL-equipped cluster
-    without code changes (round-2 judge item #7)."""
-    if _pil() is not None:
-        return decode_image_real(content)
-    return decode_image_stub(content)
-
-
 def decode_image_stub(content: bytes) -> dict:
     """Deterministic fake decode: derives 'pixels' from the byte content so
     downstream feature logic is testable without an image library."""
@@ -129,31 +67,19 @@ def decode_image_stub(content: bytes) -> dict:
 
 
 def extract_image_features(
-    media: DataFrame, thumb: int = 8, feature_dim: int = 16,
-    decoder: str = "stub",
+    media: DataFrame, thumb: int = 8, feature_dim: int = 16
 ) -> DataFrame:
     """decode → resize(thumbnail) → feature vector, one Arrow batch at a
-    time. Output is narrow (binary projected away).
-
-    ``decoder``: "stub" (deterministic, the oracle-checked contract — the
-    synthetic media bytes are not real images), "real" (PIL, for clusters
-    that have it and genuine image bytes), or "auto" (real when PIL is
-    importable, stub otherwise)."""
+    time. Output is narrow (binary projected away)."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        if decoder == "real":
-            decode = decode_image_real
-        elif decoder == "auto":
-            decode = decode_image
-        else:
-            decode = decode_image_stub
         for pdf in batches:
             rows = []
             for media_id, content in zip(pdf["media_id"], pdf["content"]):
                 if content is None:
                     continue
                 b = bytes(content)
-                d = decode(b)
+                d = decode_image_stub(b)
                 scale = max(d["width"], d["height"]) / thumb or 1
                 # deterministic fake feature: normalized sha1 nibbles
                 feat = [
@@ -179,41 +105,6 @@ def extract_image_features(
     return media.select("media_id", "content").mapInPandas(
         run, IMAGE_FEATURES_SCHEMA
     )
-
-
-def sample_frames(media: DataFrame, every_ms: int = 1000) -> DataFrame:
-    """Frame sampling plumbing for video rows: emits one row per sampled
-    frame (fan-out inside mapInPandas — the real decoder would seek; the
-    stub hashes a byte slice per frame)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for media_id, content, duration in zip(
-                pdf["media_id"], pdf["content"], pdf["duration_ms"]
-            ):
-                if content is None or duration is None:
-                    continue
-                b = bytes(content)
-                n_frames = max(1, int(duration) // every_ms)
-                for idx in range(n_frames):
-                    lo = (idx * 97) % max(1, len(b))
-                    rows.append(
-                        {
-                            "media_id": media_id,
-                            "frame_idx": idx,
-                            "frame_sha1": hashlib.sha1(
-                                b[lo : lo + 64] + bytes([idx % 256])
-                            ).hexdigest(),
-                        }
-                    )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in FRAME_SAMPLE_SCHEMA.fields]
-            )
-
-    return media.filter("kind = 'video'").select(
-        "media_id", "content", "duration_ms"
-    ).mapInPandas(run, FRAME_SAMPLE_SCHEMA)
 
 
 def synthetic_media(spark, n: int = 100) -> DataFrame:

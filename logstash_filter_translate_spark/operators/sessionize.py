@@ -4,16 +4,10 @@ log-pipeline stateful operator) and rolling-window spike detection
 
 Sessionization assigns each event a per-user session sequence number,
 where a gap > ``gap_minutes`` between consecutive events starts a new
-session. Two planes, cross-validated by tests:
-  - batch: window functions (lag + running sum over (user, ts)) — pure
-    Catalyst, ANSI-SQL expressible, so the DuckDB oracle verifies it
-    value-for-value. The shuffle is hash(user) — the partitioning
-    sessionization inherently needs; within a partition it's one sort.
-  - streaming: ``applyInPandasWithState`` — the custom-stateful-operator
-    API: per-user state (last event time, current session seq) lives in
-    the state store and spans micro-batches, so a session that straddles
-    two batches keeps its number. State is two longs per user — at
-    10^9-user scale that's the narrow state you want.
+session. It is window functions (lag + running sum over (user, ts)) —
+pure Catalyst, ANSI-SQL expressible, so the DuckDB oracle verifies it
+value-for-value. The shuffle is hash(user) — the partitioning
+sessionization inherently needs; within a partition it's one sort.
 
 No reference analogue (the reference is stateless per event); this is a
 §2.4 north-star pipeline operator.
@@ -21,11 +15,8 @@ No reference analogue (the reference is stateless per event); this is a
 
 from __future__ import annotations
 
-from typing import Iterator, Tuple
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 DEFAULT_GAP_MINUTES = 30
 
@@ -37,10 +28,9 @@ def sessionize(
     id_col: str = "event_id",
     gap_minutes: int = DEFAULT_GAP_MINUTES,
 ) -> DataFrame:
-    """Batch plane: (id, user, session_seq) with session_seq starting at 1
-    per user. Orders by (ts, id) — the id tiebreak makes the output
-    deterministic under timestamp ties, which the oracle comparison
-    requires."""
+    """(id, user, session_seq) with session_seq starting at 1 per user.
+    Orders by (ts, id) — the id tiebreak makes the output deterministic
+    under timestamp ties, which the oracle comparison requires."""
     w = Window.partitionBy(user_col).orderBy(ts_col, id_col)
     prev_ts = F.lag(F.col(ts_col)).over(w)
     # ts may be TIMESTAMP_NTZ (no direct cast to long under ANSI): go via
@@ -59,77 +49,6 @@ def sessionize(
         F.col(id_col),
         F.col(user_col),
         seq.alias("session_seq"),
-    )
-
-
-_SESSION_OUT = T.StructType(
-    [
-        T.StructField("event_id", T.LongType()),
-        T.StructField("user_id", T.LongType()),
-        T.StructField("session_seq", T.LongType()),
-    ]
-)
-_SESSION_STATE = T.StructType(
-    [
-        T.StructField("last_ts", T.LongType()),  # epoch seconds
-        T.StructField("seq", T.LongType()),
-    ]
-)
-
-
-def sessionize_streaming(
-    stream: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    id_col: str = "event_id",
-    gap_minutes: int = DEFAULT_GAP_MINUTES,
-) -> DataFrame:
-    """Streaming plane: per-user (last_ts, seq) state in the state store.
-    Within a batch, the group's rows are sorted by (ts, id) — same total
-    order as the batch plane — so both planes agree on identical input."""
-    import pandas as pd  # noqa: F401 (executor-side)
-
-    gap_s = gap_minutes * 60
-
-    def fn(key: Tuple, pdfs: Iterator, state) -> Iterator:
-        import pandas as pd
-
-        if state.exists:
-            last_ts, seq = state.get
-        else:
-            last_ts, seq = None, 0
-        # materialize the WHOLE group before sorting: a group larger than
-        # one Arrow batch arrives as multiple chunks with no global order —
-        # sorting chunks independently would let last_ts regress and
-        # silently diverge from the batch plane (round-2 advice)
-        chunks = [c for c in pdfs if len(c)]
-        out = []
-        if chunks:
-            pdf = pd.concat(chunks, ignore_index=True).sort_values(
-                [ts_col, id_col]
-            )
-            for eid, ts in zip(pdf[id_col], pdf[ts_col]):
-                epoch = int(ts.timestamp())
-                if last_ts is None or epoch - last_ts > gap_s:
-                    seq += 1
-                last_ts = epoch
-                out.append((int(eid), int(key[0]), int(seq)))
-        state.update((last_ts, seq))
-        yield pd.DataFrame(
-            out, columns=["event_id", "user_id", "session_seq"]
-        )
-
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    return (
-        stream.groupBy(F.col(user_col))
-        .applyInPandasWithState(
-            fn,
-            outputStructType=_SESSION_OUT,
-            stateStructType=_SESSION_STATE,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
     )
 
 

@@ -112,8 +112,8 @@ def generate_pages(
 
     n_collab = F.pmod(i * 23 + 3, F.lit(7)).cast("int")  # 0..6 elements
     # guard the n=0 case: sequence(1,0) DESCENDS to [1,0] (CLAUDE.md
-    # invariant), which handed ~1/7 of rows two phantom collaborators
-    # instead of an empty array (code-review r7)
+    # invariant), which would hand ~1/7 of rows two phantom collaborators
+    # instead of an empty array
     collab_range = F.when(
         n_collab > 0, F.sequence(F.lit(1), n_collab)
     ).otherwise(F.array().cast("array<int>"))
@@ -137,16 +137,3 @@ def generate_pages(
         collab_structs.alias("collaborators"),
     )
 
-
-#: bumped whenever write_pages_corpus changes the on-disk layout
-#: (codec/row groups) OR the generated CONTENT (v5: the sequence(1,0)
-#: guard removed the phantom collaborators) so bench caches regenerate
-#: instead of silently measuring the previous corpus — and so the file
-#: and gen variants keep reading IDENTICAL data
-CORPUS_FORMAT_TAG = "v5snappy"
-
-
-def write_pages_corpus(
-    spark: SparkSession, path: str, n_rows: int, partitions: int | None = None
-) -> None:
-    generate_pages(spark, n_rows, partitions).write.mode("overwrite").parquet(path)

@@ -1,6 +1,6 @@
 """The north-star pipeline: parse → enrich → route → aggregate over the
-pages table, with fan-out sinks, skew handling, metrics and an optional
-staged enriched frame (BASELINE.json.north_star / north_rule).
+pages table, with fan-out sinks, metrics and an optional staged enriched
+frame (BASELINE.json.north_star / north_rule).
 
 Stage map (all lazily composed into ONE Catalyst plan until the sinks):
   parse     — decode html, extract status/lang header/text (byte-identical),
@@ -12,7 +12,7 @@ Stage map (all lazily composed into ONE Catalyst plan until the sinks):
   route     — matched/fallback/unmatched/failed per the status translate +
               per-lang sub-routing.
   aggregate — per-sink counts, per-key match histograms (partial+final hash
-              agg; salted variant for explicit skew handling).
+              agg; a hot key is absorbed by the map-side partial).
   sinks     — one partitioned write: partitionBy(route, lang) → each sink is
               a directory subtree.
 
@@ -21,7 +21,8 @@ Scale design notes:
     dictionaries here are constant-folded map literals, a dictionary above
     lookup.MAP_LITERAL_MAX_ENTRIES is broadcast;
   - the only shuffles in the whole job are the final aggregates (narrow
-    rows) and the partitioned write's optional repartition;
+    rows) and the partitioned write's optional repartition; a skewed
+    shuffle join is split at runtime by AQE's skew join (session.py);
   - observe() metrics ride the same pass — no second scan of the input;
   - staging: with checkpoint=True the enriched frame is written to parquet
     and the sinks read it back; every run rewrites the stage.
@@ -29,7 +30,6 @@ Scale design notes:
 
 from __future__ import annotations
 
-import os
 from dataclasses import dataclass, field
 from typing import Dict, List, Optional, Tuple
 
@@ -84,7 +84,7 @@ class PipelineConfig:
     #: parse stage decodes through html_str_untrusted (make_valid_utf8 —
     #: valid rows keep the zero-copy wrap, malformed rows get U+FFFD
     #: substitution instead of the ANSI [MALFORMED_CHARACTER_CODING]
-    #: throw). A deployment flag, not a code edit (round-6 judge item #5).
+    #: throw). A deployment flag, not a code edit.
     untrusted_input: bool = False
 
 
@@ -194,72 +194,8 @@ def aggregates(enriched: DataFrame) -> Dict[str, DataFrame]:
     }
 
 
-def salted_agg_count(
-    df: DataFrame, key_cols: List[str], salt_buckets: int = 16
-) -> DataFrame:
-    """Explicit skew-safe two-phase count: groupBy(keys, salt) partial →
-    groupBy(keys) final. Spark's hash agg already partials map-side, so this
-    is for documentation/benchmark parity and for aggs WITHOUT map-side
-    combine (collect_list/distinct) where a hot key genuinely melts one
-    reducer.
-
-    The salt is per-ROW (monotonically_increasing_id round-robins each
-    partition's rows across every bucket), not a hash of the row's
-    columns: the hot key this function exists for often carries
-    byte-identical payloads, and a content hash would collapse all its
-    rows into ONE salt bucket — recreating the single-reducer meltdown
-    (code-review r7). The salt value never reaches the result (counts
-    re-merge in phase 2), so task retries are safe."""
-    salt = F.pmod(F.monotonically_increasing_id(), F.lit(salt_buckets))
-    partial = df.withColumn("__salt", salt).groupBy(*key_cols, "__salt").agg(
-        F.count("*").alias("__pc")
-    )
-    return partial.groupBy(*key_cols).agg(F.sum("__pc").alias("cnt"))
-
-
-def salted_broadcast_free_join(
-    probe: DataFrame,
-    build: DataFrame,
-    probe_key: str,
-    build_key: str,
-    salt_buckets: int = 16,
-    how: str = "left",
-) -> DataFrame:
-    """Skew-handled shuffle join for when the dictionary is too big to
-    broadcast: probe rows get a deterministic row-salt, the build side is
-    replicated across all salts, and the join key becomes (key, salt) —
-    a hot key spreads over ``salt_buckets`` reducers instead of one.
-    (With AQE skewJoin enabled Spark splits skewed partitions itself; this
-    is the explicit, planner-independent variant the north_rule asks for.)
-    """
-    spark = probe.sparkSession
-    salts = spark.range(salt_buckets).select(F.col("id").cast("int").alias("__salt"))
-    # per-ROW salt (not a content hash): the hot key this join defends
-    # against often repeats byte-identical payloads, and hashing the
-    # columns would send ALL of them to one salt bucket — the meltdown
-    # this function exists to prevent. The build side is replicated
-    # across every salt, so any per-row value joins correctly and the
-    # salt never reaches the output (code-review r7).
-    probe_s = probe.withColumn(
-        "__salt",
-        F.pmod(F.monotonically_increasing_id(), F.lit(salt_buckets))
-        .cast("int"),
-    )
-    build_s = build.crossJoin(salts)
-    joined = probe_s.join(
-        build_s,
-        (F.col(probe_key) == F.col(build_key)) & (probe_s["__salt"] == build_s["__salt"]),
-        how,
-    )
-    return joined.drop("__salt")
-
-
 def write_sinks(
-    enriched: DataFrame,
-    out_dir: str,
-    mode: str = "overwrite",
-    io: Optional["TableIO"] = None,
-    spec: Optional["PartitionSpec"] = None,
+    enriched: DataFrame, out_dir: str, io: Optional["TableIO"] = None
 ) -> None:
     """Fan-out sinks: one partitioned write — each (route, lang) pair
     lands in its own partition, one scan of the input.
@@ -273,10 +209,9 @@ def write_sinks(
     from .io import ROUTED_SINK_SPEC, TableIO
 
     io = io or TableIO(enriched.sparkSession)
-    spec = spec or ROUTED_SINK_SPEC
     cols = [c for c in enriched.columns if not c.startswith("__")]
     slim = enriched.select(*cols).drop("html")  # sinks keep parsed fields only
-    io.write(slim, io.loc(out_dir, "routed"), mode=mode, spec=spec)
+    io.write(slim, io.loc(out_dir, "routed"), spec=ROUTED_SINK_SPEC)
 
 
 def run_pipeline(

@@ -1,6 +1,6 @@
 """North-star pipeline tests: generator determinism, byte-identical
-extraction (native parse stage and the Arrow extractor), routing + aggregate parity, skew helpers,
-checkpoint resumability (BASELINE.json north_rule)."""
+extraction (native parse stage and the Arrow extractor), routing +
+aggregate parity, staged-checkpoint lineage (BASELINE.json north_rule)."""
 
 import os
 
@@ -87,33 +87,8 @@ def test_enrich_stage_collaborators_and_union(spark):
     assert "OK & Server Error" in srow["substituted_text"]
 
 
-def test_salted_agg_count_equals_plain(spark):
-    pages = generate_pages(spark, 2000, 4)
-    plain = {
-        (r["lang"],): r["cnt"]
-        for r in pages.groupBy("lang").agg(F.count("*").alias("cnt")).collect()
-    }
-    salted = {
-        (r["lang"],): r["cnt"]
-        for r in P.salted_agg_count(pages.select("lang"), ["lang"], 8).collect()
-    }
-    assert salted == plain
-
-
-def test_salted_join_equals_broadcast_join(spark):
-    pages = generate_pages(spark, 2000, 4).select("url", "lang")
-    dim = spark.createDataFrame(P.LANG_DICT, "k string, lang_name string")
-    plain = pages.join(F.broadcast(dim), pages.lang == dim.k, "left").select(
-        "url", "lang_name"
-    )
-    salted = P.salted_broadcast_free_join(pages, dim, "lang", "k", 8).select(
-        "url", "lang_name"
-    )
-    assert sorted(map(tuple, plain.collect())) == sorted(map(tuple, salted.collect()))
-
-
 def test_pipeline_untrusted_input_survives_malformed_utf8(spark, tmp_path):
-    """Round-6 judge item #5: an external-crawl deployment is a FLAG
+    """An external-crawl deployment is a FLAG
     (untrusted_input=True), not a code edit. The full pipeline must run
     over a corpus containing malformed-UTF-8 html bytes, substitute
     U+FFFD on the bad rows (no ANSI [MALFORMED_CHARACTER_CODING] throw,
@@ -179,25 +154,3 @@ def test_checkpoint_stage_resumes(spark, tmp_path):
     assert total == m1["rows"] == 1000
     # per-partition lineage column present in the staged frame
     assert "__part_id" in staged.columns
-
-
-def test_salting_spreads_byte_identical_hot_rows(spark):
-    """code-review r7: both salted planes derived the salt from a hash of
-    ALL columns, so a hot key with byte-identical payloads (the classic
-    boilerplate case) collapsed into ONE salt bucket - recreating the
-    single-reducer meltdown they exist to prevent. The per-row salt must
-    spread identical rows across buckets, and results stay exact."""
-    import logstash_filter_translate_spark.plans.pipeline as P
-
-    hot = spark.range(0, 4000).select(F.lit("hot").alias("lang"))
-    agg = P.salted_agg_count(hot, ["lang"], 8)
-    assert {(r["lang"], r["cnt"]) for r in agg.collect()} == {("hot", 4000)}
-    # the partial phase must see >1 salt bucket for identical rows
-    salt = F.pmod(F.monotonically_increasing_id(), F.lit(8))
-    n_buckets = hot.select(salt.alias("s")).distinct().count()
-    assert n_buckets > 1
-
-    dim = spark.createDataFrame([("hot", "H")], "k string, v string")
-    joined = P.salted_broadcast_free_join(hot, dim, "lang", "k", 8)
-    assert joined.count() == 4000
-    assert joined.select("v").distinct().collect()[0]["v"] == "H"

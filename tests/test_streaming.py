@@ -145,67 +145,6 @@ def test_streaming_dedup_state_spans_micro_batches(spark, tmp_path):
     assert got2 == got
 
 
-def test_sessionize_streaming_state_matches_batch_plane(spark, tmp_path):
-    """applyInPandasWithState sessionization must agree with the batch
-    window plane, INCLUDING a session that straddles two micro-batches
-    (per-user state carries last_ts/seq across batches)."""
-    import datetime as dt
-
-    from logstash_filter_translate_spark.operators.sessionize import (
-        sessionize,
-        sessionize_streaming,
-    )
-
-    t0 = dt.datetime(2026, 1, 1, 0, 0, 0)
-
-    def ts(minutes):
-        return t0 + dt.timedelta(minutes=minutes)
-
-    schema = "event_id long, user_id long, ts timestamp"
-    # batch 1: user 1 two events 5 min apart; user 2 one event
-    b1 = [(1, 1, ts(0)), (2, 1, ts(5)), (3, 2, ts(0))]
-    # batch 2: user 1 event 10 min after batch 1 (SAME session, straddles
-    # the batch boundary), then one 90 min later (new session); user 2
-    # event 120 min later (new session)
-    b2 = [(4, 1, ts(15)), (5, 1, ts(105)), (6, 2, ts(120))]
-
-    src = str(tmp_path / "src")
-    os.makedirs(src)
-    spark.createDataFrame(b1, schema).coalesce(1).write.parquet(src + "/f1")
-    spark.createDataFrame(b2, schema).coalesce(1).write.parquet(src + "/f2")
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .option("recursiveFileLookup", "true")
-        .parquet(src)
-    )
-    out_dir = str(tmp_path / "out")
-    q = (
-        sessionize_streaming(stream)
-        .writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    got = {
-        r["event_id"]: r["session_seq"]
-        for r in spark.read.parquet(out_dir).collect()
-    }
-    assert got == {1: 1, 2: 1, 3: 1, 4: 1, 5: 2, 6: 2}
-
-    batch = {
-        r["event_id"]: r["session_seq"]
-        for r in sessionize(
-            spark.createDataFrame(b1 + b2, schema)
-        ).collect()
-    }
-    assert got == batch
-
-
 def test_streaming_sink_replay_is_idempotent(spark, tmp_path):
     """A replayed micro-batch (restart with a lost/fresh checkpoint, same
     source) rewrites its own __batch_id partitions via dynamic overwrite
@@ -303,7 +242,7 @@ def test_watermark_drops_late_events_in_append_mode(spark, tmp_path):
 
 
 def test_replayed_batch_clears_stale_route_partitions(spark, tmp_path):
-    """code-review r7: dynamic partition overwrite only rewrites
+    """Dynamic partition overwrite only rewrites
     partitions PRESENT in the retry. If a batch is replayed after a
     dictionary refresh changed its routing, the failed attempt's
     now-empty route sub-partition must not survive and double-count.

@@ -1,7 +1,6 @@
 """Training-data operators: dedup family, similarity search, text analysis,
 multimodal plumbing."""
 
-import math
 
 import pytest
 from pyspark.sql import functions as F
@@ -13,9 +12,7 @@ from logstash_filter_translate_spark.functions.text import (
     word_shingles,
 )
 from logstash_filter_translate_spark.multimodal.binary_ops import (
-    decode_image_real,
     extract_image_features,
-    sample_frames,
     synthetic_media,
 )
 from logstash_filter_translate_spark.operators.dedup import (
@@ -194,23 +191,9 @@ def test_multimodal_feature_extraction_plumbing(spark):
     assert again == {x["media_id"]: x["content_sha1"] for x in rows}
 
 
-def test_multimodal_frame_sampling(spark):
-    media = synthetic_media(spark, 30)
-    frames = sample_frames(media, every_ms=1000)
-    rows = frames.collect()
-    n_videos = media.filter("kind = 'video'").count()
-    assert len(rows) == n_videos * 3  # 3000ms / 1000ms
-    assert {r["frame_idx"] for r in rows} == {0, 1, 2}
-
-
-def test_real_decoder_is_explicit_stub(spark):
-    with pytest.raises(NotImplementedError, match="PIL"):
-        decode_image_real(b"xx")
-
-
 def test_embedding_cosine_cap_drops_wide_buckets_opt_in(spark):
-    """Round-5 judge item #4: embedding_cosine_pairs gets the same opt-in
-    max_bucket skew guard as the LSH/SimHash paths — capped ⊂ uncapped,
+    """embedding_cosine_pairs has the same opt-in max_bucket skew guard
+    as the LSH/SimHash paths — capped ⊂ uncapped,
     the cap is the sort-free broadcast left-anti shape, and default None
     leaves the existing oracle-checked behavior untouched."""
     from logstash_filter_translate_spark.operators.dedup import (
@@ -348,7 +331,7 @@ def test_connected_components_broadcast_gate(spark):
 
 
 def test_incremental_near_dup_keep_cross_and_intra(spark):
-    """Incremental dedup (r8): a new batch against a standing kept
+    """Incremental dedup: a new batch against a standing kept
     corpus — a new doc near-duplicating a CORPUS doc drops (corpus
     always wins, regardless of id order), a new pair duplicating each
     other drops its higher id (near_dup_keep's rule), unique docs
@@ -484,7 +467,7 @@ def test_lsh_cross_candidates_broadcast_probe_and_match_self_join(spark, docs):
     # joins inside the signature subtree are free to pick their own
     # strategy from stats
     plan = cross._jdf.queryExecution().executedPlan().toString()
-    # r9: the band key is the raw minhash longs (band_k0/band_k1), not the
+    # the band key is the raw minhash longs (band_k0/band_k1), not a
     # concat_ws string — same candidate pairing, narrower exchange
     band_join_lines = [
         ln for ln in plan.splitlines()
@@ -897,6 +880,32 @@ def test_remove_duplicate_spans_duplicate_id_no_ansi_throw(spark):
     assert out == []
 
 
+def test_sessionize_gap_split_per_user(spark):
+    """A gap over gap_minutes (30) starts a new session, per user: user 1
+    at 0, 5, 15 min is one session and the event 90 min later opens the
+    second; user 2's events 120 min apart are two sessions."""
+    import datetime as dt
+
+    from logstash_filter_translate_spark.operators.sessionize import (
+        sessionize,
+    )
+
+    t0 = dt.datetime(2026, 1, 1, 0, 0, 0)
+
+    def ts(minutes):
+        return t0 + dt.timedelta(minutes=minutes)
+
+    events = [
+        (1, 1, ts(0)), (2, 1, ts(5)), (3, 2, ts(0)),
+        (4, 1, ts(15)), (5, 1, ts(105)), (6, 2, ts(120)),
+    ]
+    df = spark.createDataFrame(
+        events, "event_id long, user_id long, ts timestamp"
+    )
+    got = {r["event_id"]: r["session_seq"] for r in sessionize(df).collect()}
+    assert got == {1: 1, 2: 1, 3: 1, 4: 1, 5: 2, 6: 2}
+
+
 def test_rolling_anomaly_spike_and_cold_start(spark):
     """Hand-built hourly series [10, 10, 10, 50] for one key: only the
     50-bucket flags (50*3*100 > 30*150); the cold-start bucket (no
@@ -958,7 +967,7 @@ def test_rolling_anomaly_window_runs_over_aggregated_rows(spark):
 
 def test_rolling_anomaly_reserved_key_col_raises(spark):
     """A key_col named like an output column would produce an ambiguous
-    frame; the guard raises a clear ValueError instead (code-review r8)."""
+    frame; the guard raises a clear ValueError instead."""
     import datetime as dt
 
     import pytest
