@@ -79,23 +79,36 @@ def token_count(text: Column) -> Column:
 
 
 def word_shingles(toks: Column, n: int = 3) -> Column:
-    """Word n-gram shingles as strings; fewer than n tokens → empty array.
+    """Overlapping word n-grams as strings, in start order; fewer than n
+    tokens (or NULL tokens) → empty array.
 
-    Pure expression: transform over an index sequence + element_at — no
-    explode/shuffle. (The DuckDB oracle states the same set via a pos
-    self-join.)
+    One codegen ``regexp_extract_all`` over the space-joined tokens: the
+    anchor matches at each token start, the zero-width lookahead
+    captures the n tokens from there, so successive matches overlap.
+    Tokens never hold a space (``tokens`` splits on it), so the join is
+    lossless. No interpreted lambda, no explode or shuffle. (The DuckDB
+    oracle states the same set via a pos self-join.)
+
+    The anchor is ``^`` or a positive lookbehind for the space, never
+    ``(?<![^ ])``: after each empty match the matcher steps one UTF-16
+    unit, and between the halves of a surrogate pair that negative
+    lookbehind holds (``[^ ]`` cannot match half a code point), which
+    would emit a gram starting with a lone low surrogate.
     """
-    idx = F.sequence(F.lit(1), F.size(toks) - (n - 1))
-    shingled = F.transform(
-        idx,
-        lambda i: F.concat_ws(
-            " ", *[F.element_at(toks, i + j) for j in range(n)]
-        ),
+    gram = "(?:^|(?<= ))(?=([^ ]+(?: [^ ]+){%d}))" % (n - 1)
+    return F.coalesce(
+        F.regexp_extract_all(F.array_join(toks, " "), F.lit(gram), 1),
+        F.array().cast("array<string>"),
     )
-    # guard: sequence(1, k) DESCENDS for k < 1 — short docs must yield []
-    return F.when(F.size(toks) >= n, shingled).otherwise(
-        F.array().cast("array<string>")
-    )
+
+
+def word_tiles(toks: Column, k: int) -> Column:
+    """Consecutive non-overlapping k-word windows (the last one may be
+    shorter), as strings; no tokens → empty array, NULL tokens → NULL.
+    The tiling sibling of :func:`word_shingles`: the same joined string,
+    one greedy ``regexp_extract_all`` whose matches cannot overlap."""
+    tile = "[^ ]+(?: [^ ]+){0,%d}" % (k - 1)
+    return F.regexp_extract_all(F.array_join(toks, " "), F.lit(tile), 0)
 
 
 # ---------------------------------------------------------------------------

@@ -48,7 +48,7 @@ def stratified_sample(
     # round, NOT truncate: int() alone turns binary-float rates into the
     # bucket BELOW the configured one (int(0.57*10000) == 5699), silently
     # skewing the mix for 56 of the 999 three-decimal rates — violating
-    # this module's own 4-digit-resolution contract (code-review r7).
+    # this module's own 4-digit-resolution contract.
     # Oracles render thresholds with the same rounding (queries.py).
     threshold = F.lit(int(round(default_rate * SAMPLE_BUCKETS)))
     expr = threshold
@@ -104,7 +104,7 @@ def repetition_ratio(
     ((doc, shingle) counts reduced map-side, then per-doc max/sum). The
     shuffle carries (doc_id, shingle-count) pairs, never documents.
 
-    ``include_shingleless=False`` (r9) skips the corpus re-entry left
+    ``include_shingleless=False`` skips the corpus re-entry left
     join that reports docs with < n tokens as (0, 0) — consumers that
     immediately FILTER on ``total_ngrams > 0`` (curation_pipeline) drop
     those rows again, so the extra scan + join bought nothing.
@@ -394,7 +394,7 @@ def curation_pipeline(
     per-domain cap, returning the kept (id, stratum, domain) set. Each
     stage is the audited scale-safe plane above; integer percent
     threshold keeps the repetition filter float-free across engines."""
-    # r9: include_shingleless=False — the (0, 0) re-entry rows the
+    # include_shingleless=False: the (0, 0) re-entry rows the
     # default plane adds (a corpus scan + left join) are filtered right
     # back out by `total_ngrams > 0` below
     rep = repetition_ratio(
@@ -480,9 +480,8 @@ def hashed_linear_score(
         # normalize to ONE row per bucket before the join: a malformed
         # model export with duplicate bucket rows would otherwise fan
         # out every token hashing there — corrupting n_tokens, not just
-        # the score (code-review r8). max() is the deterministic
-        # resolution; the model side is small, so the extra exchange is
-        # noise. The dunder key avoids colliding with an id_col named
+        # the score. max() is the deterministic resolution; the model
+        # side is small, so the extra exchange is noise. The dunder key avoids colliding with an id_col named
         # "bucket" (same reason the other temps are __-prefixed).
         wt = (
             weights.select(

@@ -113,9 +113,10 @@ class TableIO:
         self,
         df: DataFrame,
         location: str,
-        mode: str = "overwrite",
         spec: Optional[PartitionSpec] = None,
     ) -> None:
+        """Overwrite ``location`` with ``df``: ``createOrReplace`` for
+        Iceberg, overwrite mode for parquet."""
         spec = spec or PartitionSpec()
         if self.fmt == ICEBERG:
             from pyspark.sql import functions as F
@@ -123,14 +124,9 @@ class TableIO:
             writer = df.writeTo(location).using(ICEBERG)
             if spec:
                 writer = writer.partitionedBy(*[F.col(c) for c in spec.fields])
-            if mode == "overwrite":
-                writer.createOrReplace()
-            elif mode == "append":
-                writer.append()
-            else:
-                raise ValueError(f"unsupported iceberg write mode {mode!r}")
+            writer.createOrReplace()
             return
-        w = df.write.mode(mode)
+        w = df.write.mode("overwrite")
         if spec:
             w = w.partitionBy(*spec.fields)
         w.parquet(location)

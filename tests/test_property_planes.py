@@ -7,7 +7,7 @@ import string
 
 import pandas as pd
 
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 from logstash_filter_translate_spark import translate
@@ -277,6 +277,53 @@ def test_span_dedup_matches_python_reference(spark, docs):
         ).collect()
     }
     assert got == want
+
+
+#: whitespace runs at both ends and inside, tab/newline/CR (which
+#: ``tokens`` keeps inside a token), non-ASCII letters and one
+#: supplementary-plane character (a UTF-16 surrogate pair)
+WINDOW_TEXT = st.text(
+    st.sampled_from(["a", "b", "é", "日", "\U0001d49c", " ", "\t", "\n", "\r"]),
+    max_size=14,
+)
+
+
+@given(texts=st.lists(WINDOW_TEXT | st.none(), min_size=1, max_size=6))
+@example(texts=["  a\tb  日 \U0001d49cé b\r\n a ", None, "", "   ", "a"])
+@PROP_SETTINGS
+def test_word_windows_match_python_reference(spark, texts):
+    """``word_shingles`` (overlapping n-grams, NULL -> []) and
+    ``word_tiles`` (non-overlapping k-windows, NULL -> NULL) equal the
+    plain-Python windows over ``text.split(" ")`` with empties removed,
+    for every window size 1..5."""
+    from pyspark.sql import functions as F
+
+    from logstash_filter_translate_spark.functions.text import (
+        tokens,
+        word_shingles,
+        word_tiles,
+    )
+
+    df = spark.createDataFrame(list(enumerate(texts)), "i long, text string")
+    toks = tokens(F.col("text"))
+    sizes = range(1, 6)
+    got = df.select(
+        "i",
+        *[word_shingles(toks, n).alias(f"s{n}") for n in sizes],
+        *[word_tiles(toks, n).alias(f"t{n}") for n in sizes],
+    ).collect()
+    assert len(got) == len(texts)
+    for r in got:
+        text = texts[r["i"]]
+        w = [t for t in text.split(" ") if t] if text is not None else []
+        for n in sizes:
+            assert r[f"s{n}"] == [
+                " ".join(w[i:i + n]) for i in range(len(w) - n + 1)
+            ], (text, n)
+            assert r[f"t{n}"] == (
+                None if text is None
+                else [" ".join(w[i:i + n]) for i in range(0, len(w), n)]
+            ), (text, n)
 
 
 def _py_chunks(ts, k, s, m):

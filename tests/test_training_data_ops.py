@@ -741,9 +741,8 @@ def test_remove_frequent_segments_crlf_and_blank_lines(spark):
     assert out == {1: "keep me one", 2: "keep me two", 3: "keep me three"}
 
 
-def test_remove_frequent_segments_shuffle_plane_no_broadcast(spark):
-    """broadcast_frequent=False pins the merge-hinted shuffle anti-join
-    (the corpus-scale-inventory plane): no broadcast join remains."""
+def test_remove_frequent_segments_broadcasts_inventory(spark):
+    """The re-entry anti-join broadcasts the frequent-segment inventory."""
     from logstash_filter_translate_spark.operators.dedup import (
         remove_frequent_segments,
     )
@@ -752,18 +751,11 @@ def test_remove_frequent_segments_shuffle_plane_no_broadcast(spark):
         [(i, f"w{i} x y z a b c d") for i in range(50)],
         "doc_id long, text string",
     )
-    for flag, expect_bc in ((True, True), (False, False)):
-        plan = (
-            remove_frequent_segments(
-                docs, "text", "doc_id", broadcast_frequent=flag
-            )._jdf.queryExecution().executedPlan().toString()
-        )
-        has_bc_anti = "BroadcastHashJoin" in plan
-        assert has_bc_anti == expect_bc, plan[:1500]
-        if not flag:
-            assert "SortMergeJoin LeftAnti" in plan or (
-                "SortMergeJoin" in plan and "LeftAnti" in plan
-            ), plan[:1500]
+    plan = (
+        remove_frequent_segments(docs, "text", "doc_id")
+        ._jdf.queryExecution().executedPlan().toString()
+    )
+    assert "BroadcastHashJoin" in plan and "LeftAnti" in plan, plan[:1500]
 
 
 def test_remove_duplicate_spans_any_offset(spark):
@@ -840,9 +832,8 @@ def test_remove_duplicate_spans_catches_tile_straddler(spark):
     }
 
 
-def test_remove_duplicate_spans_shuffle_plane_no_broadcast(spark):
-    """broadcast_duplicated=False pins the merge-hinted shuffle semi-join
-    (the corpus-scale-inventory plane): no broadcast join remains."""
+def test_remove_duplicate_spans_broadcasts_inventory(spark):
+    """The flagging semi-join broadcasts the duplicated-gram inventory."""
     from logstash_filter_translate_spark.operators.dedup import (
         remove_duplicate_spans,
     )
@@ -851,16 +842,11 @@ def test_remove_duplicate_spans_shuffle_plane_no_broadcast(spark):
         [(i, f"w{i} x y z a b c d") for i in range(50)],
         "doc_id long, text string",
     )
-    for flag, expect_bc in ((True, True), (False, False)):
-        plan = (
-            remove_duplicate_spans(
-                docs, "text", "doc_id", broadcast_duplicated=flag
-            )._jdf.queryExecution().executedPlan().toString()
-        )
-        has_bc = "BroadcastHashJoin" in plan
-        assert has_bc == expect_bc, plan[:1500]
-        if not flag:
-            assert "SortMergeJoin" in plan and "LeftSemi" in plan, plan[:1500]
+    plan = (
+        remove_duplicate_spans(docs, "text", "doc_id")
+        ._jdf.queryExecution().executedPlan().toString()
+    )
+    assert "BroadcastHashJoin" in plan and "LeftSemi" in plan, plan[:1500]
 
 
 def test_remove_duplicate_spans_duplicate_id_no_ansi_throw(spark):
