@@ -1,6 +1,6 @@
 """The north-star pipeline: parse → enrich → route → aggregate over the
 pages table, with fan-out sinks, metrics and an optional staged enriched
-frame (BASELINE.json.north_star / north_rule).
+frame.
 
 Stage map (all lazily composed into ONE Catalyst plan until the sinks):
   parse     — decode html, extract status/lang header/text (byte-identical),
@@ -11,10 +11,15 @@ Stage map (all lazily composed into ONE Catalyst plan until the sinks):
               substitution over text. All reference semantics (O1-O9).
   route     — matched/fallback/unmatched/failed per the status translate +
               per-lang sub-routing.
-  aggregate — per-sink counts, per-key match histograms (partial+final hash
-              agg; a hot key is absorbed by the map-side partial).
   sinks     — one partitioned write: partitionBy(route, lang) → each sink is
               a directory subtree.
+  aggregate — per-sink counts, per-key match histograms (partial+final hash
+              agg; a hot key is absorbed by the map-side partial), read back
+              from the routed sink. The four aggregate writes run
+              concurrently, one thread each; every thread inherits the
+              caller's local properties (job group, job tags, scheduler
+              pool), and ``run_pipeline`` returns only after all four
+              writes have ended, re-raising the first failure.
 
 Scale design notes:
   - the dictionary side never shuffles the 100 TB probe side: the small
@@ -30,11 +35,13 @@ Scale design notes:
 
 from __future__ import annotations
 
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 from typing import Dict, List, Optional, Tuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.util import inheritable_thread_target
 
 from ..config import TranslateConfig
 from ..functions.html import (
@@ -201,7 +208,8 @@ def write_sinks(
     lands in its own partition, one scan of the input.
 
     The partitioning is ROUTED_SINK_SPEC — a PartitionSpec OBJECT shared
-    by both table formats (S7 seam, plans/io.py): parquet renders it as
+    by both table formats (plans/io.py), so the routed layout does not
+    depend on the format: parquet renders it as
     hive-style route=/lang= subtrees with an atomic-rename committer;
     ``io=TableIO(spark, "iceberg")`` renders the identical spec as the
     Iceberg table's identity partitioning with snapshot-isolated commits.
@@ -229,9 +237,13 @@ def run_pipeline(
     as per-partition lineage) before the sinks read it back. The stage is
     rewritten on every run: a rerun parses and enriches again.
 
-    table_format: every sink/stage write and read-back goes through the S7
-    TableIO seam — the identical pipeline runs with ``"iceberg"`` when the
+    table_format: every sink/stage write and read-back goes through one
+    TableIO, so the identical pipeline runs with ``"iceberg"`` when the
     runtime ships the jars (out_dir is then a catalog namespace).
+
+    The aggregate tables are written concurrently (see the module
+    docstring); each write overwrites its own table, so a rerun after a
+    failed write replaces all four.
     """
     from .io import TableIO
 
@@ -251,8 +263,19 @@ def run_pipeline(
     if write_outputs:
         write_sinks(enriched, out_dir, io=io)
         aggs = aggregates(io.read(io.loc(out_dir, "routed")))
-        for name, adf in aggs.items():
-            io.write(adf, io.loc(out_dir, f"agg_{name}"))
+        # one thread per aggregate, each wrapped separately so it gets its
+        # own copy of the caller's local properties and tags: Spark sets
+        # the SQL execution id in them, so threads must not share a copy.
+        # Leaving the pool waits for every write; then the first failure
+        # is re-raised.
+        with ThreadPoolExecutor(len(aggs), thread_name_prefix="agg_write") as pool:
+            futures = [
+                pool.submit(inheritable_thread_target(spark)(io.write), adf,
+                            io.loc(out_dir, f"agg_{name}"))
+                for name, adf in aggs.items()
+            ]
+        for f in futures:
+            f.result()
     else:
         # metrics-only run (benchmark): noop sink drives the full scan
         enriched.write.format("noop").mode("overwrite").save()

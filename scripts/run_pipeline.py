@@ -47,29 +47,30 @@ def main() -> None:
         load_dictionary_file,
     )
 
-    spark = build_session(app_name="translate-enrich-route", master=args.master)
-
     from logstash_filter_translate_spark.plans.io import TableIO
 
-    if args.generate:
-        pages = generate_pages(spark, args.generate)
-    elif args.input:
-        pages = TableIO(spark, args.table_format).read(args.input)
-    else:
-        ap.error("one of --input / --generate is required")
+    spark = build_session(app_name="translate-enrich-route", master=args.master)
+    try:
+        if args.generate:
+            pages = generate_pages(spark, args.generate)
+        elif args.input:
+            pages = TableIO(spark, args.table_format).read(args.input)
+        else:
+            ap.error("one of --input / --generate is required")
 
-    cfg = P.PipelineConfig()
-    if args.status_dict:
-        cfg.status_dict = load_dictionary_file(args.status_dict)
+        cfg = P.PipelineConfig()
+        if args.status_dict:
+            cfg.status_dict = load_dictionary_file(args.status_dict)
 
-    metrics = P.run_pipeline(
-        spark, pages, args.output, cfg=cfg, checkpoint=args.checkpoint,
-        table_format=args.table_format,
-    )
-    print(json.dumps({"metrics": metrics, "output": args.output}))
-    if metrics.get("extract_mismatches", 0):
-        sys.exit(2)  # byte-identity invariant violated
-    spark.stop()
+        metrics = P.run_pipeline(
+            spark, pages, args.output, cfg=cfg, checkpoint=args.checkpoint,
+            table_format=args.table_format,
+        )
+        print(json.dumps({"metrics": metrics, "output": args.output}))
+        if metrics.get("extract_mismatches", 0):
+            sys.exit(2)  # byte-identity invariant violated
+    finally:
+        spark.stop()
 
 
 if __name__ == "__main__":

@@ -1,15 +1,44 @@
 """North-star pipeline tests: generator determinism, byte-identical
 extraction (native parse stage and the Arrow extractor), routing +
-aggregate parity, staged-checkpoint lineage (BASELINE.json north_rule)."""
+aggregate parity, the concurrent aggregate writes (job group, failure,
+rerun), staged-checkpoint lineage."""
 
 import os
+import threading
+from collections import Counter
 
+import pytest
 from pyspark.sql import functions as F
 
 from logstash_filter_translate_spark.plans import pipeline as P
+from logstash_filter_translate_spark.plans.io import TableIO
 from logstash_filter_translate_spark.plans.pages import generate_pages
 
 N = 5000
+AGG_TABLES = ("route_counts", "route_lang_counts", "per_key_histogram",
+              "per_lang_hits")
+
+
+def assert_aggregates_match_routed(spark, out):
+    """Every agg_<name> table equals a direct groupBy of the routed sink."""
+    routed = spark.read.parquet(os.path.join(out, "routed"))
+    direct = {
+        "route_counts": routed.groupBy("route").agg(F.count("*").alias("cnt")),
+        "route_lang_counts": routed.groupBy("route", "lang").agg(
+            F.count("*").alias("cnt")),
+        "per_key_histogram": routed.groupBy("route", "matched_key").agg(
+            F.count("*").alias("cnt")),
+        "per_lang_hits": routed.filter(F.col("route") == "matched")
+        .groupBy("lang").agg(F.count("*").alias("hits")),
+    }
+    assert sorted(d[len("agg_"):] for d in os.listdir(out)
+                  if d.startswith("agg_")) == sorted(direct)
+    for name, want in direct.items():
+        path = os.path.join(out, f"agg_{name}")
+        assert os.path.exists(os.path.join(path, "_SUCCESS")), name
+        got = spark.read.parquet(path).select(*want.columns)
+        assert Counter(map(tuple, got.collect())) == Counter(
+            map(tuple, want.collect())), name
 
 
 def test_generator_is_deterministic(spark):
@@ -65,14 +94,67 @@ def test_pipeline_routes_and_aggregates(spark, tmp_path):
     got_fallback = routed.filter(F.col("route") == "fallback").count()
     assert got_fallback == expected_fallback == metrics["fallback_rows"]
 
-    # aggregate outputs equal direct aggregation of the routed sink
-    agg = spark.read.parquet(os.path.join(out, "agg_route_counts"))
-    direct = {r["route"]: r["cnt"] for r in
-              routed.groupBy("route").agg(F.count("*").alias("cnt")).collect()}
-    assert {r["route"]: r["cnt"] for r in agg.collect()} == direct
+    # all four aggregate outputs equal direct aggregation of the routed sink
+    assert_aggregates_match_routed(spark, out)
 
     # per-lang partitioned sink layout exists (fan-out)
     assert any(p.startswith("route=") for p in os.listdir(os.path.join(out, "routed")))
+
+
+def _job_groups_after(spark, job_id):
+    """Job group (or None) of every job with an id above ``job_id``."""
+    jobs = spark.sparkContext._jsc.sc().statusStore().jobsList(None)
+    out = {}
+    for i in range(jobs.size()):
+        j = jobs.apply(i)
+        if j.jobId() > job_id:
+            g = j.jobGroup()
+            out[j.jobId()] = g.get() if g.isDefined() else None
+    return out
+
+
+def test_aggregate_writes_inherit_callers_job_group(spark, tmp_path):
+    """The aggregate write threads inherit the caller's local properties:
+    every job the pipeline starts lands in the caller's job group."""
+    pages = generate_pages(spark, 1000, 4)
+    sc = spark.sparkContext
+    before = max(_job_groups_after(spark, -1), default=-1)
+    sc.setJobGroup("pipeline_under_test", "job group inheritance")
+    try:
+        P.run_pipeline(spark, pages, str(tmp_path / "grouped"))
+    finally:
+        sc._jsc.clearJobGroup()
+    groups = _job_groups_after(spark, before)
+    assert len(groups) >= 5  # sink write plus the four aggregate writes
+    assert set(groups.values()) == {"pipeline_under_test"}, groups
+
+
+def test_failed_aggregate_write_waits_reraises_and_reruns(
+    spark, tmp_path, monkeypatch
+):
+    """One failing aggregate write: run_pipeline re-raises its error only
+    after the other writes have ended (no write thread outlives the call),
+    and a rerun into the same out_dir replaces all four tables."""
+    pages = generate_pages(spark, 1000, 4)
+    out = str(tmp_path / "rerun")
+    write = TableIO.write
+
+    def failing_write(self, df, location, spec=None):
+        if location.endswith("agg_per_key_histogram"):
+            raise RuntimeError("injected aggregate write failure")
+        return write(self, df, location, spec)
+
+    monkeypatch.setattr(TableIO, "write", failing_write)
+    with pytest.raises(RuntimeError, match="injected aggregate write failure"):
+        P.run_pipeline(spark, pages, out)
+    assert not [t for t in threading.enumerate() if t.name.startswith("agg_write")]
+    for name in AGG_TABLES:
+        landed = os.path.exists(os.path.join(out, f"agg_{name}", "_SUCCESS"))
+        assert landed == (name != "per_key_histogram"), name
+
+    monkeypatch.undo()
+    P.run_pipeline(spark, pages, out)
+    assert_aggregates_match_routed(spark, out)
 
 
 def test_enrich_stage_collaborators_and_union(spark):

@@ -7,7 +7,8 @@ zip shipped alongside the job).
 Builds the package zip fresh, submits the pipeline in local mode with a
 clean PYTHONPATH (so only the --py-files zip can satisfy the imports),
 and asserts the run's metrics line: rows processed, zero byte-identity
-mismatches, routed output written.
+mismatches, routed output written, and all four ``agg_<name>`` tables
+committed (each with ``_SUCCESS``).
 
 Usage: python tools/submit_check.py [n_rows]
 Prints one JSON line {"ok": true, "rows": N, ...} and exits nonzero on
@@ -25,6 +26,8 @@ import zipfile
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PKG = "logstash_filter_translate_spark"
+AGG_TABLES = ("route_counts", "route_lang_counts", "per_key_histogram",
+              "per_lang_hits")
 
 
 def build_zip(path: str) -> None:
@@ -81,8 +84,10 @@ def main() -> None:
     assert os.path.isdir(routed_dir), "routed sink missing"
     routes = [d for d in os.listdir(routed_dir) if d.startswith("route=")]
     assert routes, f"no route partitions under {routed_dir}"
-    aggs = [d for d in os.listdir(out_path) if d.startswith("agg_")]
-    assert aggs, "per-sink aggregate outputs missing"
+    for name in AGG_TABLES:
+        agg_dir = os.path.join(out_path, f"agg_{name}")
+        assert os.path.isfile(os.path.join(agg_dir, "_SUCCESS")), \
+            f"aggregate table {agg_dir} missing or uncommitted"
     print(json.dumps({
         "ok": True,
         "rows": n_rows,
