@@ -37,17 +37,15 @@ from ..functions.text import (
 # exact dedup
 # ---------------------------------------------------------------------------
 
-def exact_dedup(
-    df: DataFrame, text_col: str, id_col: str, use_fingerprint: bool = True
-) -> DataFrame:
+def exact_dedup(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     """Keep min(id) per identical text; returns (id, dup_cnt).
 
-    ``use_fingerprint`` shuffles a 32-char digest instead of full documents —
-    at 100 TB this is the difference between shuffling ~100 TB and ~1 TB.
+    Groups by a 32-char fingerprint of the text, so the shuffle carries
+    the digest instead of full documents — at 100 TB this is the
+    difference between shuffling ~100 TB and ~1 TB.
     """
-    key = fingerprint(F.col(text_col)) if use_fingerprint else F.col(text_col)
     return (
-        df.groupBy(key.alias("__fp"))
+        df.groupBy(fingerprint(F.col(text_col)).alias("__fp"))
         .agg(
             F.min(id_col).alias(id_col),
             F.count("*").alias("dup_cnt"),

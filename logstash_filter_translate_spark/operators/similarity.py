@@ -50,9 +50,20 @@ def cosine(a: Column, b: Column) -> Column:
     one all-zero embedding (empty-doc vector, padding row) appears in a
     100 TB corpus — try_divide degrades it to an unranked NULL score
     instead, which is also exactly DuckDB's x/0 semantics, so the
-    oracle agrees on degenerate data (code-review r7, verified both
-    engines)."""
+    oracle agrees on degenerate data (verified on both engines)."""
     return F.try_divide(dot(a, b), norm(a) * norm(b))
+
+
+def _top_k(scored: DataFrame, query_id_col: str, id_col: str, k: int) -> DataFrame:
+    """The one top-k tail of every scoring plane: keep the ``k`` best
+    ``score`` rows per query (NULL scores last, ties to the lower id) and
+    return (query_id, rank, id)."""
+    w = Window.partitionBy(query_id_col).orderBy(F.desc("score"), F.asc(id_col))
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select(query_id_col, "rank", id_col)
+    )
 
 
 def brute_force_topk(
@@ -86,12 +97,7 @@ def brute_force_topk(
         id_col,
         cosine(F.col(vec_col), F.col("__qvec")).alias("score"),
     )
-    w = Window.partitionBy(query_id_col).orderBy(F.desc("score"), F.asc(id_col))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, "rank", id_col)
-    )
+    return _top_k(scored, query_id_col, id_col, k)
 
 
 def hyperplane_bucket(vec_col: str, planes: List[List[float]]) -> Column:
@@ -218,12 +224,7 @@ def _cell_scored_topk(
         id_col,
         cosine(F.col(vec_col), F.col("__qvec")).alias("score"),
     )
-    w = Window.partitionBy(query_id_col).orderBy(F.desc("score"), F.asc(id_col))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, "rank", id_col)
-    )
+    return _top_k(scored, query_id_col, id_col, k)
 
 
 def ivf_topk(
@@ -251,12 +252,6 @@ def ivf_topk(
 #: spark.read.parquet(index_path) still yields only corpus rows.
 IVF_CENTROIDS_DIR = "_centroids"
 
-#: bump when the on-disk index layout changes (r8: centroids stored
-#: in-index). Cache keys that fingerprint only the SOURCE data must
-#: include this, or a pre-upgrade cached index gets served to
-#: post-upgrade code (q_similarity_ivf_indexed does).
-IVF_INDEX_FORMAT_VERSION = 2
-
 
 def write_ivf_index(
     corpus: DataFrame,
@@ -272,7 +267,7 @@ def write_ivf_index(
     cells' directories (partition pruning, asserted in tests).
 
     The centroids are persisted INSIDE the index (``_centroids/``,
-    hidden from the corpus read) — the index is self-describing (r8):
+    hidden from the corpus read) — the index is self-describing:
     cell ids are only meaningful relative to the centroid set they were
     assigned under, so an index queried or appended with a DIFFERENT
     centroid set probes the wrong cells and silently returns wrong
@@ -296,9 +291,9 @@ def ivf_index_complete(index_path: str) -> bool:
     write_ivf_index writes the corpus (whose job drops the top-level
     _SUCCESS) FIRST and ``_centroids/`` second — the overwrite of the
     index directory would wipe a pre-written centroid set, so the order
-    cannot flip. A kill between the two writes therefore leaves an
-    index that passes a bare top-level-_SUCCESS check but raises from
-    load_ivf_centroids (code-review r8); the centroid marker is written
+    cannot flip. A build stopped between the two writes therefore
+    leaves an index that passes a bare top-level-_SUCCESS check but
+    raises from load_ivf_centroids; the centroid marker is written
     last, so THIS is the authoritative completeness signal."""
     import os
 
@@ -309,110 +304,17 @@ def ivf_index_complete(index_path: str) -> bool:
     )
 
 
-def install_ivf_index(
-    corpus: DataFrame,
-    centroids: DataFrame,
-    index_path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    wait_s: float = 120.0,
-) -> str:
-    """Crash-safe, concurrency-safe build-and-install of an IVF index at
-    a SHARED path. Returns the path to SERVE FROM — normally
-    ``index_path``, but a complete pid-scoped build directory when the
-    shared path could not be (re)claimed, so a caller holding a complete
-    index never fails or discards it.
-
-    Protocol (absorbed three rounds of review findings as a query-local
-    special case; extracted r8 so every write_ivf_index caller gets it):
-      - build under a pid-scoped sibling, then one atomic os.rename in —
-        concurrent first-builds can't tear each other's files.
-      - if the rename loses (path occupied): complete index there → use
-        it; incomplete (a crashed build) → replace it under an
-        ``flock``-held lock file. flock is KERNEL-owned: it vanishes
-        with the holder on any death including SIGKILL, so there is no
-        orphaned-lock wedge, no staleness heuristic, and no
-        unlink-a-fresh-lock identity race (the failure classes of the
-        two O_EXCL designs that preceded this, code-review r8).
-      - the replace itself renames the stale dir ASIDE before renaming
-        ours in — the shared path is never observable half-deleted.
-      - a waiter polls completeness/acquisition up to ``wait_s``; if the
-        shared path never completes (live holder stuck, or pathological
-        races), it serves from its OWN complete build and leaves the
-        build directory in place.
-    """
-    import fcntl
-    import os
-    import shutil
-    import time
-
-    def _complete() -> bool:
-        return ivf_index_complete(index_path)
-
-    build_path = f"{index_path}.build{os.getpid()}"
-    write_ivf_index(corpus, centroids, build_path, id_col, vec_col)
-    try:
-        os.rename(build_path, index_path)
-        return index_path
-    except OSError:
-        pass
-    if _complete():
-        shutil.rmtree(build_path, ignore_errors=True)
-        return index_path
-    lock = index_path + ".replacelock"
-    deadline = time.monotonic() + wait_s
-    fd = os.open(lock, os.O_CREAT | os.O_WRONLY, 0o644)
-    try:
-        while time.monotonic() < deadline:
-            try:
-                fcntl.flock(fd, fcntl.LOCK_EX | fcntl.LOCK_NB)
-            except OSError:
-                # a LIVE process holds the replace lock (a dead one
-                # cannot — flock dies with its holder). Let it finish.
-                if _complete():
-                    shutil.rmtree(build_path, ignore_errors=True)
-                    return index_path
-                time.sleep(0.1)
-                continue
-            try:
-                if not _complete():
-                    tomb = f"{index_path}.stale{os.getpid()}"
-                    try:
-                        os.rename(index_path, tomb)
-                    except OSError:
-                        pass  # vanished — another winner replaced it
-                    else:
-                        shutil.rmtree(tomb, ignore_errors=True)
-                    try:
-                        os.rename(build_path, index_path)
-                    except OSError:
-                        pass  # lost a sub-lock race; fall through
-                if _complete():
-                    shutil.rmtree(build_path, ignore_errors=True)
-                    return index_path
-                # shared path unusable even under the lock — serve our
-                # own complete build rather than failing
-                return build_path
-            finally:
-                fcntl.flock(fd, fcntl.LOCK_UN)
-        # wait exhausted with a live holder that never completed: serve
-        # from our own complete build; never delete it
-        return build_path
-    finally:
-        os.close(fd)
-
-
 def load_ivf_centroids(spark, index_path: str) -> DataFrame:
     """The centroid set a materialized IVF index was built with (stored
-    by write_ivf_index). Raises with a rebuild hint on a pre-r8 index
-    that predates in-index centroids."""
+    by write_ivf_index). Raises with a rebuild hint on an index written
+    without in-index centroids, whose cell ids no stored set explains."""
     import os
 
     cpath = _centroids_path(index_path)
     if not os.path.exists(cpath):
         raise ValueError(
             f"IVF index at {index_path} has no stored centroids "
-            f"({IVF_CENTROIDS_DIR}/ missing — built by a pre-r8 "
+            f"({IVF_CENTROIDS_DIR}/ missing — not built by "
             "write_ivf_index?). Rebuild the index, or pass the exact "
             "build-time centroid frame explicitly."
         )
@@ -459,12 +361,12 @@ def ivf_topk_indexed(
     reuses the broadcast query side as the pruning subquery (no
     driver-side collect of cell ids needed).
 
-    ``centroids=None`` (default, r8) probes under the index's OWN stored
+    ``centroids=None`` (default) probes under the index's OWN stored
     centroid set (load_ivf_centroids) — the only set its cell ids are
     meaningful under. Passing a frame explicitly is the escape hatch for
-    pre-r8 indexes; a mismatched set probes the wrong cells and silently
-    returns wrong neighbors, which is exactly the hazard the stored set
-    removes."""
+    an index written without stored centroids; a mismatched set probes
+    the wrong cells and silently returns wrong neighbors, which is
+    exactly the hazard the stored set removes."""
     if centroids is None:
         centroids = load_ivf_centroids(spark, index_path)
     corpus = spark.read.parquet(index_path)
@@ -492,7 +394,7 @@ def lsh_topk_multiband(
     bucket) rows, then a single equi-join on (band_idx, bucket) against
     the identically-exploded query side yields the OR-of-bands candidate
     set — one scan + one narrow join instead of |bands| scans + a union
-    (r3 plan fix; at a 100 TB corpus the per-band rescans were the cost)."""
+    (at a 100 TB corpus per-band rescans would be the cost)."""
 
     def banded(df: DataFrame, key: str) -> DataFrame:
         buckets = F.array(
@@ -529,12 +431,7 @@ def lsh_topk_multiband(
             cosine(F.col(vec_col), F.col("__qvec")).alias("score"),
         )
     )
-    w = Window.partitionBy(query_id_col).orderBy(F.desc("score"), F.asc(id_col))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, "rank", id_col)
-    )
+    return _top_k(scored, query_id_col, id_col, k)
 
 
 def lsh_topk(
@@ -564,9 +461,4 @@ def lsh_topk(
         id_col,
         cosine(F.col(vec_col), F.col("__qvec")).alias("score"),
     )
-    w = Window.partitionBy(query_id_col).orderBy(F.desc("score"), F.asc(id_col))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, "rank", id_col)
-    )
+    return _top_k(scored, query_id_col, id_col, k)

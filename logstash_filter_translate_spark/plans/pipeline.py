@@ -77,6 +77,10 @@ COLLAB_DICT = [
 UNION_TEXT_DICT = [("200", "OK"), ("500", "Server Error")]
 
 
+#: header-field regexes scan only this prefix of the decoded html
+HEAD_WINDOW = 1024
+
+
 @dataclass
 class PipelineConfig:
     status_dict: List[Tuple[str, str]] = field(default_factory=lambda: STATUS_DICT)
@@ -85,8 +89,6 @@ class PipelineConfig:
     union_dict: List[Tuple[str, str]] = field(default_factory=lambda: UNION_TEXT_DICT)
     status_fallback: str = "unknown-status"
     collab_fallback: str = "unknown"
-    #: header-field regexes scan only this prefix of the decoded html
-    head_window: int = 1024
     #: external-crawl mode: html bytes may carry malformed UTF-8, so the
     #: parse stage decodes through html_str_untrusted (make_valid_utf8 —
     #: valid rows keep the zero-copy wrap, malformed rows get U+FFFD
@@ -104,7 +106,7 @@ def parse_stage(pages: DataFrame, cfg: PipelineConfig = PipelineConfig()) -> Dat
     # the <head> prefix window — meta tags live there by construction
     # (plans/pages.py template) and in practice near the top of real pages.
     s = pages.withColumn("__html_s", decode(F.col("html")))
-    head = F.substring(F.col("__html_s"), 1, cfg.head_window)
+    head = F.substring(F.col("__html_s"), 1, HEAD_WINDOW)
     return s.withColumns(
         {
             "extracted_text": extract_text_from_str(F.col("__html_s")),

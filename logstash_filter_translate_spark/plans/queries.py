@@ -154,16 +154,19 @@ def _pid_started_after(pid: int, ts: float) -> bool:
 _SCRATCH_REGISTERED: set = set()
 
 
-def _stream_scratch_dir(tag: str, sf_dir: str) -> str:
-    """Deterministic per-(query, input, process) scratch dir for the
-    streaming queries, wiped fresh on each invocation. os.getpid() in the
-    path keeps two concurrent bench/selfcheck processes from rmtree'ing
-    each other's in-flight sink/checkpoint; the pid suffix would
-    otherwise accumulate one dir per past run, so each call (a)
-    registers an atexit cleanup of its own dir — once per path, not per
-    call — and (b) sweeps stale siblings whose creator pid is dead OR
-    provably recycled (a live pid that started after the dir's mtime
-    cannot be its creator)."""
+def _scratch_dir(tag: str, sf_dir: str) -> str:
+    """Per-(query, input, process) scratch dir for the queries that write
+    files: the two streaming queries and the indexed IVF query. The dir
+    lives exactly as long as its process — nothing in it is shared with
+    another process or outlives this one — and is NOT wiped between
+    calls: a streaming call takes a fresh subdirectory of it, the IVF
+    query keeps its index at a fixed child. os.getpid() in the path keeps
+    two concurrent bench/selfcheck processes out of each other's files;
+    the pid suffix would otherwise accumulate one dir per past run, so
+    each call (a) registers an atexit cleanup of its own dir — once per
+    path, not per call — and (b) sweeps stale siblings whose creator pid
+    is dead OR provably recycled (a live pid that started after the
+    dir's mtime cannot be its creator)."""
     import atexit
     import hashlib
     import shutil
@@ -196,8 +199,7 @@ def _stream_scratch_dir(tag: str, sf_dir: str) -> str:
     except OSError:
         pass
     path = os.path.join(base, f"{prefix}{os.getpid()}")
-    shutil.rmtree(path, ignore_errors=True)
-    os.makedirs(path)
+    os.makedirs(path, exist_ok=True)
     if path not in _SCRATCH_REGISTERED:
         _SCRATCH_REGISTERED.add(path)
         atexit.register(shutil.rmtree, path, ignore_errors=True)
@@ -2452,9 +2454,10 @@ def q_similarity_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_similarity_ivf_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The materialized-index IVF plane end-to-end: build the
-    cell-partitioned index (write_ivf_index — the amortized 100 TB pass),
-    then serve the same queries from it (ivf_topk_indexed; dynamic
-    partition pruning restricts the scan to probed cells). Same oracle as
+    cell-partitioned index (write_ivf_index — the amortized 100 TB pass)
+    once per process, then serve the same queries from it
+    (ivf_topk_indexed; dynamic partition pruning restricts the scan to
+    probed cells). Same oracle as
     similarity_ivf — the index is a layout, not a semantic change. The
     serve side probes under the index's OWN stored centroids
     (centroids=None → load_ivf_centroids), exercising the
@@ -2462,10 +2465,9 @@ def q_similarity_ivf_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     side scan the _centroids parquet, not re-filter the embeddings
     table."""
     from ..operators.similarity import (
-        IVF_INDEX_FORMAT_VERSION,
-        install_ivf_index,
         ivf_index_complete,
         ivf_topk_indexed,
+        write_ivf_index,
     )
 
     emb = _load(spark, sf_dir, "embeddings")
@@ -2473,42 +2475,14 @@ def q_similarity_ivf_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries = emb.filter(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    # the index is a deterministic function of the input CONTENT — key the
-    # cache on a fingerprint of the embeddings parquet (path + mtime + size),
-    # not the path alone, so a regenerated dataset at the same path rebuilds
-    # instead of silently serving the stale corpus
-    import hashlib
-    import tempfile
-
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    stats = []
-    if os.path.isdir(src):
-        for root, _, files in os.walk(src):
-            for f in sorted(files):
-                st = os.stat(os.path.join(root, f))
-                stats.append(f"{f}:{st.st_mtime_ns}:{st.st_size}")
-    elif os.path.exists(src):
-        st = os.stat(src)
-        stats.append(f"{st.st_mtime_ns}:{st.st_size}")
-    # the format version is part of the key: the fingerprint otherwise
-    # only tracks SOURCE content, and a cached pre-upgrade index (no
-    # stored _centroids) would be served to post-upgrade code
-    suffix = hashlib.md5(
-        "|".join(
-            [f"v{IVF_INDEX_FORMAT_VERSION}", sf_dir] + stats
-        ).encode()
-    ).hexdigest()[:12]
-    index_path = os.path.join(
-        tempfile.gettempdir(), f"lfts_ivf_idx_{suffix}"
-    )
+    # the index lives at a fixed child of this process's scratch dir: the
+    # first call builds it, later calls in the same process serve from it
+    # (the build costs more than a serve, so rebuilding per call would
+    # time the build). A build that stopped between its two writes is
+    # incomplete and is overwritten here.
+    index_path = os.path.join(_scratch_dir("ivf", sf_dir), "index")
     if not ivf_index_complete(index_path):
-        # crash-safe + concurrency-safe build/install (selfcheck, pytest
-        # and bench race first-builds of the SAME cached index): the
-        # flock-based protocol lives next to the index format it guards
-        # (operators/similarity.py::install_ivf_index). It returns the
-        # path to serve from: the shared path normally, this process's
-        # own complete build if the shared path could not be claimed.
-        index_path = install_ivf_index(emb, centroids, index_path)
+        write_ivf_index(emb, centroids, index_path)
     return ivf_topk_indexed(spark, index_path, queries, k=5)
 
 
@@ -2721,10 +2695,11 @@ def q_streaming_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate the routed sink. Must equal the batch oracle exactly —
     streaming and batch planes are the same logical plan."""
     import os
+    import tempfile
 
     from ..streaming.refresh import StreamingTranslate, run_streaming_pipeline
 
-    tmp = _stream_scratch_dir("stream_q", sf_dir)
+    tmp = tempfile.mkdtemp(dir=_scratch_dir("stream_q", sf_dir))
     st = StreamingTranslate(
         TranslateConfig(
             source="event_type",
@@ -2746,9 +2721,7 @@ def q_streaming_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
     stream = spark.readStream.schema(schema).parquet(src_dir)
-    q = run_streaming_pipeline(
-        spark, stream, st, tmp, f"{tmp}/ckpt", partition_cols=("route",)
-    )
+    q = run_streaming_pipeline(spark, stream, st, tmp, f"{tmp}/ckpt")
     if not q.awaitTermination(300):
         q.stop()
         raise TimeoutError("streaming_exact: availableNow query exceeded 300s")
@@ -2852,10 +2825,11 @@ def q_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch exact_dedup exactly (same oracle — streaming and batch planes
     are the same logical aggregation)."""
     import os
+    import tempfile
 
     from ..streaming.refresh import run_streaming_dedup
 
-    tmp = _stream_scratch_dir("stream_dedup", sf_dir)
+    tmp = tempfile.mkdtemp(dir=_scratch_dir("stream_dedup", sf_dir))
     src_dir = os.path.join(tmp, "src")
     os.makedirs(src_dir, exist_ok=True)
     os.symlink(

@@ -21,7 +21,6 @@ from __future__ import annotations
 import os
 import shutil
 import time
-from typing import Callable, Optional
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -61,18 +60,16 @@ def run_streaming_pipeline(
     st: StreamingTranslate,
     out_dir: str,
     checkpoint_dir: str,
-    partition_cols: tuple = ("route",),
-    post: Optional[Callable[[DataFrame], DataFrame]] = None,
-    trigger_once: bool = True,
     refresh_every_batch: bool = False,
 ):
     """source_df: a streaming DataFrame (readStream). Writes routed parquet
-    fan-out per micro-batch (partitioned ``__batch_id/route[/...]``, each
+    fan-out per micro-batch (partitioned ``__batch_id/route``, each
     batch a dynamic-overwrite of its own partitions → replay-idempotent);
     refreshes the dictionary between batches.
 
-    Returns the StreamingQuery. ``trigger_once`` processes available data
-    then stops (the batch-equivalent mode used in tests and backfills).
+    Returns the StreamingQuery. It runs with the availableNow trigger:
+    it processes the data available at start, then stops (the
+    batch-equivalent mode of tests, backfills and the contract query).
     """
 
     def handle_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -81,13 +78,11 @@ def run_streaming_pipeline(
         else:
             st.maybe_refresh()
         out = st.apply(batch_df)
-        if post is not None:
-            out = post(out)
         # idempotent replay: __batch_id leads the partition spec and the
         # write is a DYNAMIC partition overwrite, so a restarted in-flight
         # batch rewrites exactly its own partitions instead of appending a
         # duplicate copy (no reader-side dedup needed). Dynamic overwrite
-        # alone is NOT enough (code-review r7): it only replaces partitions
+        # alone is NOT enough: it only replaces partitions
         # PRESENT in the retry, so a route that existed in the failed
         # attempt but routes differently after a between-attempt dictionary
         # refresh would leave its stale sub-partition behind — drop the
@@ -100,18 +95,17 @@ def run_streaming_pipeline(
             out.withColumn("__batch_id", F.lit(batch_id))
             .write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("__batch_id", *partition_cols)
+            .partitionBy("__batch_id", "route")
             .parquet(routed)
         )
 
-    writer = (
+    return (
         source_df.writeStream.foreachBatch(handle_batch)
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
     )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def streaming_exact_dedup(

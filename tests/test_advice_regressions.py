@@ -189,10 +189,10 @@ def test_iterate_maps_explode_plane_fallback_field_reference(spark):
 
 
 def test_scratch_dir_reclaims_recycled_pid_dirs_and_dedups_atexit(tmp_path, monkeypatch):
-    """r5 advice: (a) a live pid that STARTED AFTER a stale sibling dir's
-    mtime is a recycled pid, not the creator — the dir must be reclaimed;
-    (b) re-entering the same (tag, sf_dir) must not stack duplicate
-    atexit handlers."""
+    """The per-process scratch dir: (a) a live pid that STARTED AFTER a
+    stale sibling dir's mtime is a recycled pid, not the creator — the
+    dir must be reclaimed; (b) re-entering the same (tag, sf_dir) must
+    not stack duplicate atexit handlers."""
     import os
     import time as _time
 
@@ -223,8 +223,8 @@ def test_scratch_dir_reclaims_recycled_pid_dirs_and_dedups_atexit(tmp_path, monk
         sib_dead.mkdir()
 
         before = len(Q._SCRATCH_REGISTERED)
-        p1 = Q._stream_scratch_dir("t", "/some/sf")
-        p2 = Q._stream_scratch_dir("t", "/some/sf")
+        p1 = Q._scratch_dir("t", "/some/sf")
+        p2 = Q._scratch_dir("t", "/some/sf")
         assert p1 == p2
         assert len(Q._SCRATCH_REGISTERED) == before + 1  # one handler
         assert not sib_dead.exists()  # dead-pid sibling reclaimed

@@ -234,112 +234,62 @@ def test_ivf_index_self_describing_and_incremental_append(spark, tmp_path):
         append_ivf_index(spark, emb.limit(5), bare)
 
 
-def test_install_ivf_index_replaces_crashed_leftover_and_is_reentrant(
-    spark, tmp_path
+def test_ivf_indexed_query_reuses_its_process_index_and_rebuilds_incomplete(
+    spark, testdata_dir, tmp_path, monkeypatch
 ):
-    """install_ivf_index (r8, extracted from the contract query after
-    three rounds of review fixes): a fresh install lands at the shared
-    path; an INCOMPLETE leftover (a crashed build: corpus _SUCCESS
-    present, _centroids missing — exactly what a kill between the two
-    writes leaves) is tomb-replaced under the flock; a re-install over a
-    complete index is a no-op that serves the existing one. The lock is
-    an flock, so a SIGKILLed holder releases it automatically — no
-    staleness heuristic exists to misfire."""
-    import os
-    import random
+    """The contract query keeps its index in this process's scratch dir:
+    the first call builds it, a second call in the same process writes no
+    index file, and an INCOMPLETE index left there (corpus _SUCCESS
+    present, _centroids missing — a build stopped between its two
+    writes) is rebuilt on the next call, with the results of a fresh
+    build. Nothing is written outside the pid-scoped scratch dir."""
+    import shutil
+    import tempfile
 
     from logstash_filter_translate_spark.operators.similarity import (
-        install_ivf_index,
         ivf_index_complete,
-        ivf_topk_indexed,
     )
+    from logstash_filter_translate_spark.plans import queries as Q
 
-    rnd = random.Random(7)
-    rows = [(i, [rnd.uniform(-1, 1) for _ in range(16)]) for i in range(200)]
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    centroids = emb.filter("vec_id % 50 = 0")
-    queries = emb.filter("vec_id < 2").select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-
-    path = str(tmp_path / "shared_idx")
-    # fresh install: atomic rename path
-    served = install_ivf_index(emb, centroids, path)
-    assert served == path and ivf_index_complete(path)
-    expect = sorted(
-        map(tuple, ivf_topk_indexed(spark, served, queries, k=3).collect())
-    )
-
-    # crashed-leftover replace path: fake a build killed between the
-    # corpus write and the centroid write (top-level _SUCCESS, no
-    # _centroids), then install over it
-    crashed = str(tmp_path / "crashed_idx")
-    emb.limit(20).withColumn("cell", F.lit(0)).write.partitionBy(
-        "cell"
-    ).parquet(crashed)
-    assert os.path.exists(os.path.join(crashed, "_SUCCESS"))
-    assert not ivf_index_complete(crashed)
-    served2 = install_ivf_index(emb, centroids, crashed)
-    assert served2 == crashed and ivf_index_complete(crashed)
-    got = sorted(
-        map(tuple, ivf_topk_indexed(spark, served2, queries, k=3).collect())
-    )
-    assert got == expect
-
-    # re-entrant over a complete index: no replace, same results
-    served3 = install_ivf_index(emb, centroids, crashed)
-    assert served3 == crashed
-    assert not [
-        p for p in os.listdir(str(tmp_path)) if ".build" in p
-    ], "build dirs must be cleaned when the shared path is served"
-
-
-def test_install_ivf_index_serves_own_build_under_live_contention(
-    spark, tmp_path
-):
-    """The live-holder fallback, deterministically: while another
-    open-file-description holds the replace flock (flock conflicts
-    across fds, so the test can play the live holder) and the shared
-    path stays incomplete, install_ivf_index must neither wedge nor
-    discard its work — it times out and serves its OWN complete
-    pid-scoped build, which answers queries correctly."""
-    import fcntl
-    import os
-    import random
-
-    from logstash_filter_translate_spark.operators.similarity import (
-        install_ivf_index,
-        ivf_index_complete,
-        ivf_topk_indexed,
-    )
-
-    rnd = random.Random(13)
-    rows = [(i, [rnd.uniform(-1, 1) for _ in range(16)]) for i in range(120)]
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    centroids = emb.filter("vec_id % 40 = 0")
-    queries = emb.filter("vec_id < 2").select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-
-    path = str(tmp_path / "contended_idx")
-    # incomplete leftover occupies the shared path (forces the lock path)
-    emb.limit(10).withColumn("cell", F.lit(0)).write.partitionBy(
-        "cell"
-    ).parquet(path)
-    holder = os.open(path + ".replacelock", os.O_CREAT | os.O_WRONLY, 0o644)
-    fcntl.flock(holder, fcntl.LOCK_EX)
+    monkeypatch.setenv("TMPDIR", str(tmp_path))
+    tempfile.tempdir = None  # force re-read of TMPDIR
     try:
-        served = install_ivf_index(
-            emb, centroids, path, wait_s=3.0
-        )
-        assert served != path and served.startswith(path + ".build")
-        assert ivf_index_complete(served)
-        assert not ivf_index_complete(path)  # untouched while held
-        got = ivf_topk_indexed(spark, served, queries, k=3)
-        assert got.count() == 6  # 2 queries x k=3 over a real index
+        def run():
+            return sorted(
+                map(tuple, Q.q_similarity_ivf_indexed(spark, testdata_dir).collect())
+            )
+
+        def files(root):
+            return {
+                os.path.join(d, f): os.stat(os.path.join(d, f)).st_mtime_ns
+                for d, _, fs in os.walk(root)
+                for f in fs
+            }
+
+        fresh = run()
+        scratch = Q._scratch_dir("ivf", testdata_dir)
+        assert scratch.endswith(f"_{os.getpid()}")
+        assert os.listdir(tmp_path) == [os.path.basename(scratch)]
+        index = os.path.join(scratch, "index")
+        assert ivf_index_complete(index)
+        built = files(index)
+
+        assert run() == fresh
+        assert files(index) == built  # served, not rewritten
+
+        shutil.rmtree(index)
+        emb = spark.read.parquet(os.path.join(testdata_dir, "embeddings.parquet"))
+        emb.limit(10).withColumn("cell", F.lit(0)).write.partitionBy(
+            "cell"
+        ).parquet(index)
+        assert os.path.exists(os.path.join(index, "_SUCCESS"))
+        assert not ivf_index_complete(index)
+
+        assert run() == fresh
+        assert ivf_index_complete(index)
+        assert os.listdir(tmp_path) == [os.path.basename(scratch)]
     finally:
-        fcntl.flock(holder, fcntl.LOCK_UN)
-        os.close(holder)
+        tempfile.tempdir = None
 
 
 def test_lsh_planes_match_the_embedding_width(spark, testdata_dir):
