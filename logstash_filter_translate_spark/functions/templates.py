@@ -170,24 +170,19 @@ def _field_to_column(name: str) -> Column:
 
 def compile_sprintf(
     template: str,
-    columns: Optional[List[str]] = None,
     ts_col: str = DEFAULT_TS_COL,
     schema: Optional[T.StructType] = None,
 ) -> Column:
     """Compile a sprintf template to a Column.
 
-    ``columns`` — when given (the DataFrame's column names), references to
-    columns not in it resolve to the literal ``%{name}`` (Logstash leaves
-    missing fields un-spliced) instead of an analysis error. ``schema`` —
-    when given, the FULL nested path is checked (``%{[a][missing]}`` with
-    column ``a`` present degrades to the literal instead of an
-    AnalysisException; a top-level-only check cannot see inside
-    structs). ``%{+FORMAT}`` time references format
+    ``schema`` — when given (the frame's schema), a reference whose FULL
+    nested path is absent resolves to the literal ``%{name}`` (Logstash
+    leaves missing fields un-spliced) instead of an AnalysisException:
+    ``%{[a][missing]}`` with column ``a`` present degrades too, which a
+    top-level-only check cannot see. ``%{+FORMAT}`` time references format
     ``ts_col`` (the frame's event-time column); they too degrade to the
     literal when that column is absent.
     """
-    if schema is not None and columns is None:
-        columns = list(schema.names)
     pieces: List[Column] = []
     pos = 0
     for m in _FIELD_REF.finditer(template):
@@ -195,18 +190,11 @@ def compile_sprintf(
             pieces.append(F.lit(template[pos : m.start()]))
         name = m.group(1)
         if name.startswith("+"):
-            if columns is not None and ts_col not in columns:
+            if schema is not None and ts_col not in schema.names:
                 pieces.append(F.lit(m.group(0)))
             else:
                 pieces.append(_time_ref_column(name[1:], ts_col, m.group(0)))
-            pos = m.end()
-            continue
-        path = parse_path(name)
-        if schema is not None:
-            missing = path_type(schema, path) is None
-        else:
-            missing = columns is not None and path[0] not in columns
-        if missing:
+        elif schema is not None and path_type(schema, parse_path(name)) is None:
             pieces.append(F.lit(m.group(0)))
         else:
             pieces.append(

@@ -295,9 +295,9 @@ def langid_scores(
 # PII redaction (training-data scrub)
 # ---------------------------------------------------------------------------
 
-#: default redaction rules: (pattern, replacement-token). Patterns stay in
-#: the Java-regex ∩ RE2 common subset so the DuckDB oracle states the same
-#: substitution; extend per deployment (SSNs, IBANs, ...).
+#: the redaction rules: (pattern, replacement-token), applied in order.
+#: Patterns stay in the Java-regex ∩ RE2 common subset so the DuckDB oracle
+#: states the same substitution.
 PII_RULES: List[Tuple[str, str]] = [
     (r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}", "<EMAIL>"),
     (r"\+[0-9]{1,3}-[0-9]{3}-[0-9]{3,10}", "<PHONE>"),
@@ -305,22 +305,20 @@ PII_RULES: List[Tuple[str, str]] = [
 ]
 
 
-def redact(col: Column, rules: List[Tuple[str, str]] = PII_RULES) -> Column:
-    """Replace every occurrence of every rule pattern with its token — the
-    standard pre-training PII scrub, as a whole-stage-codegen
+def redact(col: Column) -> Column:
+    """Replace every occurrence of every ``PII_RULES`` pattern with its
+    token — the standard pre-training PII scrub, as a whole-stage-codegen
     ``regexp_replace`` chain (one pass per rule, JVM-side, no Python).
     Rule order matters: earlier rules consume their text first (an email
     is redacted before the IP rule could see its host part)."""
     out = col
-    for pattern, token in rules:
+    for pattern, token in PII_RULES:
         out = F.regexp_replace(out, pattern, token)
     return out
 
 
-def redaction_counts(
-    col: Column, rules: List[Tuple[str, str]] = PII_RULES
-) -> List[Column]:
-    """Per-rule match counts (audit metric for the scrub) — codegen
+def redaction_counts(col: Column) -> List[Column]:
+    """Per-rule (``PII_RULES``) match counts (audit metric for the scrub) — codegen
     ``regexp_count``. Each rule is counted against the text with all EARLIER
     rules already applied (the same chaining ``redact`` uses), so counts
     equal actual substitutions even when rule matches overlap — e.g. an
@@ -328,7 +326,7 @@ def redaction_counts(
     consumed first is not double-counted."""
     out: List[Column] = []
     cur = col
-    for pattern, token in rules:
+    for pattern, token in PII_RULES:
         out.append(F.regexp_count(cur, F.lit(pattern)))
         cur = F.regexp_replace(cur, pattern, token)
     return out

@@ -66,11 +66,16 @@ def decode_image_stub(content: bytes) -> dict:
     }
 
 
-def extract_image_features(
-    media: DataFrame, thumb: int = 8, feature_dim: int = 16
-) -> DataFrame:
-    """decode → resize(thumbnail) → feature vector, one Arrow batch at a
-    time. Output is narrow (binary projected away)."""
+#: longest side of the thumbnail, in pixels
+THUMB = 8
+#: length of the feature vector (one sha1 nibble per element)
+FEATURE_DIM = 16
+
+
+def extract_image_features(media: DataFrame) -> DataFrame:
+    """decode → resize(``THUMB`` thumbnail) → ``FEATURE_DIM`` feature
+    vector, one Arrow batch at a time. Output is narrow (binary projected
+    away)."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -80,10 +85,10 @@ def extract_image_features(
                     continue
                 b = bytes(content)
                 d = decode_image_stub(b)
-                scale = max(d["width"], d["height"]) / thumb or 1
+                scale = max(d["width"], d["height"]) / THUMB or 1
                 # deterministic fake feature: normalized sha1 nibbles
                 feat = [
-                    int(d["sha1"][i], 16) / 15.0 for i in range(feature_dim)
+                    int(d["sha1"][i], 16) / 15.0 for i in range(FEATURE_DIM)
                 ]
                 rows.append(
                     {

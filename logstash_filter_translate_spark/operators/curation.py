@@ -16,7 +16,7 @@ be reproducible bit-for-bit across engines and reruns.
 
 from __future__ import annotations
 
-from typing import Dict, List, Optional
+from typing import Dict, Optional
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -200,7 +200,6 @@ def token_budget_mix(
     budgets: Dict[str, int],
     id_col: str,
     text_col: str,
-    default_budget: int = 0,
     upsample: bool = False,
 ) -> DataFrame:
     """Training-mix draw to per-stratum TOKEN budgets: compute each
@@ -210,7 +209,7 @@ def token_budget_mix(
     at 10000). This is how a real mixture is specified — "20B tokens of
     code, 5B of forums" — rather than by document-count rates; a stratum
     whose budget exceeds its supply is kept whole, one absent from
-    ``budgets`` falls back to ``default_budget`` (0 = dropped).
+    ``budgets`` gets budget 0 and is dropped.
 
     All threshold arithmetic is INTEGER (budget·10000 exact, bigint
     ``div`` truncation == floor for non-negative operands), so Spark and
@@ -244,7 +243,7 @@ def token_budget_mix(
     """
     toks = token_count(F.col(text_col))
     tot = df.groupBy(strata_col).agg(F.sum(toks).alias("__tot"))
-    budget = F.lit(int(default_budget)).cast("long")
+    budget = F.lit(0).cast("long")
     for stratum, b in sorted(budgets.items()):
         budget = F.when(
             F.col(strata_col) == stratum, F.lit(int(b)).cast("long")
@@ -417,10 +416,8 @@ def hashed_linear_score(
     id_col: str,
     *,
     buckets: int = 1 << 18,
-    seed: str = "quality",
     weights: Optional[DataFrame] = None,
     threshold_milli: int = 0,
-    broadcast_weights: bool = True,
 ) -> DataFrame:
     """Hashed bag-of-words linear classifier inference — the
     fastText-style learned quality filter every production curation
@@ -441,20 +438,19 @@ def hashed_linear_score(
 
     Two weight planes:
       - ``weights=None`` (deterministic): bucket weight is a pure hash
-        function, ``hash32(seed||'|'||bucket) % 2001 - 1000`` in
+        function, ``hash32('quality|'||bucket) % 2001 - 1000`` in
         [-1000, 1000] milli — the sandbox stand-in with the REAL plan
         shape; a deployment swaps in trained weights without touching
         the plan below;
       - ``weights`` = a ``(bucket, weight_milli)`` DataFrame (a trained
-        model exported as a table, <= ``buckets`` rows): LEFT-joined
-        onto the exploded tokens — broadcast by default (a 2^18-bucket
-        model is a few MB), ``broadcast_weights=False`` for the
-        merge-hinted shuffle plane when the model side can't be trusted
-        to fit (same convention as the other beyond-broadcast planes).
-        Unseen buckets score 0. Duplicate bucket rows (a malformed
-        export) are normalized to one row per bucket (max weight,
-        deterministic) BEFORE the join — fan-out would corrupt
-        ``n_tokens``, not just the score.
+        model exported as a table): LEFT-joined onto the exploded tokens
+        as a broadcast. Only rows with ``0 <= bucket < buckets`` are
+        kept — no token hashes anywhere else, so the filter changes no
+        score and bounds the broadcast side to ``buckets`` rows (a
+        2^18-bucket model is a few MB). Unseen buckets score 0.
+        Duplicate bucket rows (a malformed export) are normalized to one
+        row per bucket (max weight, deterministic) BEFORE the join —
+        fan-out would corrupt ``n_tokens``, not just the score.
 
     Plan at 100 TB: explode tokens → codegen md5 bucket/weight →
     groupBy(id) with map-side partial aggregation — ONE exchange keyed
@@ -472,7 +468,7 @@ def hashed_linear_score(
     )
     if weights is None:
         w = F.pmod(
-            hash32(F.concat(F.lit(seed + "|"), bucket.cast("string"))),
+            hash32(F.concat(F.lit("quality|"), bucket.cast("string"))),
             F.lit(2001),
         ) - F.lit(1000)
         scored = ex.select(F.col(id_col), w.alias("__w"))
@@ -481,21 +477,20 @@ def hashed_linear_score(
         # model export with duplicate bucket rows would otherwise fan
         # out every token hashing there — corrupting n_tokens, not just
         # the score. max() is the deterministic resolution; the model
-        # side is small, so the extra exchange is noise. The dunder key avoids colliding with an id_col named
-        # "bucket" (same reason the other temps are __-prefixed).
+        # side is small, so the extra exchange is noise. The dunder key
+        # avoids colliding with an id_col named "bucket" (same reason the
+        # other temps are __-prefixed).
         wt = (
             weights.select(
                 F.col("bucket").cast("long").alias("__bucket"),
                 F.col("weight_milli").cast("long").alias("__wm"),
             )
+            .filter(F.col("__bucket").between(0, int(buckets) - 1))
             .groupBy("__bucket")
             .agg(F.max("__wm").alias("__wm"))
         )
         b = ex.select(F.col(id_col), bucket.alias("__bucket"))
-        if broadcast_weights:
-            j = b.join(F.broadcast(wt), "__bucket", "left")
-        else:
-            j = b.hint("merge").join(wt, "__bucket", "left")
+        j = b.join(F.broadcast(wt), "__bucket", "left")
         scored = j.select(
             F.col(id_col),
             F.coalesce(F.col("__wm"), F.lit(0)).alias("__w"),
@@ -520,7 +515,6 @@ def chunk_documents(
     chunk_tokens: int = 256,
     stride: Optional[int] = None,
     min_tokens: int = 1,
-    joiner: str = " ",
 ) -> DataFrame:
     """Sliding-window document chunking — the embedding/RAG prep stage:
     split every document into ``chunk_tokens``-token windows whose starts
@@ -528,7 +522,8 @@ def chunk_documents(
     adjacent chunks so no span is ever cut mid-context; the default
     ``stride = chunk_tokens`` tiles). Returns one row per chunk:
     ``(id_col, chunk_id, n_tokens, chunk_text)`` with ``chunk_id`` the
-    0-based window ordinal — deterministic, so a rerun or a downstream
+    0-based window ordinal and ``chunk_text`` its tokens joined by single
+    spaces — deterministic, so a rerun or a downstream
     embedding join keys on ``(id, chunk_id)`` stably. The tail window may
     be shorter than ``chunk_tokens``; windows with fewer than
     ``min_tokens`` tokens are dropped (a 1-token tail embeds nothing
@@ -560,6 +555,6 @@ def chunk_documents(
         F.col(id_col),
         F.col("__cid").alias("chunk_id"),
         F.size(chunk).alias("n_tokens"),
-        F.concat_ws(joiner, chunk).alias("chunk_text"),
+        F.concat_ws(" ", chunk).alias("chunk_text"),
     )
     return out.filter(F.col("n_tokens") >= int(min_tokens))

@@ -19,7 +19,7 @@ Scale notes (the 100 TB story):
 
 from __future__ import annotations
 
-from typing import List, Optional
+from typing import List, Optional, Tuple
 
 from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
@@ -664,10 +664,9 @@ def incremental_near_dup_keep(
 #: so billions of members at 10^10 docs) forces the shuffle plane.
 BROADCAST_MEMBER_LIMIT = 10_000_000
 
-#: diagnostic: iterations the last connected_components call took to
-#: reach its fixpoint (driver-side scalar; set on success). Lets tests
-#: report convergence rounds without changing the function's return type.
-LAST_CC_ITERATIONS = 0
+#: rounds without a fixpoint after which connected_components raises
+#: rather than return silently-unmerged components
+CC_MAX_ITERATIONS = 50
 
 #: rounds after which connected_components adds pointer jumping:
 #: dedup-shaped near-dup graphs fixpoint in 3-5 rounds, so a graph still
@@ -682,7 +681,6 @@ def connected_components(
     nodes: DataFrame,
     edges: DataFrame,
     id_col: str = "id",
-    max_iterations: int = 50,
     broadcast_member_limit: int = BROADCAST_MEMBER_LIMIT,
 ) -> DataFrame:
     """(id, component) for every node, where component = the MIN node id
@@ -742,13 +740,17 @@ def connected_components(
         never a separate new-vs-old join/count job. Only the scalar
         reaches the driver.
 
-    Raises after ``max_iterations`` without a fixpoint rather than
-    returning silently-unmerged components.
+    Raises after ``CC_MAX_ITERATIONS`` rounds without a fixpoint rather
+    than returning silently-unmerged components.
     """
-    global LAST_CC_ITERATIONS
-    # reset at entry so a raise below can't leave a PREVIOUS call's
-    # convergence count attributed to this one
-    LAST_CC_ITERATIONS = 0
+    return _connected_components(nodes, edges, id_col, broadcast_member_limit)[0]
+
+
+def _connected_components(
+    nodes: DataFrame, edges: DataFrame, id_col: str, broadcast_member_limit: int
+) -> Tuple[DataFrame, int]:
+    """:func:`connected_components` and the number of rounds it took to
+    reach its fixpoint."""
     sym = (
         edges.select(F.col("id_a").alias("__src"), F.col("id_b").alias("__dst"))
         .unionByName(
@@ -795,11 +797,14 @@ def connected_components(
     # size-gate the singleton-re-entry broadcast on the MEASURED member
     # count (observed on the init job above — free)
     members_fit = (obs.get["members"] or 0) <= broadcast_member_limit
-    if changed == 0:
-        LAST_CC_ITERATIONS = 1
-    for iteration in range(2, max_iterations + 1):
-        if LAST_CC_ITERATIONS:
-            break
+    iteration = 1
+    while changed:
+        iteration += 1
+        if iteration > CC_MAX_ITERATIONS:
+            raise RuntimeError(
+                f"connected_components: no fixpoint in {CC_MAX_ITERATIONS} "
+                "iterations (component diameter exceeds the bound)"
+            )
         neigh = sym.join(
             labels.withColumnRenamed("__node", "__dst"), "__dst"
         ).select(
@@ -862,14 +867,6 @@ def connected_components(
         )
         changed = obs.get["changed"] or 0  # sum over 0 rows is NULL
         labels = new_labels
-        if changed == 0:
-            LAST_CC_ITERATIONS = iteration
-            break
-    if not LAST_CC_ITERATIONS:
-        raise RuntimeError(
-            f"connected_components: no fixpoint in {max_iterations} "
-            "iterations (component diameter exceeds the bound)"
-        )
     # singleton re-entry: anti-join the corpus against the member set.
     # Broadcast-hinted only when the gate above said the measured member
     # count fits (checkpointed RDD stats are unknown to
@@ -890,11 +887,10 @@ def connected_components(
         id_col,
         "left_anti",
     ).select(F.col(id_col), F.col(id_col).alias("component"))
-    return (
-        labels.select(
-            F.col("__node").alias(id_col), F.col("__comp").alias("component")
-        ).unionByName(singles)
-    )
+    out = labels.select(
+        F.col("__node").alias(id_col), F.col("__comp").alias("component")
+    ).unionByName(singles)
+    return out, iteration
 
 
 # ---------------------------------------------------------------------------
@@ -1036,14 +1032,13 @@ def remove_duplicate_spans(
     id_col: str,
     span_words: int = 5,
     min_docs: int = 2,
-    joiner: str = " ",
 ) -> DataFrame:
     """Exact-substring duplicate-SPAN removal (Lee et al. 2022,
     "Deduplicating Training Data Makes Language Models Better"): every
     word covered by an OVERLAPPING ``span_words``-gram that occurs in at
     least ``min_docs`` distinct documents is deleted, and each document
-    reassembles from its surviving words in original order. Returns
-    ``(id_col, clean_text)``; documents whose every word sat inside a
+    reassembles from its surviving words, space-joined in original order.
+    Returns ``(id_col, clean_text)``; documents whose every word sat inside a
     duplicated span drop out, as do empty documents.
 
     This is the sliding-window complement of
@@ -1126,10 +1121,10 @@ def remove_duplicate_spans(
         lambda j: ~F.exists(fl, lambda p: (p <= j) & (j < p + F.lit(k))),
     )
     clean = F.when(
-        fl.isNull(), F.concat_ws(joiner, "__toks")
+        fl.isNull(), F.concat_ws(" ", "__toks")
     ).otherwise(
         F.concat_ws(
-            joiner,
+            " ",
             F.transform(kept_positions, lambda j: F.element_at("__toks", j)),
         )
     )

@@ -148,10 +148,10 @@ def _uniform_list_type(pairs: Pairs) -> Optional[T.DataType]:
 
 def infer_value_type(
     pairs: Pairs, nested: str = "json"
-) -> Tuple[T.DataType, Callable[[Any], Any], bool]:
+) -> Tuple[T.DataType, Callable[[Any], Any]]:
     """Infer a single Spark type for the dictionary's value column.
 
-    Returns (spark_type, python_converter, values_are_json).
+    Returns (spark_type, python_converter).
     Homogeneous scalar types map directly (CSV stays string, JSON ints stay
     long — translate_spec.rb:359-379). Non-uniform or nested values:
 
@@ -168,40 +168,32 @@ def infer_value_type(
         _scalar_kind(v) for _, v in pairs if v is not None
     }
     if not kinds or kinds == {"str"}:
-        return T.StringType(), lambda v: v, False
+        return T.StringType(), lambda v: v
     if kinds == {"bool"}:
-        return T.BooleanType(), lambda v: v, False
+        return T.BooleanType(), lambda v: v
     if kinds == {"int"}:
-        return T.LongType(), lambda v: v, False
+        return T.LongType(), lambda v: v
     if kinds <= {"int", "float"}:
-        return T.DoubleType(), lambda v: float(v) if v is not None else None, False
+        return T.DoubleType(), lambda v: float(v) if v is not None else None
     if nested == "typed":
         arr = _uniform_list_type(pairs)
         if arr is not None:
             if isinstance(arr.elementType, T.DoubleType):
                 # mixed int/float lists widen to array<double>; Python ints
                 # must be coerced or createDataFrame's schema verification
-                # rejects them at plan time (round-2 advice)
-                return (
-                    arr,
-                    lambda v: (
-                        [None if e is None else float(e) for e in v]
-                        if v is not None
-                        else None
-                    ),
-                    False,
+                # rejects them at plan time
+                return arr, lambda v: (
+                    [None if e is None else float(e) for e in v]
+                    if v is not None
+                    else None
                 )
-            return arr, lambda v: list(v) if v is not None else None, False
-        return (
-            T.VariantType(),
-            lambda v: json.dumps(v, ensure_ascii=False) if v is not None else None,
-            False,
-        )
-    return (
-        T.StringType(),
-        lambda v: json.dumps(v, ensure_ascii=False) if v is not None else None,
-        True,
-    )
+            return arr, lambda v: list(v) if v is not None else None
+        return T.VariantType(), _to_json
+    return T.StringType(), _to_json
+
+
+def _to_json(v: Any) -> Optional[str]:
+    return json.dumps(v, ensure_ascii=False) if v is not None else None
 
 
 def lookup_result_type(value_type: T.DataType) -> T.StructType:
@@ -280,13 +272,11 @@ def _arrow_udfs(value_type: T.DataType, build: Callable[[], Any], lookup_one):
 
 
 class LookupStrategy:
-    """Base of the probe contract (module docstring). ``value_type`` /
-    ``values_are_json`` describe the value column. The defaults suit an
-    elementwise plane, which only implements ``probe``."""
+    """Base of the probe contract (module docstring). ``value_type``
+    describes the value column. The defaults suit an elementwise plane,
+    which only implements ``probe``."""
 
     value_type: T.DataType
-    values_are_json: bool
-    mode: str
 
     def probe(self, x: Column) -> Probe:
         raise NotImplementedError(f"{type(self).__name__} has no elementwise probe")
@@ -338,12 +328,8 @@ class ExactMapLiteral(LookupStrategy):
     executors place every key in the same bucket.
     """
 
-    mode = "exact"
-
     def __init__(self, pairs: Pairs, nested: str = "json"):
-        self.value_type, conv, self.values_are_json = infer_value_type(
-            pairs, nested
-        )
+        self.value_type, conv = infer_value_type(pairs, nested)
         if isinstance(self.value_type, T.VariantType):
             # the converter yields JSON text; embed the value itself so
             # from_json builds a real VARIANT (variant_get works on it)
@@ -435,12 +421,8 @@ class ExactBroadcastJoin(LookupStrategy):
     hot keys cost nothing extra because the build side is replicated).
     """
 
-    mode = "exact"
-
     def __init__(self, spark, pairs: Pairs, nested: str = "json"):
-        self.value_type, conv, self.values_are_json = infer_value_type(
-            pairs, nested
-        )
+        self.value_type, conv = infer_value_type(pairs, nested)
         dedup = {str(k): conv(v) for k, v in pairs}
         is_variant = isinstance(self.value_type, T.VariantType)
         schema = T.StructType(
@@ -506,7 +488,6 @@ class ExactFrameJoin(ExactBroadcastJoin):
     ):
         value_field = dict_df.schema[value_col]
         self.value_type = value_field.dataType
-        self.values_are_json = False
         self.broadcast = broadcast
         dedup = (
             dict_df.select(
@@ -562,8 +543,6 @@ class RegexFirstMatch(_ArrowUdfPlane):
     out values that match none of them.
     """
 
-    mode = "regex"
-
     def __init__(
         self,
         pairs: Pairs,
@@ -578,7 +557,7 @@ class RegexFirstMatch(_ArrowUdfPlane):
         #: unmatched + error → route='failed', pass-through unenriched.
         if fault_pattern is not None:
             re.compile(fault_pattern)  # fail fast at plan time
-        self.value_type, conv, self.values_are_json = infer_value_type(pairs)
+        self.value_type, conv = infer_value_type(pairs)
         table: List[Tuple[str, Any]] = [(str(k), conv(v)) for k, v in pairs]
         # fail fast at plan time on invalid patterns (reference raises at
         # register when compiling — fetch_strategy/memory.rb:22)
@@ -654,11 +633,8 @@ class UnionSubstitution(_ArrowUdfPlane):
     :class:`UnionReplaceChain` instead when :func:`union_chain_safe`
     proves the chain equivalent."""
 
-    mode = "union"
-
     def __init__(self, pairs: Pairs):
         self.value_type = T.StringType()
-        self.values_are_json = False
         table = _union_table(pairs)
 
         def build():
@@ -758,11 +734,8 @@ class UnionReplaceChain(LookupStrategy):
     Python. The chain cannot report which key fired, so :meth:`keyed`
     hands key tracking to the Arrow UDF plane."""
 
-    mode = "union"
-
     def __init__(self, pairs: Pairs):
         self.value_type = T.StringType()
-        self.values_are_json = False
         self._table = _union_table(pairs)
 
     def probe(self, x: Column) -> Probe:

@@ -57,12 +57,11 @@ def rolling_anomaly(
     ts_col: str,
     key_col: str,
     *,
-    bucket: str = "hour",
     trail: int = 3,
     threshold_pct: int = 200,
 ) -> DataFrame:
     """Rolling-window spike detection — the alerting aggregate of a log
-    pipeline: bucket events per key into ``date_trunc(bucket)`` windows,
+    pipeline: bucket events per key into ``date_trunc('hour')`` windows,
     then flag a bucket whose count exceeds ``threshold_pct`` percent of
     its TRAILING ``trail``-bucket average for that key. The comparison is
     the cross-multiplied integer test
@@ -97,7 +96,7 @@ def rolling_anomaly(
             f"{sorted(reserved)})"
         )
     counts = df.groupBy(
-        F.col(key_col), F.date_trunc(bucket, F.col(ts_col)).alias("bucket")
+        F.col(key_col), F.date_trunc("hour", F.col(ts_col)).alias("bucket")
     ).agg(F.count("*").alias("cnt"))
     w = (
         Window.partitionBy(key_col)

@@ -112,14 +112,14 @@ class Translate:
             nested=self.config.nested_values,
         )
 
-    def refresh(self, force: bool = False) -> bool:
+    def refresh(self) -> bool:
         """R1-R7: driver-side reload + strategy rebuild. Returns True when
         the dictionary changed (callers re-plan / re-broadcast). The swap is
         atomic per batch — Spark's broadcast replaces the reference's
         ReentrantReadWriteLock (dictionary/file.rb:38-39)."""
         if self._dict_file is None:
             return False
-        changed = self._dict_file.reload(force=force)
+        changed = self._dict_file.reload()
         if changed:
             self.strategy = self._build_strategy()
         return changed
@@ -218,7 +218,7 @@ class Translate:
             self.config.fallback,
             ts_col=self.config.ts_field,
             # full schema: nested refs degrade to the literal when any
-            # LEVEL is missing, not just the top name (code-review r7)
+            # LEVEL is missing, not just the top name
             schema=df.schema,
         )
 

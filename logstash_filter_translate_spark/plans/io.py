@@ -12,11 +12,12 @@ makes the format a configuration, not a code path:
     configured). Every query/pipeline call sites go through it, so a
     cluster with Iceberg jars runs the identical code with
     ``format="iceberg"``.
-  - ``PartitionSpec`` states sink partitioning as a spec OBJECT shared by
-    both formats: for parquet it drives ``partitionBy`` (hive-style
-    directory subtrees); for Iceberg it becomes the table's
-    identity-partition spec via ``writeTo(...).partitionedBy(...)``. The
-    route fan-out's (route, lang) spec is therefore executable code, not a
+  - ``TableIO.write(..., partition_by=)`` states sink partitioning as
+    identity-partition column names shared by both formats: for parquet
+    they drive ``partitionBy`` (hive-style directory subtrees); for
+    Iceberg they become the table's identity-partition spec via
+    ``writeTo(...).partitionedBy(...)``. The route fan-out's
+    ``ROUTED_SINK_PARTITIONS`` is therefore executable code, not a
     comment.
 
 Why Iceberg is load-bearing at 100 TB (and why the seam exists even where
@@ -29,8 +30,7 @@ marker; compaction bounds small files from per-batch route writes.
 
 from __future__ import annotations
 
-from dataclasses import dataclass
-from typing import Optional, Tuple
+from typing import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -38,25 +38,10 @@ PARQUET = "parquet"
 ICEBERG = "iceberg"
 
 
-@dataclass(frozen=True)
-class PartitionSpec:
-    """Identity-partition spec (the subset both formats express natively).
-
-    Iceberg transforms (bucket/truncate/days) would extend this with a
-    (transform, column) pair per field; the pipeline's sinks only need
-    identity partitioning, so fields are plain column names.
-    """
-
-    fields: Tuple[str, ...] = ()
-
-    def __bool__(self) -> bool:
-        return bool(self.fields)
-
-
-#: the route fan-out sink spec: each (route, lang) pair is one partition —
-#: matched/fallback/failed and per-lang sub-routes land in their own
-#: subtree/partition, pruned by sink readers (north_rule fan-out contract)
-ROUTED_SINK_SPEC = PartitionSpec(("route", "lang"))
+#: the route fan-out sink partitioning: each (route, lang) pair is one
+#: identity partition — matched/fallback/failed and per-lang sub-routes
+#: land in their own subtree/partition, pruned by sink readers
+ROUTED_SINK_PARTITIONS = ("route", "lang")
 
 
 def iceberg_available(spark: SparkSession) -> bool:
@@ -113,20 +98,20 @@ class TableIO:
         self,
         df: DataFrame,
         location: str,
-        spec: Optional[PartitionSpec] = None,
+        partition_by: Sequence[str] = (),
     ) -> None:
-        """Overwrite ``location`` with ``df``: ``createOrReplace`` for
-        Iceberg, overwrite mode for parquet."""
-        spec = spec or PartitionSpec()
+        """Overwrite ``location`` with ``df``, identity-partitioned by the
+        ``partition_by`` columns: ``createOrReplace`` for Iceberg,
+        overwrite mode for parquet."""
         if self.fmt == ICEBERG:
             from pyspark.sql import functions as F
 
             writer = df.writeTo(location).using(ICEBERG)
-            if spec:
-                writer = writer.partitionedBy(*[F.col(c) for c in spec.fields])
+            if partition_by:
+                writer = writer.partitionedBy(*[F.col(c) for c in partition_by])
             writer.createOrReplace()
             return
         w = df.write.mode("overwrite")
-        if spec:
-            w = w.partitionBy(*spec.fields)
+        if partition_by:
+            w = w.partitionBy(*partition_by)
         w.parquet(location)

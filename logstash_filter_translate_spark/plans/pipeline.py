@@ -209,19 +209,19 @@ def write_sinks(
     """Fan-out sinks: one partitioned write — each (route, lang) pair
     lands in its own partition, one scan of the input.
 
-    The partitioning is ROUTED_SINK_SPEC — a PartitionSpec OBJECT shared
-    by both table formats (plans/io.py), so the routed layout does not
-    depend on the format: parquet renders it as
+    The partitioning is ROUTED_SINK_PARTITIONS, shared by both table
+    formats (plans/io.py), so the routed layout does not depend on the
+    format: parquet renders it as
     hive-style route=/lang= subtrees with an atomic-rename committer;
     ``io=TableIO(spark, "iceberg")`` renders the identical spec as the
     Iceberg table's identity partitioning with snapshot-isolated commits.
     """
-    from .io import ROUTED_SINK_SPEC, TableIO
+    from .io import ROUTED_SINK_PARTITIONS, TableIO
 
     io = io or TableIO(enriched.sparkSession)
     cols = [c for c in enriched.columns if not c.startswith("__")]
     slim = enriched.select(*cols).drop("html")  # sinks keep parsed fields only
-    io.write(slim, io.loc(out_dir, "routed"), spec=ROUTED_SINK_SPEC)
+    io.write(slim, io.loc(out_dir, "routed"), ROUTED_SINK_PARTITIONS)
 
 
 def run_pipeline(

@@ -9,23 +9,23 @@ ship to executors is atomic per batch, so executors never observe a
 half-swapped dictionary (the rw-lock disappears — SURVEY.md §3 EP3).
 
 Implementation: ``foreachBatch`` — each micro-batch calls
-``op.refresh()`` (mtime-gated, merge/replace per config), applies the
-translate plan, and writes the fan-out sinks. The checkpointLocation makes
-the whole thing resumable: a restarted query reprocesses the in-flight
-batch idempotently (parquet sink overwrite-by-batch or append with dedup on
-a batch id column).
+:meth:`StreamingTranslate.maybe_refresh` (every ``refresh_interval``
+seconds, mtime-gated, merge/replace per config), applies the translate
+plan, and writes the fan-out sinks. The checkpointLocation makes the whole
+thing resumable: a restarted query reprocesses the in-flight batch
+idempotently (each batch overwrites its own ``__batch_id=N`` directory).
 """
 
 from __future__ import annotations
 
 import os
-import shutil
 import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import TranslateConfig
+from ..operators.dedup import exact_dedup
 from ..operators.translate import Translate
 
 
@@ -60,12 +60,12 @@ def run_streaming_pipeline(
     st: StreamingTranslate,
     out_dir: str,
     checkpoint_dir: str,
-    refresh_every_batch: bool = False,
 ):
     """source_df: a streaming DataFrame (readStream). Writes routed parquet
-    fan-out per micro-batch (partitioned ``__batch_id/route``, each
-    batch a dynamic-overwrite of its own partitions → replay-idempotent);
-    refreshes the dictionary between batches.
+    fan-out per micro-batch (``routed/__batch_id=N/route=R``, each batch
+    an overwrite of its own directory → replay-idempotent); refreshes the
+    dictionary between batches through
+    :meth:`StreamingTranslate.maybe_refresh`.
 
     Returns the StreamingQuery. It runs with the availableNow trigger:
     it processes the data available at start, then stops (the
@@ -73,30 +73,15 @@ def run_streaming_pipeline(
     """
 
     def handle_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if refresh_every_batch:
-            st.op.refresh()
-        else:
-            st.maybe_refresh()
+        st.maybe_refresh()
+        # idempotent replay: the overwrite replaces the whole
+        # __batch_id=N directory, so a restarted in-flight batch rewrites
+        # its rows instead of appending a duplicate copy, and a route the
+        # failed attempt wrote but the retry no longer produces (the
+        # dictionary was refreshed in between) is deleted with it
         out = st.apply(batch_df)
-        # idempotent replay: __batch_id leads the partition spec and the
-        # write is a DYNAMIC partition overwrite, so a restarted in-flight
-        # batch rewrites exactly its own partitions instead of appending a
-        # duplicate copy (no reader-side dedup needed). Dynamic overwrite
-        # alone is NOT enough: it only replaces partitions
-        # PRESENT in the retry, so a route that existed in the failed
-        # attempt but routes differently after a between-attempt dictionary
-        # refresh would leave its stale sub-partition behind — drop the
-        # whole __batch_id=N subtree first (idempotent, local-fs sink).
-        routed = os.path.join(out_dir, "routed")
-        stale = os.path.join(routed, f"__batch_id={batch_id}")
-        if os.path.isdir(stale):
-            shutil.rmtree(stale, ignore_errors=True)
-        (
-            out.withColumn("__batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("__batch_id", "route")
-            .parquet(routed)
+        out.write.mode("overwrite").partitionBy("route").parquet(
+            os.path.join(out_dir, "routed", f"__batch_id={batch_id}")
         )
 
     return (
@@ -105,29 +90,6 @@ def run_streaming_pipeline(
         .outputMode("append")
         .trigger(availableNow=True)
         .start()
-    )
-
-
-def streaming_exact_dedup(
-    stream: DataFrame, text_col: str, id_col: str
-) -> DataFrame:
-    """Cross-micro-batch exact dedup as a STATEFUL streaming aggregation:
-    groupBy(text fingerprint) with min(id)/count — the state store carries
-    the per-fingerprint canonical id and duplicate count across batches,
-    so a duplicate arriving three batches later still collapses onto the
-    first batch's canonical row. The streaming analogue of
-    operators.dedup.exact_dedup (same keys, same aggregates → the batch
-    DuckDB oracle verifies the final state exactly).
-
-    At 100 TB-stream scale the state is one narrow row per distinct
-    fingerprint (32-char digest + two longs), hash-partitioned by the
-    state store — never the documents themselves."""
-    from ..functions.text import fingerprint
-
-    return (
-        stream.groupBy(fingerprint(F.col(text_col)).alias("__fp"))
-        .agg(F.min(id_col).alias(id_col), F.count("*").alias("dup_cnt"))
-        .drop("__fp")
     )
 
 
@@ -144,7 +106,11 @@ def run_streaming_dedup(
     foreachBatch), so the sink always holds the current canonical set.
     Returns the StreamingQuery."""
 
-    deduped = streaming_exact_dedup(stream, text_col, id_col)
+    # exact_dedup's groupBy(fingerprint) becomes a stateful streaming
+    # aggregation: the state store carries each fingerprint's canonical id
+    # and count across batches, so a duplicate arriving batches later
+    # still collapses onto the first batch's canonical row
+    deduped = exact_dedup(stream, text_col, id_col)
 
     def handle_batch(batch_df: DataFrame, batch_id: int) -> None:
         batch_df.write.mode("overwrite").parquet(

@@ -44,10 +44,10 @@ class RefreshScheduler:
             return self  # disabled, like refresh_interval <= 0 (translate.rb:117)
         if self._thread is not None:
             raise RuntimeError("scheduler already started")
-        # restartability (code-review r7): stop() leaves the event set and
-        # _thread=None, so without the clear a second start() would spawn
-        # a thread whose first wait() returns immediately and it exits —
-        # silently never refreshing again
+        # restartable: stop() leaves the event set and _thread=None, so
+        # without the clear a second start() would spawn a thread whose
+        # first wait() returns immediately and it exits — silently never
+        # refreshing again
         self._stop.clear()
         self._thread = threading.Thread(target=self._loop, daemon=True)
         self._thread.start()

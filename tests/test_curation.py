@@ -214,8 +214,8 @@ def test_pii_redaction_rules_and_order(spark):
 
 
 def test_stratified_sample_rate_rounds_not_truncates(spark):
-    """code-review r7: int(0.57*10000) == 5699, so binary-float rates
-    landed one bucket below the configured rate. The threshold must
+    """int(0.57*10000) == 5699, so truncating binary-float rates lands
+    one bucket below the configured rate. The threshold must
     round: with rate=0.57 the keep-set must include a bucket-5699 row
     (5699 < 5700), which truncation would drop."""
     from logstash_filter_translate_spark.functions.text import hash32
@@ -249,7 +249,7 @@ def test_stratified_sample_rate_rounds_not_truncates(spark):
 def test_token_budget_mix_three_regimes_and_subset_nesting(spark):
     """token_budget_mix: a budget ≥ supply keeps the stratum whole (LEAST
     cap), a binding budget keeps a deterministic strict subset, an absent
-    stratum (default_budget=0) is dropped entirely, and a smaller budget
+    stratum (budget 0) is dropped entirely, and a smaller budget
     draws a strict subset of a larger one (same unseeded hash → mix
     ablations nest)."""
     from logstash_filter_translate_spark.operators.curation import (
@@ -444,10 +444,10 @@ def _py_bucket(tok: str, buckets: int) -> int:
     return int(hashlib.md5(f"b|{tok}".encode()).hexdigest()[:8], 16) % buckets
 
 
-def _py_det_weight(bucket: int, seed: str = "quality") -> int:
+def _py_det_weight(bucket: int) -> int:
     import hashlib
 
-    h = int(hashlib.md5(f"{seed}|{bucket}".encode()).hexdigest()[:8], 16)
+    h = int(hashlib.md5(f"quality|{bucket}".encode()).hexdigest()[:8], 16)
     return h % 2001 - 1000
 
 
@@ -487,8 +487,9 @@ def test_hashed_linear_score_matches_hashlib_reference(spark):
 def test_hashed_linear_score_weight_table_planes(spark):
     """Trained-weight plane: scores sum the table's milli-weights,
     unseen buckets contribute 0, keep tests the cross-multiplied
-    threshold INCLUSIVELY at the boundary; broadcast_weights=False pins
-    the merge-hinted shuffle join (no broadcast in the plan)."""
+    threshold INCLUSIVELY at the boundary, and the weights join is a
+    broadcast. A weight row outside [0, buckets) matches no token, so
+    adding one changes no score."""
     from logstash_filter_translate_spark.operators.curation import (
         hashed_linear_score,
     )
@@ -498,29 +499,31 @@ def test_hashed_linear_score_weight_table_planes(spark):
         (_py_bucket("good", B), 500),
         (_py_bucket("bad", B), -700),
     ]
-    weights = spark.createDataFrame(wrows, "bucket long, weight_milli long")
     docs = spark.createDataFrame(
         [(1, "good good bad"), (2, "unseen tokens here")],
         "doc_id long, text string",
     )
-    for bc in (True, False):
+    for extra in ([], [(B + 5, 900)]):
+        weights = spark.createDataFrame(
+            wrows + extra, "bucket long, weight_milli long"
+        )
         out = hashed_linear_score(
             docs, "text", "doc_id", buckets=B, weights=weights,
-            threshold_milli=100, broadcast_weights=bc,
+            threshold_milli=100,
         )
         plan = out._jdf.queryExecution().executedPlan().toString()
-        assert ("BroadcastHashJoin" in plan) == bc, plan[:1200]
+        assert "BroadcastHashJoin" in plan, plan[:1200]
         got = {
             r["doc_id"]: (r["n_tokens"], r["score_milli"], r["keep"])
             for r in out.collect()
         }
         # doc 1: 500+500-700 = 300 >= 100*3 (boundary, inclusive) -> keep
         # doc 2: all unseen -> 0 < 100*3 -> drop
-        assert got == {1: (3, 300, True), 2: (3, 0, False)}, (bc, got)
+        assert got == {1: (3, 300, True), 2: (3, 0, False)}, (extra, got)
 
 
 def test_hashed_linear_score_weight_table_hardening(spark):
-    """Malformed-model and naming hazards (code-review r8): duplicate
+    """Malformed-model and naming hazards: duplicate
     bucket rows must NOT fan out the join (n_tokens would corrupt, not
     just the score) — they normalize deterministically to the max
     weight; and an id_col literally named 'bucket' must not collide

@@ -3,10 +3,12 @@ refresh (broadcast swap between batches), checkpointed resumable sinks,
 windowed event-time aggregates."""
 
 import os
+import time
 
 from pyspark.sql import functions as F
 
 from logstash_filter_translate_spark import TranslateConfig
+from logstash_filter_translate_spark.streaming import refresh
 from logstash_filter_translate_spark.streaming.refresh import (
     StreamingTranslate,
     run_streaming_pipeline,
@@ -35,14 +37,12 @@ def test_streaming_translate_with_refresh_between_batches(spark, tmp_path):
     st = StreamingTranslate(
         TranslateConfig(
             source="k", dictionary_path=dict_path, fallback="fb",
-            refresh_behaviour="replace",
+            refresh_behaviour="replace", refresh_interval=1,
         ),
         spark,
     )
     stream = spark.readStream.schema("k string").parquet(src_dir)
-    q = run_streaming_pipeline(
-        spark, stream, st, out_dir, ckpt, refresh_every_batch=True
-    )
+    q = run_streaming_pipeline(spark, stream, st, out_dir, ckpt)
     q.awaitTermination(120)
 
     routed = spark.read.parquet(os.path.join(out_dir, "routed"))
@@ -54,9 +54,8 @@ def test_streaming_translate_with_refresh_between_batches(spark, tmp_path):
     spark.createDataFrame([("a",), ("b",)], "k string").write.mode("append").parquet(
         src_dir
     )
-    q2 = run_streaming_pipeline(
-        spark, stream, st, out_dir, ckpt, refresh_every_batch=True
-    )
+    time.sleep(1)  # refresh_interval elapses: batch 1 must refresh
+    q2 = run_streaming_pipeline(spark, stream, st, out_dir, ckpt)
     q2.awaitTermination(120)
 
     routed = spark.read.parquet(os.path.join(out_dir, "routed"))
@@ -147,9 +146,9 @@ def test_streaming_dedup_state_spans_micro_batches(spark, tmp_path):
 
 def test_streaming_sink_replay_is_idempotent(spark, tmp_path):
     """A replayed micro-batch (restart with a lost/fresh checkpoint, same
-    source) rewrites its own __batch_id partitions via dynamic overwrite
-    instead of appending a duplicate copy — the sink needs no reader-side
-    dedup to be exactly-once."""
+    source) overwrites its own __batch_id directory instead of appending
+    a duplicate copy — the sink needs no reader-side dedup to be
+    exactly-once."""
     src_dir = str(tmp_path / "src")
     out_dir = str(tmp_path / "out")
     spark.createDataFrame([("a",), ("z",)], "k string").write.parquet(src_dir)
@@ -242,10 +241,10 @@ def test_watermark_drops_late_events_in_append_mode(spark, tmp_path):
 
 
 def test_replayed_batch_clears_stale_route_partitions(spark, tmp_path):
-    """Dynamic partition overwrite only rewrites
-    partitions PRESENT in the retry. If a batch is replayed after a
-    dictionary refresh changed its routing, the failed attempt's
-    now-empty route sub-partition must not survive and double-count.
+    """If a batch is replayed after a dictionary refresh changed its
+    routing, the failed attempt's now-empty route sub-partition must not
+    survive and double-count (an overwrite of only the partitions PRESENT
+    in the retry would keep it).
     Simulated by deleting the checkpoint (forcing a batch-0 replay)
     after swapping the dictionary so the fallback route disappears."""
     import shutil
@@ -261,14 +260,12 @@ def test_replayed_batch_clears_stale_route_partitions(spark, tmp_path):
         st = StreamingTranslate(
             TranslateConfig(
                 source="k", dictionary_path=dict_path, fallback="fb",
-                refresh_behaviour="replace",
+                refresh_behaviour="replace", refresh_interval=1,
             ),
             spark,
         )
         stream = spark.readStream.schema("k string").parquet(src_dir)
-        q = run_streaming_pipeline(
-            spark, stream, st, out_dir, ckpt, refresh_every_batch=True
-        )
+        q = run_streaming_pipeline(spark, stream, st, out_dir, ckpt)
         q.awaitTermination(120)
 
     run()  # attempt 1: z -> fallback partition exists
@@ -289,3 +286,41 @@ def test_replayed_batch_clears_stale_route_partitions(spark, tmp_path):
     assert not os.path.isdir(
         os.path.join(routed, "__batch_id=0", "route=fallback")
     )
+
+
+def test_maybe_refresh_gate(spark, tmp_path, monkeypatch):
+    """maybe_refresh reloads only once ``refresh_interval`` seconds have
+    passed since the last refresh (or since construction), and never when
+    ``refresh_interval <= 0`` (translate.rb:117)."""
+    clock = [1000.0]
+    monkeypatch.setattr(refresh.time, "monotonic", lambda: clock[0])
+    dict_path = str(tmp_path / "d.csv")
+    probe = spark.createDataFrame([("a",)], "k string")
+
+    def streaming_translate(interval):
+        _write_dict(dict_path, "a,1\n")
+        st = StreamingTranslate(
+            TranslateConfig(
+                source="k", dictionary_path=dict_path,
+                refresh_interval=interval,
+            ),
+            spark,
+        )
+        return st, lambda: st.apply(probe).first()["translation"]
+
+    for disabled in (0, -1):
+        st, translated = streaming_translate(disabled)
+        _write_dict(dict_path, "a,2\n")
+        clock[0] += 10**6
+        assert st.maybe_refresh() is False
+        assert translated() == "1"
+
+    st, translated = streaming_translate(10)
+    for version in ("2", "3"):  # the window restarts at each refresh
+        _write_dict(dict_path, f"a,{version}\n")
+        clock[0] += 9.5
+        assert st.maybe_refresh() is False  # before the interval
+        assert translated() != version
+        clock[0] += 0.5
+        assert st.maybe_refresh() is True  # the interval has elapsed
+        assert translated() == version

@@ -12,19 +12,16 @@ import pytest
 from pyspark.sql import functions as F
 
 from logstash_filter_translate_spark.plans.io import (
-    ROUTED_SINK_SPEC,
-    PartitionSpec,
+    ROUTED_SINK_PARTITIONS,
     TableIO,
     iceberg_available,
 )
 
 
 def test_routed_sink_spec_is_route_lang_identity():
-    # the fan-out partitioning is a spec OBJECT (north_rule: fan-out sinks
-    # partitioned by route and lang), shared by both formats
-    assert ROUTED_SINK_SPEC.fields == ("route", "lang")
-    assert bool(ROUTED_SINK_SPEC)
-    assert not PartitionSpec()
+    # the fan-out sinks are identity-partitioned by route and lang, one
+    # column tuple shared by both formats
+    assert ROUTED_SINK_PARTITIONS == ("route", "lang")
 
 
 def test_unknown_format_rejected(spark):
@@ -39,12 +36,19 @@ def test_parquet_roundtrip_renders_spec_as_directories(spark, tmp_path):
         "route string, lang string, v int",
     )
     loc = io.loc(str(tmp_path), "routed")
-    io.write(df, loc, spec=ROUTED_SINK_SPEC)
+    io.write(df, loc, partition_by=ROUTED_SINK_PARTITIONS)
     # identity partitions appear as hive-style subtrees
     subtrees = {p for p in os.listdir(loc) if p.startswith("route=")}
     assert subtrees == {"route=matched", "route=fallback"}
     assert sorted(
         map(tuple, io.read(loc).select("route", "lang", "v").collect())
+    ) == [("fallback", "de", 2), ("matched", "de", 3), ("matched", "en", 1)]
+    # the default partition_by=() writes unpartitioned: no subtrees
+    flat = io.loc(str(tmp_path), "flat")
+    io.write(df, flat)
+    assert not [p for p in os.listdir(flat) if "=" in p]
+    assert sorted(
+        map(tuple, io.read(flat).select("route", "lang", "v").collect())
     ) == [("fallback", "de", 2), ("matched", "de", 3), ("matched", "en", 1)]
 
 
@@ -57,8 +61,8 @@ def test_iceberg_without_jars_raises_actionable_error(spark):
 
 def test_pipeline_write_sinks_goes_through_seam(spark, tmp_path):
     """write_sinks with the default (parquet) TableIO produces the routed
-    fan-out layout from the shared PartitionSpec — the identical call with
-    an Iceberg TableIO renders the same spec as table partitioning."""
+    fan-out layout from ROUTED_SINK_PARTITIONS — the identical call with
+    an Iceberg TableIO renders the same columns as table partitioning."""
     from logstash_filter_translate_spark.plans import pipeline as P
     from logstash_filter_translate_spark.plans.pages import generate_pages
 

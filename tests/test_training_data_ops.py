@@ -260,11 +260,12 @@ def test_connected_components_chain_cycle_singleton(spark):
                    30: 30, 31: 30}
 
 
-def test_connected_components_raises_past_iteration_bound(spark):
-    """A 6-node path needs ~5 propagation hops; max_iterations=2 must
+def test_connected_components_raises_past_iteration_bound(spark, monkeypatch):
+    """A 6-node path needs ~5 propagation hops; a bound of 2 rounds must
     raise rather than return a silently-unmerged labeling."""
     import pytest
 
+    from logstash_filter_translate_spark.operators import dedup
     from logstash_filter_translate_spark.operators.dedup import (
         connected_components,
     )
@@ -273,8 +274,10 @@ def test_connected_components_raises_past_iteration_bound(spark):
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(5)], "id_a long, id_b long"
     )
-    with pytest.raises(RuntimeError, match="no fixpoint"):
-        connected_components(nodes, edges, id_col="id", max_iterations=2)
+    with monkeypatch.context() as mp:
+        mp.setattr(dedup, "CC_MAX_ITERATIONS", 2)
+        with pytest.raises(RuntimeError, match="no fixpoint"):
+            connected_components(nodes, edges, id_col="id")
     # and the bound is about diameter, not edge count: the same graph
     # converges comfortably within the default
     out = {
@@ -399,6 +402,7 @@ def test_connected_components_adversarial_chain_escalates_to_jumping(
     deep chain self-remedy inside the default budget."""
     from logstash_filter_translate_spark.operators import dedup
     from logstash_filter_translate_spark.operators.dedup import (
+        _connected_components,
         connected_components,
     )
 
@@ -412,30 +416,28 @@ def test_connected_components_adversarial_chain_escalates_to_jumping(
         # 10 rounds -> must raise, never return a silently-unmerged
         # labeling
         mp.setattr(dedup, "POINTER_JUMP_ESCALATION_ROUND", 10)
+        mp.setattr(dedup, "CC_MAX_ITERATIONS", 10)
         with pytest.raises(RuntimeError, match="no fixpoint"):
-            connected_components(
-                nodes, edges, id_col="doc_id", max_iterations=10,
-            )
+            connected_components(nodes, edges, id_col="doc_id")
     with monkeypatch.context() as mp:
         # jumping from round 2: converges within ~log2(199)+1 rounds and
         # labels the whole chain with the min id
         mp.setattr(dedup, "POINTER_JUMP_ESCALATION_ROUND", 1)
-        out = connected_components(
-            nodes, edges, id_col="doc_id", max_iterations=15,
+        mp.setattr(dedup, "CC_MAX_ITERATIONS", 15)
+        out, rounds = _connected_components(
+            nodes, edges, "doc_id", dedup.BROADCAST_MEMBER_LIMIT
         )
         assert out.filter("component = 0").count() == n
-        assert dedup.LAST_CC_ITERATIONS <= 10
+        assert rounds <= 10
     # the default: plain through the escalation round (shallow graphs
     # never pay the jump join), then shortcutting — the deep chain
     # converges inside the default budget with no caller knowledge of
     # the graph's diameter
-    out_auto = connected_components(nodes, edges, id_col="doc_id")
-    assert out_auto.filter("component = 0").count() == n
-    assert (
-        dedup.POINTER_JUMP_ESCALATION_ROUND
-        < dedup.LAST_CC_ITERATIONS
-        <= 18
+    out_auto, rounds = _connected_components(
+        nodes, edges, "doc_id", dedup.BROADCAST_MEMBER_LIMIT
     )
+    assert out_auto.filter("component = 0").count() == n
+    assert dedup.POINTER_JUMP_ESCALATION_ROUND < rounds <= 18
 
 
 def test_lsh_cross_candidates_broadcast_probe_and_match_self_join(spark, docs):
