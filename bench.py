@@ -109,19 +109,19 @@ HEADLINE = [
     "vocab_topk",
     "corpus_stats",
     "curation_pipeline",
-    # r7 extras: the beyond-broadcast dictionary plane, the iterative
-    # near-dup clustering plane, and the cross-corpus fuzzy-decontamination
-    # plane (~0.95 / ~2.4 / ~2.1 s at sf0.1) — in the headline so the
-    # driver bench tracks the new plan shapes.
+    # the beyond-broadcast dictionary plane, the iterative near-dup
+    # clustering plane, and the cross-corpus fuzzy-decontamination plane
+    # (~0.95 / ~2.4 / ~2.1 s at sf0.1): each is a plan shape no other
+    # headline query runs.
     "table_dict_shuffle_enrich",
     "dedup_components",
     "fuzzy_contamination",
     "boilerplate_shingles",
     # canonical_docs DOES re-run dedup_components' fixpoint loop plus one
-    # max_by aggregate — the accepted choice (r7 judge item #4): every
-    # headline row measures what a fresh cold-plan caller pays, and
-    # sharing converged labels across queries would make this the one row
-    # measuring a warm cache instead of the query. The ~2x-of-components
+    # max_by aggregate, on purpose: every headline row measures what a
+    # fresh cold-plan caller pays, and sharing converged labels across
+    # queries would make this the one row measuring a warm cache instead
+    # of the query. The ~2x-of-components
     # cost is the honest number; a production pipeline amortizes it by
     # checkpointing labels once and joining twice (docs/PLANS.md).
     "canonical_docs",
@@ -129,29 +129,29 @@ HEADLINE = [
     # plane the size gate picks at web-crawl dup rates); benched so the
     # shuffle anti-join's cost is tracked next to the broadcast plane's.
     "dedup_components_shuffle",
-    # r8: incremental dedup of a corpus increment (cross-LSH broadcast
+    # incremental dedup of a corpus increment (cross-LSH broadcast
     # probe + intra-batch self-LSH + shared verify)
     "incremental_keep",
-    # r8: training-output stages — mixture draw to per-language TOKEN
+    # training-output stages — mixture draw to per-language TOKEN
     # budgets (tiny totals agg broadcast back, corpus never shuffles)
     # and the deterministic global shuffle/shard assignment (one hash
     # exchange on shard + per-shard sort)
     "token_budget_mix",
     "shuffle_shards",
-    # r8 (late): sequence packing over the shuffle order (running token
+    # sequence packing over the shuffle order (running token
     # sum riding shuffle_shards' single exchange+sort) and CCNet-style
     # frequent-segment removal (the apply step of boilerplate_shingles).
     "pack_sequences",
     "segment_dedup",
-    # r8 (late): the mix draw with epoch repetition (upsample plane)
+    # the mix draw with epoch repetition (upsample plane)
     "token_budget_mix_epochs",
-    # r8 (late): exact-substring duplicate-span removal (overlapping
+    # exact-substring duplicate-span removal (overlapping
     # 5-grams; the any-offset complement of segment_dedup) and the
     # hashed-feature linear quality classifier (fastText-style inference
     # in pure codegen, integer milli-weights)
     "span_dedup",
     "quality_classifier",
-    # r8 (late): sliding-window chunking for embedding/RAG prep
+    # sliding-window chunking for embedding/RAG prep
     # (map-only one-to-many, zero exchanges) and rolling-window spike
     # detection (WindowExec frame over aggregated (key, hour) rows)
     "doc_chunks",

@@ -80,7 +80,9 @@ def token_count(text: Column) -> Column:
 
 def word_shingles(toks: Column, n: int = 3) -> Column:
     """Overlapping word n-grams as strings, in start order; fewer than n
-    tokens (or NULL tokens) → empty array.
+    tokens (or NULL tokens) → empty array. The default ``n = 3`` is the
+    shingle of every document-similarity operator (MinHash, Jaccard,
+    repetition, contamination, boilerplate inventory).
 
     One codegen ``regexp_extract_all`` over the space-joined tokens: the
     anchor matches at each token start, the zero-width lookahead

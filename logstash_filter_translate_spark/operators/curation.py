@@ -92,11 +92,10 @@ def repetition_ratio(
     df: DataFrame,
     text_col: str,
     id_col: str,
-    shingle_n: int = 3,
     include_shingleless: bool = True,
 ) -> DataFrame:
     """Gopher-style repetition signal: per document, the count of the most
-    frequent word n-gram and the total n-gram count (integers, so the
+    frequent word 3-gram and the total 3-gram count (integers, so the
     oracle compares exactly; ratio = max/total). High ratios flag
     boilerplate/spam for the quality filter.
 
@@ -105,13 +104,13 @@ def repetition_ratio(
     shuffle carries (doc_id, shingle-count) pairs, never documents.
 
     ``include_shingleless=False`` skips the corpus re-entry left
-    join that reports docs with < n tokens as (0, 0) — consumers that
+    join that reports docs with < 3 tokens as (0, 0) — consumers that
     immediately FILTER on ``total_ngrams > 0`` (curation_pipeline) drop
     those rows again, so the extra scan + join bought nothing.
     """
     sh = df.select(
         F.col(id_col),
-        F.explode(word_shingles(tokens(F.col(text_col)), shingle_n)).alias("s"),
+        F.explode(word_shingles(tokens(F.col(text_col)))).alias("s"),
     )
     per_shingle = sh.groupBy(id_col, "s").agg(F.count("*").alias("c"))
     stats = per_shingle.groupBy(id_col).agg(
@@ -120,7 +119,7 @@ def repetition_ratio(
     )
     if not include_shingleless:
         return stats.select(id_col, "max_ngram_cnt", "total_ngrams")
-    # docs with < n tokens have no shingles → (0, 0) via left join
+    # docs with < 3 tokens have no shingles → (0, 0) via left join
     return (
         df.select(id_col)
         .join(stats, id_col, "left")
@@ -137,12 +136,11 @@ def contamination_check(
     benchmark: DataFrame,
     text_col: str,
     id_col: str,
-    shingle_n: int = 3,
 ) -> DataFrame:
     """Benchmark-contamination flagging: which corpus documents share at
-    least one word n-gram with any benchmark document? (The eval-set
+    least one word 3-gram with any benchmark document? (The eval-set
     decontamination pass every serious training pipeline runs; real
-    deployments use 13-grams — the n is a parameter.)
+    deployments use 13-grams.)
 
     Plan: the benchmark side (small by construction) explodes to distinct
     shingles and is DISTINCT'd then broadcast into a left-semi join
@@ -153,9 +151,7 @@ def contamination_check(
     bench_sh = (
         benchmark.select(
             F.explode(
-                F.array_distinct(
-                    word_shingles(tokens(F.col(text_col)), shingle_n)
-                )
+                F.array_distinct(word_shingles(tokens(F.col(text_col))))
             ).alias("s")
         )
         .distinct()
@@ -163,7 +159,7 @@ def contamination_check(
     corpus_sh = df.select(
         F.col(id_col),
         F.explode(
-            F.array_distinct(word_shingles(tokens(F.col(text_col)), shingle_n))
+            F.array_distinct(word_shingles(tokens(F.col(text_col))))
         ).alias("s"),
     )
     return (
@@ -281,13 +277,13 @@ def token_budget_mix(
     )
 
 
-def _seeded_order(id_col: str, seed: str):
+def _seeded_order(id_col: str):
     """The (hash, within-shard order) pair that DEFINES the deterministic
     shuffle order — shared by :func:`shuffle_shards` and
     :func:`pack_sequences` so the packing can never desynchronize from
     the shuffle the writer actually emits. Callers alias the hash to
     ``__h`` and derive ``shard = pmod(__h, N)``."""
-    h = hash32(F.concat(F.lit(seed), F.col(id_col).cast("string")))
+    h = hash32(F.concat(F.lit("shard|"), F.col(id_col).cast("string")))
     w = Window.partitionBy("shard").orderBy(
         F.col("__h").asc(), F.col(id_col).asc()
     )
@@ -298,16 +294,14 @@ def shuffle_shards(
     df: DataFrame,
     id_col: str,
     num_shards: int,
-    seed: str = "shard|",
 ) -> DataFrame:
     """Deterministic global shuffle + shard assignment for training
-    output: every row gets ``shard = hash32(seed || id) % num_shards``
+    output: every row gets ``shard = hash32('shard|' || id) % num_shards``
     and ``pos`` = its rank within the shard ordered by that same hash
     (id tiebreak). Reading shards in (shard, pos) order yields a
     reproducible pseudo-random permutation of the corpus — the "global
-    shuffle before training" step — as a pure function of (id, seed):
+    shuffle before training" step — as a pure function of the id:
     no RNG, no state, identical across engines, reruns and retries.
-    Changing ``seed`` yields an independent epoch-level reshuffle.
 
     Plan at 100 TB: one hash exchange on ``shard`` plus a per-shard sort
     (never a global sort) — exactly the shape of
@@ -318,7 +312,7 @@ def shuffle_shards(
     the auditable position column on the same exchange+sort, so the
     audit query and the writer share one physical plan.
     """
-    h, w = _seeded_order(id_col, seed)
+    h, w = _seeded_order(id_col)
     return (
         df.select(F.col(id_col), h.alias("__h"))
         .withColumn("shard", F.pmod(F.col("__h"), F.lit(num_shards)))
@@ -333,7 +327,6 @@ def pack_sequences(
     text_col: str,
     num_shards: int,
     seq_len: int,
-    seed: str = "shard|",
 ) -> DataFrame:
     """Fixed-length sequence packing for training output — the stage
     after :func:`shuffle_shards`: stream the documents in the
@@ -346,7 +339,7 @@ def pack_sequences(
     including spills into following sequences; a writer needs nothing
     else to lay out the shard.
 
-    Everything is a pure function of ``(id, seed)`` plus exact long
+    Everything is a pure function of the id plus exact long
     arithmetic (a running token sum; no floats, no RNG), so any ANSI
     engine reproduces the layout bit-for-bit and a re-run after a
     failure packs identically — the resumability story for the most
@@ -358,7 +351,7 @@ def pack_sequences(
     bounded state (one long per partition). ``num_shards`` is the
     parallelism knob exactly as there; no global sort ever exists.
     """
-    h, order = _seeded_order(id_col, seed)
+    h, order = _seeded_order(id_col)
     w = order.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     return (
         df.select(
@@ -386,7 +379,6 @@ def curation_pipeline(
     domain_col: str,
     cap: int,
     max_repetition_pct: int = 50,
-    shingle_n: int = 3,
     default_rate: float = 0.0,
 ) -> DataFrame:
     """Composed curation pass: repetition filter → stratified sample →
@@ -396,9 +388,7 @@ def curation_pipeline(
     # include_shingleless=False: the (0, 0) re-entry rows the
     # default plane adds (a corpus scan + left join) are filtered right
     # back out by `total_ngrams > 0` below
-    rep = repetition_ratio(
-        df, text_col, id_col, shingle_n, include_shingleless=False
-    )
+    rep = repetition_ratio(df, text_col, id_col, include_shingleless=False)
     keep_rep = rep.filter(
         (F.col("total_ngrams") > 0)
         & (F.col("max_ngram_cnt") * 100
@@ -416,7 +406,6 @@ def hashed_linear_score(
     id_col: str,
     *,
     buckets: int = 1 << 18,
-    weights: Optional[DataFrame] = None,
     threshold_milli: int = 0,
 ) -> DataFrame:
     """Hashed bag-of-words linear classifier inference — the
@@ -427,8 +416,12 @@ def hashed_linear_score(
     Each token hashes into one of ``buckets`` feature buckets
     (``hash32('b|'||token) % buckets`` — the hashing trick, so the model
     is fixed-dimension regardless of vocabulary); the document's score is
-    the MEAN bucket weight. Everything stays in INTEGER milli-units (the
-    house integers-only convention — canonical_docs, integer-Jaccard):
+    the MEAN bucket weight. A bucket's weight is a pure hash function,
+    ``hash32('quality|'||bucket) % 2001 - 1000`` in [-1000, 1000] milli —
+    a stand-in for trained weights with the real plan shape.
+
+    Everything stays in INTEGER milli-units (the house integers-only
+    convention — canonical_docs, integer-Jaccard):
     the returned ``score_milli`` is the exact sum of per-token integer
     milli-weights and ``keep`` is the cross-multiplied threshold test
     ``score_milli >= threshold_milli * n_tokens`` — no float mean, no
@@ -436,27 +429,10 @@ def hashed_linear_score(
     Zero-token documents have no features and drop out (a quality filter
     discards them anyway).
 
-    Two weight planes:
-      - ``weights=None`` (deterministic): bucket weight is a pure hash
-        function, ``hash32('quality|'||bucket) % 2001 - 1000`` in
-        [-1000, 1000] milli — the sandbox stand-in with the REAL plan
-        shape; a deployment swaps in trained weights without touching
-        the plan below;
-      - ``weights`` = a ``(bucket, weight_milli)`` DataFrame (a trained
-        model exported as a table): LEFT-joined onto the exploded tokens
-        as a broadcast. Only rows with ``0 <= bucket < buckets`` are
-        kept — no token hashes anywhere else, so the filter changes no
-        score and bounds the broadcast side to ``buckets`` rows (a
-        2^18-bucket model is a few MB). Unseen buckets score 0.
-        Duplicate bucket rows (a malformed export) are normalized to one
-        row per bucket (max weight, deterministic) BEFORE the join —
-        fan-out would corrupt ``n_tokens``, not just the score.
-
     Plan at 100 TB: explode tokens → codegen md5 bucket/weight →
     groupBy(id) with map-side partial aggregation — ONE exchange keyed
     on the doc id carrying two longs per doc; the corpus text never
-    shuffles. The optional model join happens pre-aggregation on the
-    exploded stream, broadcast so the stream stays unshuffled.
+    shuffles.
     """
     if int(buckets) < 1:
         raise ValueError("buckets must be >= 1")
@@ -466,35 +442,11 @@ def hashed_linear_score(
     bucket = F.pmod(
         hash32(F.concat(F.lit("b|"), F.col("__tok"))), F.lit(int(buckets))
     )
-    if weights is None:
-        w = F.pmod(
-            hash32(F.concat(F.lit("quality|"), bucket.cast("string"))),
-            F.lit(2001),
-        ) - F.lit(1000)
-        scored = ex.select(F.col(id_col), w.alias("__w"))
-    else:
-        # normalize to ONE row per bucket before the join: a malformed
-        # model export with duplicate bucket rows would otherwise fan
-        # out every token hashing there — corrupting n_tokens, not just
-        # the score. max() is the deterministic resolution; the model
-        # side is small, so the extra exchange is noise. The dunder key
-        # avoids colliding with an id_col named "bucket" (same reason the
-        # other temps are __-prefixed).
-        wt = (
-            weights.select(
-                F.col("bucket").cast("long").alias("__bucket"),
-                F.col("weight_milli").cast("long").alias("__wm"),
-            )
-            .filter(F.col("__bucket").between(0, int(buckets) - 1))
-            .groupBy("__bucket")
-            .agg(F.max("__wm").alias("__wm"))
-        )
-        b = ex.select(F.col(id_col), bucket.alias("__bucket"))
-        j = b.join(F.broadcast(wt), "__bucket", "left")
-        scored = j.select(
-            F.col(id_col),
-            F.coalesce(F.col("__wm"), F.lit(0)).alias("__w"),
-        )
+    w = F.pmod(
+        hash32(F.concat(F.lit("quality|"), bucket.cast("string"))),
+        F.lit(2001),
+    ) - F.lit(1000)
+    scored = ex.select(F.col(id_col), w.alias("__w"))
     agg = scored.groupBy(id_col).agg(
         F.count("*").alias("n_tokens"),
         F.sum("__w").alias("score_milli"),

@@ -63,10 +63,10 @@ def minhash_signatures(
     text_col: str,
     id_col: str,
     num_hashes: int = 8,
-    shingle_n: int = 3,
     include_sigless: bool = True,
 ) -> DataFrame:
-    """(id, m0..m{k-1}) — NULL signature for docs with < n tokens.
+    """(id, m0..m{k-1}) over the word 3-grams — NULL signature for docs
+    with < 3 tokens.
 
     Physical shape: explode shingles → ONE codegen'd md5 per shingle →
     groupBy(id) with k cheap min() aggregates (map-side partial). This beats
@@ -84,7 +84,7 @@ def minhash_signatures(
 
     sh = df.select(
         F.col(id_col),
-        F.explode(word_shingles(tokens(F.col(text_col)), shingle_n)).alias("__s"),
+        F.explode(word_shingles(tokens(F.col(text_col)))).alias("__s"),
     )
     hashed = sh.select(id_col, hash32(F.col("__s")).alias("__h"))
     aggs = []
@@ -96,7 +96,7 @@ def minhash_signatures(
     sig = hashed.groupBy(id_col).agg(*aggs)
     if not include_sigless:
         return sig
-    # docs with < n tokens exploded to no rows → NULL signature via left join
+    # docs with < 3 tokens exploded to no rows → NULL signature via left join
     return df.select(id_col).join(sig, id_col, "left")
 
 
@@ -392,12 +392,11 @@ def embedding_cosine_pairs(
     emb: DataFrame,
     planes: List[List[float]],
     threshold: float,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     max_bucket: Optional[int] = None,
 ) -> DataFrame:
-    """Near-duplicate (id_a, id_b) pairs by embedding cosine ≥ threshold,
-    candidate generation via hyperplane-LSH buckets — NOT all-pairs.
+    """Near-duplicate (id_a, id_b) pairs by embedding cosine ≥ threshold
+    over ``(vec_id, embedding)`` rows, candidate generation via
+    hyperplane-LSH buckets — NOT all-pairs.
 
     Plan shape: one map-side bucket+norm projection, a self-join ON EQUAL
     BUCKET (hash join on the bucket key, candidates shrink from n² to
@@ -415,13 +414,13 @@ def embedding_cosine_pairs(
     paths (``_cap_buckets``). Default None — recall complete and
     value-identical to the SQL oracle.
     """
-    from .similarity import dot, hyperplane_bucket, norm
+    from .similarity import ID_COL, VEC_COL, dot, hyperplane_bucket, norm
 
     b = emb.select(
-        F.col(id_col),
-        F.col(vec_col),
-        hyperplane_bucket(vec_col, planes).alias("__bucket"),
-        norm(F.col(vec_col)).alias("__norm"),
+        F.col(ID_COL),
+        F.col(VEC_COL),
+        hyperplane_bucket(VEC_COL, planes).alias("__bucket"),
+        norm(F.col(VEC_COL)).alias("__norm"),
     )
     if max_bucket is not None:
         # checkpoint BEFORE the cap (mirrors simhash_pairs): the cap's
@@ -432,14 +431,14 @@ def embedding_cosine_pairs(
         b = b.localCheckpoint(eager=False)
         b = _cap_buckets(b, ["__bucket"], max_bucket)
     a = b.select(
-        F.col(id_col).alias("id_a"),
-        F.col(vec_col).alias("__ea"),
+        F.col(ID_COL).alias("id_a"),
+        F.col(VEC_COL).alias("__ea"),
         F.col("__bucket"),
         F.col("__norm").alias("__na"),
     )
     c = b.select(
-        F.col(id_col).alias("id_b"),
-        F.col(vec_col).alias("__eb"),
+        F.col(ID_COL).alias("id_b"),
+        F.col(VEC_COL).alias("__eb"),
         F.col("__bucket"),
         F.col("__norm").alias("__nb"),
     )
@@ -463,10 +462,9 @@ def _candidate_shingles(
     text_col: str,
     id_col: str,
     pairs: DataFrame,
-    shingle_n: int,
     prefilter: bool,
 ) -> DataFrame:
-    """(id, s): the distinct word n-grams of every document, semi-joined
+    """(id, s): the distinct word 3-grams of every document, semi-joined
     first down to the documents that appear in a candidate pair unless
     ``prefilter`` is off."""
     base = df
@@ -480,7 +478,7 @@ def _candidate_shingles(
     return base.select(
         F.col(id_col),
         F.explode(
-            F.array_distinct(word_shingles(tokens(F.col(text_col)), shingle_n))
+            F.array_distinct(word_shingles(tokens(F.col(text_col))))
         ).alias("s"),
     )
 
@@ -490,10 +488,9 @@ def ngram_jaccard_pairs(
     text_col: str,
     id_col: str,
     pairs: DataFrame,
-    shingle_n: int = 3,
     prefilter: bool = True,
 ) -> DataFrame:
-    """Exact Jaccard (distinct word n-grams) for given candidate (id_a, id_b)
+    """Exact Jaccard (distinct word 3-grams) for given candidate (id_a, id_b)
     pairs; returns (id_a, id_b, n_intersect, n_union) — integers so the
     oracle compares exactly; ratio = n_intersect / n_union.
 
@@ -512,7 +509,7 @@ def ngram_jaccard_pairs(
     the example); the default stays on for the real LSH-candidate shape.
 
     CONTRACT: every pair endpoint must have ≥1 shingle
-    (≥ ``shingle_n`` tokens) and exist in ``df`` — true by construction
+    (≥ 3 tokens) and exist in ``df`` — true by construction
     for LSH candidates, whose members banded a non-NULL signature. A
     pair with a shingle-less or absent endpoint is DROPPED by the final
     inner size-joins, not returned with n_intersect=0; this mirrors the
@@ -535,7 +532,7 @@ def ngram_jaccard_pairs(
     # are GC-released with the frame
     pairs = pairs.localCheckpoint(eager=False)
     sh = _candidate_shingles(
-        df, text_col, id_col, pairs, shingle_n, prefilter
+        df, text_col, id_col, pairs, prefilter
     ).localCheckpoint(eager=False)
     sizes = (
         sh.groupBy(id_col)
@@ -580,7 +577,6 @@ def incremental_near_dup_keep(
     band_size: int = 2,
     keep_num: int = 4,
     keep_den: int = 5,
-    max_bucket: Optional[int] = None,
     corpus_sigs: Optional[DataFrame] = None,
     new_sigs: Optional[DataFrame] = None,
 ) -> DataFrame:
@@ -629,11 +625,9 @@ def incremental_near_dup_keep(
             corpus, text_col, id_col, num_hashes, include_sigless=False
         )
     cross = lsh_candidate_pairs_cross(
-        corpus_sigs, sigs_new, id_col, num_hashes, band_size, max_bucket
+        corpus_sigs, sigs_new, id_col, num_hashes, band_size
     )
-    intra = lsh_candidate_pairs(
-        sigs_new, id_col, num_hashes, band_size, max_bucket
-    )
+    intra = lsh_candidate_pairs(sigs_new, id_col, num_hashes, band_size)
     cand = cross.unionByName(intra).distinct()
     union_docs = corpus.select(id_col, text_col).unionByName(
         new_docs.select(id_col, text_col)
@@ -901,10 +895,9 @@ def boilerplate_shingles(
     df: DataFrame,
     text_col: str,
     id_col: str,
-    shingle_n: int = 3,
     min_docs: int = 5,
 ) -> DataFrame:
-    """(shingle, doc_freq) for word n-grams appearing in at least
+    """(shingle, doc_freq) for word 3-grams appearing in at least
     ``min_docs`` DISTINCT documents — the boilerplate inventory (nav
     chrome, footers, cookie banners) that produces the hot LSH buckets
     the ``max_bucket`` caps guard against; measuring it directly is how
@@ -920,7 +913,7 @@ def boilerplate_shingles(
     sh = df.select(
         F.col(id_col),
         F.explode(
-            F.array_distinct(word_shingles(tokens(F.col(text_col)), shingle_n))
+            F.array_distinct(word_shingles(tokens(F.col(text_col))))
         ).alias("shingle"),
     )
     return (
@@ -940,22 +933,17 @@ def remove_frequent_segments(
     id_col: str,
     segment_words: int = 4,
     min_docs: int = 2,
-    split_pattern: Optional[str] = None,
-    joiner: str = " ",
 ) -> DataFrame:
     """CCNet-style frequent-segment REMOVAL: delete every segment whose
     document frequency reaches ``min_docs`` (nav chrome, footers, cookie
     banners — the boilerplate that :func:`boilerplate_shingles` merely
     inventories) and reassemble each document from its surviving
-    segments in original order. Returns ``(id_col, clean_text)``;
-    documents whose every segment was boilerplate drop out entirely
-    (they carried no unique content).
+    segments, space-joined in original order. Returns
+    ``(id_col, clean_text)``; documents whose every segment was
+    boilerplate drop out entirely (they carried no unique content).
 
-    Segmentation is pluggable: with ``split_pattern`` (``"\\n"`` for the
-    CCNet line-dedup, ``r"\\n{2,}"`` for paragraphs) segments are the
-    trimmed non-empty splits; without one — single-line corpora like the
-    test table — segments are consecutive non-overlapping
-    ``segment_words``-word windows.
+    Segments are consecutive non-overlapping ``segment_words``-word
+    windows of the tokens.
 
     Plan at 100 TB (mirrors the reference pipeline's enrich-then-route
     shape, translate.rb:84-118, but corpus-directed):
@@ -968,12 +956,9 @@ def remove_frequent_segments(
         the DuckDB oracle bit-exact; a 10^10-doc deployment keys the
         exchange on a 64-bit fingerprint instead, accepting CCNet's
         collision-removal semantics — a one-line swap;
-      - both segment planes are pure codegen, with no interpreted HOF:
-        the split plane collapses whitespace around (and runs of) the
-        delimiter to a sentinel via one ``regexp_replace`` over the raw
-        text, so segments come out trimmed (``\\r`` included); the
-        window plane is ``word_tiles``, one ``regexp_extract_all`` over
-        the space-joined tokens;
+      - segmentation is pure codegen, with no interpreted HOF:
+        ``word_tiles``, one ``regexp_extract_all`` over the space-joined
+        tokens;
       - survivors of the ``HAVING doc_freq >= min_docs`` filter are few
         relative to the corpus by the same argument as
         :func:`boilerplate_shingles`, so the re-entry anti-join
@@ -981,23 +966,8 @@ def remove_frequent_segments(
       - reassembly is one exchange keyed on the doc id; the per-doc
         ``array_sort``/``transform`` runs on a handful of elements per
         row, not the corpus stream.
-
-    ``split_pattern`` is embedded in a larger regex (anchors and
-    backreferences unsupported); segments containing NUL bytes would
-    collide with the internal sentinel.
     """
-    if split_pattern is not None:
-        # collapse delimiter runs AND their surrounding whitespace
-        # (\r included) to one sentinel, trim the outer ends, split:
-        # trimmed non-empty segments with zero interpreted HOFs.
-        sentinel = "\x00"
-        norm = F.regexp_replace(
-            F.col(text_col), "\\s*(?:" + split_pattern + ")\\s*", sentinel
-        )
-        norm = F.regexp_replace(norm, "^\\s+|\\s+$", "")
-        seg_array = F.array_remove(F.split(norm, sentinel, -1), "")
-    else:
-        seg_array = word_tiles(tokens(F.col(text_col)), int(segment_words))
+    seg_array = word_tiles(tokens(F.col(text_col)), int(segment_words))
     base = df.select(F.col(id_col), seg_array.alias("__segs"))
     # _outer generates + cheap null filters: a plain explode makes
     # Catalyst push a `size(..)>0 AND isnotnull(..)` predicate into the
@@ -1021,7 +991,7 @@ def remove_frequent_segments(
                                 F.col("segment").alias("s")))
     )
     return kept.groupBy(id_col).agg(
-        F.concat_ws(joiner, F.transform(ordered, lambda x: x["s"]))
+        F.concat_ws(" ", F.transform(ordered, lambda x: x["s"]))
         .alias("clean_text")
     )
 
@@ -1042,8 +1012,8 @@ def remove_duplicate_spans(
     duplicated span drop out, as do empty documents.
 
     This is the sliding-window complement of
-    :func:`remove_frequent_segments`: segments are fixed tilings (lines /
-    paragraphs / non-overlapping windows) so a shared passage that
+    :func:`remove_frequent_segments`: segments are fixed tilings
+    (non-overlapping word windows) so a shared passage that
     straddles a tile boundary survives; overlapping grams catch a
     duplicated run at ANY offset, and adjacent flagged grams merge into
     one removed span for free because removal is per covered WORD. The

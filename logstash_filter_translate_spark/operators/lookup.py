@@ -1,6 +1,6 @@
 """Lookup (fetch) strategies: exact, ordered first-match regex, union-regex
 substitution — the three modes of the reference
-(/root/reference/lib/logstash/filters/fetch_strategy/memory.rb:4-49).
+(lib/logstash/filters/fetch_strategy/memory.rb:4-49).
 
 The probe contract
 ------------------
@@ -34,8 +34,9 @@ one Arrow-vectorized pandas-UDF wrapper (:func:`_arrow_udfs`) that looks up
 each distinct value once per Arrow batch. The (pattern, value) table ships
 as strings and is compiled per batch inside the UDF closure, because
 compiled patterns don't pickle (the reference precompiles per reload —
-fetch_strategy/file.rb:34-40). Regex patterns carry a plan-time
-:func:`required_literal` that screens the ordered scan.
+fetch_strategy/file.rb:34-40). Each regex pattern carries a plan-time
+:func:`required_literal`; the ordered scan searches only the patterns
+whose literal the value contains (or that have none).
 """
 
 from __future__ import annotations
@@ -539,8 +540,8 @@ class RegexFirstMatch(_ArrowUdfPlane):
     Each pattern carries its :func:`required_literal`, found at plan time;
     the ordered scan only searches a pattern whose literal is in the value
     (or that has none), which keeps dictionary order and the first match.
-    When some pattern has no literal, a union of all patterns first screens
-    out values that match none of them.
+    No other screen runs: a value that matches nothing walks the whole
+    scan.
     """
 
     def __init__(
@@ -561,49 +562,24 @@ class RegexFirstMatch(_ArrowUdfPlane):
         table: List[Tuple[str, Any]] = [(str(k), conv(v)) for k, v in pairs]
         # fail fast at plan time on invalid patterns (reference raises at
         # register when compiling — fetch_strategy/memory.rb:22)
-        compiled_probe = [re.compile(k) for k, _ in table]
+        for k, _ in table:
+            re.compile(k)
         literals = [required_literal(k) for k, _ in table]
-        # the union prefilter only pays when some pattern has no literal to
-        # screen it. It concatenates patterns, which RENUMBERS capturing
-        # groups — a pattern using a backreference (e.g. (a)\1) would
-        # silently never match in the union and short-circuit to a false
-        # miss — so any group or backreference rules it out.
-        self.union_prefilter = union_ok = (
-            len(table) > 4
-            and None in literals
-            and not any(
-                c.groups > 0 or re.search(r"\\\d", k)
-                for c, (k, _) in zip(compiled_probe, table)
-            )
-        )
 
         def build():
             compiled = [
                 (re.compile(k), k, v, lit) for (k, v), lit in zip(table, literals)
             ]
-            try:
-                union = (
-                    re.compile("|".join(f"(?:{k})" for k, _ in table))
-                    if union_ok
-                    else None
-                )
-            except re.error:
-                union = None  # e.g. mixed flags; fall back to the plain scan
             fault = re.compile(fault_pattern) if fault_pattern else None
-            return compiled, union, fault
+            return compiled, fault
 
         def first_match(s, state):
-            compiled, union, fault = state
+            compiled, fault = state
             if fault is not None and fault.search(s):
                 raise RuntimeError(
                     f"injected lookup fault for {s!r} "
                     "(translate_spec.rb:738-742 containment parity)"
                 )
-            # miss prefilter: one union-regex probe short-circuits the
-            # O(keys) ordered scan for non-matching rows (the "could be
-            # expensive" caveat at translate.rb:143-144)
-            if union is not None and not union.search(s):
-                return None
             for pat, raw_key, val, lit in compiled:
                 if (lit is None or lit in s) and pat.search(s):
                     return val, raw_key

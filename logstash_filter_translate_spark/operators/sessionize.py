@@ -22,17 +22,15 @@ DEFAULT_GAP_MINUTES = 30
 
 
 def sessionize(
-    df: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    id_col: str = "event_id",
-    gap_minutes: int = DEFAULT_GAP_MINUTES,
+    df: DataFrame, gap_minutes: int = DEFAULT_GAP_MINUTES
 ) -> DataFrame:
-    """(id, user, session_seq) with session_seq starting at 1 per user.
-    Orders by (ts, id) — the id tiebreak makes the output deterministic
-    under timestamp ties, which the oracle comparison requires."""
-    w = Window.partitionBy(user_col).orderBy(ts_col, id_col)
-    prev_ts = F.lag(F.col(ts_col)).over(w)
+    """(event_id, user_id, session_seq) over the events table's
+    ``(event_id, user_id, ts)`` columns, with session_seq starting at 1
+    per user. Orders by (ts, event_id) — the id tiebreak makes the output
+    deterministic under timestamp ties, which the oracle comparison
+    requires."""
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    prev_ts = F.lag(F.col("ts")).over(w)
     # ts may be TIMESTAMP_NTZ (no direct cast to long under ANSI): go via
     # timestamp — session tz is UTC (session.py), so the epoch is stable
     def _epoch(c):
@@ -40,16 +38,12 @@ def sessionize(
 
     new_session = (
         prev_ts.isNull()
-        | (_epoch(F.col(ts_col)) - _epoch(prev_ts) > gap_minutes * 60)
+        | (_epoch(F.col("ts")) - _epoch(prev_ts) > gap_minutes * 60)
     ).cast("long")
     seq = F.sum(new_session).over(
         w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    return df.select(
-        F.col(id_col),
-        F.col(user_col),
-        seq.alias("session_seq"),
-    )
+    return df.select("event_id", "user_id", seq.alias("session_seq"))
 
 
 def rolling_anomaly(

@@ -18,10 +18,16 @@ the plumbing (bucket column → co-partitioned join) is identical.
 
 from __future__ import annotations
 
-from typing import List, Optional
+from typing import List
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+#: column names of every embedding frame: corpus and centroid rows are
+#: (ID_COL, VEC_COL), query rows (QUERY_ID_COL, VEC_COL)
+ID_COL = "vec_id"
+VEC_COL = "embedding"
+QUERY_ID_COL = "query_id"
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -54,24 +60,21 @@ def cosine(a: Column, b: Column) -> Column:
     return F.try_divide(dot(a, b), norm(a) * norm(b))
 
 
-def _top_k(scored: DataFrame, query_id_col: str, id_col: str, k: int) -> DataFrame:
+def _top_k(scored: DataFrame, k: int) -> DataFrame:
     """The one top-k tail of every scoring plane: keep the ``k`` best
     ``score`` rows per query (NULL scores last, ties to the lower id) and
-    return (query_id, rank, id)."""
-    w = Window.partitionBy(query_id_col).orderBy(F.desc("score"), F.asc(id_col))
+    return (query_id, rank, vec_id)."""
+    w = Window.partitionBy(QUERY_ID_COL).orderBy(F.desc("score"), F.asc(ID_COL))
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
-        .select(query_id_col, "rank", id_col)
+        .select(QUERY_ID_COL, "rank", ID_COL)
     )
 
 
 def brute_force_topk(
     corpus: DataFrame,
     queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
     k: int = 5,
 ) -> DataFrame:
     """Exact cosine top-k: broadcast the query set, score every (query,
@@ -88,16 +91,16 @@ def brute_force_topk(
     scoreable candidates.
     """
     q = queries.select(
-        F.col(query_id_col), F.col(vec_col).alias("__qvec")
+        F.col(QUERY_ID_COL), F.col(VEC_COL).alias("__qvec")
     )
     scored = corpus.join(
-        F.broadcast(q), F.col(id_col) != F.col(query_id_col)
+        F.broadcast(q), F.col(ID_COL) != F.col(QUERY_ID_COL)
     ).select(
-        query_id_col,
-        id_col,
-        cosine(F.col(vec_col), F.col("__qvec")).alias("score"),
+        QUERY_ID_COL,
+        ID_COL,
+        cosine(F.col(VEC_COL), F.col("__qvec")).alias("score"),
     )
-    return _top_k(scored, query_id_col, id_col, k)
+    return _top_k(scored, k)
 
 
 def hyperplane_bucket(vec_col: str, planes: List[List[float]]) -> Column:
@@ -127,8 +130,8 @@ def hyperplane_bucket(vec_col: str, planes: List[List[float]]) -> Column:
 def ivf_assign(
     vectors: DataFrame,
     centroids: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
+    id_col: str = ID_COL,
+    vec_col: str = VEC_COL,
 ) -> DataFrame:
     """IVF cell assignment: nearest centroid by cosine (ties → lowest
     centroid id). Returns every column of ``vectors`` plus ``cell``.
@@ -170,12 +173,7 @@ def ivf_assign(
 
 
 def _query_cells(
-    queries: DataFrame,
-    centroids: DataFrame,
-    id_col: str,
-    vec_col: str,
-    query_id_col: str,
-    nprobe: int = 1,
+    queries: DataFrame, centroids: DataFrame, nprobe: int
 ) -> DataFrame:
     """(query_id, __qvec, cell): each query joined to its ``nprobe``
     nearest-centroid cells — the broadcast probe side of every IVF plane.
@@ -190,50 +188,40 @@ def _query_cells(
     (identical to ivf_assign's max_by struct for rank 1, so nprobe=1
     reproduces the original plane exactly)."""
     c = centroids.select(
-        F.col(id_col).alias("__cid"), F.col(vec_col).alias("__cvec")
+        F.col(ID_COL).alias("__cid"), F.col(VEC_COL).alias("__cvec")
     )
     scored = queries.join(F.broadcast(c)).select(
-        query_id_col,
-        F.col(vec_col).alias("__qvec"),
+        QUERY_ID_COL,
+        F.col(VEC_COL).alias("__qvec"),
         F.col("__cid"),
-        cosine(F.col(vec_col), F.col("__cvec")).alias("__cs"),
+        cosine(F.col(VEC_COL), F.col("__cvec")).alias("__cs"),
     )
-    w = Window.partitionBy(query_id_col).orderBy(
+    w = Window.partitionBy(QUERY_ID_COL).orderBy(
         F.desc("__cs"), F.asc("__cid")
     )
     return (
         scored.withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") <= nprobe)
-        .select(query_id_col, "__qvec", F.col("__cid").alias("cell"))
+        .select(QUERY_ID_COL, "__qvec", F.col("__cid").alias("cell"))
     )
 
 
-def _cell_scored_topk(
-    cb: DataFrame,
-    qb: DataFrame,
-    id_col: str,
-    vec_col: str,
-    query_id_col: str,
-    k: int,
-) -> DataFrame:
+def _cell_scored_topk(cb: DataFrame, qb: DataFrame, k: int) -> DataFrame:
     """Shared IVF tail: co-cell broadcast join → cosine → per-query top-k."""
     scored = cb.join(F.broadcast(qb), "cell").filter(
-        F.col(id_col) != F.col(query_id_col)
+        F.col(ID_COL) != F.col(QUERY_ID_COL)
     ).select(
-        query_id_col,
-        id_col,
-        cosine(F.col(vec_col), F.col("__qvec")).alias("score"),
+        QUERY_ID_COL,
+        ID_COL,
+        cosine(F.col(VEC_COL), F.col("__qvec")).alias("score"),
     )
-    return _top_k(scored, query_id_col, id_col, k)
+    return _top_k(scored, k)
 
 
 def ivf_topk(
     corpus: DataFrame,
     queries: DataFrame,
     centroids: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
     k: int = 5,
     nprobe: int = 1,
 ) -> DataFrame:
@@ -241,9 +229,9 @@ def ivf_topk(
     nearest cells. Cells come from ivf_assign inline — the one-shot plane;
     at scale build the index once with write_ivf_index and query via
     ivf_topk_indexed."""
-    cb = ivf_assign(corpus, centroids, id_col, vec_col)
-    qb = _query_cells(queries, centroids, id_col, vec_col, query_id_col, nprobe)
-    return _cell_scored_topk(cb, qb, id_col, vec_col, query_id_col, k)
+    cb = ivf_assign(corpus, centroids)
+    qb = _query_cells(queries, centroids, nprobe)
+    return _cell_scored_topk(cb, qb, k)
 
 
 #: subdirectory inside an IVF index holding the centroids it was built
@@ -257,8 +245,6 @@ def write_ivf_index(
     corpus: DataFrame,
     centroids: DataFrame,
     path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> None:
     """One-time IVF index build: assign every corpus vector to its nearest
     centroid and write the corpus PARTITIONED BY cell. This is the
@@ -271,11 +257,11 @@ def write_ivf_index(
     cell ids are only meaningful relative to the centroid set they were
     assigned under, so an index queried or appended with a DIFFERENT
     centroid set probes the wrong cells and silently returns wrong
-    neighbors. Query with ``ivf_topk_indexed(..., centroids=None)`` and
-    grow with ``append_ivf_index`` — both read the stored set."""
-    assigned = ivf_assign(corpus, centroids, id_col, vec_col)
+    neighbors. ``ivf_topk_indexed`` queries and ``append_ivf_index``
+    grows the index under the stored set."""
+    assigned = ivf_assign(corpus, centroids)
     assigned.write.mode("overwrite").partitionBy("cell").parquet(path)
-    centroids.select(id_col, vec_col).coalesce(1).write.mode(
+    centroids.select(ID_COL, VEC_COL).coalesce(1).write.mode(
         "overwrite"
     ).parquet(_centroids_path(path))
 
@@ -315,8 +301,7 @@ def load_ivf_centroids(spark, index_path: str) -> DataFrame:
         raise ValueError(
             f"IVF index at {index_path} has no stored centroids "
             f"({IVF_CENTROIDS_DIR}/ missing — not built by "
-            "write_ivf_index?). Rebuild the index, or pass the exact "
-            "build-time centroid frame explicitly."
+            "write_ivf_index?). Rebuild the index with write_ivf_index."
         )
     return spark.read.parquet(cpath)
 
@@ -325,8 +310,8 @@ def append_ivf_index(
     spark,
     new_corpus: DataFrame,
     path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
+    id_col: str = ID_COL,
+    vec_col: str = VEC_COL,
 ) -> None:
     """Incremental IVF maintenance: assign NEW vectors to cells under the
     index's own stored centroids and APPEND their files to the existing
@@ -348,39 +333,28 @@ def ivf_topk_indexed(
     spark,
     index_path: str,
     queries: DataFrame,
-    centroids: Optional[DataFrame] = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
     k: int = 5,
-    nprobe: int = 1,
 ) -> DataFrame:
     """IVF query plane over a materialized index: the corpus arrives
     already partitioned by cell, so the co-cell join prunes the scan to
-    the ``nprobe`` probed cells per query — dynamic partition pruning
-    reuses the broadcast query side as the pruning subquery (no
-    driver-side collect of cell ids needed).
+    each query's nearest cell — dynamic partition pruning reuses the
+    broadcast query side as the pruning subquery (no driver-side collect
+    of cell ids needed).
 
-    ``centroids=None`` (default) probes under the index's OWN stored
-    centroid set (load_ivf_centroids) — the only set its cell ids are
-    meaningful under. Passing a frame explicitly is the escape hatch for
-    an index written without stored centroids; a mismatched set probes
-    the wrong cells and silently returns wrong neighbors, which is
-    exactly the hazard the stored set removes."""
-    if centroids is None:
-        centroids = load_ivf_centroids(spark, index_path)
+    Queries are probed under the index's OWN stored centroid set
+    (load_ivf_centroids) — the only set its cell ids are meaningful
+    under; any other set would probe the wrong cells and silently return
+    wrong neighbors."""
+    centroids = load_ivf_centroids(spark, index_path)
     corpus = spark.read.parquet(index_path)
-    qb = _query_cells(queries, centroids, id_col, vec_col, query_id_col, nprobe)
-    return _cell_scored_topk(corpus, qb, id_col, vec_col, query_id_col, k)
+    qb = _query_cells(queries, centroids, 1)
+    return _cell_scored_topk(corpus, qb, k)
 
 
 def lsh_topk_multiband(
     corpus: DataFrame,
     queries: DataFrame,
     bands: List[List[List[float]]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
     k: int = 5,
 ) -> DataFrame:
     """Multi-band hyperplane LSH: a candidate qualifies if it shares a
@@ -401,7 +375,7 @@ def lsh_topk_multiband(
             *[
                 F.struct(
                     F.lit(i).alias("__band"),
-                    hyperplane_bucket(vec_col, planes).alias("__bucket"),
+                    hyperplane_bucket(VEC_COL, planes).alias("__bucket"),
                 )
                 for i, planes in enumerate(bands)
             ]
@@ -411,36 +385,33 @@ def lsh_topk_multiband(
         ).select(key, "b.__band", "b.__bucket")
 
     cand = (
-        banded(corpus, id_col)
-        .join(F.broadcast(banded(queries, query_id_col)), ["__band", "__bucket"])
-        .select(query_id_col, id_col)
+        banded(corpus, ID_COL)
+        .join(F.broadcast(banded(queries, QUERY_ID_COL)), ["__band", "__bucket"])
+        .select(QUERY_ID_COL, ID_COL)
         .distinct()
-        .filter(F.col(id_col) != F.col(query_id_col))
+        .filter(F.col(ID_COL) != F.col(QUERY_ID_COL))
     )
     scored = (
-        cand.join(corpus.select(id_col, vec_col), id_col)
+        cand.join(corpus.select(ID_COL, VEC_COL), ID_COL)
         .join(
             F.broadcast(
-                queries.select(query_id_col, F.col(vec_col).alias("__qvec"))
+                queries.select(QUERY_ID_COL, F.col(VEC_COL).alias("__qvec"))
             ),
-            query_id_col,
+            QUERY_ID_COL,
         )
         .select(
-            query_id_col,
-            id_col,
-            cosine(F.col(vec_col), F.col("__qvec")).alias("score"),
+            QUERY_ID_COL,
+            ID_COL,
+            cosine(F.col(VEC_COL), F.col("__qvec")).alias("score"),
         )
     )
-    return _top_k(scored, query_id_col, id_col, k)
+    return _top_k(scored, k)
 
 
 def lsh_topk(
     corpus: DataFrame,
     queries: DataFrame,
     planes: List[List[float]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
     k: int = 5,
 ) -> DataFrame:
     """Approximate top-k: score only within the query's hyperplane bucket.
@@ -448,17 +419,17 @@ def lsh_topk(
     At scale the corpus is written bucketed/partitioned by this bucket id,
     so a query touches one partition instead of the full corpus.
     """
-    cb = corpus.withColumn("__bucket", hyperplane_bucket(vec_col, planes))
+    cb = corpus.withColumn("__bucket", hyperplane_bucket(VEC_COL, planes))
     qb = queries.select(
-        F.col(query_id_col),
-        F.col(vec_col).alias("__qvec"),
-        hyperplane_bucket(vec_col, planes).alias("__bucket"),
+        F.col(QUERY_ID_COL),
+        F.col(VEC_COL).alias("__qvec"),
+        hyperplane_bucket(VEC_COL, planes).alias("__bucket"),
     )
     scored = cb.join(F.broadcast(qb), "__bucket").filter(
-        F.col(id_col) != F.col(query_id_col)
+        F.col(ID_COL) != F.col(QUERY_ID_COL)
     ).select(
-        query_id_col,
-        id_col,
-        cosine(F.col(vec_col), F.col("__qvec")).alias("score"),
+        QUERY_ID_COL,
+        ID_COL,
+        cosine(F.col(VEC_COL), F.col("__qvec")).alias("score"),
     )
-    return _top_k(scored, query_id_col, id_col, k)
+    return _top_k(scored, k)

@@ -88,11 +88,7 @@ class Translate:
                 config.dictionary_path,
                 refresh_behaviour=config.refresh_behaviour,
                 refresh_interval=config.refresh_interval,
-                yaml_code_point_limit=(
-                    config.yaml_dictionary_code_point_limit
-                    if config.yaml_dictionary_code_point_limit is not None
-                    else config.effective_yaml_code_point_limit()
-                ),
+                yaml_code_point_limit=config.effective_yaml_code_point_limit(),
                 yaml_load_strategy=config.yaml_load_strategy,
             )
         self.strategy: LookupStrategy = self._build_strategy()

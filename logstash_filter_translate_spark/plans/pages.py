@@ -54,16 +54,10 @@ def _pick(arr_lit: Column, mix: Column, n: int) -> Column:
     return F.element_at(arr_lit, (F.pmod(mix, F.lit(n)) + 1).cast("int"))
 
 
-def generate_pages(
-    spark: SparkSession, n_rows: int, partitions: int | None = None
-) -> DataFrame:
-    """Build the pages DataFrame; ``partitions`` controls source parallelism
-    (defaults to spark.default.parallelism)."""
-    rng = (
-        spark.range(0, n_rows, 1, partitions)
-        if partitions
-        else spark.range(0, n_rows)
-    )
+def generate_pages(spark: SparkSession, n_rows: int) -> DataFrame:
+    """Build the pages DataFrame over ``spark.range`` (source parallelism
+    is spark.default.parallelism)."""
+    rng = spark.range(0, n_rows)
     i = F.col("id")
     words = F.array(*[F.lit(w) for w in WORDS])
     hosts = F.array(*[F.lit(h) for h in HOSTS])

@@ -1015,7 +1015,6 @@ def q_boilerplate_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
         _load(spark, sf_dir, "documents"),
         "text",
         "doc_id",
-        shingle_n=3,
         min_docs=BOILERPLATE_MIN_DOCS,
     )
 
@@ -2345,9 +2344,8 @@ SEGMENT_MIN_DOCS = 2  # doc-frequency at/above which a segment is boilerplate
 
 
 def q_segment_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CCNet-style frequent-segment removal: segments (4-word windows on
-    this single-line corpus; lines/paragraphs via split_pattern on real
-    corpora) seen in ≥2 distinct docs are deleted everywhere and docs
+    """CCNet-style frequent-segment removal: segments (4-word windows)
+    seen in ≥2 distinct docs are deleted everywhere and docs
     reassemble from the survivors in order; pure-boilerplate docs drop
     out. At sf0.01: 341 segments removed, 13 docs dropped."""
     from ..operators.dedup import remove_frequent_segments
@@ -2460,7 +2458,7 @@ def q_similarity_ivf_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     probed cells). Same oracle as
     similarity_ivf — the index is a layout, not a semantic change. The
     serve side probes under the index's OWN stored centroids
-    (centroids=None → load_ivf_centroids), exercising the
+    (load_ivf_centroids), exercising the
     self-describing layout end-to-end; the pinned digest has the query
     side scan the _centroids parquet, not re-filter the embeddings
     table."""

@@ -189,8 +189,8 @@ def _load_yaml_streaming(content: str, path: str) -> Optional[Pairs]:
                 return None
             elif isinstance(event, yaml.AliasEvent):
                 # *x alias values need anchor resolution — one_shot's
-                # composer does it; consuming the event here silently
-                # DROPPED the aliased pair (code-review r7)
+                # composer does it; consuming the event here would
+                # silently drop the aliased pair
                 return None
             elif isinstance(event, yaml.ScalarEvent) and depth == 0:
                 # a root-scalar document is not a mapping: fall back so
@@ -350,15 +350,15 @@ class DictionaryFile:
             result = [(k, merged[k]) for k in order]
         else:  # replace
             result = list(new_pairs)
-        # content-compare before bumping (code-review r7): without it,
-        # every scheduler tick past the mtime short-circuit (interval >
-        # MTIME_CHECK_MAX_INTERVAL), and every touch that rewrote
-        # identical bytes, reported changed=True — and Translate.refresh
-        # rebuilt the strategy and callers re-broadcast, forever, for
-        # nothing. The version is the CONTENT version (reload() contract).
+        # content-compare before bumping: the version is the CONTENT
+        # version (reload() contract), so a scheduler tick past the mtime
+        # short-circuit (interval > MTIME_CHECK_MAX_INTERVAL) or a touch
+        # that rewrote identical bytes reports changed=False, and
+        # Translate.refresh neither rebuilds the strategy nor makes
+        # callers re-broadcast.
         self._loaded_mtime = mtime
-        # type-aware equality (code-review r8): Python == treats
-        # 1 == 1.0 == True, so a reload that only flipped a value's
+        # type-aware equality: Python == treats 1 == 1.0 == True, so
+        # without the type tags a reload that only flipped a value's
         # YAML type (1 -> 1.0, true -> 1) would compare equal, skip the
         # version bump, and keep the stale typed value in the built
         # strategy until an unrelated edit. Recursive, because the same

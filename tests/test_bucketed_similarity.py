@@ -158,7 +158,7 @@ def test_ivf_index_write_read_equals_inline_and_prunes(spark, tmp_path):
     cells = {p for p in os.listdir(path) if p.startswith("cell=")}
     assert len(cells) > 1  # genuinely partitioned layout
 
-    indexed = ivf_topk_indexed(spark, path, queries, centroids, k=3)
+    indexed = ivf_topk_indexed(spark, path, queries, k=3)
     plan = indexed._jdf.queryExecution().executedPlan().toString()
     # the index scan must carry a dynamic-pruning partition filter on cell
     assert "dynamicpruning" in plan.lower(), plan
@@ -170,10 +170,10 @@ def test_ivf_index_write_read_equals_inline_and_prunes(spark, tmp_path):
 
 
 def test_ivf_index_self_describing_and_incremental_append(spark, tmp_path):
-    """r8: the IVF index is SELF-DESCRIBING — write_ivf_index persists
+    """The IVF index is SELF-DESCRIBING — write_ivf_index persists
     its centroid set in-index (_centroids/, hidden from the corpus read
-    by the underscore convention), ivf_topk_indexed(centroids=None)
-    probes under that stored set, and append_ivf_index grows the index
+    by the underscore convention), ivf_topk_indexed probes under that
+    stored set, and append_ivf_index grows the index
     incrementally (assign under stored centroids, append cell
     partitions — the 100 TB maintenance path: a daily increment costs
     one scoring scan of the increment, not a full rebuild). Cell ids

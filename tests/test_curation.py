@@ -288,9 +288,8 @@ def test_token_budget_mix_three_regimes_and_subset_nesting(spark):
 
 def test_shuffle_shards_is_a_deterministic_partition_with_dense_pos(spark):
     """shuffle_shards: shards partition the id set, pos is dense 1..n per
-    shard ordered by the seeded hash, the whole assignment is a pure
-    function of (id, seed), and a different seed yields a different
-    permutation (epoch reshuffle)."""
+    shard ordered by the seeded hash, and the whole assignment is a pure
+    function of the id."""
     from logstash_filter_translate_spark.operators.curation import (
         shuffle_shards,
     )
@@ -311,18 +310,13 @@ def test_shuffle_shards_is_a_deterministic_partition_with_dense_pos(spark):
     assert {(r["doc_id"], r["shard"], r["pos"]) for r in out2} == {
         (r["doc_id"], r["shard"], r["pos"]) for r in out
     }
-    # a different seed is a different permutation
-    out3 = shuffle_shards(docs, "doc_id", 8, seed="epoch2|").collect()
-    assert {(r["doc_id"], r["shard"], r["pos"]) for r in out3} != {
-        (r["doc_id"], r["shard"], r["pos"]) for r in out
-    }
 
 
 def test_pack_sequences_layout_matches_brute_force(spark):
     """pack_sequences: (seq, off) equals the brute-force packing of the
     shard's token stream in shuffle order — off < seq_len, the first doc
     of every shard lands at (0, 0), and the layout is a pure function of
-    (id, seed)."""
+    the id."""
     from logstash_filter_translate_spark.operators.curation import (
         pack_sequences,
         shuffle_shards,
@@ -353,7 +347,7 @@ def test_pack_sequences_layout_matches_brute_force(spark):
             assert 0 <= r["off"] < seq_len
             cum += r["doc_id"] % 13 + 1
         assert (rows[0]["seq"], rows[0]["off"]) == (0, 0)
-    # pure function of (id, seed): rerun identical, new seed differs
+    # pure function of the id: rerun identical
     again = {
         (r["doc_id"], r["shard"], r["seq"], r["off"])
         for r in pack_sequences(docs, "doc_id", "text", 8, seq_len).collect()
@@ -361,13 +355,6 @@ def test_pack_sequences_layout_matches_brute_force(spark):
     assert again == {
         (r["doc_id"], r["shard"], r["seq"], r["off"]) for r in out
     }
-    other = {
-        (r["doc_id"], r["shard"], r["seq"], r["off"])
-        for r in pack_sequences(
-            docs, "doc_id", "text", 8, seq_len, seed="epoch2|"
-        ).collect()
-    }
-    assert other != again
 
 
 def test_pack_sequences_single_exchange_like_shuffle_shards(spark):
@@ -482,82 +469,6 @@ def test_hashed_linear_score_matches_hashlib_reference(spark):
         s = sum(_py_det_weight(_py_bucket(t, B)) for t in toks)
         expect[doc_id] = (len(toks), s, s >= 0)
     assert got == expect
-
-
-def test_hashed_linear_score_weight_table_planes(spark):
-    """Trained-weight plane: scores sum the table's milli-weights,
-    unseen buckets contribute 0, keep tests the cross-multiplied
-    threshold INCLUSIVELY at the boundary, and the weights join is a
-    broadcast. A weight row outside [0, buckets) matches no token, so
-    adding one changes no score."""
-    from logstash_filter_translate_spark.operators.curation import (
-        hashed_linear_score,
-    )
-
-    B = 1 << 10
-    wrows = [
-        (_py_bucket("good", B), 500),
-        (_py_bucket("bad", B), -700),
-    ]
-    docs = spark.createDataFrame(
-        [(1, "good good bad"), (2, "unseen tokens here")],
-        "doc_id long, text string",
-    )
-    for extra in ([], [(B + 5, 900)]):
-        weights = spark.createDataFrame(
-            wrows + extra, "bucket long, weight_milli long"
-        )
-        out = hashed_linear_score(
-            docs, "text", "doc_id", buckets=B, weights=weights,
-            threshold_milli=100,
-        )
-        plan = out._jdf.queryExecution().executedPlan().toString()
-        assert "BroadcastHashJoin" in plan, plan[:1200]
-        got = {
-            r["doc_id"]: (r["n_tokens"], r["score_milli"], r["keep"])
-            for r in out.collect()
-        }
-        # doc 1: 500+500-700 = 300 >= 100*3 (boundary, inclusive) -> keep
-        # doc 2: all unseen -> 0 < 100*3 -> drop
-        assert got == {1: (3, 300, True), 2: (3, 0, False)}, (extra, got)
-
-
-def test_hashed_linear_score_weight_table_hardening(spark):
-    """Malformed-model and naming hazards: duplicate
-    bucket rows must NOT fan out the join (n_tokens would corrupt, not
-    just the score) — they normalize deterministically to the max
-    weight; and an id_col literally named 'bucket' must not collide
-    with the internal join key."""
-    from logstash_filter_translate_spark.operators.curation import (
-        hashed_linear_score,
-    )
-
-    B = 1 << 10
-    gb = _py_bucket("good", B)
-    weights = spark.createDataFrame(
-        [(gb, 500), (gb, 120)],  # duplicate rows for one bucket
-        "bucket long, weight_milli long",
-    )
-    docs = spark.createDataFrame(
-        [(1, "good good good")], "doc_id long, text string"
-    )
-    got = hashed_linear_score(
-        docs, "text", "doc_id", buckets=B, weights=weights
-    ).collect()
-    assert [(r["n_tokens"], r["score_milli"]) for r in got] == [(3, 1500)]
-
-    # id_col named 'bucket' through the weights plane: no ambiguity
-    docs2 = spark.createDataFrame(
-        [(7, "good good")], "bucket long, text string"
-    )
-    got2 = hashed_linear_score(
-        docs2, "text", "bucket", buckets=B,
-        weights=spark.createDataFrame(
-            [(gb, 500)], "bucket long, weight_milli long"
-        ),
-    ).collect()
-    assert [(r["bucket"], r["n_tokens"], r["score_milli"]) for r in got2] \
-        == [(7, 2, 1000)]
 
 
 def test_chunk_documents_layout_and_overlap(spark):

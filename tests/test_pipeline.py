@@ -42,14 +42,18 @@ def assert_aggregates_match_routed(spark, out):
 
 
 def test_generator_is_deterministic(spark):
-    a = generate_pages(spark, 200, 4).collect()
-    b = generate_pages(spark, 200, 2).collect()  # partitioning must not matter
+    a = generate_pages(spark, 200).collect()
+    b = generate_pages(spark, 200).collect()
     assert sorted(map(str, a)) == sorted(map(str, b))
     assert len(a) == 200
+    # each row is a function of its id alone: a shorter run, split into
+    # different source partitions, yields a subset of the same rows
+    c = generate_pages(spark, 120).collect()
+    assert set(map(str, c)) <= set(map(str, a))
 
 
 def test_generator_schema(spark):
-    df = generate_pages(spark, 10, 2)
+    df = generate_pages(spark, 10)
     assert dict(df.dtypes) == {
         "url": "string",
         "warc_ts": "timestamp",
@@ -66,7 +70,7 @@ def test_extract_text_byte_identity_native_and_arrow(spark):
         extract_text_arrow,
     )
 
-    pages = generate_pages(spark, N, 4)
+    pages = generate_pages(spark, N)
     native = P.parse_stage(pages)
     arrow = pages.withColumn("extracted_text", extract_text_arrow(F.col("html")))
     for df in (native, arrow):
@@ -77,7 +81,7 @@ def test_extract_text_byte_identity_native_and_arrow(spark):
 
 
 def test_pipeline_routes_and_aggregates(spark, tmp_path):
-    pages = generate_pages(spark, N, 4)
+    pages = generate_pages(spark, N)
     out = str(tmp_path / "out")
     metrics = P.run_pipeline(spark, pages, out)
     assert metrics["rows"] == N
@@ -116,7 +120,7 @@ def _job_groups_after(spark, job_id):
 def test_aggregate_writes_inherit_callers_job_group(spark, tmp_path):
     """The aggregate write threads inherit the caller's local properties:
     every job the pipeline starts lands in the caller's job group."""
-    pages = generate_pages(spark, 1000, 4)
+    pages = generate_pages(spark, 1000)
     sc = spark.sparkContext
     before = max(_job_groups_after(spark, -1), default=-1)
     sc.setJobGroup("pipeline_under_test", "job group inheritance")
@@ -135,7 +139,7 @@ def test_failed_aggregate_write_waits_reraises_and_reruns(
     """One failing aggregate write: run_pipeline re-raises its error only
     after the other writes have ended (no write thread outlives the call),
     and a rerun into the same out_dir replaces all four tables."""
-    pages = generate_pages(spark, 1000, 4)
+    pages = generate_pages(spark, 1000)
     out = str(tmp_path / "rerun")
     write = TableIO.write
 
@@ -158,7 +162,7 @@ def test_failed_aggregate_write_waits_reraises_and_reruns(
 
 
 def test_enrich_stage_collaborators_and_union(spark):
-    pages = generate_pages(spark, 1000, 4)
+    pages = generate_pages(spark, 1000)
     enriched = P.enrich_stage(P.parse_stage(pages), spark)
     row = enriched.filter(F.size("collaborator_ids") > 0).first()
     assert len(row["collaborator_names"]) == len(row["collaborator_ids"])
@@ -176,7 +180,7 @@ def test_pipeline_untrusted_input_survives_malformed_utf8(spark, tmp_path):
     U+FFFD on the bad rows (no ANSI [MALFORMED_CHARACTER_CODING] throw,
     no invalid bytes smuggled downstream), and leave valid rows
     byte-identical to the trusted fast path."""
-    pages = generate_pages(spark, 1000, 4)
+    pages = generate_pages(spark, 1000)
     # corrupt every 'de' row: invalid bytes + a trailing <p>..</p> so the
     # greedy text regex captures a region containing the malformed bytes
     corrupted = pages.withColumn(
@@ -225,7 +229,7 @@ def test_pipeline_untrusted_input_survives_malformed_utf8(spark, tmp_path):
 
 
 def test_checkpoint_stage_resumes(spark, tmp_path):
-    pages = generate_pages(spark, 1000, 4)
+    pages = generate_pages(spark, 1000)
     out = str(tmp_path / "ckpt")
     m1 = P.run_pipeline(spark, pages, out, checkpoint=True)
     assert os.path.isdir(os.path.join(out, "_stage_enriched"))

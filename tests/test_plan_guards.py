@@ -121,7 +121,7 @@ def test_pipeline_parse_enrich_is_single_stage_no_python(spark):
     from logstash_filter_translate_spark.plans import pipeline as P
     from logstash_filter_translate_spark.plans.pages import generate_pages
 
-    pages = generate_pages(spark, 10, 1)
+    pages = generate_pages(spark, 10)
     enriched = P.enrich_stage(P.parse_stage(pages), spark)
     p = plan_of(enriched)
     assert "Exchange" not in p  # zero shuffles until the aggregates
@@ -148,7 +148,7 @@ def test_jaccard_verify_prefilters_shingle_explode(spark, testdata_dir):
         (F.col("doc_id") + 1).alias("id_b"),
     ).limit(10)
     p = plan_of(
-        _candidate_shingles(docs, "text", "doc_id", pairs, 3, prefilter=True)
+        _candidate_shingles(docs, "text", "doc_id", pairs, prefilter=True)
     )
     assert "LeftSemi" in p and "Generate" in p
 

@@ -66,7 +66,7 @@ def test_pipeline_write_sinks_goes_through_seam(spark, tmp_path):
     from logstash_filter_translate_spark.plans import pipeline as P
     from logstash_filter_translate_spark.plans.pages import generate_pages
 
-    pages = generate_pages(spark, 200, 4)
+    pages = generate_pages(spark, 200)
     enriched = P.enrich_stage(P.parse_stage(pages), spark)
     out = str(tmp_path / "sinks")
     P.write_sinks(enriched, out)
@@ -93,7 +93,7 @@ def test_pipeline_runs_unmodified_on_iceberg(spark, tmp_path):
     catalog = os.environ["SPARK_LFTS_ICEBERG"]
     assert iceberg_available(spark)
     spark.sql(f"CREATE NAMESPACE IF NOT EXISTS {catalog}.lfts_seam_test")
-    pages = generate_pages(spark, 200, 4)
+    pages = generate_pages(spark, 200)
     metrics = P.run_pipeline(
         spark,
         pages,

@@ -496,7 +496,7 @@ def test_boilerplate_shingles_count_distinct_docs_once(spark):
     out = {
         r["shingle"]: r["doc_freq"]
         for r in boilerplate_shingles(
-            df, "text", "doc_id", shingle_n=3, min_docs=3
+            df, "text", "doc_id", min_docs=3
         ).collect()
     }
     # 'click here now' appears in docs 0,1,2 -> freq 3 (not 5: doc 0's
@@ -692,55 +692,6 @@ def test_remove_frequent_segments_word_windows(spark):
         2: "other words here too",
         3: "totally different content words here",
     }
-
-
-def test_remove_frequent_segments_split_pattern_lines(spark):
-    """CCNet line-dedup plane: split_pattern segments are trimmed
-    non-empty splits; frequent lines are removed and the survivors
-    rejoin with the joiner in original order."""
-    from logstash_filter_translate_spark.operators.dedup import (
-        remove_frequent_segments,
-    )
-
-    rows = [
-        (1, "header line\nreal content one\nfooter line"),
-        (2, "header line\nreal content two\n\nfooter line"),
-        (3, "header line\nfooter line"),  # nothing unique → drops out
-    ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    out = {
-        r["doc_id"]: r["clean_text"]
-        for r in remove_frequent_segments(
-            docs, "text", "doc_id", min_docs=2,
-            split_pattern="\n", joiner="\n",
-        ).collect()
-    }
-    assert out == {1: "real content one", 2: "real content two"}
-
-
-def test_remove_frequent_segments_crlf_and_blank_lines(spark):
-    """Mixed CRLF/LF corpora: \\r (and any whitespace hugging the
-    delimiter) is trimmed off segments, so a boilerplate line split
-    across line-ending flavors still reaches min_docs and is removed;
-    blank lines never become segments."""
-    from logstash_filter_translate_spark.operators.dedup import (
-        remove_frequent_segments,
-    )
-
-    rows = [
-        (1, "cookie banner\r\nkeep me one\r\n\r\n"),
-        (2, "cookie banner\nkeep me two"),
-        (3, "  cookie banner  \n\n keep me three "),
-    ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    out = {
-        r["doc_id"]: r["clean_text"]
-        for r in remove_frequent_segments(
-            docs, "text", "doc_id", min_docs=2,
-            split_pattern="\n", joiner="\n",
-        ).collect()
-    }
-    assert out == {1: "keep me one", 2: "keep me two", 3: "keep me three"}
 
 
 def test_remove_frequent_segments_broadcasts_inventory(spark):

@@ -127,17 +127,14 @@ def test_union_udf_plane_dedup_equals_per_row_lookup(spark):
         ), r["ks"]
 
 
-def test_regex_union_prefilter_kept_only_where_a_literal_is_missing(spark):
-    # more than four patterns and "[a-c]{4}" has no required literal: the
-    # union prefilter runs, unless a group or backreference rules it out
+def test_regex_first_match_with_and_without_required_literals(spark):
+    # "[a-c]{4}" has no required literal, so the ordered scan searches it
+    # for every value; the others are screened by their literal
     literal_free = [("zzz1", "v1"), ("zzz2", "v2"), ("[a-c]{4}", "abc4"), ("ZZ", "v4"),
                     ("123$", "v5")]
     with_backref = literal_free + [(r"(a)\1", "double-a")]
     all_literal = [("zzz1", "v1"), ("zzz2", "v2"), ("abcd", "abc4"), ("ZZ", "v4"),
                    ("123$", "v5")]
-    assert RegexFirstMatch(literal_free).union_prefilter
-    assert not RegexFirstMatch(with_backref).union_prefilter
-    assert not RegexFirstMatch(all_literal).union_prefilter
     df = _scalar_frame(spark)
     for pairs in (literal_free, with_backref, all_literal):
         strat = RegexFirstMatch(pairs, fault_pattern=FAULT)
