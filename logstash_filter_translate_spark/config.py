@@ -1,7 +1,7 @@
 """Configuration surface of the translate engine.
 
 Mirrors the reference plugin's config options, defaults and validation
-errors (reference: /root/reference/lib/logstash/filters/translate.rb:58-205,
+errors (reference: lib/logstash/filters/translate.rb:58-205,
 213-250) but as a plain dataclass validated at plan time.
 
 Mode matrix (translate.rb via dictionary/memory.rb:10-14):

@@ -1,7 +1,7 @@
 """Logstash ``%{field}`` sprintf templates compiled to Column expressions.
 
 Reference behavior (event.sprintf, used by the fallback option,
-/root/reference/lib/logstash/filters/single_value_update.rb:42-44 and
+lib/logstash/filters/single_value_update.rb:42-44 and
 translate_spec.rb:191-207): ``%{name}`` splices the event field's value;
 when the field is missing the literal ``%{name}`` text is left in place.
 ``%{+FORMAT}`` formats the event timestamp with a Joda-style pattern

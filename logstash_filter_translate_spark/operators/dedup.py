@@ -700,7 +700,7 @@ def connected_components(
         set is NOT reliably a small corpus fraction — at 10^10 docs it
         is billions of longs, and an unconditional broadcast OOMs every
         executor (the same untrustworthy-size-claim failure
-        ExactFrameJoin(broadcast=False) exists to prevent, lookup.py).
+        ExactJoin(broadcast=False) exists to prevent, lookup.py).
         It broadcasts only when the MEASURED member count (observed on
         the label-init job, no extra scan) is ≤
         ``broadcast_member_limit``; otherwise it is a merge-hinted

@@ -16,18 +16,20 @@ contract, one body per updater shape:
 * ``probe_frame(df, key)`` — a scalar key, a column of ``df``: returns the
   frame (with any stashed temp columns, or the broadcast join) and its
   Probe.
-* ``probe_each(df, keys)`` — an array of keys: returns the frame and
-  ``each(x, i)``, the Probe of element ``i`` (value ``x``). Elementwise
+* ``probe_each(df, keys, row_key)`` — an array of keys: returns the frame
+  and ``each(x, i)``, the Probe of element ``i`` (value ``x``). Elementwise
   planes probe ``x`` in place; the Arrow UDF plane reads the ``i``-th
-  struct of a result array aligned with ``keys``.
+  struct of a result array aligned with ``keys``; the join plane reads the
+  ``i``-th struct of an array it joins back on ``row_key`` (a column that
+  identifies each row; the other planes ignore it).
 
 :func:`build_strategy` picks the exact plane by dictionary size. Up to
 ``MAP_LITERAL_MAX_ENTRIES`` entries it is the bucketed map literal, whose
 probe cost is one short bucket whatever the size. Only above that does the
-exact join plane run, which has no per-element form: its scalar probe is a
-left-outer broadcast hash join against :meth:`ExactBroadcastJoin.build_side`
-(whole-stage codegen, no Python), and ``iterate_on`` reaches it through
-posexplode → join → position-sorted collect_list in the Translate operator.
+exact join plane (:class:`ExactJoin`) run, which has no per-element form:
+its scalar probe is a left-outer broadcast hash join (whole-stage codegen,
+no Python), and its array probe is posexplode → join → position-sorted
+collect_list, joined back on the row.
 
 Regex / union semantics genuinely need per-row regex engines, so they share
 one Arrow-vectorized pandas-UDF wrapper (:func:`_arrow_udfs`) that looks up
@@ -48,7 +50,7 @@ from re import _constants, _parser
 from typing import Any, Callable, List, NamedTuple, Optional, Sequence, Tuple
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
@@ -72,7 +74,8 @@ VALUE_COL = "__lfts_val"
 RES_COL = "__lfts_res"
 DICT_KEY = "__lfts_k"
 DICT_VALUE = "__lfts_v"
-TEMP_COLS = (VALUE_COL, RES_COL, DICT_KEY, DICT_VALUE)
+ROW_ID = "__lfts_row_id"
+TEMP_COLS = (VALUE_COL, RES_COL, DICT_KEY, DICT_VALUE, ROW_ID)
 
 
 class Probe(NamedTuple):
@@ -286,7 +289,7 @@ class LookupStrategy:
         return df, self.probe(key)
 
     def probe_each(
-        self, df: DataFrame, keys: Column
+        self, df: DataFrame, keys: Column, row_key: Optional[str] = None
     ) -> Tuple[DataFrame, Callable[[Column, Column], Probe]]:
         return df, lambda x, i: self.probe(x)
 
@@ -304,7 +307,7 @@ class _ArrowUdfPlane(LookupStrategy):
         df = df.withColumn(RES_COL, self._scalar_udf(key))
         return df, _struct_probe(F.col(RES_COL))
 
-    def probe_each(self, df: DataFrame, keys: Column):
+    def probe_each(self, df: DataFrame, keys: Column, row_key: Optional[str] = None):
         df = df.withColumn(RES_COL, self._array_udf(keys))
         return df, lambda x, i: _struct_probe(F.get(F.col(RES_COL), i))
 
@@ -414,60 +417,52 @@ def _check_int64(value_type: T.DataType, values) -> None:
                 )
 
 
-class ExactBroadcastJoin(LookupStrategy):
-    """Exact probe as a broadcast hash join — the at-scale plane.
+def pairs_frame(spark, pairs: Pairs, nested: str) -> DataFrame:
+    """The (``DICT_KEY``, ``DICT_VALUE``) frame of an in-memory dictionary;
+    the last occurrence of a key wins, like Hash#[]= on duplicate keys."""
+    value_type, conv = infer_value_type(pairs, nested)
+    dedup = {str(k): conv(v) for k, v in pairs}
+    is_variant = isinstance(value_type, T.VariantType)
+    schema = T.StructType(
+        [
+            T.StructField(DICT_KEY, T.StringType(), False),
+            T.StructField(
+                DICT_VALUE, T.StringType() if is_variant else value_type, True
+            ),
+        ]
+    )
+    frame = spark.createDataFrame([(k, v) for k, v in dedup.items()], schema=schema)
+    if is_variant:
+        # ship JSON text, parse to VARIANT plan-side (VariantVal rows
+        # aren't constructible from Python)
+        frame = frame.select(DICT_KEY, F.parse_json(DICT_VALUE).alias(DICT_VALUE))
+    return frame
 
-    The dictionary becomes a 2-column DataFrame broadcast to every executor
-    (BroadcastHashJoinExec; no shuffle of the probe side, no skew exposure —
-    hot keys cost nothing extra because the build side is replicated).
-    """
 
-    def __init__(self, spark, pairs: Pairs, nested: str = "json"):
-        self.value_type, conv = infer_value_type(pairs, nested)
-        dedup = {str(k): conv(v) for k, v in pairs}
-        is_variant = isinstance(self.value_type, T.VariantType)
-        schema = T.StructType(
-            [
-                T.StructField(DICT_KEY, T.StringType(), False),
-                T.StructField(
-                    DICT_VALUE,
-                    T.StringType() if is_variant else self.value_type,
-                    True,
-                ),
-            ]
+def table_frame(dict_df: DataFrame, key_col: str, value_col: str) -> DataFrame:
+    """The (``DICT_KEY``, ``DICT_VALUE``) frame of a DICTIONARY TABLE — a
+    (key, value) DataFrame instead of an in-memory pairs list: a
+    parquet/Iceberg dimension or a derived frame, possibly too large to
+    hold on the driver at all. Duplicate keys resolve deterministically
+    (lowest value wins) to keep the one-value-per-key contract."""
+    return (
+        dict_df.select(
+            F.col(key_col).cast("string").alias(DICT_KEY),
+            F.col(value_col).alias(DICT_VALUE),
         )
-        self.dict_df = spark.createDataFrame(
-            [(k, v) for k, v in dedup.items()], schema=schema
-        )
-        if is_variant:
-            # ship JSON text, parse to VARIANT plan-side (VariantVal rows
-            # aren't constructible from Python)
-            self.dict_df = self.dict_df.select(
-                DICT_KEY, F.parse_json(DICT_VALUE).alias(DICT_VALUE)
-            )
-
-    def build_side(self) -> DataFrame:
-        """The (``DICT_KEY``, ``DICT_VALUE``) frame the probe joins."""
-        return F.broadcast(self.dict_df)
-
-    def probe_frame(self, df: DataFrame, key: Column) -> Tuple[DataFrame, Probe]:
-        """Left-outer join on the key: misses survive for the fallback
-        path (O8)."""
-        dim = self.build_side()
-        joined = df.join(dim, key.eqNullSafe(dim[DICT_KEY]), "left")
-        return joined, Probe(F.col(DICT_KEY).isNotNull(), F.col(DICT_VALUE), key)
+        .groupBy(DICT_KEY)
+        .agg(F.min(DICT_VALUE).alias(DICT_VALUE))
+    )
 
 
-class ExactFrameJoin(ExactBroadcastJoin):
-    """Exact probe against a DICTIONARY TABLE — a (key, value) DataFrame
-    instead of an in-memory pairs list. The 100 TB dictionary story: the
-    reference can only load files into a Ruby hash; at cluster scale the
-    dictionary is itself a table (a parquet/Iceberg dimension, a derived
-    frame), possibly too large to hold on the driver at all.
+class ExactJoin(LookupStrategy):
+    """Exact probe as a join against a (``DICT_KEY``, ``DICT_VALUE``) frame
+    (:func:`pairs_frame`, :func:`table_frame`) — the at-scale plane.
 
     ``broadcast``:
-      * ``True`` (default) — the broadcast-hash-join plane (the
-        dictionary fits executor memory: up to ~hundreds of MB).
+      * ``True`` (default) — a broadcast hash join (BroadcastHashJoinExec;
+        no shuffle of the probe side, no skew exposure — hot keys cost
+        nothing extra because the build side is replicated).
       * ``False`` — the dictionary is DECLARED beyond broadcast (fits no
         single machine): the dict side carries a merge join hint, so the
         pinned plan is a genuine shuffle (sort-merge) join at any data
@@ -476,34 +471,67 @@ class ExactFrameJoin(ExactBroadcastJoin):
         in the pinned digest), exactly how a production job pins the
         strategy for a known-huge dimension whose size estimate can't be
         trusted not to OOM a broadcast.
-    Duplicate keys are resolved deterministically (lowest value wins) to
-    keep the one-value-per-key dictionary contract.
     """
 
-    def __init__(
-        self,
-        dict_df: DataFrame,
-        key_col: str,
-        value_col: str,
-        broadcast: bool = True,
-    ):
-        value_field = dict_df.schema[value_col]
-        self.value_type = value_field.dataType
+    def __init__(self, dict_df: DataFrame, broadcast: bool = True):
+        self.value_type = dict_df.schema[DICT_VALUE].dataType
         self.broadcast = broadcast
-        dedup = (
-            dict_df.select(
-                F.col(key_col).cast("string").alias(DICT_KEY),
-                F.col(value_col).alias(DICT_VALUE),
-            )
-            .groupBy(DICT_KEY)
-            .agg(F.min(DICT_VALUE).alias(DICT_VALUE))
-        )
-        self.dict_df = dedup if broadcast else dedup.hint("merge")
+        self.dict_df = dict_df if broadcast else dict_df.hint("merge")
 
-    def build_side(self) -> DataFrame:
-        if self.broadcast:
-            return F.broadcast(self.dict_df)
-        return self.dict_df
+    def _build_side(self) -> DataFrame:
+        return F.broadcast(self.dict_df) if self.broadcast else self.dict_df
+
+    def probe_frame(self, df: DataFrame, key: Column) -> Tuple[DataFrame, Probe]:
+        """Left-outer join on the key: misses survive for the fallback
+        path (O8)."""
+        dim = self._build_side()
+        joined = df.join(dim, key.eqNullSafe(dim[DICT_KEY]), "left")
+        return joined, Probe(F.col(DICT_KEY).isNotNull(), F.col(DICT_VALUE), key)
+
+    def probe_each(self, df: DataFrame, keys: Column, row_key: Optional[str] = None):
+        """posexplode → join → collect_list(struct(pos, matched, value)) →
+        array_sort, joined back on the row identity. Ordinals are restored
+        by position, not by shuffle luck. The collected struct stays this
+        narrow: it is what the shuffle and the aggregation buffers carry.
+
+        ``row_key`` names a column that uniquely identifies each row (a
+        natural key). It avoids both the synthetic-id determinism hazard
+        (ids computed in two plan branches can diverge on non-deterministic
+        scans / task retries) and the localCheckpoint materialization.
+        Without it each row gets a ``monotonically_increasing_id`` over a
+        lazy localCheckpoint, which pins the ids: the frame is referenced
+        in two plan branches (explode side + join-back side), and the
+        checkpoint makes the id assignment happen exactly once."""
+        if row_key is not None:
+            if row_key not in df.columns:
+                raise ValueError(f"iterate_key column {row_key!r} not in DataFrame")
+            base = df
+        else:
+            row_key = ROW_ID
+            base = df.withColumn(ROW_ID, F.monotonically_increasing_id())
+            base = base.localCheckpoint(eager=False)
+        dim = self._build_side()
+        ex = base.select(row_key, F.posexplode(keys).alias("__lfts_pos", "__lfts_elem"))
+        probed = ex.join(dim, ex["__lfts_elem"].eqNullSafe(dim[DICT_KEY]), "left")
+        agg = probed.groupBy(row_key).agg(
+            F.array_sort(
+                F.collect_list(
+                    F.struct(
+                        F.col("__lfts_pos").alias("pos"),
+                        F.col(DICT_KEY).isNotNull().alias("matched"),
+                        F.col(DICT_VALUE).alias("value"),
+                    )
+                )
+            ).alias(RES_COL)
+        )
+
+        def each(x: Column, i: Column) -> Probe:
+            s = F.get(F.col(RES_COL), i)
+            return Probe(s["matched"], s["value"], x)
+
+        # rows with empty arrays find no aggregate row: their NULL result
+        # is never indexed
+        return base.join(agg, row_key, "left"), each
 
 
 # ---------------------------------------------------------------------------
@@ -733,16 +761,18 @@ def build_strategy(
     """Pick the physical strategy for a logical mode.
 
     exact: the bucketed map literal up to ``MAP_LITERAL_MAX_ENTRIES``
-    entries, the broadcast hash join above that (given a session to build
-    the dictionary frame on). regex: the Arrow UDF plane. union: the JVM
-    replace chain when :func:`union_chain_safe` proves it equivalent, else
-    the Arrow UDF plane.
+    entries, the broadcast hash join above that (its dictionary frame is
+    built on ``spark``, or on the active session when none is given).
+    regex: the Arrow UDF plane. union: the JVM replace chain when
+    :func:`union_chain_safe` proves it equivalent, else the Arrow UDF
+    plane.
     ``nested``: value typing for nested dictionary values ("json" legacy
     strings | "typed" array/VARIANT columns) — exact mode only.
     """
     if mode == "exact":
-        if len(pairs) > MAP_LITERAL_MAX_ENTRIES and spark is not None:
-            return ExactBroadcastJoin(spark, pairs, nested=nested)
+        if len(pairs) > MAP_LITERAL_MAX_ENTRIES:
+            spark = spark or SparkSession.active()
+            return ExactJoin(pairs_frame(spark, pairs, nested))
         return ExactMapLiteral(pairs, nested=nested)
     if mode == "regex":
         return RegexFirstMatch(pairs)

@@ -127,21 +127,17 @@ def hyperplane_bucket(vec_col: str, planes: List[List[float]]) -> Column:
     return F.expr("0 + " + " + ".join(terms))
 
 
-def ivf_assign(
-    vectors: DataFrame,
-    centroids: DataFrame,
-    id_col: str = ID_COL,
-    vec_col: str = VEC_COL,
-) -> DataFrame:
+def ivf_assign(vectors: DataFrame, centroids: DataFrame) -> DataFrame:
     """IVF cell assignment: nearest centroid by cosine (ties → lowest
-    centroid id). Returns every column of ``vectors`` plus ``cell``.
+    centroid id). Both frames carry ``ID_COL`` and ``VEC_COL``. Returns
+    every column of ``vectors`` plus ``cell``.
     Centroids are broadcast; the argmax is a ``max_by`` partial aggregate
     — the n×|centroids| scored expansion is reduced MAP-SIDE (partial
     HashAggregate), so the shuffle carries one row per vector instead of
     the full expansion a window row_number would shuffle.
 
     The other columns ride ``any_value`` aggregates on the same partial
-    aggregate — ``id_col`` is the vector key (unique by the IVF
+    aggregate — ``ID_COL`` is the vector key (unique by the IVF
     contract), so each group's carried values are constant and any_value
     is exact. No consumer joins the corpus back to its cells: at scale
     that join re-scans the corpus and shuffles it by id, while carrying
@@ -149,13 +145,13 @@ def ivf_assign(
     does. Every carried column rides that exchange, so project wide
     payload columns out of ``vectors`` before assigning."""
     c = centroids.select(
-        F.col(id_col).alias("__cid"), F.col(vec_col).alias("__cvec")
+        F.col(ID_COL).alias("__cid"), F.col(VEC_COL).alias("__cvec")
     )
     base_cols = list(vectors.columns)
     scored = vectors.join(F.broadcast(c)).select(
         *base_cols,
         F.col("__cid"),
-        cosine(F.col(vec_col), F.col("__cvec")).alias("__cs"),
+        cosine(F.col(VEC_COL), F.col("__cvec")).alias("__cs"),
     )
     # argmax as max of struct(score, -cid): ties on score break to the
     # LOWEST centroid id, matching ORDER BY cs DESC, cid ASC
@@ -165,9 +161,9 @@ def ivf_assign(
     carried = [
         F.any_value(F.col(col)).alias(col)
         for col in base_cols
-        if col != id_col
+        if col != ID_COL
     ]
-    return scored.groupBy(id_col).agg(cell, *carried).select(
+    return scored.groupBy(ID_COL).agg(cell, *carried).select(
         *base_cols, "cell"
     )
 
@@ -323,9 +319,12 @@ def append_ivf_index(
     the stored set rather than accepting one — a drifted centroid frame
     here would scatter new vectors into wrong cells.) Queries see the
     union immediately: partition pruning is directory-based, and
-    appended files join their cell's directory."""
+    appended files join their cell's directory. ``id_col``/``vec_col``
+    name the increment's columns; they are stored as ``ID_COL`` and
+    ``VEC_COL``, the names of the standing index and its centroids."""
     centroids = load_ivf_centroids(spark, path)
-    assigned = ivf_assign(new_corpus, centroids, id_col, vec_col)
+    renamed = new_corpus.withColumnsRenamed({id_col: ID_COL, vec_col: VEC_COL})
+    assigned = ivf_assign(renamed, centroids)
     assigned.write.mode("append").partitionBy("cell").parquet(path)
 
 

@@ -1,7 +1,7 @@
 """The Translate operator: dictionary-lookup enrichment over a DataFrame.
 
 This is the Spark-native re-expression of the reference plugin's whole
-filter lifecycle (/root/reference/lib/logstash/filters/translate.rb:183-271):
+filter lifecycle (lib/logstash/filters/translate.rb:183-271):
 ``register`` becomes plan construction (this module, driver-side),
 ``filter(event)`` becomes a single Catalyst projection (plus an Arrow batch
 through a pandas UDF for the regex modes) — no per-event control flow
@@ -22,13 +22,12 @@ The reference's boolean "matched" signal is ``route IN (matched, fallback)``
 
 Each updater has one body over the lookup strategy's probe contract
 (operators/lookup.py): ``probe_frame`` for a scalar key, ``probe_each`` for
-an array of keys. The one plane-specific path is the exact join plane's
-posexplode for ``iterate_on``.
+an array of keys. No updater knows which plane it probes.
 """
 
 from __future__ import annotations
 
-from typing import Callable, Optional, Tuple
+from typing import Optional
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -39,15 +38,12 @@ from ..functions.paths import parse_path, path_col, path_type, with_path
 from ..functions.templates import compile_sprintf
 from ..sources.dictionary import DictionaryFile
 from .lookup import (
-    DICT_KEY,
-    DICT_VALUE,
-    RES_COL,
     TEMP_COLS,
-    ExactBroadcastJoin,
-    ExactFrameJoin,
+    ExactJoin,
     LookupStrategy,
     Probe,
     build_strategy,
+    table_frame,
 )
 
 ROUTE_MATCHED = "matched"
@@ -56,11 +52,10 @@ ROUTE_UNMATCHED = "unmatched"
 ROUTE_FAILED = "failed"
 ROUTE_SKIPPED = "skipped"
 
-_ID = "__lfts_row_id"
 _SKIP = "__lfts_skip"
 _KEY = "__lfts_key"
 _KEYS = "__lfts_arr"
-_TEMPS = (*TEMP_COLS, _ID, _SKIP, _KEY, _KEYS)
+_TEMPS = (*TEMP_COLS, _SKIP, _KEY, _KEYS)
 
 
 class Translate:
@@ -71,8 +66,9 @@ class Translate:
     Parameters
     ----------
     config : validated at construction (register-time errors).
-    spark : needed only for the broadcast-join plane, which
-        ``build_strategy`` picks for big exact dictionaries.
+    spark : used only by the broadcast-join plane, which
+        ``build_strategy`` picks for big exact dictionaries, to build the
+        dictionary frame on (the active session when None).
     """
 
     def __init__(
@@ -129,10 +125,10 @@ class Translate:
         iterate_key: Optional[str] = None,
     ) -> DataFrame:
         """``iterate_key``: a column that uniquely identifies each row (a
-        natural key — every real table has one). The big-dictionary explode
-        plane joins the rebuilt arrays back on it, keeping the shuffle
-        deterministic and narrow; without it the plane falls back to
-        ``monotonically_increasing_id`` over a localCheckpoint'ed input
+        natural key — every real table has one). The exact join plane's
+        ``probe_each`` joins the rebuilt arrays back on it, keeping the
+        shuffle deterministic and narrow; without it the plane falls back
+        to ``monotonically_increasing_id`` over a localCheckpoint'ed input
         (correct but materializes the frame — pass the key at scale)."""
         cfg = self.config
         if cfg.iterate_on is None:
@@ -140,23 +136,6 @@ class Translate:
         if cfg.iterate_on == cfg.resolved_source:
             return self._apply_array_of_values(df, route_col, iterate_key)
         return self._apply_array_of_maps(df, route_col, iterate_key)
-
-    def _row_id(self, df: DataFrame, iterate_key: Optional[str]):
-        """(base_df, id_col) for the explode plane's join-back. A caller
-        key avoids both the synthetic-id determinism hazard (ids computed
-        in two plan branches can diverge on non-deterministic scans / task
-        retries) and the localCheckpoint materialization."""
-        if iterate_key is not None:
-            if iterate_key not in df.columns:
-                raise ValueError(
-                    f"iterate_key column {iterate_key!r} not in DataFrame"
-                )
-            return df, iterate_key
-        base = df.withColumn(_ID, F.monotonically_increasing_id())
-        # pin the ids: the explode plane references this frame in two plan
-        # branches (explode side + join-back side); localCheckpoint makes
-        # the id assignment happen exactly once
-        return base.localCheckpoint(eager=False), _ID
 
     # -- helpers -------------------------------------------------------------
     @property
@@ -231,49 +210,6 @@ class Translate:
         read = self._target_read(df)
         return (read if read is not None else F.lit(None)).cast(dtype)
 
-    def _probe_each(
-        self, df: DataFrame, keys: Column, iterate_key: Optional[str]
-    ) -> Tuple[DataFrame, Callable[[Column, Column], Probe]]:
-        """(df, each) over an array of string keys; ``each(x, i)`` is the
-        Probe of element ``i`` (value ``x``). The join plane has no array
-        form of its own and goes through the explode."""
-        if isinstance(self.strategy, ExactBroadcastJoin):
-            return self._explode_probe(df, keys, iterate_key)
-        return self.strategy.probe_each(df, keys)
-
-    def _explode_probe(
-        self, df: DataFrame, keys: Column, iterate_key: Optional[str]
-    ) -> Tuple[DataFrame, Callable[[Column, Column], Probe]]:
-        """The join plane over an array of keys: posexplode → broadcast
-        hash join → collect_list(struct(pos, matched, value)) → array_sort,
-        joined back on the row identity (see _row_id). Ordinals are
-        restored by position, not by shuffle luck. The collected struct
-        stays this narrow: it is what the shuffle and the aggregation
-        buffers carry."""
-        base, id_col = self._row_id(df, iterate_key)
-        dim = self.strategy.build_side()
-        ex = base.select(id_col, F.posexplode(keys).alias("__lfts_pos", "__lfts_elem"))
-        probed = ex.join(dim, ex["__lfts_elem"].eqNullSafe(dim[DICT_KEY]), "left")
-        agg = probed.groupBy(id_col).agg(
-            F.array_sort(
-                F.collect_list(
-                    F.struct(
-                        F.col("__lfts_pos").alias("pos"),
-                        F.col(DICT_KEY).isNotNull().alias("matched"),
-                        F.col(DICT_VALUE).alias("value"),
-                    )
-                )
-            ).alias(RES_COL)
-        )
-
-        def each(x: Column, i: Column) -> Probe:
-            s = F.get(F.col(RES_COL), i)
-            return Probe(s["matched"], s["value"], x)
-
-        # rows with empty arrays find no aggregate row: their NULL result
-        # is never indexed
-        return base.join(agg, id_col, "left"), each
-
     # -- O4: single-value ----------------------------------------------------
     def _apply_single(
         self,
@@ -340,7 +276,7 @@ class Translate:
             _KEYS, F.transform(arr, lambda x: x.cast("string"))
         )
         skip, keys = F.col(_SKIP), F.col(_KEYS)
-        df, each = self._probe_each(df, keys, iterate_key)
+        df, each = self.strategy.probe_each(df, keys, iterate_key)
 
         out_type = self._out_type()
         fb = self._fallback_expr(df)
@@ -397,7 +333,9 @@ class Translate:
         def present(m: Column) -> Column:
             return m.getField(source).isNotNull()
 
-        df, each = self._probe_each(df, F.transform(arr, key_of), iterate_key)
+        df, each = self.strategy.probe_each(
+            df, F.transform(arr, key_of), iterate_key
+        )
         out_type = self._out_type()
         fb = self._fallback_expr(df)
 
@@ -480,8 +418,8 @@ def translate_with_table(
     declares the dictionary beyond broadcast — it fits no single machine,
     the case no driver-side Ruby hash can represent at all — and pins the
     genuine shuffle (sort-merge) join plane via a merge hint on the dict
-    side (see ``ExactFrameJoin``). Duplicate keys resolve
-    deterministically (lowest value) to preserve the one-value-per-key
+    side (see ``ExactJoin``). Duplicate keys resolve deterministically
+    (lowest value, ``table_frame``) to preserve the one-value-per-key
     contract.
     """
     cfg = TranslateConfig(
@@ -492,7 +430,7 @@ def translate_with_table(
         override=override,
     )
     op = Translate(cfg, spark=df.sparkSession)
-    op.strategy = ExactFrameJoin(dict_df, key_col, value_col, broadcast)
+    op.strategy = ExactJoin(table_frame(dict_df, key_col, value_col), broadcast)
     return op.apply(
         df, route_col=route_col, matched_key_col=matched_key_col
     )

@@ -9,9 +9,10 @@ makes the format a configuration, not a code path:
   - ``TableIO`` resolves read/write through one indirection — ``parquet``
     (always available; the sandbox default) or ``iceberg`` (used when the
     runtime ships the Iceberg Spark runtime jars and a catalog is
-    configured). Every query/pipeline call sites go through it, so a
-    cluster with Iceberg jars runs the identical code with
-    ``format="iceberg"``.
+    configured). The pipeline's reads and writes go through it, so a
+    cluster with Iceberg jars runs the identical pipeline with
+    ``table_format="iceberg"``. The headline queries read the parquet
+    testdata directly.
   - ``TableIO.write(..., partition_by=)`` states sink partitioning as
     identity-partition column names shared by both formats: for parquet
     they drive ``partitionBy`` (hive-style directory subtrees); for

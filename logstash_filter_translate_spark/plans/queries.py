@@ -100,33 +100,12 @@ def _values_cte(name: str, pairs) -> str:
     return f"{name}(k, v) AS (VALUES {rows})"
 
 
-#: S7 seam: table format for every query scan — "parquet" (sandbox
-#: default) or "iceberg" (when the runtime ships the jars; sf_dir is then
-#: a catalog namespace like ``local.sf001`` and tables resolve to
-#: ``local.sf001.events``). One env switch for every _load() scan.
-#: KNOWN EXCEPTIONS: three queries use
-#: filesystem-native machinery around the seam and stay parquet-path —
-#: q_streaming_exact / q_streaming_dedup (FileStreamSource over a
-#: symlinked directory; Iceberg streaming reads use a different source
-#: entirely) and q_similarity_ivf_indexed (a /tmp parquet index
-#: PARTITIONED BY cell; on Iceberg the index would be an identity-
-#: partitioned table, docs/ICEBERG.md). Under LFTS_TABLE_FORMAT=iceberg
-#: those three need the documented per-query adaptation, not zero code.
-TABLE_FORMAT = os.environ.get("LFTS_TABLE_FORMAT", "parquet")
-
-
 def _load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     """Testdata tables arrive as single parquet files (one scan split);
     repartition to the session parallelism so per-row compute stages use all
     cores — at real scale the Iceberg/parquet layout provides the splits and
     this becomes a no-op choice."""
-    from .io import ICEBERG, TableIO
-
-    io = TableIO(spark, TABLE_FORMAT)
-    location = (
-        f"{sf_dir}.{table}" if io.fmt == ICEBERG else f"{sf_dir}/{table}.parquet"
-    )
-    df = io.read(location)
+    df = spark.read.parquet(f"{sf_dir}/{table}.parquet")
     return df.repartition(spark.sparkContext.defaultParallelism)
 
 
@@ -1799,7 +1778,7 @@ def q_table_dict_shuffle_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     single machine, so the probe joins it with a genuine shuffle
     (sort-merge) join; the pinned digest proves no BroadcastExchange on
     the dict side. This is the engine's story past the reference's
-    100k-entry ceiling (/root/reference/docs/index.asciidoc:76-77): a
+    100k-entry ceiling (the reference's docs/index.asciidoc:76-77): a
     driver-side Ruby hash caps at heap size, a shuffle-joined dictionary
     table caps at cluster storage. Dictionary: per-order flag summary
     derived from lineitem (keys with l_orderkey % 5 == 0 withheld so the

@@ -1,7 +1,7 @@
 """Dictionary loaders: inline, CSV, JSON, YAML (+refresh policy).
 
 Reference parity:
-  - extension dispatch: /root/reference/lib/logstash/filters/dictionary/file.rb:12-21
+  - extension dispatch: lib/logstash/filters/dictionary/file.rb:12-21
   - CSV 2-column, BOM-tolerant: dictionary/csv_file.rb:9-13
   - JSON single flat object: dictionary/json_file.rb:9-12
   - YAML one-shot with code-point limit: dictionary/yaml_file.rb:16-26,

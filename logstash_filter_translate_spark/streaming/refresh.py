@@ -2,7 +2,7 @@
 
 The reference's only "streaming state" is the scheduler thread that reloads
 the dictionary file and swaps it under a write lock
-(/root/reference/lib/logstash/filters/translate.rb:259-261,
+(lib/logstash/filters/translate.rb:259-261,
 dictionary/file.rb:81-125). In Spark the equivalent is: the driver re-reads
 the file between micro-batches and rebuilds the lookup plan; the broadcast
 ship to executors is atomic per batch, so executors never observe a

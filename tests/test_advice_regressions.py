@@ -147,10 +147,10 @@ def test_iterate_values_explode_plane_with_natural_key(spark):
     with exact_plane("join"):
         op = Translate(TranslateConfig(**cfg), spark=spark)
     from logstash_filter_translate_spark.operators.lookup import (
-        ExactBroadcastJoin,
+        ExactJoin,
     )
 
-    assert isinstance(op.strategy, ExactBroadcastJoin)
+    assert isinstance(op.strategy, ExactJoin)
     keyed = {
         r["id"]: (r["t"], r["route"])
         for r in op.apply(df, iterate_key="id").collect()

@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 from logstash_filter_translate_spark.config import TranslateConfig
 from logstash_filter_translate_spark.operators import lookup
 from logstash_filter_translate_spark.operators.lookup import (
-    ExactBroadcastJoin,
+    ExactJoin,
     ExactMapLiteral,
 )
 from logstash_filter_translate_spark.operators.translate import Translate
@@ -152,7 +152,7 @@ def test_refresh_switches_plane_both_ways(spark, tmp_path, monkeypatch):
     assert got() == {"k0": "a0", "k7": "a7", "k8": "fb", "k12": "fb"}
     write(13, "b")
     assert op.refresh() is True
-    assert isinstance(op.strategy, ExactBroadcastJoin)
+    assert isinstance(op.strategy, ExactJoin)
     assert got() == {"k0": "b0", "k7": "b7", "k8": "b8", "k12": "b12"}
     write(3, "c")
     assert op.refresh() is True

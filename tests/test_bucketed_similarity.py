@@ -211,7 +211,13 @@ def test_ivf_index_self_describing_and_incremental_append(spark, tmp_path):
         0, 60, 120, 180, 240,
     ]
 
-    append_ivf_index(spark, emb.filter("vec_id >= 150"), path)
+    append_ivf_index(spark, emb.filter("vec_id >= 150 AND vec_id < 225"), path)
+    # an increment whose columns carry other names lands under the
+    # index's own names
+    renamed = emb.filter("vec_id >= 225").withColumnsRenamed(
+        {"vec_id": "doc_id", "embedding": "vec"}
+    )
+    append_ivf_index(spark, renamed, path, id_col="doc_id", vec_col="vec")
     assert spark.read.parquet(path).count() == 300
 
     # self-describing serve (no centroid frame) over the grown index ==

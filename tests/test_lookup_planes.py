@@ -5,7 +5,7 @@ survive a 100× scale-up' story depends on swapping planes freely)."""
 from logstash_filter_translate_spark.config import TranslateConfig
 from logstash_filter_translate_spark.operators import lookup
 from logstash_filter_translate_spark.operators.lookup import (
-    ExactBroadcastJoin,
+    ExactJoin,
     ExactMapLiteral,
     UnionReplaceChain,
     UnionSubstitution,
@@ -22,9 +22,9 @@ def test_exact_selector_threshold(spark):
     n = lookup.MAP_LITERAL_MAX_ENTRIES
     pairs = [(f"k{i}", f"v{i}") for i in range(n + 1)]
     assert isinstance(build_strategy("exact", pairs[:n], spark=spark), ExactMapLiteral)
-    assert isinstance(build_strategy("exact", pairs, spark=spark), ExactBroadcastJoin)
-    # no session to build the dictionary frame on: the literal plane
-    assert isinstance(build_strategy("exact", pairs), ExactMapLiteral)
+    assert isinstance(build_strategy("exact", pairs, spark=spark), ExactJoin)
+    # no session given: the dictionary frame is built on the active one
+    assert isinstance(build_strategy("exact", pairs), ExactJoin)
 
 
 def test_union_native_selector_threshold():

@@ -148,10 +148,10 @@ def test_typed_nested_values_variant_broadcast_plane(spark):
             spark=spark,
         )
     from logstash_filter_translate_spark.operators.lookup import (
-        ExactBroadcastJoin,
+        ExactJoin,
     )
 
-    assert isinstance(op.strategy, ExactBroadcastJoin)
+    assert isinstance(op.strategy, ExactJoin)
     out = op.apply(df)
     rows = {r["k"]: r for r in out.collect()}
     assert rows["zzz"]["route"] == "unmatched"

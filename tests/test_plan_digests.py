@@ -1,4 +1,5 @@
-"""Plan-fingerprint regression guard (round-4 judge item #6).
+"""Plan-fingerprint regression guard: a contract query's physical plan
+changes only when a change means it to.
 
 Host timing noise makes time-based regression detection useless in this
 sandbox, so every contract query's physical-plan SHAPE is digested

@@ -25,10 +25,10 @@ def test_100k_dictionary_load_join_and_reload(spark, tmp_path):
     )
     # 100k entries exceed the map-literal threshold → broadcast-join plane
     from logstash_filter_translate_spark.operators.lookup import (
-        ExactBroadcastJoin,
+        ExactJoin,
     )
 
-    assert isinstance(op.strategy, ExactBroadcastJoin)
+    assert isinstance(op.strategy, ExactJoin)
 
     df = spark.createDataFrame(
         [(f"k{i}",) for i in range(0, 100_000, 9973)] + [("nope",)], "k string"

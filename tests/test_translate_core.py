@@ -1,5 +1,5 @@
 """Behavioral goldens ported from the reference's RSpec suite
-(/root/reference/spec/filters/translate_spec.rb) — SURVEY.md §5 cases 1-7,
+(spec/filters/translate_spec.rb) — SURVEY.md §5 cases 1-7,
 10, 13-15. Each test names its spec citation."""
 
 import json

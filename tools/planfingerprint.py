@@ -1,9 +1,10 @@
 """Normalized physical-plan fingerprints per contract query.
 
 Host timing noise makes time-based regression detection useless here
-(round-4 judge item #6: two consecutive rounds of headline deltas were
-window weather) — so each round records a digest of every contract
-query's PHYSICAL PLAN SHAPE instead: operator node names in tree order,
+(two runs of one tree can differ by more than a real regression) — so
+the invariant guarded is that a contract query's physical plan changes
+only when a change means it to. Each tree records a digest of every
+contract query's PHYSICAL PLAN SHAPE: operator node names in tree order,
 join strategies/sides, and exchange distribution kinds, with expression
 IDs / paths / statistics / partition counts normalized away. A changed
 digest flags a real plan regression regardless of timing.

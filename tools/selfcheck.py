@@ -27,7 +27,8 @@ def dtype_classes(df):
     materializes as float64 (e.g. DuckDB HUGEINT) hash-mismatches a Spark
     int64 even when every value is integral. canon() coerces integer-valued
     floats for robust VALUE comparison, so this separate check reproduces
-    the driver's stricter behavior (round-1 rolling_fingerprint lesson)."""
+    the driver's stricter behavior: a column whose dtype class differs
+    from the oracle's fails even when every value agrees."""
     classes = {}
     for col in sorted(df.columns):
         k = df[col].dtype.kind  # i/u int, f float, b bool, O object, M dt
@@ -96,8 +97,9 @@ def main():
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
 
     # the driver contract (entry.queries(), exactly 50 rows) PLUS the
-    # plane/parameter variants the 50-row cap folded out — selfcheck
-    # verifies the full surface (round-5 judge item #2)
+    # plane/parameter variants the 50-row cap folded out — every query
+    # the package ships is checked against its oracle, not only those
+    # the contract lists
     from logstash_filter_translate_spark.plans import queries as Q
 
     qs = {**entry.queries(), **Q.EXTRA_QUERIES}
