@@ -19,12 +19,13 @@ Phases:
      eager checkpoint or connected-components jobs) and exec (the noop
      write), each with its Spark job count; build + exec is the rep. The
      per-rep record lives in the HEADLINE side file.
-  2. plan fingerprints (full runs only): tools/planfingerprint.py.
-  3. scaling (full runs only): one traced perfbench `pages_e2e` run;
+  2. scaling (full runs only): one traced perfbench `pages_e2e` run;
      extras.scaling carries its `pipeline.scaling_eff`.
 
-Kill safety: a wall-clock budget ($SPARK_GRAFT_BENCH_BUDGET) gates phases
-2 and 3; the HEADLINE side file is rewritten after every query; SIGTERM or
+Plan shapes are pinned by tests/test_plan_digests.py, not recorded here.
+
+Kill safety: a wall-clock budget ($SPARK_GRAFT_BENCH_BUDGET) gates phase
+2; the HEADLINE side file is rewritten after every query; SIGTERM or
 SIGINT emits the line from everything completed so far and exits 0.
 
 All diagnostics go to stderr; stdout carries only the JSON line.
@@ -32,6 +33,7 @@ All diagnostics go to stderr; stdout carries only the JSON line.
 
 from __future__ import annotations
 
+import itertools
 import json
 import os
 import signal
@@ -43,6 +45,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 REPO = os.path.dirname(os.path.abspath(__file__))
 
+from logstash_filter_translate_spark.plans import queries as Q  # noqa: E402
 from tools.scalebench import HostMeter  # noqa: E402
 
 BENCH_T0 = time.time()
@@ -59,104 +62,12 @@ def rp(p):
     """repo-relative path (bench may be invoked from any cwd)"""
     return os.path.join(REPO, p)
 
-HEADLINE = [
-    "exact_events",
-    "fallback_dated",
-    "fallback_weekly",
-    "route_histogram",
-    "override_gate",
-    "regex_firstmatch",
-    "error_containment",
-    "union_substitute",
-    "iterate_values",
-    "iterate_maps",
-    "per_key_histogram",
-    "dedup_exact",
-    "minhash_signatures",
-    "lsh_pairs",
-    "lsh_pairs_capped",
-    "simhash",
-    "simhash_pairs",
-    "jaccard_adjacent",
-    "tokens_quality",
-    "langid",
-    "fingerprint",
-    "similarity_topk",
-    "similarity_lsh",
-    "similarity_ivf",
-    "similarity_ivf_probe2",
-    "similarity_ivf_indexed",
-    "parse_extract",
-    "parse_extract_arrow",
-    "pipeline_e2e",
-    "windowed_counts",
-    "dedup_embedding_cosine",
-    "token_counts",
-    "rolling_fingerprint",
-    "corpus_filter",
-    "media_features",
-    "sessionize",
-    "props_enrich",
-    "near_dup_keep",
-    "similarity_lsh_multiband",
-    "table_dict_enrich",
-    "pii_redact",
-    "lineitem_brand_enrich",
-    "stratified_sample",
-    "domain_cap",
-    "repetition_ratio",
-    "contamination_check",
-    "vocab_topk",
-    "corpus_stats",
-    "curation_pipeline",
-    # the beyond-broadcast dictionary plane, the iterative near-dup
-    # clustering plane, and the cross-corpus fuzzy-decontamination plane
-    # (~0.95 / ~2.4 / ~2.1 s at sf0.1): each is a plan shape no other
-    # headline query runs.
-    "table_dict_shuffle_enrich",
-    "dedup_components",
-    "fuzzy_contamination",
-    "boilerplate_shingles",
-    # canonical_docs DOES re-run dedup_components' fixpoint loop plus one
-    # max_by aggregate, on purpose: every headline row measures what a
-    # fresh cold-plan caller pays, and sharing converged labels across
-    # queries would make this the one row measuring a warm cache instead
-    # of the query. The ~2x-of-components
-    # cost is the honest number; a production pipeline amortizes it by
-    # checkpointing labels once and joining twice (docs/PLANS.md).
-    "canonical_docs",
-    # the big-graph components plane (broadcast_member_limit=0 — the
-    # plane the size gate picks at web-crawl dup rates); benched so the
-    # shuffle anti-join's cost is tracked next to the broadcast plane's.
-    "dedup_components_shuffle",
-    # incremental dedup of a corpus increment (cross-LSH broadcast
-    # probe + intra-batch self-LSH + shared verify)
-    "incremental_keep",
-    # training-output stages — mixture draw to per-language TOKEN
-    # budgets (tiny totals agg broadcast back, corpus never shuffles)
-    # and the deterministic global shuffle/shard assignment (one hash
-    # exchange on shard + per-shard sort)
-    "token_budget_mix",
-    "shuffle_shards",
-    # sequence packing over the shuffle order (running token
-    # sum riding shuffle_shards' single exchange+sort) and CCNet-style
-    # frequent-segment removal (the apply step of boilerplate_shingles).
-    "pack_sequences",
-    "segment_dedup",
-    # the mix draw with epoch repetition (upsample plane)
-    "token_budget_mix_epochs",
-    # exact-substring duplicate-span removal (overlapping
-    # 5-grams; the any-offset complement of segment_dedup) and the
-    # hashed-feature linear quality classifier (fastText-style inference
-    # in pure codegen, integer milli-weights)
-    "span_dedup",
-    "quality_classifier",
-    # sliding-window chunking for embedding/RAG prep
-    # (map-only one-to-many, zero exchanges) and rolling-window spike
-    # detection (WindowExec frame over aggregated (key, hour) rows)
-    "doc_chunks",
-    "anomaly_hours",
-]
+#: every registered query but the RUN_AT_BUILD ones (no build/exec split
+#: to time) and exact_docs_lang, the contract's exact map-literal lookup
+#: on a second table: it runs the plane exact_events times and adds no
+#: plan shape of its own
+HEADLINE = [name for name in Q.ALL_QUERIES
+            if name not in Q.RUN_AT_BUILD and name != "exact_docs_lang"]
 
 
 def log(*args):
@@ -179,8 +90,6 @@ def run_headline(spark, sf_dir: str, names) -> dict:
     per-rep record is in the HEADLINE side file and STATE after every
     query, so a kill keeps the results so far."""
     from pyspark.sql.functions import PandasUDFType, pandas_udf
-
-    from logstash_filter_translate_spark.plans import queries as Q
 
     # pay the per-process costs (JVM heap growth, codegen compiler,
     # Python/Arrow worker start) before the first timed query; a
@@ -242,41 +151,25 @@ def run_headline(spark, sf_dir: str, names) -> dict:
 #: artifacts written by this bench run are tagged with the current round
 ROUND_TAG = os.environ.get("SPARK_GRAFT_ROUND_TAG", "r10")
 
-#: every artifact kind this run may write — the collision suffix is
-#: resolved ONCE across all of them, so one run's files share a suffix
-_ARTIFACT_KINDS = ("HEADLINE", "PLANS")
-
-
-def _run_suffix() -> str:
-    """One shared tag suffix for this run's artifacts: the first suffix
-    ('', 'b', 'c', …) at which NO artifact kind collides with an existing
-    file — a second bench run in one round writes HEADLINE_r7b +
-    PLANS_r7b, never overwriting the first run and never a mixed set."""
-    for s in [""] + list("bcdefghijklmnopqrstuvwxyz"):
-        if not any(
-            os.path.exists(rp(f"BENCH/{k}_{ROUND_TAG}{s}.json"))
-            for k in _ARTIFACT_KINDS
-        ):
-            return s
-    i = 2
-    while any(
-        os.path.exists(rp(f"BENCH/{k}_{ROUND_TAG}z{i}.json"))
-        for k in _ARTIFACT_KINDS
-    ):
-        i += 1
-    return f"z{i}"
-
-
-#: this run's artifact paths, resolved ONCE
+#: this run's artifact path, resolved ONCE
 _RESOLVED: dict = {}
 
 
-def _run_artifact(kind: str) -> str:
-    if kind not in _RESOLVED:
+def _run_artifact() -> str:
+    """BENCH/HEADLINE_<tag>.json at the first suffix ('', 'b', 'c', …,
+    'z', 'z2', …) no existing file has: a second bench run in one round
+    never overwrites the first run's evidence."""
+    if "path" not in _RESOLVED:
         os.makedirs(rp("BENCH"), exist_ok=True)
-        suffix = _RESOLVED.setdefault("_suffix", _run_suffix())
-        _RESOLVED[kind] = rp(f"BENCH/{kind}_{ROUND_TAG}{suffix}.json")
-    return _RESOLVED[kind]
+        for suffix in itertools.chain(
+            [""], "bcdefghijklmnopqrstuvwxyz",
+            (f"z{i}" for i in itertools.count(2)),
+        ):
+            path = rp(f"BENCH/HEADLINE_{ROUND_TAG}{suffix}.json")
+            if not os.path.exists(path):
+                break
+        _RESOLVED["path"] = path
+    return _RESOLVED["path"]
 
 
 def run_scaling() -> None:
@@ -342,8 +235,7 @@ STDOUT_LINE_LIMIT = 1900
 
 #: extras keys dropped, in order, while the line is over the limit; the
 #: `partial` and `interrupted` flags are never dropped
-_TRIM_ORDER = ("plan_fingerprints", "plan_fingerprints_error",
-               "scaling_error", "scaling")
+_TRIM_ORDER = ("scaling_error", "scaling")
 
 
 def build_stdout_payload() -> dict:
@@ -406,7 +298,7 @@ def _write_headline_artifact(
         STATE["extras"]["partial"] = True
     else:
         STATE["extras"].pop("partial", None)
-    STATE["queries_file"] = os.path.relpath(_run_artifact("HEADLINE"), REPO)
+    STATE["queries_file"] = os.path.relpath(_run_artifact(), REPO)
 
     def total(key):
         return round(sum(
@@ -432,14 +324,13 @@ def _write_headline_artifact(
     }
     if partial:
         payload["partial"] = True
-    tmp = _run_artifact("HEADLINE") + ".tmp"
+    tmp = _run_artifact() + ".tmp"
     with open(tmp, "w") as fh:
         json.dump(payload, fh)
-    os.replace(tmp, _run_artifact("HEADLINE"))
+    os.replace(tmp, _run_artifact())
 
 
 def main() -> None:
-    from logstash_filter_translate_spark.plans import queries as Q
     from logstash_filter_translate_spark.session import build_session
 
     names = sys.argv[1:]
@@ -482,23 +373,6 @@ def main() -> None:
     spark.stop()
 
     extras = STATE["extras"]
-    # plan fingerprints: a normalized physical-plan digest per contract
-    # query, a regression record that host timing noise can't fake.
-    # About a minute at sf0.001, own JVM.
-    if full_run and remaining_budget() > 360:
-        try:
-            subprocess.run(
-                [sys.executable, rp("tools/planfingerprint.py"),
-                 "/root/testdata/sf0.001",
-                 _run_artifact("PLANS")],
-                timeout=600, stdout=subprocess.DEVNULL,
-                stderr=subprocess.DEVNULL, check=True,
-            )
-            extras["plan_fingerprints"] = os.path.relpath(
-                _run_artifact("PLANS"), REPO
-            )
-        except Exception as exc:
-            extras["plan_fingerprints_error"] = str(exc)[:200]
     if full_run:
         # a traced pages_e2e run takes about 110 s
         if remaining_budget() < 240:

@@ -588,6 +588,7 @@ class RegexFirstMatch(_ArrowUdfPlane):
             re.compile(fault_pattern)  # fail fast at plan time
         self.value_type, conv = infer_value_type(pairs)
         table: List[Tuple[str, Any]] = [(str(k), conv(v)) for k, v in pairs]
+        _check_int64(self.value_type, (v for _, v in table))
         # fail fast at plan time on invalid patterns (reference raises at
         # register when compiling — fetch_strategy/memory.rb:22)
         for k, _ in table:

@@ -129,13 +129,18 @@ class Translate:
         ``probe_each`` joins the rebuilt arrays back on it, keeping the
         shuffle deterministic and narrow; without it the plane falls back
         to ``monotonically_increasing_id`` over a localCheckpoint'ed input
-        (correct but materializes the frame — pass the key at scale)."""
+        (correct but materializes the frame — pass the key at scale).
+
+        The strategy is read once: ``refresh`` may swap it from a
+        scheduler thread, and one plan must probe and type its target
+        with the same dictionary version."""
         cfg = self.config
+        strategy = self.strategy
         if cfg.iterate_on is None:
-            return self._apply_single(df, route_col, matched_key_col)
+            return self._apply_single(df, strategy, route_col, matched_key_col)
         if cfg.iterate_on == cfg.resolved_source:
-            return self._apply_array_of_values(df, route_col, iterate_key)
-        return self._apply_array_of_maps(df, route_col, iterate_key)
+            return self._apply_array_of_values(df, strategy, route_col, iterate_key)
+        return self._apply_array_of_maps(df, strategy, route_col, iterate_key)
 
     # -- helpers -------------------------------------------------------------
     @property
@@ -197,10 +202,10 @@ class Translate:
             schema=df.schema,
         )
 
-    def _out_type(self) -> T.DataType:
+    def _out_type(self, strategy: LookupStrategy) -> T.DataType:
         """Target column type: the dictionary's value type, widened to string
         when a (string) fallback can also land there (SURVEY.md §7)."""
-        vt = self.strategy.value_type
+        vt = strategy.value_type
         if self.config.fallback is not None and not isinstance(vt, T.StringType):
             return T.StringType()
         return vt
@@ -214,10 +219,13 @@ class Translate:
     def _apply_single(
         self,
         df: DataFrame,
+        strategy: LookupStrategy,
         route_col: str,
         matched_key_col: Optional[str],
     ) -> DataFrame:
-        strategy = self.strategy if matched_key_col is None else self.strategy.keyed()
+        out_type = self._out_type(strategy)
+        if matched_key_col is not None:
+            strategy = strategy.keyed()
         # materialize the gate and the key BEFORE the target column is
         # overwritten — later expressions must see the ORIGINAL values
         df = df.withColumn(_SKIP, self._skip_gate(df)).withColumn(
@@ -226,7 +234,6 @@ class Translate:
         skip = F.col(_SKIP)
         df, p = strategy.probe_frame(df, F.col(_KEY))
 
-        out_type = self._out_type()
         existing = self._existing(df, out_type)
         fb = self._fallback_expr(df)
         failed = None if p.error is None else p.error.isNotNull()
@@ -258,8 +265,9 @@ class Translate:
     def _apply_array_of_values(
         self,
         df: DataFrame,
+        strategy: LookupStrategy,
         route_col: str,
-        iterate_key: Optional[str] = None,
+        iterate_key: Optional[str],
     ) -> DataFrame:
         """iterate_on == source: per-element lookup, ordinal-preserving,
         fallback prefilled at every miss position, target always written
@@ -276,9 +284,9 @@ class Translate:
             _KEYS, F.transform(arr, lambda x: x.cast("string"))
         )
         skip, keys = F.col(_SKIP), F.col(_KEYS)
-        df, each = self.strategy.probe_each(df, keys, iterate_key)
+        df, each = strategy.probe_each(df, keys, iterate_key)
 
-        out_type = self._out_type()
+        out_type = self._out_type(strategy)
         fb = self._fallback_expr(df)
         fb_elem = (fb if fb is not None else F.lit(None)).cast(out_type)
 
@@ -314,8 +322,9 @@ class Translate:
     def _apply_array_of_maps(
         self,
         df: DataFrame,
+        strategy: LookupStrategy,
         route_col: str,
-        iterate_key: Optional[str] = None,
+        iterate_key: Optional[str],
     ) -> DataFrame:
         """iterate_on != source: for each struct element, look up
         ``elem[source]`` and write ``elem[target]``; nil elements/values are
@@ -333,10 +342,10 @@ class Translate:
         def present(m: Column) -> Column:
             return m.getField(source).isNotNull()
 
-        df, each = self.strategy.probe_each(
+        df, each = strategy.probe_each(
             df, F.transform(arr, key_of), iterate_key
         )
-        out_type = self._out_type()
+        out_type = self._out_type(strategy)
         fb = self._fallback_expr(df)
 
         def update(m: Column, i: Column) -> Column:

@@ -30,28 +30,14 @@ def test_run_suffix_is_fresh_then_r5b_convention(tmp_path, monkeypatch):
     _fake_repo(tmp_path, monkeypatch)
     tag = bench.ROUND_TAG
     # fresh round → no suffix
-    assert bench._run_artifact("HEADLINE").endswith(f"HEADLINE_{tag}.json")
+    assert bench._run_artifact().endswith(f"HEADLINE_{tag}.json")
     # a second run in the same round suffixes with 'b', never
     # overwriting the first run's evidence
     p = tmp_path / "BENCH" / f"HEADLINE_{tag}.json"
     p.write_text("{}")
     monkeypatch.setattr(bench, "_RESOLVED", {})
-    assert bench._run_artifact("HEADLINE").endswith(f"HEADLINE_{tag}b.json")
+    assert bench._run_artifact().endswith(f"HEADLINE_{tag}b.json")
     assert os.path.exists(p)
-
-
-def test_run_suffix_is_shared_across_artifact_kinds(tmp_path, monkeypatch):
-    """After an uneven prior run (only PLANS_rN exists), per-kind
-    resolution would emit HEADLINE_rN next to PLANS_rNb. The suffix is
-    resolved once over the union of kinds, so every artifact of one run
-    correlates by filename."""
-    _fake_repo(tmp_path, monkeypatch)
-    tag = bench.ROUND_TAG
-    (tmp_path / "BENCH" / f"PLANS_{tag}.json").write_text("{}")
-    headline = bench._run_artifact("HEADLINE")
-    plans = bench._run_artifact("PLANS")
-    assert headline.endswith(f"HEADLINE_{tag}b.json")
-    assert plans.endswith(f"PLANS_{tag}b.json")
 
 
 def _scaling_line(eff=0.9134567891234567):
@@ -64,16 +50,15 @@ def _scaling_line(eff=0.9134567891234567):
 
 def test_stdout_line_fits_driver_tail_capture(tmp_path, monkeypatch):
     """The driver parses only the last ~2000 chars of stdout. Worst case:
-    every HEADLINE query at 99.99 s, the plan-fingerprint path and the
-    scaling record — the line must fit, round-trip, and carry a median
-    for every query (VERDICT r9 item 1: an empty map credited nothing)."""
+    every HEADLINE query at 99.99 s and the scaling record — the line must
+    fit, round-trip, and carry a median for every query (VERDICT r9 item
+    1: an empty map credited nothing)."""
     _fake_repo(tmp_path, monkeypatch)
     bench.STATE.update(
         timings={name: 99.987 for name in bench.HEADLINE},
         total=round(99.987 * len(bench.HEADLINE), 3),
         queries_file="BENCH/HEADLINE_r10z.json",
     )
-    bench.STATE["extras"]["plan_fingerprints"] = "BENCH/PLANS_r10z.json"
     bench.record_scaling(0, "pages_e2e io.scan_s 0.3 s\n" + _scaling_line())
     line = bench.render_stdout_line(bench.build_stdout_payload())
     assert len(line) <= bench.STDOUT_LINE_LIMIT
@@ -84,7 +69,6 @@ def test_stdout_line_fits_driver_tail_capture(tmp_path, monkeypatch):
     assert scaling["efficiency"] == 0.9134567891234567
     assert scaling["criterion_met"] is True
     assert (scaling["n"], scaling["n4"]) == (1, os.cpu_count())
-    assert parsed["extras"]["plan_fingerprints"] == "BENCH/PLANS_r10z.json"
     assert "trimmed_for_size" not in parsed["extras"]
 
 
@@ -97,16 +81,16 @@ def test_stdout_line_trims_gracefully_when_oversized(tmp_path, monkeypatch):
     bench.STATE.update(timings=timings, total=65.0)
     extras = bench.STATE["extras"]
     extras.update(partial=True, interrupted="signal 15",
-                  plan_fingerprints_error="x" * 200)
+                  scaling_error="x" * 200)
     bench.record_scaling(0, _scaling_line())
     line = bench.render_stdout_line(bench.build_stdout_payload())
     parsed = json.loads(line)
     assert len(line) <= bench.STDOUT_LINE_LIMIT
     assert parsed["queries"] == timings
-    assert parsed["extras"]["trimmed_for_size"] == ["plan_fingerprints_error"]
+    assert parsed["extras"]["trimmed_for_size"] == ["scaling_error"]
     assert parsed["extras"]["scaling"]["efficiency"] == 0.9134567891234567
     # the renderer works on a copy: STATE keeps every key
-    assert "plan_fingerprints_error" in extras
+    assert "scaling_error" in extras
 
     timings.update({f"extra_query_{i:03d}": 1.0 for i in range(60)})
     line = bench.render_stdout_line(bench.build_stdout_payload())
@@ -163,7 +147,7 @@ def test_headline_artifact_written_incrementally_and_kill_safe(
                    "steal_pct": 0.0}}
     bench._write_headline_artifact({"q1": 1.0}, reps, partial=True)
 
-    path = bench._run_artifact("HEADLINE")
+    path = bench._run_artifact()
     with open(path) as fh:
         on_disk = json.load(fh)
     assert on_disk["partial"] is True
@@ -203,7 +187,7 @@ def test_run_headline_splits_each_rep_into_build_and_exec(
     timings = bench.run_headline(spark, testdata_dir, names)
     assert list(timings) == names
 
-    with open(bench._run_artifact("HEADLINE")) as fh:
+    with open(bench._run_artifact()) as fh:
         side = json.load(fh)
     assert "partial" not in side and "partial" not in bench.STATE["extras"]
     assert side["medians"] == timings

@@ -116,12 +116,16 @@ def test_literal_folds_no_per_row_json_parse(spark, monkeypatch):
     assert out.collect()[0]["t"] == "v1"
 
 
-def test_out_of_range_long_value_fails_at_plan_time():
+def test_out_of_range_long_value_fails_at_plan_time(spark):
     # from_json would null the whole bucket array and every key would miss
     with pytest.raises(ValueError, match="int64"):
         Translate(TranslateConfig(source="k", target="t", dictionary={"a": 2**70, "b": 1}))
     with pytest.raises(ValueError, match="int64"):
         ExactMapLiteral([("a", [1, -(2**63) - 1])], nested="typed")
+    # the regex plane would otherwise fail only when a job runs the UDF
+    with pytest.raises(ValueError, match="int64"):
+        Translate(TranslateConfig(source="msg", target="t", regex=True,
+                                  dictionary=[("^a", 2**63)]))
     ExactMapLiteral([("a", 2**63 - 1), ("b", -(2**63))])  # the int64 edges fit
 
 

@@ -1,5 +1,5 @@
 """Driver contract sanity: entry() smoke, queries()/oracle_sql() key
-parity, and a spot oracle comparison via DuckDB (the full 35-query sweep is
+parity, and a spot oracle comparison via DuckDB (the full 68-query sweep is
 tools/selfcheck.py; these keep `pytest -x -q` fast)."""
 
 import os
@@ -8,6 +8,7 @@ import duckdb
 import pytest
 
 import __spark_entry__ as entry
+from tools.selfcheck import canon, dtype_classes
 
 
 def test_queries_and_oracles_align():
@@ -25,6 +26,8 @@ def test_entry_returns_rows(spark):
 
 @pytest.mark.parametrize("name", ["exact_events", "pipeline_e2e", "minhash_signatures"])
 def test_spot_oracle_parity(spark, testdata_dir, name):
+    """The driver's comparison on one query: column names, dtype class
+    per column, and order-insensitive values (tools/selfcheck.py's rule)."""
     sdf = entry.queries()[name](spark, testdata_dir).toPandas()
     con = duckdb.connect()
     for t in ["events", "documents", "embeddings"]:
@@ -32,10 +35,5 @@ def test_spot_oracle_parity(spark, testdata_dir, name):
         if os.path.exists(p):
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
     odf = con.execute(entry.oracle_sql()[name]).df()
-    assert len(sdf) == len(odf)
-    scols, ocols = sorted(sdf.columns), sorted(odf.columns)
-    assert scols == ocols
-    s = sdf[scols].sort_values(scols).reset_index(drop=True)
-    o = odf[ocols].sort_values(ocols).reset_index(drop=True)
-    for c in scols:
-        assert list(s[c].fillna("∅")) == list(o[c].fillna("∅")), c
+    assert dtype_classes(sdf) == dtype_classes(odf)
+    assert canon(sdf) == canon(odf)

@@ -160,11 +160,11 @@ def test_all_contract_queries_have_no_scale_killers(spark, testdata_dir):
     MapInPandas are the sanctioned Python paths). A future edit that
     silently reintroduces any of the round-1 scale-killer shapes fails
     here, not in a judge's audit."""
-    from logstash_filter_translate_spark.plans.queries import ALL_QUERIES
+    from logstash_filter_translate_spark.plans.queries import (
+        ALL_QUERIES,
+        RUN_AT_BUILD,
+    )
 
-    # streaming queries execute a full micro-batch run when built — their
-    # result frame is a plain scan+agg, not worth the runtime here
-    skip = {"streaming_exact", "streaming_dedup"}
     # BroadcastNestedLoopJoin is allowed ONLY where the expansion is the
     # algorithm itself and the build side is a broadcast small frame:
     #   - brute-force top-k scores every (corpus, query) pair BY DESIGN
@@ -176,7 +176,7 @@ def test_all_contract_queries_have_no_scale_killers(spark, testdata_dir):
                       "similarity_ivf_probe2", "similarity_ivf_indexed"}
     offenders = {}
     for name, fn in ALL_QUERIES.items():
-        if name in skip:
+        if name in RUN_AT_BUILD:
             continue
         plan = plan_of(fn(spark, testdata_dir))
         markers = ["CartesianProduct", "BatchEvalPython"]

@@ -253,3 +253,44 @@ def test_yaml_streaming_equals_one_shot_on_aliases_and_root_scalar(tmp_path):
         load_yaml(scalar, strategy="one_shot")
     with pytest.raises(DictionaryLoadError):
         load_yaml(scalar, strategy="streaming")
+
+
+@pytest.mark.parametrize(
+    "iterate_on, schema, rows, target_type, value",
+    [
+        (None, "k string", [("a",)], "bigint", 1),
+        ("k", "k array<string>", [(["a"],)], "array<bigint>", [1]),
+        ("items", "items array<struct<k:string>>", [([("a",)],)],
+         "array<struct<k:string,t:bigint>>", [("a", 1)]),
+    ],
+    ids=["single", "array_of_values", "array_of_maps"],
+)
+def test_apply_types_the_target_from_the_strategy_it_probed(
+    spark, iterate_on, schema, rows, target_type, value
+):
+    """A refresh may swap ``op.strategy`` while ``apply`` builds a plan:
+    the target type must come from the dictionary version the plan
+    probes, not from one swapped in mid-build."""
+    from logstash_filter_translate_spark.operators.lookup import ExactMapLiteral
+
+    target = "items" if iterate_on == "items" else "t"
+    op = Translate(
+        TranslateConfig(source="k", target="t", dictionary={"a": 1},
+                        iterate_on=iterate_on),
+        spark=spark,
+    )
+    swapped_in = ExactMapLiteral([("a", "one")])  # string values
+
+    class SwapOnProbe(ExactMapLiteral):
+        def probe_frame(self, df, key):
+            op.strategy = swapped_in
+            return super().probe_frame(df, key)
+
+        def probe_each(self, df, keys, row_key=None):
+            op.strategy = swapped_in
+            return super().probe_each(df, keys, row_key)
+
+    op.strategy = SwapOnProbe([("a", 1)])
+    out = op.apply(spark.createDataFrame(rows, schema))
+    assert out.schema[target].dataType.simpleString() == target_type
+    assert out.collect()[0][target] == value

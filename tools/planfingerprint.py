@@ -17,9 +17,8 @@ Usage:
 
 Baseline: tests/plan_digests.json (regenerate with this tool after an
 INTENTIONAL plan change and say why in the commit);
-tests/test_plan_digests.py diffs current plans against it on every run.
-The per-round artifact copy is BENCH/PLANS_r{N}.json (written by
-bench — see bench.py).
+tests/test_plan_digests.py diffs current plans against it on every run;
+that baseline is the one record of plan shapes.
 """
 
 from __future__ import annotations
@@ -32,13 +31,12 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-#: these two EXECUTE a Structured Streaming microbatch when the query
-#: function is called (their batch result is what the oracle checks), so
-#: there is no cheap pre-execution plan to fingerprint
-SKIP = {
-    "streaming_exact": "executes a streaming microbatch on construction",
-    "streaming_dedup": "executes a streaming microbatch on construction",
-}
+from logstash_filter_translate_spark.plans import queries as Q  # noqa: E402
+
+#: queries with no pre-execution plan to fingerprint, with the reason the
+#: baseline records for them
+SKIP = dict.fromkeys(
+    Q.RUN_AT_BUILD, "executes a streaming microbatch on construction")
 
 _JOIN_WORDS = (
     "Inner", "FullOuter", "LeftOuter", "RightOuter", "LeftAnti",
@@ -87,8 +85,6 @@ def fingerprint_df(df) -> dict:
 
 
 def fingerprints(spark, sf_dir: str) -> dict:
-    from logstash_filter_translate_spark.plans import queries as Q
-
     out = {}
     for name, fn in Q.ALL_QUERIES.items():
         if name in SKIP:

@@ -114,12 +114,8 @@ def main():
             print(f"FAIL {name}: spark error: {exc}")
             failures += 1
             continue
-        sql = oracles.get(name)
-        if sql is None:
-            print(f"OK?  {name}: rows-only check, {len(sdf)} rows")
-            continue
         try:
-            odf = con.execute(sql).df()
+            odf = con.execute(oracles[name]).df()
         except Exception as exc:
             print(f"FAIL {name}: oracle error: {exc}")
             failures += 1
