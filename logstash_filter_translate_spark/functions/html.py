@@ -2,11 +2,8 @@
 field parsing.
 
 The parse stage extracts natively: ``regexp_extract`` over the decoded
-html — whole-stage codegen, zero Python. ``extract_text_arrow`` states the
-same text extraction as a pandas UDF with a compiled ``re`` pattern, the
-template for extractors that outgrow a single regex; the
-``parse_extract_arrow`` query runs it, and a test holds it byte-identical
-to the native path.
+html — whole-stage codegen, zero Python, so no row crosses the Python
+boundary.
 
 Per-row invariant (BASELINE.json.input_hint): extract_text(html) == text
 byte-identically — guaranteed by the page template (plans/pages.py) and
@@ -15,13 +12,8 @@ asserted in tests + the e2e pipeline observe() metric.
 
 from __future__ import annotations
 
-import re
-
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-from pyspark.sql.functions import pandas_udf
 
 _TEXT_RE = r"(?s)<p>(.*)</p>"
 _STATUS_RE = r'<meta http-equiv="Status" content="([^"]*)"'
@@ -79,19 +71,6 @@ def extract_lang_from_str(s: Column) -> Column:
 def extract_text_native(html_bin: Column) -> Column:
     """JVM-side extraction; empty match → NULL (not '')."""
     return extract_text_from_str(html_str(html_bin))
-
-
-@pandas_udf(T.StringType())
-def extract_text_arrow(html: pd.Series) -> pd.Series:
-    pat = re.compile(_TEXT_RE)
-
-    def one(b):
-        if b is None:
-            return None
-        m = pat.search(bytes(b).decode("utf-8"))
-        return m.group(1) if m and m.group(1) else None
-
-    return html.map(one)
 
 
 def extract_status(html_bin: Column) -> Column:

@@ -7,7 +7,8 @@ Scale notes (the 100 TB story):
   - MinHash/LSH: signatures are pure map-side expressions (no shuffle);
     candidate generation shuffles only (band_idx, band_key) pairs — the
     classic shingle→minhash→band→bucket-join pipeline. Hot buckets (boiler-
-    plate pages) are the skew risk: cap bucket width before pairing.
+    plate pages) are the skew risk: lsh_candidate_pairs can cap bucket
+    width before pairing.
   - SimHash: map-side expression; near-dup = Hamming distance on a 64-bit
     int, cheap to band by prefix.
   - All primitives use the md5-based portable hash so the DuckDB oracle
@@ -186,9 +187,7 @@ def lsh_candidate_pairs(
     # materialize BEFORE the cap and the self-join: _cap_buckets references
     # the frame twice (width count + anti-join probe) and the self-join
     # twice more — without the checkpoint the whole corpus-wide
-    # explode+md5+groupBy signature subtree re-executes per reference
-    # (embedding_cosine_pairs checkpoints before its cap for the same
-    # reason).
+    # explode+md5+groupBy signature subtree re-executes per reference.
     # localCheckpoint, NOT persist: the block is released by the
     # ContextCleaner when the frame is GC'd, so a long-running driver
     # doesn't leak cached partitions
@@ -219,7 +218,6 @@ def lsh_candidate_pairs_cross(
     id_col: str,
     num_hashes: int = 8,
     band_size: int = 2,
-    max_bucket: Optional[int] = None,
 ) -> DataFrame:
     """Cross-corpus LSH candidates: (id_a from corpus, id_b from probe)
     sharing at least one band — the fuzzy-decontamination shape (probe =
@@ -228,9 +226,8 @@ def lsh_candidate_pairs_cross(
     The probe side's bands are BROADCAST: eval sets are small by
     construction, so the corpus is banded map-side and never shuffles —
     the cross-corpus analogue of contamination_check's broadcast
-    semi-join, where the self-join plane must shuffle both sides.
-    ``max_bucket`` caps CORPUS-side bucket width (boilerplate buckets),
-    same opt-in semantics as lsh_candidate_pairs.
+    semi-join, where the self-join plane must shuffle both sides. The
+    corpus bands are read exactly once, so they need no checkpoint.
 
     Ids are assumed to share one namespace (both sides drawn from the
     same document universe — true for decontamination): a document
@@ -240,16 +237,6 @@ def lsh_candidate_pairs_cross(
     """
     cb = _band_signatures(sigs_corpus, id_col, num_hashes, band_size)
     keys = _band_key_cols(band_size)
-    if max_bucket is not None:
-        # checkpoint BEFORE the cap: _cap_buckets reads the frame twice
-        # (width count + anti-join probe) and would otherwise re-execute
-        # the corpus-wide signature subtree. Uncapped,
-        # the corpus bands are read exactly once — no checkpoint needed.
-        cb = _cap_buckets(
-            cb.localCheckpoint(eager=False),
-            keys,
-            max_bucket,
-        )
     pb = _band_signatures(sigs_probe, id_col, num_hashes, band_size)
     cond = F.col(f"l.{id_col}") != F.col(f"r.{id_col}")
     for k in keys:
@@ -304,7 +291,6 @@ def simhash_pairs(
     bits: int = 16,
     bands: int = 4,
     max_hamming: int = 3,
-    max_bucket: Optional[int] = None,
 ) -> DataFrame:
     """SimHash near-dup pairs: prefix-band bucket join + popcount verify.
     Returns (id_a, id_b, hamming) with id_a < id_b and Hamming distance
@@ -314,19 +300,15 @@ def simhash_pairs(
     space: split the ``bits``-bit signature into ``bands`` equal chunks;
     any pair within Hamming distance < ``bands`` agrees EXACTLY on at
     least one chunk, so the equal-chunk equi-join finds every such pair —
-    with the defaults (4 bands, ≤3 flipped bits, no bucket cap) recall is
-    exact, no all-pairs scan anywhere. Verification is one codegen
+    with the defaults (4 bands, ≤3 flipped bits) recall is exact, no
+    all-pairs scan anywhere. Verification is one codegen
     ``bit_count(xor)`` per candidate.
 
     Plan shape mirrors lsh_candidate_pairs: signatures are map-side partial
     aggregates (see ``simhash``); the only shuffle carries (band_idx,
-    band_val) pairs. ``max_bucket`` is the OPT-IN skew guard for web scale
-    (boilerplate pages collapse to one signature; band values are only
-    ``bits/bands`` wide, so hot buckets are guaranteed at crawl scale):
-    buckets wider than the cap are dropped entirely, which SACRIFICES the
-    exact-recall guarantee for bounded join work — leave it None when the
-    oracle-identical complete pairing is required. Tokenless docs (NULL
-    signature) are excluded.
+    band_val) pairs. Every pair is kept: a hot bucket (boilerplate pages
+    collapse to one signature) costs join work, never recall. Tokenless
+    docs (NULL signature) are excluded.
     """
     if bits % bands != 0:
         raise ValueError(f"bits={bits} not divisible by bands={bands}")
@@ -361,8 +343,6 @@ def simhash_pairs(
     banded = sigs.select(
         id_col, "simhash", F.explode(chunks).alias("b")
     ).select(id_col, "simhash", "b.band_idx", "b.band_val")
-    if max_bucket is not None:
-        banded = _cap_buckets(banded, ["band_idx", "band_val"], max_bucket)
     left = banded.alias("l")
     right = banded.alias("r")
     return (
@@ -392,7 +372,6 @@ def embedding_cosine_pairs(
     emb: DataFrame,
     planes: List[List[float]],
     threshold: float,
-    max_bucket: Optional[int] = None,
 ) -> DataFrame:
     """Near-duplicate (id_a, id_b) pairs by embedding cosine ≥ threshold
     over ``(vec_id, embedding)`` rows, candidate generation via
@@ -404,15 +383,8 @@ def embedding_cosine_pairs(
     once per vector before the join (not once per pair). At 100 TB the
     bucketed frame is written partitioned by bucket so the self-join is
     co-located; recall is tuned by the number of plane sets (bands).
-
-    ``max_bucket`` is the OPT-IN skew guard, as on every bucketed pairing
-    path: a degenerate embedding cluster (near-identical boilerplate
-    vectors) makes one hyperplane bucket quadratic at crawl scale; with
-    the cap, buckets wider than
-    ``max_bucket`` are dropped entirely via the same sort-free
-    groupBy-count → broadcast left-anti shape as the MinHash/SimHash
-    paths (``_cap_buckets``). Default None — recall complete and
-    value-identical to the SQL oracle.
+    Every candidate is verified, so the result is value-identical to the
+    SQL oracle.
     """
     from .similarity import ID_COL, VEC_COL, dot, hyperplane_bucket, norm
 
@@ -422,14 +394,6 @@ def embedding_cosine_pairs(
         hyperplane_bucket(VEC_COL, planes).alias("__bucket"),
         norm(F.col(VEC_COL)).alias("__norm"),
     )
-    if max_bucket is not None:
-        # checkpoint BEFORE the cap (mirrors simhash_pairs): the cap's
-        # count+anti-join subtree is referenced by both self-join sides,
-        # so its input must be the materialized projection, not a second
-        # corpus scan. The uncapped path stays checkpoint-free — its plan
-        # (and the dedup_embedding_cosine digest) is unchanged.
-        b = b.localCheckpoint(eager=False)
-        b = _cap_buckets(b, ["__bucket"], max_bucket)
     a = b.select(
         F.col(ID_COL).alias("id_a"),
         F.col(VEC_COL).alias("__ea"),
@@ -900,8 +864,8 @@ def boilerplate_shingles(
     """(shingle, doc_freq) for word 3-grams appearing in at least
     ``min_docs`` DISTINCT documents — the boilerplate inventory (nav
     chrome, footers, cookie banners) that produces the hot LSH buckets
-    the ``max_bucket`` caps guard against; measuring it directly is how
-    a deployment picks the cap.
+    the one ``max_bucket`` cap, on :func:`lsh_candidate_pairs`, guards
+    against; measuring it directly is how a deployment picks that cap.
 
     One shuffle, keyed on the shingle: per-document distinct shingles
     explode map-side (array_distinct before the explode, so a shingle

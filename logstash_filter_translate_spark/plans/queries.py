@@ -10,11 +10,12 @@ must agree exactly.
 
 from __future__ import annotations
 
+import hashlib
 import os
-import time
 
 from typing import Callable, Dict, Tuple
 
+from pyspark import SparkFiles
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -109,79 +110,18 @@ def _load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     return df.repartition(spark.sparkContext.defaultParallelism)
 
 
-def _pid_started_after(pid: int, ts: float) -> bool:
-    """True when /proc says ``pid`` started AFTER timestamp ``ts`` — i.e.
-    a live pid that post-dates a scratch dir's mtime is a RECYCLED pid of
-    an unrelated process, not the dir's creator (os.kill(pid, 0) alone
-    would leak the dir until reboot in that case). Conservative on
-    any read failure: returns False (treat the pid as the owner)."""
-    try:
-        with open(f"/proc/{pid}/stat") as fh:
-            parts = fh.read().rsplit(")", 1)[1].split()
-        start_jiffies = int(parts[19])  # field 22 (starttime), 0-based 19
-        with open("/proc/uptime") as fh:
-            uptime = float(fh.read().split()[0])
-        boot = time.time() - uptime
-        start = boot + start_jiffies / os.sysconf("SC_CLK_TCK")
-        return start > ts + 2.0  # slack for clock/jiffy rounding
-    except Exception:
-        return False
-
-
-#: scratch dirs this process already registered an atexit cleanup for —
-#: re-entering the same (tag, sf_dir) must not stack duplicate handlers
-_SCRATCH_REGISTERED: set = set()
-
-
 def _scratch_dir(tag: str, sf_dir: str) -> str:
-    """Per-(query, input, process) scratch dir for the queries that write
-    files: the two streaming queries and the indexed IVF query. The dir
-    lives exactly as long as its process — nothing in it is shared with
-    another process or outlives this one — and is NOT wiped between
-    calls: a streaming call takes a fresh subdirectory of it, the IVF
-    query keeps its index at a fixed child. os.getpid() in the path keeps
-    two concurrent bench/selfcheck processes out of each other's files;
-    the pid suffix would otherwise accumulate one dir per past run, so
-    each call (a) registers an atexit cleanup of its own dir — once per
-    path, not per call — and (b) sweeps stale siblings whose creator pid
-    is dead OR provably recycled (a live pid that started after the
-    dir's mtime cannot be its creator)."""
-    import atexit
-    import hashlib
-    import shutil
-    import tempfile
-
+    """Per-(query, input) scratch dir for the queries that write files:
+    the two streaming queries and the indexed IVF query. It sits under
+    ``SparkFiles.getRootDirectory()``, the driver temp dir Spark creates
+    for each SparkContext and deletes at ``spark.stop()``, so it lives
+    exactly as long as the session: two sessions never share one, and
+    nothing in it outlives its session. It is NOT wiped between calls: a
+    streaming call takes a fresh subdirectory of it, the IVF query keeps
+    its index at a fixed child."""
     suffix = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    base = tempfile.gettempdir()
-    prefix = f"lfts_{tag}_{suffix}_"
-    try:
-        for name in os.listdir(base):
-            if not name.startswith(prefix):
-                continue
-            pid_s = name[len(prefix):]
-            if not pid_s.isdigit() or int(pid_s) == os.getpid():
-                continue
-            sib = os.path.join(base, name)
-            try:
-                os.kill(int(pid_s), 0)  # raises if dead
-                # alive — but a pid recycled by an unrelated process
-                # still marks the dir stale (compare dir mtime vs the
-                # live pid's start time)
-                if _pid_started_after(int(pid_s), os.path.getmtime(sib)):
-                    shutil.rmtree(sib, ignore_errors=True)
-            except ProcessLookupError:
-                shutil.rmtree(sib, ignore_errors=True)
-            except PermissionError:
-                pass  # alive under another uid
-            except OSError:
-                pass
-    except OSError:
-        pass
-    path = os.path.join(base, f"{prefix}{os.getpid()}")
+    path = os.path.join(SparkFiles.getRootDirectory(), f"lfts_{tag}_{suffix}")
     os.makedirs(path, exist_ok=True)
-    if path not in _SCRATCH_REGISTERED:
-        _SCRATCH_REGISTERED.add(path)
-        atexit.register(shutil.rmtree, path, ignore_errors=True)
     return path
 
 
@@ -986,8 +926,9 @@ BOILERPLATE_MIN_DOCS = 5
 def q_boilerplate_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The boilerplate inventory: word 3-grams appearing in ≥ 5 distinct
     documents (nav chrome, footers, cookie banners) — the text that
-    produces the hot LSH buckets the ``max_bucket`` caps guard against.
-    Measuring it is how a deployment PICKS the cap. One shuffle keyed on
+    produces the hot LSH buckets the one ``max_bucket`` cap, on
+    ``lsh_candidate_pairs``, guards against. Measuring it is how a
+    deployment PICKS that cap. One shuffle keyed on
     the shingle, map-side partial counts
     (operators/dedup.py::boilerplate_shingles)."""
     return boilerplate_shingles(
@@ -2432,7 +2373,7 @@ def q_similarity_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_similarity_ivf_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The materialized-index IVF plane end-to-end: build the
     cell-partitioned index (write_ivf_index — the amortized 100 TB pass)
-    once per process, then serve the same queries from it
+    once per session, then serve the same queries from it
     (ivf_topk_indexed; dynamic partition pruning restricts the scan to
     probed cells). Same oracle as
     similarity_ivf — the index is a layout, not a semantic change. The
@@ -2452,8 +2393,8 @@ def q_similarity_ivf_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries = emb.filter(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    # the index lives at a fixed child of this process's scratch dir: the
-    # first call builds it, later calls in the same process serve from it
+    # the index lives at a fixed child of this session's scratch dir: the
+    # first call builds it, later calls in the same session serve from it
     # (the build costs more than a serve, so rebuilding per call would
     # time the build). A build that stopped between its two writes is
     # incomplete and is overwritten here.
@@ -2612,23 +2553,6 @@ SELECT media_id, content_sha256, CAST(n AS INT) AS n_bytes,
        CAST(greatest(1, floor(h / (greatest(w, h) / 8.0))) AS INT) AS thumb_height
 FROM dims
 """
-
-
-def q_parse_extract_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same round-trip as parse_extract but through the Arrow pandas-UDF
-    extraction plane (north-star axis B) — same oracle."""
-    from ..functions.html import extract_text_arrow
-
-    pages = _render_pages_from_docs(spark, sf_dir)
-    status = F.element_at(
-        F.array(*[F.lit(s) for s in STATUS_LIST]),
-        (F.pmod(F.col("doc_id"), F.lit(len(STATUS_LIST))) + 1).cast("int"),
-    )
-    return pages.select(
-        "doc_id",
-        extract_text_arrow(F.col("html")).alias("extracted"),
-        status.alias("status"),
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -2974,7 +2898,6 @@ REGISTRY: Dict[str, Tuple[Callable[[SparkSession, str], DataFrame], str]] = {
     "curation_pipeline": (q_curation_pipeline, SQL_CURATION_PIPELINE),
     # past the cap: plane/parameter variants of contract rows (each
     # docstring says which)
-    "parse_extract_arrow": (q_parse_extract_arrow, SQL_PARSE_EXTRACT),
     "similarity_ivf_probe2": (q_similarity_ivf_probe2, SQL_SIMILARITY_IVF_PROBE2),
     "table_dict_shuffle_enrich": (q_table_dict_shuffle_enrich, SQL_TABLE_DICT_SHUFFLE_ENRICH),
     "dedup_components": (q_dedup_components, SQL_DEDUP_COMPONENTS),

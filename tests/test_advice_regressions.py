@@ -1,4 +1,4 @@
-"""Regressions for the round-1 advisor findings (ADVICE.md r1):
+"""Regressions that pin lookup-plane correctness and plan-time bounds:
 
 1. single-value mode on an EMPTY array source must not throw under Spark
    4.1 ANSI mode (element_at → try_element_at) and must coerce like the
@@ -186,48 +186,3 @@ def test_iterate_maps_explode_plane_fallback_field_reference(spark):
     rows = {r["id"]: [m["label"] for m in r["items"]] for r in out.collect()}
     assert rows[1] == ["W1", "fb-alpha"]
     assert rows[2] == ["fb-beta"]
-
-
-def test_scratch_dir_reclaims_recycled_pid_dirs_and_dedups_atexit(tmp_path, monkeypatch):
-    """The per-process scratch dir: (a) a live pid that STARTED AFTER a
-    stale sibling dir's mtime is a recycled pid, not the creator — the
-    dir must be reclaimed; (b) re-entering the same (tag, sf_dir) must
-    not stack duplicate atexit handlers."""
-    import os
-    import time as _time
-
-    from logstash_filter_translate_spark.plans import queries as Q
-
-    monkeypatch.setenv("TMPDIR", str(tmp_path))
-    import tempfile
-    tempfile.tempdir = None  # force re-read of TMPDIR
-    try:
-        # own-pid started long ago relative to a freshly created dir →
-        # _pid_started_after(os.getpid(), now) is False (we ARE older)
-        assert not Q._pid_started_after(os.getpid(), _time.time())
-        # and True against a timestamp far in the past (the dir pre-dates
-        # this process → its creator pid was recycled by us)
-        assert Q._pid_started_after(os.getpid(), 0.0)
-
-        # sibling dir tagged with OUR live pid+1... use our own pid via a
-        # dir whose mtime predates this process: simulate by backdating
-        import hashlib
-        suffix = hashlib.md5(b"/some/sf").hexdigest()[:8]
-        # a fake sibling owned by a live pid (pid 1, started at boot):
-        # mtime AFTER pid-1's start → left alone
-        sib_live = tmp_path / f"lfts_t_{suffix}_1"
-        sib_live.mkdir()
-        # a fake sibling owned by a dead pid → reclaimed
-        dead_pid = 4194000  # beyond default pid_max ceiling usage
-        sib_dead = tmp_path / f"lfts_t_{suffix}_{dead_pid}"
-        sib_dead.mkdir()
-
-        before = len(Q._SCRATCH_REGISTERED)
-        p1 = Q._scratch_dir("t", "/some/sf")
-        p2 = Q._scratch_dir("t", "/some/sf")
-        assert p1 == p2
-        assert len(Q._SCRATCH_REGISTERED) == before + 1  # one handler
-        assert not sib_dead.exists()  # dead-pid sibling reclaimed
-        assert sib_live.exists()  # live pid-1 (init) left alone
-    finally:
-        tempfile.tempdir = None

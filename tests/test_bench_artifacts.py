@@ -51,8 +51,8 @@ def _scaling_line(eff=0.9134567891234567):
 def test_stdout_line_fits_driver_tail_capture(tmp_path, monkeypatch):
     """The driver parses only the last ~2000 chars of stdout. Worst case:
     every HEADLINE query at 99.99 s and the scaling record — the line must
-    fit, round-trip, and carry a median for every query (VERDICT r9 item
-    1: an empty map credited nothing)."""
+    fit, round-trip, and carry a median for every query (a line with an
+    empty map reports no per-query time at all)."""
     _fake_repo(tmp_path, monkeypatch)
     bench.STATE.update(
         timings={name: 99.987 for name in bench.HEADLINE},

@@ -136,7 +136,7 @@ def test_ivf_index_write_read_equals_inline_and_prunes(spark, tmp_path):
     corpus serves queries identically to the inline plane, and the indexed
     scan is pruned to probed cells via dynamic partition pruning (the
     broadcast query side doubles as the pruning subquery) — the 100 TB
-    claim in the docstring, executable (round-2 judge item #4)."""
+    claim in the docstring, executable."""
     import random
 
     from logstash_filter_translate_spark.operators.similarity import (
@@ -228,8 +228,9 @@ def test_ivf_index_self_describing_and_incremental_append(spark, tmp_path):
         map(tuple, inline.collect())
     )
 
-    # a pre-r8 index (no _centroids) fails loudly with a rebuild hint
-    # on the self-describing paths
+    # an index written without _centroids (the layout before indexes
+    # described themselves) fails loudly with a rebuild hint on the
+    # self-describing paths
     bare = str(tmp_path / "ivf_pre_r8")
     emb.limit(10).withColumn("cell", F.lit(0)).write.partitionBy(
         "cell"
@@ -243,14 +244,18 @@ def test_ivf_index_self_describing_and_incremental_append(spark, tmp_path):
 def test_ivf_indexed_query_reuses_its_process_index_and_rebuilds_incomplete(
     spark, testdata_dir, tmp_path, monkeypatch
 ):
-    """The contract query keeps its index in this process's scratch dir:
-    the first call builds it, a second call in the same process writes no
-    index file, and an INCOMPLETE index left there (corpus _SUCCESS
-    present, _centroids missing — a build stopped between its two
-    writes) is rebuilt on the next call, with the results of a fresh
-    build. Nothing is written outside the pid-scoped scratch dir."""
+    """The contract query keeps its index in its session's scratch dir,
+    under Spark's driver temp dir (``SparkFiles.getRootDirectory()``,
+    deleted at ``spark.stop()``): a call finds it complete, a second call
+    in the same session writes no index file, and an INCOMPLETE index
+    left there (corpus _SUCCESS present, _centroids missing — a build
+    stopped between its two writes) is rebuilt on the next call, with
+    the results of a fresh build. Nothing is written to the process's
+    temp dir."""
     import shutil
     import tempfile
+
+    from pyspark import SparkFiles
 
     from logstash_filter_translate_spark.operators.similarity import (
         ivf_index_complete,
@@ -274,8 +279,9 @@ def test_ivf_indexed_query_reuses_its_process_index_and_rebuilds_incomplete(
 
         fresh = run()
         scratch = Q._scratch_dir("ivf", testdata_dir)
-        assert scratch.endswith(f"_{os.getpid()}")
-        assert os.listdir(tmp_path) == [os.path.basename(scratch)]
+        root = os.path.realpath(SparkFiles.getRootDirectory())
+        assert os.path.realpath(scratch).startswith(root + os.sep)
+        assert os.listdir(tmp_path) == []
         index = os.path.join(scratch, "index")
         assert ivf_index_complete(index)
         built = files(index)
@@ -293,7 +299,7 @@ def test_ivf_indexed_query_reuses_its_process_index_and_rebuilds_incomplete(
 
         assert run() == fresh
         assert ivf_index_complete(index)
-        assert os.listdir(tmp_path) == [os.path.basename(scratch)]
+        assert os.listdir(tmp_path) == []
     finally:
         tempfile.tempdir = None
 

@@ -128,12 +128,6 @@ def test_every_public_name_is_reached_outside_tests():
 #: defaulted parameters kept although no call outside tests/ sets them,
 #: as (function qualname, parameter), each with its reason
 SETTINGS_ALLOWED = {
-    # opt-in skew guards for web-scale buckets: off (None) on every
-    # shipped query; a skewed workload is to decide their value
-    # (ROADMAP item 3)
-    ("simhash_pairs", "max_bucket"),
-    ("embedding_cosine_pairs", "max_bucket"),
-    ("lsh_candidate_pairs_cross", "max_bucket"),
     # test fixture: the row count of the deterministic media table
     ("synthetic_media", "n"),
 }

@@ -1,5 +1,5 @@
 """Driver contract sanity: entry() smoke, queries()/oracle_sql() key
-parity, and a spot oracle comparison via DuckDB (the full 68-query sweep is
+parity, and a spot oracle comparison via DuckDB (the full 67-query sweep is
 tools/selfcheck.py; these keep `pytest -x -q` fast)."""
 
 import os

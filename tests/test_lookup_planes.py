@@ -1,6 +1,6 @@
 """Physical-plane equivalence: every lookup mode has ≥2 physical
-implementations that must agree row-for-row (the judge's 'would this
-survive a 100× scale-up' story depends on swapping planes freely)."""
+implementations that must agree row-for-row (surviving a 100× scale-up
+depends on swapping planes freely)."""
 
 from logstash_filter_translate_spark.config import TranslateConfig
 from logstash_filter_translate_spark.operators import lookup
@@ -97,7 +97,7 @@ def test_union_matched_key_tracking_forces_udf_plane(spark):
     assert out["mk"] == "500" and out["t"] == "see SE here"
 
 
-# -- table-backed dictionary plane (r3) ------------------------------------------
+# -- table-backed dictionary plane: same answers as the pairs dictionary ---------
 
 def test_table_dictionary_matches_pairs_dictionary(spark):
     """translate_with_table must equal translate() with the same mapping

@@ -65,19 +65,13 @@ def test_generator_schema(spark):
     }
 
 
-def test_extract_text_byte_identity_native_and_arrow(spark):
-    from logstash_filter_translate_spark.functions.html import (
-        extract_text_arrow,
-    )
-
+def test_extract_text_byte_identity_native(spark):
     pages = generate_pages(spark, N)
     native = P.parse_stage(pages)
-    arrow = pages.withColumn("extracted_text", extract_text_arrow(F.col("html")))
-    for df in (native, arrow):
-        mismatches = df.filter(
-            ~F.col("extracted_text").eqNullSafe(F.col("text"))
-        ).count()
-        assert mismatches == 0
+    mismatches = native.filter(
+        ~F.col("extracted_text").eqNullSafe(F.col("text"))
+    ).count()
+    assert mismatches == 0
 
 
 def test_pipeline_routes_and_aggregates(spark, tmp_path):

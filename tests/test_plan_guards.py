@@ -1,6 +1,6 @@
 """Physical-plan regression guards: the properties that make the engine
 scale-safe, asserted on the executed plans so a future edit can't silently
-reintroduce a round-1 scale-killer (docs/PLANS.md is the narrative
+reintroduce a scale-killer shape (docs/PLANS.md is the narrative
 companion).
 """
 
@@ -30,7 +30,8 @@ def test_similarity_ivf_argmax_is_partial_aggregate(spark, testdata_dir):
 
     p = plan_of(q_similarity_ivf(spark, testdata_dir))
     # the CORPUS-side cell argmax must be a max_by partial agg, not a
-    # Window over the n×|centroids| scored expansion (round-1 finding #3).
+    # Window over the n×|centroids| scored expansion, which would shuffle
+    # and sort the whole scored corpus.
     # Windows are allowed only on the QUERY side — every one must partition
     # by query_id (the tiny broadcast frame: the final per-query top-k and,
     # since nprobe landed, the per-query cell ranking); a window keyed on
@@ -46,15 +47,27 @@ def test_similarity_ivf_argmax_is_partial_aggregate(spark, testdata_dir):
         assert "query_id" in w, w  # query-side only, never the corpus
 
 
-def test_bucket_cap_is_agg_anti_join_not_window_sort(spark):
-    """The max_bucket skew guard must plan as groupBy().count() + BROADCAST
-    LEFT-ANTI join of the (tiny) over-cap bucket list — never count() OVER
-    a Window, which exchanges AND SORTS the full banded frame just to
-    measure bucket width (round-4 judge item #4)."""
+def test_bucket_cap_is_agg_anti_join_not_window_sort(spark, monkeypatch):
+    """lsh_candidate_pairs' max_bucket skew guard (``_cap_buckets``) must
+    plan as groupBy().count() + BROADCAST LEFT-ANTI join of the (tiny)
+    over-cap bucket list — never count() OVER a Window, which exchanges
+    AND SORTS the full banded frame just to measure bucket width. The
+    capped frame is checkpointed before the self-join, so its plan is
+    read where lsh_candidate_pairs builds it."""
     rows = [(i, "the quick brown fox jumps over the lazy dog") for i in range(6)]
     rows += [(10, "completely different text about spark pipelines")]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
-    from logstash_filter_translate_spark.operators.dedup import simhash_pairs
+    from logstash_filter_translate_spark.operators import dedup
+
+    built = []
+
+    def recording_cap(banded, keys, max_bucket):
+        capped = cap(banded, keys, max_bucket)
+        built.append((banded, capped))
+        return capped
+
+    cap = dedup._cap_buckets
+    monkeypatch.setattr(dedup, "_cap_buckets", recording_cap)
 
     def sorts(plan):
         return sum(
@@ -63,15 +76,16 @@ def test_bucket_cap_is_agg_anti_join_not_window_sort(spark):
             if ln.strip().lstrip("+-: ").startswith("Sort ")
         )
 
-    p = plan_of(simhash_pairs(docs, "text", "doc_id", bits=32, max_bucket=3))
-    p0 = plan_of(simhash_pairs(docs, "text", "doc_id", bits=32))
-    assert "Window" not in p  # the r4 shape this guard retires
+    sigs = dedup.minhash_signatures(docs, "text", "doc_id")
+    dedup.lsh_candidate_pairs(sigs, "doc_id", max_bucket=3)
+    (banded, capped), = built
+    p, p0 = plan_of(capped), plan_of(banded)
+    assert "Window" not in p
     # the anti-join build side (over-cap bucket list) is broadcast
     assert any("BroadcastHashJoin" in ln and "LeftAnti" in ln
                for ln in p.splitlines()), p
-    # the cap adds ZERO sorts relative to the uncapped plan (the pair
-    # self-join and verify re-join may legitimately sort-merge pre-AQE;
-    # the r4 Window form added an exchange+sort of the full banded frame)
+    # the cap adds ZERO sorts to the banded frame it filters (a Window
+    # form would add an exchange+sort of the full banded frame)
     assert sorts(p) == sorts(p0), p
 
 
@@ -158,8 +172,8 @@ def test_all_contract_queries_have_no_scale_killers(spark, testdata_dir):
     CartesianProduct, no BroadcastNestedLoopJoin, and no row-at-a-time
     Python UDF (BatchEvalPython — the non-Arrow plane; ArrowEvalPython /
     MapInPandas are the sanctioned Python paths). A future edit that
-    silently reintroduces any of the round-1 scale-killer shapes fails
-    here, not in a judge's audit."""
+    silently reintroduces any of these scale-killer shapes fails
+    here."""
     from logstash_filter_translate_spark.plans.queries import (
         ALL_QUERIES,
         RUN_AT_BUILD,

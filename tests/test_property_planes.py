@@ -57,8 +57,8 @@ def test_native_safety_proof_is_sound_pure_python(pairs, probe):
     """If union_chain_safe accepts a dictionary, the sequential str.replace
     chain (what the JVM plane computes) MUST equal the single-pass gsub
     reference for EVERY input — the proof's soundness, checked without
-    Spark at high volume (the round-1 advisor found a counterexample the
-    old proof missed: dict [("ab","c"),("cd","z")] on "abd")."""
+    Spark at high volume (an unsound proof accepts dict
+    [("ab","c"),("cd","z")], which fails on "abd")."""
     if not union_chain_safe(pairs):
         return
     mapping = dict((str(k), str(v)) for k, v in pairs)

@@ -129,7 +129,7 @@ def test_regex_strategy_rebuilt_on_reload(spark, tmp_path):
 
 
 def test_identical_content_rewrite_is_not_a_change(tmp_path):
-    """code-review r7: the version is the CONTENT version — a rewrite of
+    """The version is the CONTENT version — a rewrite of
     identical bytes (config-management touch, or every tick when the
     interval exceeds the mtime short-circuit) must not report a change,
     or Translate.refresh() rebuilds and re-broadcasts forever."""
@@ -147,9 +147,9 @@ def test_identical_content_rewrite_is_not_a_change(tmp_path):
 
 
 def test_value_type_flip_is_a_change(tmp_path):
-    """code-review r8 (ADVICE r7): Python == treats 1 == 1.0 == True, so
-    a reload that only flips a YAML value's TYPE used to compare equal,
-    skip the version bump, and serve the stale typed value forever."""
+    """A reload that only flips a YAML value's TYPE is a change: Python
+    == treats 1 == 1.0 == True, so an equality check would skip the
+    version bump and serve the stale typed value forever."""
     p = str(tmp_path / "d.yml")
     _write(p, "a: 1\n")
     df = DictionaryFile(p, refresh_behaviour="replace", refresh_interval=1)
@@ -168,7 +168,7 @@ def test_value_type_flip_is_a_change(tmp_path):
     assert df.reload() is True
     assert df.version == v0 + 2
     assert df.pairs == [("a", True)]
-    # NESTED flips too (code-review r8, second pass): list/dict equality
+    # NESTED flips too: list/dict equality
     # uses the same 1 == 1.0 == True coercion one level down
     _write(p, "a: [true]\n")
     os.utime(p, (st.st_atime, st.st_mtime + 6))
@@ -201,9 +201,9 @@ def test_value_type_flip_is_a_change(tmp_path):
 
 
 def test_refresh_scheduler_restarts_after_stop(tmp_path):
-    """code-review r7: stop() left the stop event set, so a second
-    start() spawned a thread that exited immediately and the dictionary
-    silently never refreshed again."""
+    """start() after stop() refreshes again: a stop event left set would
+    make the second start() spawn a thread that exits immediately, and
+    the dictionary would silently never refresh again."""
     from logstash_filter_translate_spark.streaming.scheduler import (
         RefreshScheduler,
     )
@@ -230,11 +230,10 @@ def test_refresh_scheduler_restarts_after_stop(tmp_path):
 
 
 def test_yaml_streaming_equals_one_shot_on_aliases_and_root_scalar(tmp_path):
-    """code-review r7: the streaming event parser silently dropped
-    alias-valued pairs ('b: *x' vanished) and accepted a root-scalar
-    document as an empty dict. Both now fall back to one_shot: aliases
-    resolve, non-mapping documents raise — the two strategies stay
-    contract-identical."""
+    """The streaming event parser must not drop alias-valued pairs
+    ('b: *x') or accept a root-scalar document as an empty dict. Both
+    fall back to one_shot: aliases resolve, non-mapping documents raise
+    — the two strategies stay contract-identical."""
     from logstash_filter_translate_spark.sources.dictionary import load_yaml
 
     p = str(tmp_path / "d.yml")

@@ -54,5 +54,4 @@ def test_headline_bench_covers_the_full_verified_surface():
     import bench
 
     assert set(bench.HEADLINE) <= set(Q.ALL_QUERIES)
-    assert "parse_extract_arrow" in bench.HEADLINE
     assert "similarity_ivf_probe2" in bench.HEADLINE

@@ -91,27 +91,11 @@ def test_simhash_pairs_banding_finds_all_close_pairs(spark, docs):
 
 
 def test_max_bucket_cap_drops_wide_buckets_opt_in(spark, docs):
-    """The skew guard is opt-in (default None keeps oracle-exact recall);
-    when set, every row of an over-cap bucket is dropped, so pairs that
-    only met in wide buckets disappear — and the capped output is always
-    a subset of the uncapped one."""
-    from logstash_filter_translate_spark.operators.dedup import simhash_pairs
-
-    uncapped = {
-        (r["id_a"], r["id_b"])
-        for r in simhash_pairs(docs, "text", "doc_id", bits=32).collect()
-    }
-    capped = {
-        (r["id_a"], r["id_b"])
-        for r in simhash_pairs(
-            docs, "text", "doc_id", bits=32, max_bucket=2
-        ).collect()
-    }
-    # docs 0/1/4 share a signature → their band buckets are 3 wide → gone
-    assert (0, 1) in uncapped
-    assert (0, 1) not in capped
-    assert capped <= uncapped
-
+    """lsh_candidate_pairs' skew guard is opt-in (default None keeps
+    oracle-exact recall); when set, every row of an over-cap bucket is
+    dropped, so pairs that only met in wide buckets disappear — and the
+    capped output is always a subset of the uncapped one. Docs 0/1/4
+    share every band, so their buckets are 3 wide."""
     sigs = minhash_signatures(docs, "text", "doc_id")
     lsh_uncapped = {
         (r["id_a"], r["id_b"])
@@ -189,51 +173,6 @@ def test_multimodal_feature_extraction_plumbing(spark):
     # deterministic: rerun yields identical features
     again = {x["media_id"]: x["content_sha1"] for x in feats.collect()}
     assert again == {x["media_id"]: x["content_sha1"] for x in rows}
-
-
-def test_embedding_cosine_cap_drops_wide_buckets_opt_in(spark):
-    """embedding_cosine_pairs has the same opt-in max_bucket skew guard
-    as the LSH/SimHash paths — capped ⊂ uncapped,
-    the cap is the sort-free broadcast left-anti shape, and default None
-    leaves the existing oracle-checked behavior untouched."""
-    from logstash_filter_translate_spark.operators.dedup import (
-        embedding_cosine_pairs,
-    )
-
-    # 3 near-identical vectors land in ONE hyperplane bucket (the
-    # degenerate boilerplate cluster); vector 3 is orthogonal-ish
-    rows = [
-        (0, [1.0, 0.0, 0.0]),
-        (1, [0.99, 0.01, 0.0]),
-        (2, [0.98, 0.02, 0.0]),
-        (3, [0.0, 1.0, 0.0]),
-    ]
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    planes = [[1.0, 0.5, 0.0], [0.3, -1.0, 0.2]]
-
-    uncapped = {
-        (r["id_a"], r["id_b"])
-        for r in embedding_cosine_pairs(emb, planes, 0.9).collect()
-    }
-    assert {(0, 1), (0, 2), (1, 2)} <= uncapped
-
-    capped_df = embedding_cosine_pairs(emb, planes, 0.9, max_bucket=2)
-    # plan shape BEFORE execution (the lazy localCheckpoint materializes
-    # on first action and then hides the cap subtree behind an
-    # ExistingRDD scan): the cap adds a broadcast LeftAnti and NO Sort
-    # (the window-function form would sort the full bucketed frame)
-    plan = capped_df._jdf.queryExecution().executedPlan().toString()
-    assert "LeftAnti" in plan and "Broadcast" in plan
-    uncapped_plan = (
-        embedding_cosine_pairs(emb, planes, 0.9)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert plan.count("Sort ") == uncapped_plan.count("Sort ")
-
-    capped = {(r["id_a"], r["id_b"]) for r in capped_df.collect()}
-    # the 3-wide bucket is dropped entirely
-    assert not ({(0, 1), (0, 2), (1, 2)} & capped)
-    assert capped <= uncapped
 
 
 def test_connected_components_chain_cycle_singleton(spark):
@@ -519,33 +458,6 @@ def test_connected_components_edge_only_node_surfaces(spark):
         for r in connected_components(nodes, edges, id_col="id").collect()
     }
     assert out == {0: 0, 1: 1, 99: 0}
-
-
-def test_lsh_cross_max_bucket_caps_corpus_side(spark, docs):
-    """The cross plane's opt-in cap drops over-wide CORPUS buckets:
-    capped candidates are a subset of uncapped, and a pair that only met
-    in a wide bucket disappears (docs 0/1/4 share every band)."""
-    from logstash_filter_translate_spark.operators.dedup import (
-        lsh_candidate_pairs_cross,
-        minhash_signatures,
-    )
-
-    sigs = minhash_signatures(docs, "text", "doc_id", 8)
-    corpus = sigs.filter("doc_id in (0, 1, 4)")  # three identical docs
-    probe = sigs.filter("doc_id = 2")            # near dup of them
-    uncapped = {
-        (r["id_a"], r["id_b"])
-        for r in lsh_candidate_pairs_cross(corpus, probe, "doc_id", 8).collect()
-    }
-    capped = {
-        (r["id_a"], r["id_b"])
-        for r in lsh_candidate_pairs_cross(
-            corpus, probe, "doc_id", 8, max_bucket=2
-        ).collect()
-    }
-    assert capped <= uncapped
-    # every corpus bucket holds the 3 identical docs -> all capped away
-    assert uncapped and not capped
 
 
 def test_canonical_docs_argmax_tiebreak_lowest_id(spark):

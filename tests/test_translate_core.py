@@ -429,7 +429,7 @@ def test_exact_physical_planes_agree(spark):
 
 
 def test_matched_key_is_null_on_skipped_rows(spark):
-    """code-review r7 / O7 parity: the reference short-circuits before
+    """O7 parity: the reference short-circuits before
     any lookup on the override gate (single_value_update.rb:27-31), so a
     skipped row must not report a matched key even when its source value
     IS in the dictionary."""

@@ -89,7 +89,10 @@ def main():
     import __spark_entry__ as entry
     from logstash_filter_translate_spark.session import build_session
 
-    spark = build_session(master="local[8]", shuffle_partitions=8)
+    # bench.py's rule: never more task threads than this process's CPUs
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS",
+                              str(len(os.sched_getaffinity(0)))))
+    spark = build_session(master=f"local[{cpus}]", shuffle_partitions=cpus)
     con = duckdb.connect()
     for t in TABLES:
         p = f"{sf_dir}/{t}.parquet"

@@ -53,10 +53,13 @@ def main() -> None:
     build_zip(zip_path)
 
     spark_submit = shutil.which("spark-submit") or "/opt/spark/bin/spark-submit"
+    # bench.py's rule: never more task threads than this process's CPUs
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS",
+                              str(len(os.sched_getaffinity(0)))))
     cmd = [
         spark_submit,
-        "--master", "local[8]",
-        "--conf", "spark.sql.shuffle.partitions=8",
+        "--master", f"local[{cpus}]",
+        "--conf", f"spark.sql.shuffle.partitions={cpus}",
         "--conf", "spark.sql.session.timeZone=UTC",
         "--py-files", zip_path,
         os.path.join(REPO, "scripts", "run_pipeline.py"),
