@@ -68,16 +68,6 @@ def extract_lang_from_str(s: Column) -> Column:
     return F.when(x != "", x)
 
 
-def extract_text_native(html_bin: Column) -> Column:
-    """JVM-side extraction; empty match → NULL (not '')."""
-    return extract_text_from_str(html_str(html_bin))
-
-
-def extract_status(html_bin: Column) -> Column:
-    x = F.regexp_extract(html_str(html_bin), _STATUS_RE, 1)
-    return F.when(x != "", x)
-
-
 def parse_url(url: Column):
     """grok-ish url parse → (host, tld, path).
 

@@ -7,8 +7,9 @@ when the field is missing the literal ``%{name}`` text is left in place.
 ``%{+FORMAT}`` formats the event timestamp with a Joda-style pattern
 (``%{+YYYY.MM.dd}`` — the reference's Event#sprintf grammar), and the
 special ``%{+%s}`` splices epoch seconds; here the designated timestamp
-column (default ``warc_ts``, the corpus's event time) plays @timestamp's
-role and the pattern compiles to JVM-side ``date_format``.
+column (``TranslateConfig.ts_field``, default ``warc_ts``, the corpus's
+event time) plays @timestamp's role and the pattern compiles to JVM-side
+``date_format``.
 
 Compiled once at plan time into ``concat`` of literals and
 ``coalesce(cast(col as string), lit('%{name}'))`` pieces — a pure Catalyst
@@ -18,7 +19,7 @@ projection, no per-row Python.
 from __future__ import annotations
 
 import re
-from typing import List, Optional
+from typing import List
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -27,10 +28,6 @@ from pyspark.sql import types as T
 from .paths import parse_path, path_col, path_type
 
 _FIELD_REF = re.compile(r"%\{([^}]+)\}")
-
-#: the column standing in for Logstash's always-present @timestamp in
-#: ``%{+FORMAT}`` time references (input contract: warc_ts:timestamp)
-DEFAULT_TS_COL = "warc_ts"
 
 
 #: Joda letters that are shared grammar with Spark's DateTimeFormatter and
@@ -168,20 +165,16 @@ def _field_to_column(name: str) -> Column:
     return path_col(parse_path(name))
 
 
-def compile_sprintf(
-    template: str,
-    ts_col: str = DEFAULT_TS_COL,
-    schema: Optional[T.StructType] = None,
-) -> Column:
-    """Compile a sprintf template to a Column.
+def compile_sprintf(template: str, ts_col: str, schema: T.StructType) -> Column:
+    """Compile a sprintf template to a Column over a frame of ``schema``.
 
-    ``schema`` — when given (the frame's schema), a reference whose FULL
-    nested path is absent resolves to the literal ``%{name}`` (Logstash
-    leaves missing fields un-spliced) instead of an AnalysisException:
-    ``%{[a][missing]}`` with column ``a`` present degrades too, which a
-    top-level-only check cannot see. ``%{+FORMAT}`` time references format
-    ``ts_col`` (the frame's event-time column); they too degrade to the
-    literal when that column is absent.
+    A reference whose FULL nested path is absent from ``schema`` resolves
+    to the literal ``%{name}`` (Logstash leaves missing fields un-spliced)
+    instead of an AnalysisException: ``%{[a][missing]}`` with column ``a``
+    present degrades too, which a top-level-only check cannot see.
+    ``%{+FORMAT}`` time references format ``ts_col`` (the frame's
+    event-time column); they too degrade to the literal when that column
+    is absent.
     """
     pieces: List[Column] = []
     pos = 0
@@ -190,11 +183,11 @@ def compile_sprintf(
             pieces.append(F.lit(template[pos : m.start()]))
         name = m.group(1)
         if name.startswith("+"):
-            if schema is not None and ts_col not in schema.names:
+            if ts_col not in schema.names:
                 pieces.append(F.lit(m.group(0)))
             else:
                 pieces.append(_time_ref_column(name[1:], ts_col, m.group(0)))
-        elif schema is not None and path_type(schema, parse_path(name)) is None:
+        elif path_type(schema, parse_path(name)) is None:
             pieces.append(F.lit(m.group(0)))
         else:
             pieces.append(

@@ -217,13 +217,11 @@ def langid_scores(
     text_col: str,
     id_col: str,
     profiles: Sequence[Tuple[str, Sequence[str]]],
-    include_unknown: bool = True,
 ) -> DataFrame:
     """Heuristic language ID: argmax over per-language marker-word hit
-    counts. Returns (id_col, lang_id) with 'und' when no marker hits
-    (``include_unknown=False`` drops the 'und' rows AND the corpus
-    re-entry join that produces them — the shape for composite consumers
-    like corpus_filter whose downstream filter discards 'und' anyway).
+    counts. Returns (id_col, lang_id) for the documents with at least one
+    marker hit; a document with none has no row (a caller that reports
+    it as 'und' left-joins the corpus ids).
 
     Plane (≤ ``LANGID_PIVOT_MAX_LANGS`` languages): explode tokens →
     codegen ``isin`` prefilter on the union marker set → ONE partial
@@ -259,37 +257,31 @@ def langid_scores(
                 for i, (lang, _) in enumerate(profiles)
             ]
         )
-        best = (
+        return (
             hits.groupBy(id_col)
             .agg(*sums)
             .select(
                 id_col, F.array_min(ranked).getField("l").alias("lang_id")
             )
         )
-    else:
-        spark = df.sparkSession
-        marker_rows = [(lang, w) for lang, words in profiles for w in words]
-        markers = spark.createDataFrame(
-            marker_rows, "lang_cand string, w string"
-        )
-        scores = (
-            tok.join(F.broadcast(markers), "w")
-            .groupBy(id_col, "lang_cand")
-            .agg(F.count("*").alias("hits"))
-        )
-        best = scores.groupBy(id_col).agg(
-            F.min_by(
-                "lang_cand",
-                F.struct(
-                    (-F.col("hits")).alias("h"),
-                    F.col("lang_cand").alias("l"),
-                ),
-            ).alias("lang_id")
-        )
-    if not include_unknown:
-        return best
-    return df.select(id_col).join(best, id_col, "left").select(
-        id_col, F.coalesce("lang_id", F.lit("und")).alias("lang_id")
+    spark = df.sparkSession
+    marker_rows = [(lang, w) for lang, words in profiles for w in words]
+    markers = spark.createDataFrame(
+        marker_rows, "lang_cand string, w string"
+    )
+    scores = (
+        tok.join(F.broadcast(markers), "w")
+        .groupBy(id_col, "lang_cand")
+        .agg(F.count("*").alias("hits"))
+    )
+    return scores.groupBy(id_col).agg(
+        F.min_by(
+            "lang_cand",
+            F.struct(
+                (-F.col("hits")).alias("h"),
+                F.col("lang_cand").alias("l"),
+            ),
+        ).alias("lang_id")
     )
 
 

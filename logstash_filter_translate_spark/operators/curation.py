@@ -88,12 +88,7 @@ def domain_cap(
     )
 
 
-def repetition_ratio(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    include_shingleless: bool = True,
-) -> DataFrame:
+def repetition_ratio(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     """Gopher-style repetition signal: per document, the count of the most
     frequent word 3-gram and the total 3-gram count (integers, so the
     oracle compares exactly; ratio = max/total). High ratios flag
@@ -102,32 +97,16 @@ def repetition_ratio(
     Plan: explode (non-distinct) shingles → two-level hash aggregate
     ((doc, shingle) counts reduced map-side, then per-doc max/sum). The
     shuffle carries (doc_id, shingle-count) pairs, never documents.
-
-    ``include_shingleless=False`` skips the corpus re-entry left
-    join that reports docs with < 3 tokens as (0, 0) — consumers that
-    immediately FILTER on ``total_ngrams > 0`` (curation_pipeline) drop
-    those rows again, so the extra scan + join bought nothing.
+    A document with fewer than 3 tokens has no shingle and so no row.
     """
     sh = df.select(
         F.col(id_col),
         F.explode(word_shingles(tokens(F.col(text_col)))).alias("s"),
     )
     per_shingle = sh.groupBy(id_col, "s").agg(F.count("*").alias("c"))
-    stats = per_shingle.groupBy(id_col).agg(
+    return per_shingle.groupBy(id_col).agg(
         F.max("c").alias("max_ngram_cnt"),
         F.sum("c").alias("total_ngrams"),
-    )
-    if not include_shingleless:
-        return stats.select(id_col, "max_ngram_cnt", "total_ngrams")
-    # docs with < 3 tokens have no shingles → (0, 0) via left join
-    return (
-        df.select(id_col)
-        .join(stats, id_col, "left")
-        .select(
-            id_col,
-            F.coalesce("max_ngram_cnt", F.lit(0)).alias("max_ngram_cnt"),
-            F.coalesce("total_ngrams", F.lit(0)).alias("total_ngrams"),
-        )
     )
 
 
@@ -385,10 +364,7 @@ def curation_pipeline(
     per-domain cap, returning the kept (id, stratum, domain) set. Each
     stage is the audited scale-safe plane above; integer percent
     threshold keeps the repetition filter float-free across engines."""
-    # include_shingleless=False: the (0, 0) re-entry rows the
-    # default plane adds (a corpus scan + left join) are filtered right
-    # back out by `total_ngrams > 0` below
-    rep = repetition_ratio(df, text_col, id_col, include_shingleless=False)
+    rep = repetition_ratio(df, text_col, id_col)
     keep_rep = rep.filter(
         (F.col("total_ngrams") > 0)
         & (F.col("max_ngram_cnt") * 100

@@ -4,11 +4,16 @@ SimHash, n-gram Jaccard.
 Scale notes (the 100 TB story):
   - exact dedup is one hash-shuffle on the dedup key (partial agg applies);
     dedup on a fingerprint rather than raw text keeps shuffle rows narrow.
-  - MinHash/LSH: signatures are pure map-side expressions (no shuffle);
-    candidate generation shuffles only (band_idx, band_key) pairs — the
-    classic shingle→minhash→band→bucket-join pipeline. Hot buckets (boiler-
-    plate pages) are the skew risk: lsh_candidate_pairs can cap bucket
-    width before pairing.
+  - MinHash/LSH: signatures are one explode + map-side partial
+    aggregate per document, ``NUM_HASHES`` wide; candidate generation
+    shuffles only (band_idx, band_key) pairs of ``BAND_SIZE`` minhashes
+    each — the classic shingle→minhash→band→bucket-join pipeline. Hot
+    buckets (boilerplate pages) are the skew risk: lsh_candidate_pairs
+    can cap bucket width before pairing.
+  - The Jaccard keep rule (≥ ``JACCARD_KEEP_NUM``/``JACCARD_KEEP_DEN``)
+    is stated once, in :func:`near_dup_pairs`; every near-dup plane
+    (keep, components, fuzzy contamination, incremental) verifies
+    through it.
   - SimHash: map-side expression; near-dup = Hamming distance on a 64-bit
     int, cheap to band by prefix.
   - All primitives use the md5-based portable hash so the DuckDB oracle
@@ -16,6 +21,9 @@ Scale notes (the 100 TB story):
   - The Jaccard verify and connected components run one plane each; their
     physical choices (singleton-anti-join broadcast, pointer jumping) are
     measured rules inside the function, not caller flags.
+  - Per-document operators (MinHash, SimHash) return rows only for the
+    documents they produce a value for; a caller that reports every
+    document left-joins the corpus ids itself.
 """
 
 from __future__ import annotations
@@ -26,12 +34,20 @@ from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 from ..functions.text import (
+    MINHASH_COEF,
+    MINHASH_P,
     fingerprint,
     hash32,
     tokens,
     word_shingles,
     word_tiles,
 )
+
+#: MinHash signature width: one hash function per coefficient pair
+NUM_HASHES = len(MINHASH_COEF)
+#: minhashes per LSH band (NUM_HASHES // BAND_SIZE bands; the SQL oracles
+#: state the same 4 bands of 2)
+BAND_SIZE = 2
 
 
 # ---------------------------------------------------------------------------
@@ -59,46 +75,26 @@ def exact_dedup(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
 # MinHash + LSH
 # ---------------------------------------------------------------------------
 
-def minhash_signatures(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    num_hashes: int = 8,
-    include_sigless: bool = True,
-) -> DataFrame:
-    """(id, m0..m{k-1}) over the word 3-grams — NULL signature for docs
-    with < 3 tokens.
+def minhash_signatures(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
+    """(id, m0..m{NUM_HASHES-1}) over the word 3-grams, one row per
+    document with ≥ 3 tokens; a shorter document has no shingle and so
+    no row.
 
     Physical shape: explode shingles → ONE codegen'd md5 per shingle →
-    groupBy(id) with k cheap min() aggregates (map-side partial). This beats
-    the pure-expression ``array_min(transform(...))`` form by ~10×: Catalyst
-    higher-order-function lambdas are interpreted, and the k signature
-    expressions would each re-hash every shingle.
-
-    ``include_sigless=False`` skips the docs-left-join that re-enters
-    shingle-less documents with a NULL signature — the LSH banding planes
-    filter those rows straight back out (``m0 IS NOT NULL``), so pipelines
-    that only band the signatures pay the join for nothing. The contract
-    ``minhash_signatures`` query keeps the default (its oracle states the
-    NULL rows)."""
-    from ..functions.text import MINHASH_COEF, MINHASH_P, hash32
-
+    groupBy(id) with NUM_HASHES cheap min() aggregates (map-side partial).
+    This beats the pure-expression ``array_min(transform(...))`` form by
+    ~10×: Catalyst higher-order-function lambdas are interpreted, and the
+    signature expressions would each re-hash every shingle."""
     sh = df.select(
         F.col(id_col),
         F.explode(word_shingles(tokens(F.col(text_col)))).alias("__s"),
     )
     hashed = sh.select(id_col, hash32(F.col("__s")).alias("__h"))
-    aggs = []
-    for i in range(num_hashes):
-        a, b = MINHASH_COEF[i % len(MINHASH_COEF)]
-        aggs.append(
-            F.min((F.lit(a) * F.col("__h") + F.lit(b)) % MINHASH_P).alias(f"m{i}")
-        )
-    sig = hashed.groupBy(id_col).agg(*aggs)
-    if not include_sigless:
-        return sig
-    # docs with < 3 tokens exploded to no rows → NULL signature via left join
-    return df.select(id_col).join(sig, id_col, "left")
+    aggs = [
+        F.min((F.lit(a) * F.col("__h") + F.lit(b)) % MINHASH_P).alias(f"m{i}")
+        for i, (a, b) in enumerate(MINHASH_COEF)
+    ]
+    return hashed.groupBy(id_col).agg(*aggs)
 
 
 def _cap_buckets(
@@ -123,15 +119,12 @@ def _cap_buckets(
     return banded.join(F.broadcast(over), keys, "left_anti")
 
 
-def _band_key_cols(band_size: int) -> List[str]:
-    """Join/bucket key columns emitted by :func:`_band_signatures`."""
-    return ["band_idx"] + [f"band_k{j}" for j in range(band_size)]
+#: join/bucket key columns emitted by :func:`_band_signatures`
+_BAND_KEY_COLS = ["band_idx"] + [f"band_k{j}" for j in range(BAND_SIZE)]
 
 
-def _band_signatures(
-    sigs: DataFrame, id_col: str, num_hashes: int, band_size: int
-) -> DataFrame:
-    """(id, band_idx, band_k0..band_k{band_size-1}) rows — the shared
+def _band_signatures(sigs: DataFrame, id_col: str) -> DataFrame:
+    """(id, band_idx, band_k0..band_k{BAND_SIZE-1}) rows — the shared
     banding step of the self-join (lsh_candidate_pairs) and cross-corpus
     (lsh_candidate_pairs_cross) planes.
 
@@ -143,35 +136,28 @@ def _band_signatures(
     longs instead of decimal strings. The band key never leaves the
     operator (outputs are id pairs), so the SQL oracles' string-keyed
     CTEs state the same pairs."""
-    n_bands = num_hashes // band_size
     bands = F.array(
         *[
             F.struct(
                 F.lit(b).alias("band_idx"),
                 *[
-                    F.col(f"m{b * band_size + j}").alias(f"band_k{j}")
-                    for j in range(band_size)
+                    F.col(f"m{b * BAND_SIZE + j}").alias(f"band_k{j}")
+                    for j in range(BAND_SIZE)
                 ],
             )
-            for b in range(n_bands)
+            for b in range(NUM_HASHES // BAND_SIZE)
         ]
     )
     has_sig = F.col("m0").isNotNull()
     return (
         sigs.filter(has_sig)
         .select(id_col, F.explode(bands).alias("b"))
-        .select(
-            id_col, *[f"b.{k}" for k in _band_key_cols(band_size)]
-        )
+        .select(id_col, *[f"b.{k}" for k in _BAND_KEY_COLS])
     )
 
 
 def lsh_candidate_pairs(
-    sigs: DataFrame,
-    id_col: str,
-    num_hashes: int = 8,
-    band_size: int = 2,
-    max_bucket: Optional[int] = None,
+    sigs: DataFrame, id_col: str, max_bucket: Optional[int] = None
 ) -> DataFrame:
     """Band the signature, bucket-join, emit distinct candidate pairs
     (id_a < id_b).
@@ -183,7 +169,7 @@ def lsh_candidate_pairs(
     None — recall is complete and value-identical to the SQL oracle at any
     scale; set it when running over a real crawl.
     """
-    banded = _band_signatures(sigs, id_col, num_hashes, band_size)
+    banded = _band_signatures(sigs, id_col)
     # materialize BEFORE the cap and the self-join: _cap_buckets references
     # the frame twice (width count + anti-join probe) and the self-join
     # twice more — without the checkpoint the whole corpus-wide
@@ -192,15 +178,14 @@ def lsh_candidate_pairs(
     # ContextCleaner when the frame is GC'd, so a long-running driver
     # doesn't leak cached partitions
     banded = banded.localCheckpoint(eager=False)
-    keys = _band_key_cols(band_size)
     if max_bucket is not None:
         banded = _cap_buckets(
-            banded, keys, max_bucket
+            banded, _BAND_KEY_COLS, max_bucket
         ).localCheckpoint(eager=False)
     left = banded.alias("l")
     right = banded.alias("r")
     cond = F.col(f"l.{id_col}") < F.col(f"r.{id_col}")
-    for k in keys:
+    for k in _BAND_KEY_COLS:
         cond = (F.col(f"l.{k}") == F.col(f"r.{k}")) & cond
     return (
         left.join(right, cond)
@@ -213,11 +198,7 @@ def lsh_candidate_pairs(
 
 
 def lsh_candidate_pairs_cross(
-    sigs_corpus: DataFrame,
-    sigs_probe: DataFrame,
-    id_col: str,
-    num_hashes: int = 8,
-    band_size: int = 2,
+    sigs_corpus: DataFrame, sigs_probe: DataFrame, id_col: str
 ) -> DataFrame:
     """Cross-corpus LSH candidates: (id_a from corpus, id_b from probe)
     sharing at least one band — the fuzzy-decontamination shape (probe =
@@ -235,11 +216,10 @@ def lsh_candidate_pairs_cross(
     with itself (a doc cannot contaminate itself; without the guard the
     self-pair's Jaccard of 1.0 would flag it spuriously).
     """
-    cb = _band_signatures(sigs_corpus, id_col, num_hashes, band_size)
-    keys = _band_key_cols(band_size)
-    pb = _band_signatures(sigs_probe, id_col, num_hashes, band_size)
+    cb = _band_signatures(sigs_corpus, id_col)
+    pb = _band_signatures(sigs_probe, id_col)
     cond = F.col(f"l.{id_col}") != F.col(f"r.{id_col}")
-    for k in keys:
+    for k in _BAND_KEY_COLS:
         cond = (F.col(f"l.{k}") == F.col(f"r.{k}")) & cond
     return (
         cb.alias("l")
@@ -262,7 +242,8 @@ def simhash(df: DataFrame, text_col: str, id_col: str, bits: int = 16) -> DataFr
 
     Physical shape: explode tokens → one codegen'd md5 per token → groupBy
     with ``bits`` conditional-sum aggregates (all partial map-side), then
-    recombine the sign bits into one integer. Tokenless docs → NULL."""
+    recombine the sign bits into one integer. A tokenless document has no
+    row."""
     tok = df.select(
         F.col(id_col), F.explode(tokens(F.col(text_col))).alias("__w")
     )
@@ -280,8 +261,7 @@ def simhash(df: DataFrame, text_col: str, id_col: str, bits: int = 16) -> DataFr
         sim = sim + F.when(F.col(f"__b{b}") > 0, F.lit(1 << b).cast("long")).otherwise(
             F.lit(0)
         )
-    packed = votes.select(F.col(id_col), sim.alias("simhash"))
-    return df.select(id_col).join(packed, id_col, "left")
+    return votes.select(F.col(id_col), sim.alias("simhash"))
 
 
 def simhash_pairs(
@@ -308,19 +288,16 @@ def simhash_pairs(
     aggregates (see ``simhash``); the only shuffle carries (band_idx,
     band_val) pairs. Every pair is kept: a hot bucket (boilerplate pages
     collapse to one signature) costs join work, never recall. Tokenless
-    docs (NULL signature) are excluded.
+    docs have no signature and never pair.
     """
     if bits % bands != 0:
         raise ValueError(f"bits={bits} not divisible by bands={bands}")
     width = bits // bands
     mask = (1 << width) - 1
-    sigs = simhash(df, text_col, id_col, bits).filter(
-        F.col("simhash").isNotNull()
-    )
     # referenced by both band-join sides — materialize the signature
     # aggregate once; localCheckpoint (not persist) so blocks release
     # with the frame
-    sigs = sigs.localCheckpoint(eager=False)
+    sigs = simhash(df, text_col, id_col, bits).localCheckpoint(eager=False)
     chunks = F.array(
         *[
             F.struct(
@@ -532,17 +509,39 @@ def ngram_jaccard_pairs(
     )
 
 
+#: the near-duplicate keep rule: Jaccard ≥ 4/5, as integer math so both
+#: engines decide every pair identically
+JACCARD_KEEP_NUM = 4
+JACCARD_KEEP_DEN = 5
+
+
+def near_dup_pairs(
+    docs: DataFrame, text_col: str, id_col: str, cand: DataFrame
+) -> DataFrame:
+    """The verified near-duplicate (id_a, id_b) pairs among the candidate
+    pairs ``cand``: exact n-gram Jaccard (:func:`ngram_jaccard_pairs`,
+    whose endpoint contract applies) of at least
+    ``JACCARD_KEEP_NUM``/``JACCARD_KEEP_DEN``, decided as
+    ``n_intersect * DEN >= n_union * NUM`` over a non-empty union. The
+    one definition of a near duplicate: the keep, components, fuzzy
+    contamination and incremental planes all verify through it."""
+    jac = ngram_jaccard_pairs(docs, text_col, id_col, cand)
+    return jac.filter(
+        (F.col("n_union") > 0)
+        & (
+            F.col("n_intersect") * JACCARD_KEEP_DEN
+            >= F.col("n_union") * JACCARD_KEEP_NUM
+        )
+    ).select("id_a", "id_b")
+
+
 def incremental_near_dup_keep(
     corpus: DataFrame,
     new_docs: DataFrame,
     text_col: str,
     id_col: str,
-    num_hashes: int = 8,
-    band_size: int = 2,
-    keep_num: int = 4,
-    keep_den: int = 5,
-    corpus_sigs: Optional[DataFrame] = None,
-    new_sigs: Optional[DataFrame] = None,
+    corpus_sigs: DataFrame,
+    new_sigs: DataFrame,
 ) -> DataFrame:
     """Which NEW documents survive dedup against an already-kept corpus
     — the INCREMENTAL maintenance shape (the batch analog of
@@ -567,44 +566,25 @@ def incremental_near_dup_keep(
     (ngram_jaccard_pairs' semi-join prefilter), so corpus text is
     touched only for corpus docs that banded with a new doc.
 
-    ``corpus_sigs`` / ``new_sigs`` accept PRECOMPUTED MinHash signatures
-    — at scale the original dedup pass persists the corpus signatures,
-    and the increment then costs one signature scan of the increment
-    plus the candidate-verify, never a full-corpus re-signature (a
-    caller whose corpus and increment are splits of one frame can sign
-    that frame once and pass both filtered halves — signatures are
-    per-document, so filter-then-sign and sign-then-filter agree).
+    ``corpus_sigs`` / ``new_sigs`` are the :func:`minhash_signatures`
+    of ``corpus`` and ``new_docs``, computed by the caller — at scale the
+    original dedup pass persists the corpus signatures, and the
+    increment then costs one signature scan of the increment plus the
+    candidate-verify, never a full-corpus re-signature (a caller whose
+    corpus and increment are splits of one frame signs that frame once
+    and passes both filtered halves — signatures are per-document, so
+    filter-then-sign and sign-then-filter agree).
     Assumes the increment ≪ corpus (its bands are broadcast); for
     increment ~ corpus, rerun the full near_dup_keep instead. Ids must
     share one namespace and be disjoint across the two frames."""
-    sigs_new = (
-        new_sigs
-        if new_sigs is not None
-        else minhash_signatures(
-            new_docs, text_col, id_col, num_hashes, include_sigless=False
-        )
-    )
-    if corpus_sigs is None:
-        corpus_sigs = minhash_signatures(
-            corpus, text_col, id_col, num_hashes, include_sigless=False
-        )
-    cross = lsh_candidate_pairs_cross(
-        corpus_sigs, sigs_new, id_col, num_hashes, band_size
-    )
-    intra = lsh_candidate_pairs(sigs_new, id_col, num_hashes, band_size)
+    cross = lsh_candidate_pairs_cross(corpus_sigs, new_sigs, id_col)
+    intra = lsh_candidate_pairs(new_sigs, id_col)
     cand = cross.unionByName(intra).distinct()
     union_docs = corpus.select(id_col, text_col).unionByName(
         new_docs.select(id_col, text_col)
     )
-    jac = ngram_jaccard_pairs(union_docs, text_col, id_col, cand)
     dup = (
-        jac.filter(
-            (F.col("n_union") > 0)
-            & (
-                F.col("n_intersect") * keep_den
-                >= F.col("n_union") * keep_num
-            )
-        )
+        near_dup_pairs(union_docs, text_col, id_col, cand)
         .select(F.col("id_b").alias(id_col))
         .distinct()
     )

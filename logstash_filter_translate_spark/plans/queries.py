@@ -28,6 +28,8 @@ from ..functions.text import (
     tokens,
 )
 from ..operators.dedup import (
+    JACCARD_KEEP_DEN,
+    JACCARD_KEEP_NUM,
     boilerplate_shingles,
     connected_components,
     exact_dedup,
@@ -35,6 +37,7 @@ from ..operators.dedup import (
     lsh_candidate_pairs,
     lsh_candidate_pairs_cross,
     minhash_signatures,
+    near_dup_pairs,
     ngram_jaccard_pairs,
     simhash,
 )
@@ -90,7 +93,6 @@ LANGID_PROFILES = [
 ]
 
 SIMHASH_BITS = 16
-MINHASH_NUM = 8
 LSH_PLANES = [
     [(((i * 37 + p * 17) % 13) - 6) / 6.0 for i in range(64)] for p in range(3)
 ]
@@ -108,6 +110,19 @@ def _load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     this becomes a no-op choice."""
     df = spark.read.parquet(f"{sf_dir}/{table}.parquet")
     return df.repartition(spark.sparkContext.defaultParallelism)
+
+
+def _every_doc(docs: DataFrame, rows: DataFrame, **fill) -> DataFrame:
+    """Per-document operator ``rows`` left-joined onto every doc_id of
+    ``docs``: the operators return rows only for the documents they
+    produce a value for, and an oracle that lists every document states
+    the rest as NULL, or as ``fill``'s value for each named column."""
+    out = docs.select("doc_id").join(rows, "doc_id", "left")
+    if not fill:
+        return out
+    return out.select(
+        "doc_id", *[F.coalesce(c, F.lit(v)).alias(c) for c, v in fill.items()]
+    )
 
 
 def _scratch_dir(tag: str, sf_dir: str) -> str:
@@ -555,17 +570,15 @@ h AS (
 
 
 def q_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return minhash_signatures(
-        _load(spark, sf_dir, "documents"), "text", "doc_id", MINHASH_NUM
-    )
+    docs = _load(spark, sf_dir, "documents")
+    return _every_doc(docs, minhash_signatures(docs, "text", "doc_id"))
 
 
 def _sql_minhash_cols() -> str:
-    cols = []
-    for i in range(MINHASH_NUM):
-        a, b = MINHASH_COEF[i % len(MINHASH_COEF)]
-        cols.append(f"min(({a} * h.h + {b}) % {MINHASH_P}) AS m{i}")
-    return ",\n       ".join(cols)
+    return ",\n       ".join(
+        f"min(({a} * h.h + {b}) % {MINHASH_P}) AS m{i}"
+        for i, (a, b) in enumerate(MINHASH_COEF)
+    )
 
 
 SQL_MINHASH_SIGNATURES = f"""
@@ -579,10 +592,9 @@ GROUP BY d.doc_id
 
 def q_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     sigs = minhash_signatures(
-        _load(spark, sf_dir, "documents"), "text", "doc_id", MINHASH_NUM,
-        include_sigless=False,
+        _load(spark, sf_dir, "documents"), "text", "doc_id"
     )
-    return lsh_candidate_pairs(sigs, "doc_id", MINHASH_NUM, band_size=2)
+    return lsh_candidate_pairs(sigs, "doc_id")
 
 
 def _sql_lsh_pairs(cap: "int | None" = None) -> str:
@@ -642,19 +654,12 @@ def q_lsh_pairs_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     sort-free: groupBy(band).count() + broadcast anti-join
     (operators/dedup.py::_cap_buckets)."""
     sigs = minhash_signatures(
-        _load(spark, sf_dir, "documents"), "text", "doc_id", MINHASH_NUM,
-        include_sigless=False,
+        _load(spark, sf_dir, "documents"), "text", "doc_id"
     )
-    return lsh_candidate_pairs(
-        sigs, "doc_id", MINHASH_NUM, band_size=2, max_bucket=LSH_CAP
-    )
+    return lsh_candidate_pairs(sigs, "doc_id", max_bucket=LSH_CAP)
 
 
 SQL_LSH_PAIRS_CAPPED = _sql_lsh_pairs(LSH_CAP)
-
-
-JACCARD_KEEP_NUM = 4  # keep-threshold 4/5 = 0.8 as integer math
-JACCARD_KEEP_DEN = 5
 
 
 def q_near_dup_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -665,7 +670,6 @@ def q_near_dup_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale-safe plane (no all-pairs anywhere); the verify touches LSH
     candidates only."""
     docs = _load(spark, sf_dir, "documents")
-    # jaccard >= 4/5 in exact integer math (float-free across engines);
     # the candidate/verify pipeline is shared with the components planes
     dup = _dedup_dup_pairs(docs).select(F.col("id_b").alias("doc_id"))
     return docs.select("doc_id").join(dup, "doc_id", "left_anti")
@@ -719,20 +723,12 @@ WHERE NOT EXISTS (SELECT 1 FROM dup WHERE dup.doc_id = d.doc_id)
 
 def _dedup_dup_pairs(docs: DataFrame) -> DataFrame:
     """Shared verified-duplicate-pair pipeline (MinHash → banded LSH →
-    integer-Jaccard ≥ 4/5): one definition so the components planes
-    (and their single shared oracle) can never fork semantically."""
-    sigs = minhash_signatures(
-        docs, "text", "doc_id", MINHASH_NUM, include_sigless=False
-    )
-    pairs = lsh_candidate_pairs(sigs, "doc_id", MINHASH_NUM, band_size=2)
-    jac = ngram_jaccard_pairs(docs, "text", "doc_id", pairs)
-    return jac.filter(
-        (F.col("n_union") > 0)
-        & (
-            F.col("n_intersect") * JACCARD_KEEP_DEN
-            >= F.col("n_union") * JACCARD_KEEP_NUM
-        )
-    ).select("id_a", "id_b")
+    near_dup_pairs' integer-Jaccard ≥ 4/5): one definition so the
+    components planes (and their single shared oracle) can never fork
+    semantically."""
+    sigs = minhash_signatures(docs, "text", "doc_id")
+    pairs = lsh_candidate_pairs(sigs, "doc_id")
+    return near_dup_pairs(docs, "text", "doc_id", pairs)
 
 
 def q_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -895,23 +891,14 @@ def q_fuzzy_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the signed frame is value-identical to signing the filtered frame,
     # so no second full scan→shingle→md5→agg subtree is needed. The
     # localCheckpoint materializes the shared frame once for both sides.
-    sigs = minhash_signatures(
-        docs, "text", "doc_id", MINHASH_NUM, include_sigless=False
-    ).localCheckpoint(eager=False)
+    sigs = minhash_signatures(docs, "text", "doc_id").localCheckpoint(
+        eager=False
+    )
     sigs_t = sigs.filter(F.col("doc_id") >= FUZZY_EVAL_BOUND)
     sigs_e = sigs.filter(F.col("doc_id") < FUZZY_EVAL_BOUND)
-    cand = lsh_candidate_pairs_cross(
-        sigs_t, sigs_e, "doc_id", MINHASH_NUM, band_size=2
-    )
-    jac = ngram_jaccard_pairs(docs, "text", "doc_id", cand)
+    cand = lsh_candidate_pairs_cross(sigs_t, sigs_e, "doc_id")
     return (
-        jac.filter(
-            (F.col("n_union") > 0)
-            & (
-                F.col("n_intersect") * JACCARD_KEEP_DEN
-                >= F.col("n_union") * JACCARD_KEEP_NUM
-            )
-        )
+        near_dup_pairs(docs, "text", "doc_id", cand)
         .select(F.col("id_a").alias("doc_id"), F.col("id_b").alias("eval_id"))
         .distinct()
     )
@@ -1004,23 +991,22 @@ def q_incremental_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer-Jaccard verify (∝ candidate docs via the semi-join
     prefilter), corpus always wins, intra-batch drops the higher id
     (near_dup_keep's rule). The daily-increment shape of a 100 TB
-    pipeline: the corpus is never re-deduped, and with persisted
-    signatures (corpus_sigs=...) never re-signed either
+    pipeline: the corpus is never re-deduped, and with its signatures
+    persisted never re-signed either
     (operators/dedup.py::incremental_near_dup_keep)."""
     docs = _load(spark, sf_dir, "documents")
     corpus = docs.filter(F.col("doc_id") % INCR_NEW_MOD != 0)
     new_docs = docs.filter(F.col("doc_id") % INCR_NEW_MOD == 0)
     # both sides are modulus-splits of ONE frame, so sign that frame
     # once and filter the signed output (per-document signatures:
-    # sign-then-filter ≡ filter-then-sign) — the operator's persisted-
-    # signature hooks take the halves and no second full
-    # scan→shingle→md5→agg pipeline enters the plan.
-    sigs = minhash_signatures(
-        docs, "text", "doc_id", MINHASH_NUM, include_sigless=False
-    ).localCheckpoint(eager=False)
+    # sign-then-filter ≡ filter-then-sign) — the operator takes the
+    # signed halves and no second full scan→shingle→md5→agg pipeline
+    # enters the plan.
+    sigs = minhash_signatures(docs, "text", "doc_id").localCheckpoint(
+        eager=False
+    )
     return incremental_near_dup_keep(
-        corpus, new_docs, "text", "doc_id", MINHASH_NUM, band_size=2,
-        keep_num=JACCARD_KEEP_NUM, keep_den=JACCARD_KEEP_DEN,
+        corpus, new_docs, "text", "doc_id",
         corpus_sigs=sigs.filter(F.col("doc_id") % INCR_NEW_MOD != 0),
         new_sigs=sigs.filter(F.col("doc_id") % INCR_NEW_MOD == 0),
     )
@@ -1076,9 +1062,8 @@ WHERE d.doc_id % {INCR_NEW_MOD} = 0
 
 
 def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return simhash(
-        _load(spark, sf_dir, "documents"), "text", "doc_id", SIMHASH_BITS
-    )
+    docs = _load(spark, sf_dir, "documents")
+    return _every_doc(docs, simhash(docs, "text", "doc_id", SIMHASH_BITS))
 
 
 def _sql_simhash_ctes(bits: int = SIMHASH_BITS) -> str:
@@ -1308,8 +1293,11 @@ SQL_ROLLING_FINGERPRINT = _sql_rolling_fingerprint()
 
 
 def q_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return langid_scores(
-        _load(spark, sf_dir, "documents"), "text", "doc_id", LANGID_PROFILES
+    docs = _load(spark, sf_dir, "documents")
+    return _every_doc(
+        docs,
+        langid_scores(docs, "text", "doc_id", LANGID_PROFILES),
+        lang_id="und",
     )
 
 
@@ -1512,15 +1500,10 @@ def q_corpus_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.dedup import exact_dedup
 
     docs = _load(spark, sf_dir, "documents")
-    # include_unknown=False — this query INNER-joins the langid
-    # output and then discards lang_id='und', so langid's corpus
-    # re-entry join (a second documents scan + left join whose only job
-    # is producing the 'und' rows) is dead weight: the inner join
-    # against the marker-hit aggregate alone keeps exactly the rows
-    # a `lang_id != 'und'` filter would.
-    lang = langid_scores(
-        docs, "text", "doc_id", LANGID_PROFILES, include_unknown=False
-    )
+    # langid_scores returns only the documents with a marker hit, so
+    # the inner join below drops the 'und' documents with no second
+    # documents scan.
+    lang = langid_scores(docs, "text", "doc_id", LANGID_PROFILES)
     keep_ids = exact_dedup(docs, "text", "doc_id").select("doc_id")
     # the quality score is computed IN the base projection — joining
     # docs against a second scan of itself on doc_id (an identity
@@ -1827,8 +1810,12 @@ SELECT doc_id, source FROM (
 def q_repetition_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.curation import repetition_ratio
 
-    return repetition_ratio(
-        _load(spark, sf_dir, "documents"), "text", "doc_id"
+    docs = _load(spark, sf_dir, "documents")
+    return _every_doc(
+        docs,
+        repetition_ratio(docs, "text", "doc_id"),
+        max_ngram_cnt=0,
+        total_ngrams=0,
     )
 
 
@@ -2776,13 +2763,18 @@ def _render_pages_from_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_parse_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """extract_text(html) must round-trip byte-identically to text."""
-    from ..functions.html import extract_status, extract_text_native
+    from ..functions.html import (
+        extract_status_from_str,
+        extract_text_from_str,
+        html_str,
+    )
 
     pages = _render_pages_from_docs(spark, sf_dir)
+    html = html_str(F.col("html"))
     return pages.select(
         "doc_id",
-        extract_text_native(F.col("html")).alias("extracted"),
-        extract_status(F.col("html")).alias("status"),
+        extract_text_from_str(html).alias("extracted"),
+        extract_status_from_str(html).alias("status"),
     )
 
 
@@ -2798,10 +2790,12 @@ FROM documents
 def q_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mini end-to-end: render pages → parse (extract status from html) →
     translate status → route → per-(route, lang) aggregate counts."""
-    from ..functions.html import extract_status
+    from ..functions.html import extract_status_from_str, html_str
 
     pages = _render_pages_from_docs(spark, sf_dir)
-    parsed = pages.withColumn("status", extract_status(F.col("html")))
+    parsed = pages.withColumn(
+        "status", extract_status_from_str(html_str(F.col("html")))
+    )
     op = Translate(
         TranslateConfig(
             source="status",

@@ -24,7 +24,10 @@ def test_entry_returns_rows(spark):
     assert set(df.columns) == {"route", "translation", "cnt"}
 
 
-@pytest.mark.parametrize("name", ["exact_events", "pipeline_e2e", "minhash_signatures"])
+@pytest.mark.parametrize("name", [
+    "exact_events", "pipeline_e2e", "minhash_signatures", "simhash",
+    "simhash_pairs", "langid", "repetition_ratio",
+])
 def test_spot_oracle_parity(spark, testdata_dir, name):
     """The driver's comparison on one query: column names, dtype class
     per column, and order-insensitive values (tools/selfcheck.py's rule)."""

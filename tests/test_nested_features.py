@@ -342,11 +342,11 @@ def test_sprintf_array_index_dotted_segment_and_nested_missing(spark):
         "tags array<string>, `a.b` string, a struct<k string>",
     )
     out = df.select(
-        compile_sprintf("first=%{[tags][0]}", schema=df.schema).alias("t0"),
-        compile_sprintf("oob=%{[tags][9]}", schema=df.schema).alias("t9"),
-        compile_sprintf("dot=%{[a.b]}", schema=df.schema).alias("d"),
-        compile_sprintf("miss=%{[a][missing]}", schema=df.schema).alias("m"),
-        compile_sprintf("ok=%{[a][k]}", schema=df.schema).alias("n"),
+        compile_sprintf("first=%{[tags][0]}", "warc_ts", df.schema).alias("t0"),
+        compile_sprintf("oob=%{[tags][9]}", "warc_ts", df.schema).alias("t9"),
+        compile_sprintf("dot=%{[a.b]}", "warc_ts", df.schema).alias("d"),
+        compile_sprintf("miss=%{[a][missing]}", "warc_ts", df.schema).alias("m"),
+        compile_sprintf("ok=%{[a][k]}", "warc_ts", df.schema).alias("n"),
     ).collect()[0]
     assert out["t0"] == "first=x"
     assert out["t9"] == "oob=%{[tags][9]}"   # out-of-bounds -> literal

@@ -128,6 +128,33 @@ def test_ngram_jaccard_counts(spark, docs):
     assert out[(0, 3)][0] == 0  # disjoint
 
 
+def test_near_dup_pairs_keeps_exactly_four_fifths(spark):
+    """The keep rule's boundary: a pair at Jaccard exactly 4/5 is a near
+    duplicate, a pair at 7/9 (just below: 7 * 5 = 35 < 9 * 4 = 36) is
+    not."""
+    from logstash_filter_translate_spark.operators.dedup import near_dup_pairs
+
+    a = [f"a{i}" for i in range(7)]
+    b = [f"b{i}" for i in range(11)]
+    docs = spark.createDataFrame(
+        [
+            (1, " ".join(a[:6])),  # 4 shingles
+            (2, " ".join(a)),  # the same 4 plus one: 4/5
+            (3, " ".join(b[:9])),  # 7 shingles
+            (4, " ".join(b)),  # the same 7 plus two: 7/9
+        ],
+        "doc_id long, text string",
+    )
+    cand = spark.createDataFrame([(1, 2), (3, 4)], "id_a long, id_b long")
+    jac = {
+        (r["id_a"], r["id_b"]): (r["n_intersect"], r["n_union"])
+        for r in ngram_jaccard_pairs(docs, "text", "doc_id", cand).collect()
+    }
+    assert jac == {(1, 2): (4, 5), (3, 4): (7, 9)}
+    got = near_dup_pairs(docs, "text", "doc_id", cand).collect()
+    assert [tuple(r) for r in got] == [(1, 2)]
+
+
 def test_brute_force_topk_finds_self_similar_vectors(spark):
     import random
 
@@ -277,8 +304,7 @@ def test_incremental_near_dup_keep_cross_and_intra(spark):
     corpus — a new doc near-duplicating a CORPUS doc drops (corpus
     always wins, regardless of id order), a new pair duplicating each
     other drops its higher id (near_dup_keep's rule), unique docs
-    survive; precomputed corpus signatures (the persisted-at-scale
-    path) give identical results."""
+    survive."""
     from logstash_filter_translate_spark.operators.dedup import (
         incremental_near_dup_keep,
         minhash_signatures,
@@ -311,21 +337,14 @@ def test_incremental_near_dup_keep_cross_and_intra(spark):
     kept = {
         r["doc_id"]
         for r in incremental_near_dup_keep(
-            corpus, new_docs, "text", "doc_id"
+            corpus, new_docs, "text", "doc_id",
+            minhash_signatures(corpus, "text", "doc_id"),
+            minhash_signatures(new_docs, "text", "doc_id"),
         ).collect()
     }
+    # doc 4 drops although corpus 101 has the HIGHER id: no id-order
+    # dependence on the cross side
     assert kept == {8, 12}
-    # corpus id HIGHER than the new doc's still wins (no id-order
-    # dependence on the cross side), and the persisted-signature path
-    # is identical
-    sigs = minhash_signatures(corpus, "text", "doc_id")
-    kept2 = {
-        r["doc_id"]
-        for r in incremental_near_dup_keep(
-            corpus, new_docs, "text", "doc_id", corpus_sigs=sigs
-        ).collect()
-    }
-    assert kept2 == kept
 
 
 def test_connected_components_adversarial_chain_escalates_to_jumping(
@@ -390,13 +409,13 @@ def test_lsh_cross_candidates_broadcast_probe_and_match_self_join(spark, docs):
         minhash_signatures,
     )
 
-    sigs = minhash_signatures(docs, "text", "doc_id", 8)
+    sigs = minhash_signatures(docs, "text", "doc_id")
     half_a = sigs.filter("doc_id % 2 = 0")
     half_b = sigs.filter("doc_id % 2 = 1")
-    cross = lsh_candidate_pairs_cross(half_a, half_b, "doc_id", 8)
+    cross = lsh_candidate_pairs_cross(half_a, half_b, "doc_id")
     got = {(r["id_a"], r["id_b"]) for r in cross.collect()}
 
-    full = lsh_candidate_pairs(sigs, "doc_id", 8)
+    full = lsh_candidate_pairs(sigs, "doc_id")
     want = {
         (a, b) if a % 2 == 0 else (b, a)
         for a, b in ((r["id_a"], r["id_b"]) for r in full.collect())
@@ -489,10 +508,10 @@ def test_lsh_cross_overlapping_sides_never_self_pair(spark, docs):
         minhash_signatures,
     )
 
-    sigs = minhash_signatures(docs, "text", "doc_id", 8)
+    sigs = minhash_signatures(docs, "text", "doc_id")
     got = {
         (r["id_a"], r["id_b"])
-        for r in lsh_candidate_pairs_cross(sigs, sigs, "doc_id", 8).collect()
+        for r in lsh_candidate_pairs_cross(sigs, sigs, "doc_id").collect()
     }
     assert got  # real cross pairs survive (0<->1 are identical docs)
     assert not any(a == b for a, b in got)
@@ -838,9 +857,10 @@ def test_langid_pivot_and_join_planes_agree_across_the_bound(spark):
     """langid_scores picks its plane by profile count: the pivoted
     aggregate up to LANGID_PIVOT_MAX_LANGS languages, the broadcast marker
     join above it. 16 and 17 profiles (the 17th never hits) must give the
-    same rows as a plain-Python argmax, on both sides of the bound. The
-    word "shared" is listed under two languages (each scores it), and
-    ties go to the smaller language name."""
+    same rows as a plain-Python argmax, on both sides of the bound: one
+    row per document with a marker hit, none for the others. The word
+    "shared" is listed under two languages (each scores it), and ties go
+    to the smaller language name."""
     from logstash_filter_translate_spark.functions.text import (
         LANGID_PIVOT_MAX_LANGS,
         langid_scores,
@@ -865,28 +885,21 @@ def test_langid_pivot_and_join_planes_agree_across_the_bound(spark):
     ]
     docs = spark.createDataFrame(texts, "doc_id int, text string")
 
-    def expected(include_unknown):
-        out = set()
-        for doc_id, text in texts:
-            toks = (text or "").split()
-            hits, lang = min(
-                (-sum(t in words for t in toks), lang) for lang, words in profiles
-            )
-            if hits < 0:
-                out.add((doc_id, lang))
-            elif include_unknown:
-                out.add((doc_id, "und"))
-        return out
-
-    for include_unknown in (True, False):
-        want = expected(include_unknown)
-        assert {(0, "l00"), (1, "l03"), (2, "l02"), (4, "l15")} <= want
-        for profs in (profiles, wide):
-            got = langid_scores(docs, "text", "doc_id", profs, include_unknown)
-            assert sorted(map(tuple, got.collect())) == sorted(want), len(profs)
+    want = set()
+    for doc_id, text in texts:
+        toks = (text or "").split()
+        hits, lang = min(
+            (-sum(t in words for t in toks), lang) for lang, words in profiles
+        )
+        if hits < 0:
+            want.add((doc_id, lang))
+    assert want == {(0, "l00"), (1, "l03"), (2, "l02"), (4, "l15")}
+    for profs in (profiles, wide):
+        got = langid_scores(docs, "text", "doc_id", profs)
+        assert sorted(map(tuple, got.collect())) == sorted(want), len(profs)
 
     def plan(profs):
-        df = langid_scores(docs, "text", "doc_id", profs, include_unknown=False)
+        df = langid_scores(docs, "text", "doc_id", profs)
         return df._jdf.queryExecution().executedPlan().toString()
 
     assert "BroadcastHashJoin" not in plan(profiles)

@@ -220,7 +220,7 @@ def _fmt(spark, pattern, dt):
 
     df = spark.createDataFrame([(dt,)], "warc_ts timestamp")
     return df.select(
-        compile_sprintf("%{+" + pattern + "}").alias("v")
+        compile_sprintf("%{+" + pattern + "}", "warc_ts", df.schema).alias("v")
     ).collect()[0]["v"]
 
 
@@ -273,11 +273,12 @@ def test_joda_unsupported_letter_raises_at_plan_time(spark):
         compile_sprintf,
     )
 
+    schema = spark.createDataFrame([], "warc_ts timestamp").schema
     # 'W' (week-of-month) is SimpleDateFormat grammar, not Joda, and not
     # expressible in Spark's formatter — fail loudly at plan time instead
     # of per-task at execution
     with pytest.raises(ValueError, match="unsupported Joda pattern"):
-        compile_sprintf("%{+YYYY'W'W}")
+        compile_sprintf("%{+YYYY'W'W}", "warc_ts", schema)
 
 
 # -- case 6: per-format value typing (spec :232-379) ---------------------------
